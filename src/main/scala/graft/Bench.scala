@@ -1,6 +1,7 @@
 package graft
 
 import graft.pipeline.ExtractJob
+import graft.sources.DocSynth
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-round benchmark (driver contract: ONE JSON line on stdout).
@@ -109,19 +110,18 @@ object Bench {
     * delta and loadavg per sustained rep. Returns the child JSON line.
     */
   def extractionPhases(spark: SparkSession, sfDir: String): String = {
-    // warm the JVM/codegen (both extraction modes) on the smallest input
+    val semantic = ExtractJob.Config(mode = graft.kernel.ExtractMode.SemanticMode)
+    def extract(cfg: ExtractJob.Config, replicate: Int = 1): Unit =
+      force(ExtractJob.extractWithLineage(DocSynth.docs(spark, sfDir, replicate), cfg)._1.toDF())
+    // warm the JVM/codegen (both extraction modes) on the measured input
     try {
-      force(ExtractJob.extractFromRaw(spark, "/root/testdata/sf0.001").toDF())
-      force(ExtractJob.extractFromRaw(spark, "/root/testdata/sf0.001",
-        cfg = ExtractJob.Config(mode = graft.kernel.ExtractMode.SemanticMode)).toDF())
+      extract(ExtractJob.Config())
+      extract(semantic)
     } catch { case _: Throwable => () }
 
     val nDocs = spark.read.parquet(s"$sfDir/documents.parquet").count()
-    val chunkReps = (1 to 2).map(_ =>
-      timeSec(force(ExtractJob.extractFromRaw(spark, sfDir).toDF())))
-    val semReps = (1 to 2).map(_ =>
-      timeSec(force(ExtractJob.extractFromRaw(spark, sfDir,
-        cfg = ExtractJob.Config(mode = graft.kernel.ExtractMode.SemanticMode)).toDF())))
+    val chunkReps = (1 to 2).map(_ => timeSec(extract(ExtractJob.Config())))
+    val semReps = (1 to 2).map(_ => timeSec(extract(semantic)))
     // sustained throughput: replicated corpus large enough that fixed cost
     // (~3s of JIT + codegen + shuffle machinery on the FIRST full-size run)
     // is amortized — the number that extrapolates to a long-running 100 TB
@@ -150,8 +150,7 @@ object Bench {
       val c0 = processCpuSec
       val f0 = minorFaults
       val j0 = jitMillis
-      val t = timeSec(force(ExtractJob.extractFromRaw(spark, sfDir, repl,
-        ExtractJob.Config(mode = graft.kernel.ExtractMode.SemanticMode)).toDF()))
+      val t = timeSec(extract(semantic, repl))
       gcs += (gcMillis - g0).toDouble
       cpus += (processCpuSec - c0)
       faults += (minorFaults - f0).toDouble
@@ -248,18 +247,25 @@ object Bench {
         sys.error(s"SPARK_GRAFT_QUERY_REPS must be an integer, got: '$v'"))
     }
     val loadBefore = loadavg1m
+    // a failing query is recorded as -1.0 and left out of `total`, so it is
+    // also named in "failed" and its exception printed: a broken query must
+    // not pass for a faster suite
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val sec = try (1 to qreps).map(_ => timeSec(force(fn(spark, sfDir)))).min
-        catch { case _: Throwable => -1.0 }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: $e")
+          -1.0
+        }
       name -> sec
     }
     val loadAfter = loadavg1m
     val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
+    val failed = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }.mkString("[", ",", "]")
     val total = results.map(_._2).filter(_ >= 0).sum + chunkSec + semSec
     // extract_* fields from the pinned child; the embedded "extract_detail"
     // object carries its per-rep times / GC / loadavg / heap fingerprint
     val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","extraction_sec":$chunkSec%.3f,"extraction_docs_per_sec":$docsPerSec%.1f,"semantic_extraction_sec":$semSec%.3f,"semantic_docs_per_sec":$semDocsPerSec%.1f,"sustained_semantic_docs_per_sec":$sustained%.1f,"docs":$nDocs,"extract_child":$childOk,"parent_heap_mb":$heapMaxMb,"suite_loadavg":[$loadBefore%.2f,$loadAfter%.2f],"extract_detail":$extractJson}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir","extraction_sec":$chunkSec%.3f,"extraction_docs_per_sec":$docsPerSec%.1f,"semantic_extraction_sec":$semSec%.3f,"semantic_docs_per_sec":$semDocsPerSec%.1f,"sustained_semantic_docs_per_sec":$sustained%.1f,"docs":$nDocs,"extract_child":$childOk,"parent_heap_mb":$heapMaxMb,"suite_loadavg":[$loadBefore%.2f,$loadAfter%.2f],"extract_detail":$extractJson}"""
     println(line)
     // the driver's stdout capture has truncated the line's head in past
     // rounds ("parsed": null) — also persist the identical JSON to a file

@@ -2,6 +2,7 @@ package graft
 
 import graft.kernel.ExtractMode
 import graft.pipeline.ExtractJob
+import graft.sources.DocSynth
 
 /** N -> 4N scaling evidence (BASELINE.json: efficiency >= 0.8 between two
   * cluster sizes; no cluster in this sandbox, so per driver instruction the
@@ -15,10 +16,11 @@ import graft.pipeline.ExtractJob
   * cores). availableProcessors inside the pinned JVM reports the affinity
   * count, so GC parallelism etc. auto-size like a real small node.
   *
-  * Workload: fused raw→spans extraction (one salted shuffle of raw text,
-  * synth + SEMANTIC kernel — HTML tokenization/boilerplate scoring, layout
-  * reading order, chunking — map-side after the exchange) over the sf corpus
-  * deterministically replicated so kernel compute dominates fixed overhead.
+  * Workload: the one extraction path (`DocSynth.docs` → `ExtractJob`'s
+  * SEMANTIC kernel stage — HTML tokenization/boilerplate scoring, layout
+  * reading order, chunking) over the sf corpus deterministically replicated
+  * so kernel compute dominates fixed overhead. Only the base rows cross the
+  * round-robin exchange; replicas are exploded after it.
   */
 object ScalingBench {
 
@@ -26,30 +28,9 @@ object ScalingBench {
     val spark = Bench.session(cpus.toString)
     try {
       val nDocs = spark.read.parquet(s"$sfDir/documents.parquet").count() * replicate
-      // 1 task per core measured best here: 4x finer tasks (128 at 32 cores)
-      // triggered multi-second GC storms in this sandbox; salt spreads the
-      // giant-doc buckets regardless of task count.
-      val partsMult = sys.env.getOrElse("SPARK_GRAFT_PARTS_MULT", "1").toInt
-      val cfg = ExtractJob.Config(mode = ExtractMode.SemanticMode, numPartitions = cpus * partsMult)
-      val inflate = sys.env.getOrElse("SPARK_GRAFT_INFLATE", "1").toInt
-      val noSalt = sys.env.contains("SPARK_GRAFT_NO_SALT")
-      def job(): Unit = {
-        val ds =
-          if (noSalt) { // diagnostic: skip the salted repartition of raw rows
-            import spark.implicits._
-            import org.apache.spark.sql.functions._
-            spark.read.parquet(s"$sfDir/documents.parquet")
-              .select(col("doc_id").cast("string").as("doc_id"), col("text"))
-              .repartition(cpus * 4)
-              .withColumn("rep", explode(sequence(lit(0), lit(replicate - 1))))
-              .select(concat_ws("#", col("doc_id"), col("rep")).as("doc_id"), col("text"))
-              .as[(String, String)]
-              .mapPartitions(_.map { case (id, t) =>
-                graft.kernel.Extract.extractDoc(graft.sources.DocSynth.synthDoc(id, t), cfg.mode)
-              }).toDF()
-          } else ExtractJob.extractFromRaw(spark, sfDir, replicate, cfg, inflate).toDF()
-        Bench.force(ds)
-      }
+      val cfg = ExtractJob.Config(mode = ExtractMode.SemanticMode)
+      def job(): Unit =
+        Bench.force(ExtractJob.extractWithLineage(DocSynth.docs(spark, sfDir, replicate), cfg)._1.toDF())
       def gcMillis: Long = {
         import scala.jdk.CollectionConverters._
         java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
@@ -100,8 +81,9 @@ object ScalingBench {
       case Some(cpus) => // child: one pinned level
         val (docs, sec) = runLevel(cpus.toInt, sfDir, reps, replicate)
         println(f"""{"docs":$docs,"sec":$sec%.3f}""")
-      case None => // parent: orchestrate N vs 4N (default 8 vs 32)
-        val levels = sys.env.getOrElse("SPARK_GRAFT_LEVELS", "8,32")
+      case None => // parent: orchestrate N vs 4N (default nproc/4 vs nproc)
+        val nproc = Runtime.getRuntime.availableProcessors
+        val levels = sys.env.getOrElse("SPARK_GRAFT_LEVELS", s"${math.max(1, nproc / 4)},$nproc")
           .split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt)
         require(levels.length == 2 && levels(0) < levels(1),
           s"SPARK_GRAFT_LEVELS must be 'lo,hi' with lo<hi, got: ${levels.mkString(",")}")

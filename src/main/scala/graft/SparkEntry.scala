@@ -22,12 +22,12 @@ object SparkEntry {
       TextAnalysisOps.ops ++ MultimodalOps.ops ++ CorpusOps.ops
 
   /** Flagship: the full extraction pipeline (synthesize interleaved docs →
-    * salted repartition → kernel → spans), exploded to one row per output
-    * span. Driver smoke-checks rows > 0 on sf0.001.
+    * kernel → spans), exploded to one row per output span. Driver
+    * smoke-checks rows > 0 on sf0.001.
     */
   def entry(spark: SparkSession): DataFrame = {
     val docs = DocSynth.docs(spark, "/root/testdata/sf0.001")
-    ExtractJob.extract(docs).toDF()
+    ExtractJob.extractWithLineage(docs)._1.toDF()
       .select(col("doc_id"), explode(col("spans")).as("span"))
       .select(col("doc_id"), col("span.kind"), col("span.text"),
         col("span.media_ref"), col("span.offset"))

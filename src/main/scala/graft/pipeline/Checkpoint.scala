@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.model.Doc
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Resumable, idempotent extraction runs — Iceberg MERGE-on-doc_id semantics
   * over plain Parquet (the local jars carry no Iceberg runtime; SURVEY.md §4.2).
@@ -21,6 +22,12 @@ import org.apache.spark.sql.functions._
   * observable behavior of `MERGE INTO spans ON doc_id`: reprocessing a doc
   * never duplicates it, because extraction is deterministic and a group is
   * rewritten wholesale.
+  *
+  * Each group runs `ExtractJob`'s one kernel stage over its slice of the
+  * input, persisted between the spans write and the lineage commit so both
+  * read the same extraction. The stage adds no exchange: the input arrives
+  * spread by `DocSynth.docs` (or by a real table's scan splits) and the
+  * group filter keeps that spread.
   *
   * At cluster scale each group is itself a full distributed job over 1/G of
   * the input, so checkpoint granularity trades straggler re-work (small G)
@@ -111,18 +118,19 @@ object Checkpoint {
 
     for (g <- todo) {
       val slice = withGrp.filter($"grp" === g).select($"doc_id", $"spans").as[Doc]
-      // Cached tagged stage: the spans write and the lineage write are two
-      // actions over the same kernel output — without the persist each group
-      // would be extracted twice.
-      val (spans, lineage, unpersist) = ExtractJob.extractWithLineageCached(slice, cfg)
-      writer.overwriteGroup(g, spans.toDF())
-      // The lineage append IS the commit marker, so it must be non-empty even
-      // for a zero-doc group: a synthetic partition_id=-1 marker row makes
-      // empty groups durably "done" (otherwise every resume re-runs them).
-      val marker = spark.createDataset(Seq(
-        graft.model.Lineage(-1, 0L, 0L, 0L, "marker")))
-      writer.commitGroup(g, lineage.union(marker).toDF())
-      unpersist()
+      // The spans write and the lineage commit are two actions over the same
+      // kernel output; the persist runs the kernel once per group, not twice.
+      val stage = ExtractJob.tagged(slice, cfg).persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val (spans, lineage) = ExtractJob.split(stage)
+        writer.overwriteGroup(g, spans.toDF())
+        // The lineage append IS the commit marker, so it must be non-empty even
+        // for a zero-doc group: a synthetic partition_id=-1 marker row makes
+        // empty groups durably "done" (otherwise every resume re-runs them).
+        val marker = spark.createDataset(Seq(
+          graft.model.Lineage(-1, 0L, 0L, 0L, "marker")))
+        writer.commitGroup(g, lineage.union(marker).toDF())
+      } finally stage.unpersist()
     }
     todo.size
   }

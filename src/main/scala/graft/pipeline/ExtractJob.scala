@@ -3,257 +3,70 @@ package graft.pipeline
 import graft.kernel.{Extract, ExtractMode}
 import graft.model.{Doc, Lineage}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
-/** The main extraction pipeline (SURVEY.md §3.1's Spark lifecycle):
+/** The extraction pipeline (SURVEY.md §3.1's Spark lifecycle):
   *
-  *   read docs → size-bucket + salt → repartition → mapPartitions(kernel)
-  *   → spans table (+ per-partition lineage metrics)
+  *   Dataset[Doc] → mapPartitions(kernel) → spans (+ per-partition lineage)
   *
-  * Scale design notes (100 TB / 1000 executors):
-  *  - The kernel stage is *map-only*: the single shuffle is the explicit
-  *    salted repartition, keyed by (size_bucket, salt(doc_id)) so the giant-
-  *    doc buckets (north_rule skew case) spread across `saltFactor` tasks
-  *    instead of serializing one straggler partition.
+  * One stage, no exchange of its own. Its input arrives already spread:
+  * `DocSynth.docs` round-robins the raw rows across the session's cores
+  * before synthesis, and a real table arrives in its scan splits. Moving the
+  * synthesised span structs again would cost a stage and a shuffle of the
+  * heaviest representation; the ~1/97 giant docs already balance out across
+  * round-robin partitions (the skew test in PipelineSpec bounds it).
+  *
   *  - No collect(), no driver-side loops; lineage is aggregated distributed
   *    and only the tiny per-partition summary reaches the driver.
   *  - Determinism: output spans are a pure function of the input row, so
   *    task retries and job re-runs emit identical bytes — the precondition
   *    for MERGE-on-doc_id resume (Checkpoint).
+  *  - Kernel failures are counted, not thrown: a single malformed doc must
+  *    not abort a 10^12-doc job (the reference aborts on the first error at
+  *    ingest_documents.py:94, which is exactly the weakness the north_rule
+  *    fixes).
   */
 object ExtractJob {
 
-  final case class Config(
-      mode: ExtractMode = ExtractMode.ChunkMode,
-      numPartitions: Int = 0,     // 0 => session shuffle partitions
-      saltFactor: Int = 0,        // 0 => numPartitions (full spread of giant buckets)
-      giantMinChars: Long = 1024) // rows above this size get their own exchange
+  final case class Config(mode: ExtractMode = ExtractMode.ChunkMode)
 
-  /** Size bucket = log4(totalChars); giant docs land in their own buckets. */
-  def withSizeBucket(docs: Dataset[Doc]): DataFrame =
-    docs.withColumn("total_chars",
-        aggregate(col("spans"), lit(0), (acc, s) => acc + length(s.getField("text"))))
-      .withColumn("size_bucket",
-        when(col("total_chars") <= 0, 0)
-          .otherwise(floor(log(4.0, col("total_chars").cast("double") + lit(1.0)))))
-
-  /** Salted repartition + typed kernel stage.
-    *
-    * This generic path (and the checkpointed `extractWithLineage`) keeps the
-    * FULL (size_bucket, salt) repartition because it makes no assumption
-    * about the input's partitioning — a caller may hand it one giant scan
-    * split. When the input is already spread (real table scan splits), the
-    * fused `extractFromRaw` below shows the preferred shape: move ONLY the
-    * skewed giant rows (~1% of bytes) and let normal rows ride their
-    * partition.
+  /** The kernel stage: `(doc, partition_id, failed)` per input doc; a doc
+    * whose extraction throws becomes an empty doc with `failed = true`.
     */
-  def extract(docs: Dataset[Doc], cfg: Config = Config()): Dataset[Doc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val parts =
-      if (cfg.numPartitions > 0) cfg.numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    val salt = if (cfg.saltFactor > 0) cfg.saltFactor else parts
-    val bucketed = withSizeBucket(docs)
-    val salted = bucketed.withColumn("salt", pmod(xxhash64(col("doc_id")), lit(salt.toLong)))
-    val repart = salted.repartition(parts, col("size_bucket"), col("salt"))
+  def tagged(docs: Dataset[Doc], cfg: Config = Config()): Dataset[(Doc, Int, Boolean)] = {
+    import docs.sparkSession.implicits._
     val mode = cfg.mode
-    repart.select($"doc_id", $"spans").as[Doc]
-      .mapPartitions(_.map(Extract.extractDoc(_, mode)))
-  }
-
-  /** Fused raw→spans pipeline: ONE salted shuffle of the lightweight raw
-    * rows (~text bytes only), with synthesis + extraction running map-side
-    * AFTER the exchange. The alternative (synthesize first, then salt-
-    * repartition `Dataset[Doc]`) shuffles the full span structs — measured
-    * ~2x slower wall-clock at 1M docs and memory-bandwidth-bound instead of
-    * CPU-bound. At 100 TB the same rule holds: shuffle the smallest
-    * representation, do the heavy work after the exchange.
-    *
-    * The size bucket is estimated pre-shuffle from raw length × the giant-doc
-    * inflation factor (a pure function of doc_id), so skewed giants still
-    * spread across `salt` tasks.
-    */
-  def extractFromRaw(
-      spark: SparkSession,
-      sfDir: String,
-      replicate: Int = 1,
-      cfg: Config = Config(),
-      inflate: Int = 1): Dataset[Doc] = {
-    import spark.implicits._
-    val parts =
-      if (cfg.numPartitions > 0) cfg.numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    val salt = if (cfg.saltFactor > 0) cfg.saltFactor else parts
-    // The testdata is one small parquet split; spread the *base* rows first
-    // (a few MB) so the replicate-explode + estimate map run on all cores
-    // instead of the single scan task. On a real multi-file table this
-    // exchange disappears (scan splits already parallelize).
-    val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id").cast("string").as("doc_id"), col("text"))
-      .repartition(parts)
-    val repl0 =
-      if (replicate <= 1) base
-      else base
-        .withColumn("rep", explode(sequence(lit(0), lit(replicate - 1))))
-        .select(concat_ws("#", col("doc_id"), col("rep")).as("doc_id"), col("text"))
-    // `inflate` grows each doc to a realistic web-page size (testdata docs are
-    // ~300 chars; real pages are KBs) — kernel compute per doc scales with it.
-    val repl =
-      if (inflate <= 1) repl0
-      else repl0.select(col("doc_id"),
-        concat_ws(" ", (0 until inflate).map(_ => col("text")): _*).as("text"))
-    val mode = cfg.mode
-    if (sys.env.contains("SPARK_GRAFT_FULL_SHUFFLE")) {
-      // round-1 shape (kept for A/B): salt-repartition EVERY row
-      val est = repl.as[(String, String)].map { case (id, t) =>
-        (id, t, graft.sources.DocSynth.giantOf(id))
-      }.toDF("doc_id", "text", "giant")
-      est.withColumn("salt", pmod(xxhash64(col("doc_id")), lit(salt.toLong)))
-        .repartition(parts, col("giant"), col("salt"))
-        .select(col("doc_id"), col("text")).as[(String, String)]
-        .mapPartitions(_.map { case (id, t) =>
-          Extract.extractDoc(graft.sources.DocSynth.synthDoc(id, t), mode)
-        })
-    } else {
-      // The synthesizer predicting its own output size, as a pure Catalyst
-      // column: DocSynth.giantOf IS pmod(xxhash64(doc_id), 97) == 0 and its
-      // inflation adds exactly 40·len + 190 chars. On a real table this
-      // whole projection collapses to the table's own length/n_chars column
-      // — the routing below never consults the synthetic rule.
-      val est = repl.withColumn("n_chars",
-        when(pmod(xxhash64(col("doc_id")), lit(97L)) === 0L,
-          length(col("text")).cast("long") * 40L + 190L)
-          .otherwise(length(col("text")).cast("long")))
-      // inflate multiplies every doc, giants included — scale the routing
-      // threshold with it so the giant/normal split point stays between the
-      // two populations
-      extractRaw(est, cfg.copy(giantMinChars = cfg.giantMinChars * math.max(inflate, 1)))
-    }
-  }
-
-  /** Skew-targeted extraction over an observable raw table
-    * `(doc_id, text, n_chars)` — the shape a real 100 TB deployment feeds
-    * in, where `n_chars` is just `length(text)` (or the table's own size
-    * column). Routing is purely a property of the row:
-    *
-    *  - rows with `n_chars <= cfg.giantMinChars` ride their scan/input
-    *    partitions (already evenly spread by the source's splits) and make
-    *    exactly ONE Tungsten→JVM round-trip — classification is fused into
-    *    the typed kernel stage's filter;
-    *  - rows above the threshold get their own hash exchange across `parts`
-    *    tasks, so no task serializes a run of 40× documents. This cuts the
-    *    post-explode shuffle from 100% of bytes (round-1 full salting) to
-    *    the giant ~1% — the one-disk shuffle bottleneck in BASELINE.md.
-    *
-    * ONE scan of the input, not two, despite the two branches (the round-3
-    * verdict's #3):
-    *  - when the raw rows arrive through any shared Exchange — the fused
-    *    `extractFromRaw` path, or any caller that repartitioned — the two
-    *    branches reference the SAME canonical exchange, so both static
-    *    `ReuseExchange` (AQE off) and AQE's runtime stage reuse execute the
-    *    scan + exchange once and feed the second branch a `ReusedExchange`
-    *    (plan-gated in `PlanQualitySpec`);
-    *  - when the raw rows come straight off a physical table with a real
-    *    size column, both branch predicates now sit directly on that column
-    *    (no coalesce wrapper), so they PUSH DOWN to the parquet scans and
-    *    row-group/page statistics prune each branch to its own rows: the
-    *    giants scan reads ~1% of the data, the normals scan ~99% — total
-    *    input I/O ≈ 101% of one scan, with no persisted staging copy
-    *    (which at 100 TB would cost more than the re-read it saves). Also
-    *    plan-gated.
-    *
-    * The one remaining two-scan case is synthetic-only: `extractFromRaw`
-    * at replicate=1, where the size rule is a COMPUTED column (so nothing
-    * pushes to parquet) and there is no Generate barrier (so the routing
-    * filter legally sinks below the base exchange, splitting it). That
-    * path double-scans the 5k-row testdata base in the bench's one-shot
-    * phases and exists nowhere at deployment, where the size is a real
-    * column (the pushdown case above).
-    *
-    * Null handling: a NULL size column routes the row to the NORMALS branch
-    * (`n_chars <= T OR n_chars IS NULL` — pushable, null-keeping) instead of
-    * silently dropping it (both branch predicates NULL) or blocking pushdown
-    * with a length() fallback. NULL text becomes the empty document inside
-    * the branch. Misrouting is only ever a performance matter, not
-    * correctness: both branches run the identical kernel.
-    */
-  def extractRaw(raw: DataFrame, cfg: Config = Config()): Dataset[Doc] = {
-    val spark = raw.sparkSession
-    import spark.implicits._
-    val parts =
-      if (cfg.numPartitions > 0) cfg.numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    val mode = cfg.mode
-    def kernelStage(rows: DataFrame): Dataset[Doc] = rows
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(String, String)]
-      .mapPartitions(_.map { case (id, t) =>
-        Extract.extractDoc(graft.sources.DocSynth.synthDoc(id, t), mode)
-      })
-    val normals = kernelStage(
-      raw.where(col("n_chars") <= cfg.giantMinChars || col("n_chars").isNull))
-    val giants = kernelStage(
-      raw.where(col("n_chars") > cfg.giantMinChars)
-        .repartition(parts, col("doc_id"))) // distinct ids -> even spread
-    normals.union(giants)
-  }
-
-  /** One-pass extraction that also yields per-partition lineage rows.
-    * Returns (spans, lineage) — lineage is computed distributed from the
-    * extracted output (kernel failures are counted, not thrown: a single
-    * malformed doc must not abort a 10^12-doc job; reference aborts on first
-    * error at ingest_documents.py:94, which is exactly the weakness the
-    * north_rule fixes).
-    */
-  def extractWithLineage(docs: Dataset[Doc], cfg: Config = Config())
-      : (Dataset[Doc], Dataset[Lineage]) = {
-    val (spans, lineage, _) = extractWithLineageCached(docs, cfg, cache = false)
-    (spans, lineage)
-  }
-
-  /** Like extractWithLineage, but persists the shared tagged stage so that a
-    * caller running TWO actions (spans write + lineage write, as Checkpoint
-    * does per group) executes the kernel ONCE, not twice. The returned
-    * thunk unpersists — call it after the second action commits.
-    */
-  def extractWithLineageCached(docs: Dataset[Doc], cfg: Config = Config(), cache: Boolean = true)
-      : (Dataset[Doc], Dataset[Lineage], () => Unit) = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val mode = cfg.mode
-    val parts =
-      if (cfg.numPartitions > 0) cfg.numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    val salt = if (cfg.saltFactor > 0) cfg.saltFactor else parts
-    val bucketed = withSizeBucket(docs)
-      .withColumn("salt", pmod(xxhash64(col("doc_id")), lit(salt.toLong)))
-    val repart = bucketed.repartition(parts, col("size_bucket"), col("salt"))
-      .select($"doc_id", $"spans").as[Doc]
-
-    // (doc, partition_id, failed) — failures yield an empty doc + flag.
-    val tagged0 = repart.mapPartitions { it =>
+    docs.mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
       it.map { d =>
         try (Extract.extractDoc(d, mode), pid, false)
-        catch { case scala.util.control.NonFatal(_) => (Doc(d.doc_id, Nil), pid, true) }
+        catch { case NonFatal(_) => (Doc(d.doc_id, Nil), pid, true) }
       }
     }
-    val tagged =
-      if (cache) tagged0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else tagged0
-    val spans = tagged.map(_._1)
-    val lineage = tagged.toDF("doc", "partition_id", "failed")
+  }
+
+  /** Spans and per-partition lineage of one tagged stage. Each is its own
+    * action over `stage`; persist it first to run the kernel once.
+    */
+  def split(stage: Dataset[(Doc, Int, Boolean)]): (Dataset[Doc], Dataset[Lineage]) = {
+    import stage.sparkSession.implicits._
+    val lineage = stage.toDF("doc", "partition_id", "failed")
       .groupBy($"partition_id")
       .agg(
         count(lit(1)).as("docs_parsed"),
         sum(size($"doc.spans")).as("spans_emitted"),
         sum(when($"failed", 1L).otherwise(0L)).as("parse_failures"))
       .withColumn("status", lit("complete"))
-      .select($"partition_id".cast("int"), $"docs_parsed", $"spans_emitted",
+      .select($"partition_id", $"docs_parsed", $"spans_emitted",
         $"parse_failures", $"status")
       .as[Lineage]
-    (spans, lineage, () => { tagged.unpersist(); () })
+    (stage.map(_._1), lineage)
   }
+
+  /** Extraction with lineage: `(spans, lineage)` over `docs`. */
+  def extractWithLineage(docs: Dataset[Doc], cfg: Config = Config())
+      : (Dataset[Doc], Dataset[Lineage]) =
+    split(tagged(docs, cfg))
 }

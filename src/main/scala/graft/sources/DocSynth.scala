@@ -16,28 +16,21 @@ import scala.util.hashing.MurmurHash3
   * something to strip), ~1/11 get a two-column pdf_layout encoding, ~1/5 get
   * a media span (image/figure/table) interleaved. A small fraction
   * (`pmod(xxhash64(doc_id), 97) == 0` — see `giantOf` below) is inflated
-  * ~40x to create the skewed "giant doc" population the north_rule's
-  * salting must handle.
+  * ~40x to create the skewed "giant doc" population the pipeline's input
+  * spread must balance.
   */
 object DocSynth {
 
   def hashOf(docId: String): Int = MurmurHash3.stringHash(docId)
 
-  /** Giant-doc selection: `pmod(xxhash64(doc_id), 97) == 0` — deliberately
-    * the exact hash Spark SQL's `xxhash64(col)` computes (seed 42), so the
-    * pipeline can estimate the synthesizer's output size as a pure Catalyst
-    * column (no UDF) and route rows by OBSERVABLE size, never by this rule.
+  /** Giant-doc selection: `pmod(xxhash64(doc_id), 97) == 0`, the exact hash
+    * Spark SQL's `xxhash64(col)` computes (seed 42).
     */
   def giantOf(docId: String): Boolean =
     math.floorMod(
       org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
         org.apache.spark.unsafe.types.UTF8String.fromString(docId),
         org.apache.spark.sql.types.StringType, 42L), 97L) == 0L
-
-  /** Exact character count of `synthDoc`'s inflated giant body:
-    * Σ_{i=0..39} (len + len(" #") + digits(i) + len(" ")) = 40·len + 190.
-    */
-  def giantLen(textLen: Long): Long = 40L * textLen + 190L
 
   def synthDoc(docId: String, text: String): Doc = {
     val h = hashOf(docId)
@@ -101,26 +94,25 @@ object DocSynth {
     * `replicate` deterministically inflates the corpus (doc_id suffixed with
     * the replica index, so every replica synthesizes a *different* doc) —
     * used by the scaling bench to give a local[N] run enough work that task
-    * scheduling overhead doesn't dominate. The raw rows are spread across
-    * defaultParallelism partitions BEFORE the synth map: the testdata is one
-    * small parquet split, and synthesizing on the scan side would serialize
-    * the whole stage.
+    * scheduling overhead doesn't dominate. The *base* rows are spread
+    * round-robin across defaultParallelism partitions BEFORE the replicate
+    * explode and the synth map: the testdata is one small parquet split, so
+    * synthesizing on the scan side would serialize the whole stage, and
+    * only the base rows (not every replica) cross the exchange. This spread
+    * is the one `ExtractJob` relies on instead of an exchange of its own.
+    * NULL text reads as the empty document.
     */
   def docs(spark: SparkSession, sfDir: String, replicate: Int = 1): Dataset[Doc] = {
     import spark.implicits._
+    import org.apache.spark.sql.functions.{coalesce, concat_ws, explode, lit, sequence}
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select($"doc_id".cast("string").as("doc_id"), $"text")
+      .select($"doc_id".cast("string").as("doc_id"), coalesce($"text", lit("")).as("text"))
+      .repartition(spark.sparkContext.defaultParallelism)
     val repl =
       if (replicate <= 1) base
       else base
-        .withColumn("rep", org.apache.spark.sql.functions.explode(
-          org.apache.spark.sql.functions.sequence(
-            org.apache.spark.sql.functions.lit(0),
-            org.apache.spark.sql.functions.lit(replicate - 1))))
-        .select(org.apache.spark.sql.functions.concat_ws("#", $"doc_id", $"rep").as("doc_id"), $"text")
-    repl
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(String, String)]
-      .map { case (id, text) => synthDoc(id, text) }
+        .withColumn("rep", explode(sequence(lit(0), lit(replicate - 1))))
+        .select(concat_ws("#", $"doc_id", $"rep").as("doc_id"), $"text")
+    repl.as[(String, String)].map { case (id, text) => synthDoc(id, text) }
   }
 }

@@ -23,7 +23,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingExtract {
 
-  /** Streaming extraction: same kernel, unbounded docs. */
+  /** Streaming extraction: same kernel, unbounded docs. The bare kernel
+    * map, not `ExtractJob`'s failure-catching stage: a stream has no lineage
+    * sink to count failures in, so a failing doc must fail the batch loudly
+    * rather than turn into a silent empty doc.
+    */
   def extractStream(docs: Dataset[Doc], mode: ExtractMode = ExtractMode.ChunkMode): Dataset[Doc] =
     docs.mapPartitions(_.map(Extract.extractDoc(_, mode)))(docs.encoder)
 

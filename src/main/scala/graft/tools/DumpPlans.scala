@@ -44,26 +44,6 @@ object DumpPlans {
       sb ++= df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode).take(8000)
       sb ++= "\n```\n"
     }
-    // flagship extraction pipeline
-    // AQE off for this dump so the static ReuseExchange is visible in the
-    // printed plan (with AQE on, the same reuse happens at runtime and the
-    // pre-execution explain shows the un-reused initial plan — see
-    // ProbeExtractPlan for the final-adaptive-plan evidence)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val ext = graft.pipeline.ExtractJob.extractFromRaw(spark, sfDir, replicate = 2)
-    sb ++= "\n## extraction pipeline (extractFromRaw, replicated corpus — the sustained-bench shape)\n\n"
-    sb ++= "ONE scan of the input: the giants branch reads a ReusedExchange of the base\n"
-    sb ++= "exchange (the replicate Generate blocks predicate pushdown below it). The\n"
-    sb ++= "same one-scan property holds for the deployed shape — `extractRaw` over a\n"
-    sb ++= "physical table with a real size column — via pushed-down routing filters\n"
-    sb ++= "(row-group pruning makes the two branch scans read disjoint rows; gated in\n"
-    sb ++= "PlanQualitySpec). The only two-scan case is the synthetic one-shot path\n"
-    sb ++= "(replicate=1, COMPUTED size rule): there the routing filter legally sinks\n"
-    sb ++= "below the base exchange, and the double-scanned base is the 5k-row testdata\n"
-    sb ++= "parquet — a case that does not exist at deployment, where size is a column.\n\n```\n"
-    sb ++= ext.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode).take(8000)
-    sb ++= "\n```\n"
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
     new java.io.File(out).getParentFile.mkdirs()
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), sb.toString)
     println(s"wrote $out")

@@ -8,7 +8,7 @@ class MultimodalSpec extends SparkTestBase {
   import spark.implicits._
 
   test("media records: every media span yields one typed binary record") {
-    val docs = ExtractJob.extract(DocSynth.docs(spark, sfDir))
+    val docs = ExtractJob.extractWithLineage(DocSynth.docs(spark, sfDir))._1
     val nMediaSpans = docs.collect().map(_.spans.count(_.kind == "media")).sum
     val recs = MediaPipeline.mediaRecords(docs).collect()
     assert(recs.length == nMediaSpans && recs.nonEmpty)
@@ -16,7 +16,7 @@ class MultimodalSpec extends SparkTestBase {
   }
 
   test("feature extraction: deterministic across partitionings and batch sizes") {
-    val docs = ExtractJob.extract(DocSynth.docs(spark, sfDir))
+    val docs = ExtractJob.extractWithLineage(DocSynth.docs(spark, sfDir))._1
     val recs = MediaPipeline.mediaRecords(docs)
     def run(parts: Int, batch: Int) =
       MediaPipeline.extractFeatures(recs.repartition(parts), StubDecoder, batch)
@@ -32,7 +32,7 @@ class MultimodalSpec extends SparkTestBase {
   }
 
   test("real decode path: synthesized BMP/WAV payloads parse genuinely; corrupt bytes -> parse_ok=false") {
-    val docs = ExtractJob.extract(DocSynth.docs(spark, sfDir))
+    val docs = ExtractJob.extractWithLineage(DocSynth.docs(spark, sfDir))._1
     val recs = MediaPipeline.mediaRecords(docs)
     val feats = MediaPipeline.extractFeatures(recs).collect() // default SniffDecoder
     val images = feats.filter(_.media_type == "image")

@@ -142,38 +142,30 @@ class PlanQualitySpec extends SparkTestBase {
     }
   }
 
-  /** Round-3 verdict #3: the normals/giants routing branches must not cost
-    * a second scan of the input. Fused path: both branches hang off the
-    * same canonical base exchange, so the second branch compiles to a
-    * ReusedExchange (verified here with static reuse; AQE's runtime stage
-    * reuse does the same in adaptive runs — see ProbeExtractPlan).
+  /** The one extraction path adds no exchange of its own: the kernel stage
+    * rides the round-robin spread of DocSynth.docs, and only the lineage
+    * aggregate hashes (one partial row per partition, keyed by partition_id).
     */
-  test("extractFromRaw: ONE input scan — giants branch reuses the base exchange") {
-    withStaticReuse {
-      val p = graft.pipeline.ExtractJob.extractFromRaw(spark, sfDir, replicate = 2)
-        .toDF().queryExecution.executedPlan.toString
-      assert("FileScan".r.findAllIn(p).size == 1, p.take(4000))
-      assert(p.contains("ReusedExchange"), p.take(4000))
-    }
+  test("extraction: no hashpartitioning exchange over DocSynth.docs") {
+    val (spans, lineage) = graft.pipeline.ExtractJob.extractWithLineage(
+      graft.sources.DocSynth.docs(spark, sfDir))
+    val p = spans.queryExecution.executedPlan.toString
+    assert(!p.contains("hashpartitioning"), p.take(4000))
+    assert("Exchange RoundRobinPartitioning".r.findAllIn(p).size == 1, p.take(4000))
+    val l = lineage.queryExecution.executedPlan.toString
+    val keys = "hashpartitioning\\((\\w+)#".r.findAllMatchIn(l).map(_.group(1)).toSet
+    assert(keys == Set("partition_id"), l.take(4000))
   }
 
-  /** Real-table shape (no shared exchange): the routing predicates sit on
-    * the bare size column, so they push down to BOTH branch scans — parquet
-    * row-group stats then prune each branch to its own rows (giants scan
-    * reads ~1% at scale, normals ~99%; total ≈ one scan of the input). A
-    * coalesce()-wrapped predicate would silently turn this into a true
-    * double scan.
+  /** Replicas explode after the round-robin exchange, so only base rows
+    * are shuffled.
     */
-  test("extractRaw on a physical table: routing filters push down to both scans") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-rawpush").toString
-    import spark.implicits._
-    Seq(("a", "small doc", 9L), ("b", "x" * 2000, 2000L))
-      .toDF("doc_id", "text", "n_chars").write.mode("overwrite").parquet(dir)
-    val raw = spark.read.parquet(dir)
-    val p = graft.pipeline.ExtractJob.extractRaw(raw)
-      .toDF().queryExecution.executedPlan.toString
-    assert(p.contains("PushedFilters: [Or(LessThanOrEqual(n_chars,"), p.take(4000))
-    assert(p.contains("GreaterThan(n_chars,"), p.take(4000))
+  test("DocSynth.docs(replicate = 3): the Generate sits above the only Exchange") {
+    val p = graft.sources.DocSynth.docs(spark, sfDir, replicate = 3)
+      .queryExecution.executedPlan.toString
+    assert("Exchange".r.findAllIn(p).size == 1, p.take(4000))
+    val gen = p.indexOf("Generate")
+    assert(gen >= 0 && gen < p.indexOf("Exchange"), p.take(4000))
   }
 
   test("q_asof_join: one-pass merge - single user_id exchange, no join node") {

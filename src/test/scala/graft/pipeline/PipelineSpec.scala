@@ -12,16 +12,20 @@ class PipelineSpec extends SparkTestBase {
   private def collectSorted(ds: org.apache.spark.sql.Dataset[Doc]): Seq[Doc] =
     ds.collect().sortBy(_.doc_id).toSeq
 
+  private def spansOf(docs: org.apache.spark.sql.Dataset[Doc],
+      cfg: ExtractJob.Config = ExtractJob.Config()): org.apache.spark.sql.Dataset[Doc] =
+    ExtractJob.extractWithLineage(docs, cfg)._1
+
   test("extraction is deterministic across partitionings (2 vs 8)") {
     val docs = DocSynth.docs(spark, sfDir)
-    val a = collectSorted(ExtractJob.extract(docs, ExtractJob.Config(numPartitions = 2)))
-    val b = collectSorted(ExtractJob.extract(docs, ExtractJob.Config(numPartitions = 8)))
+    val a = collectSorted(spansOf(docs.repartition(2)))
+    val b = collectSorted(spansOf(docs.repartition(8)))
     assert(a.nonEmpty && a == b)
   }
 
   test("output span invariants: offsets sequential, media refs preserved, chunks <= 500") {
     val docs = DocSynth.docs(spark, sfDir)
-    val out = ExtractJob.extract(docs).collect()
+    val out = spansOf(docs).collect()
     assert(out.length == 500) // sf0.001 documents row count
     for (d <- out) {
       assert(d.spans.map(_.offset) == d.spans.indices)
@@ -38,7 +42,7 @@ class PipelineSpec extends SparkTestBase {
         "<footer><a href='/t'>terms</a></footer></body></html>", "", 0)))
     val layout = Doc("p1", Seq(Span("pdf_layout",
       "50\t10\tleft one\n50\t22\tleft two\n320\t10\tright one\n320\t22\tright two", "", 0)))
-    val out = ExtractJob.extract(spark.createDataset(Seq(html, layout)),
+    val out = spansOf(spark.createDataset(Seq(html, layout)),
       ExtractJob.Config(mode = ExtractMode.SemanticMode)).collect().sortBy(_.doc_id)
     val hSpans = out.find(_.doc_id == "h1").get.spans
     assert(hSpans.exists(s => s.kind == "heading" && s.text == "Title Here"))
@@ -47,18 +51,8 @@ class PipelineSpec extends SparkTestBase {
     assert(pSpans.map(_.text).mkString == "left one\nleft two\n\nright one\nright two")
   }
 
-  test("fused raw->spans path equals synth-then-extract path (both modes)") {
-    import graft.kernel.ExtractMode
-    for (mode <- Seq(ExtractMode.ChunkMode, ExtractMode.SemanticMode)) {
-      val cfg = ExtractJob.Config(mode = mode)
-      val fused = collectSorted(ExtractJob.extractFromRaw(spark, sfDir, replicate = 1, cfg))
-      val staged = collectSorted(ExtractJob.extract(DocSynth.docs(spark, sfDir), cfg))
-      assert(fused == staged, s"fused/staged mismatch in $mode")
-    }
-  }
-
   test("replicated corpus: every replica is a distinct deterministic doc") {
-    val out = ExtractJob.extractFromRaw(spark, sfDir, replicate = 3).collect()
+    val out = spansOf(DocSynth.docs(spark, sfDir, replicate = 3)).collect()
     assert(out.length == 1500)
     assert(out.map(_.doc_id).distinct.length == 1500)
   }
@@ -75,59 +69,20 @@ class PipelineSpec extends SparkTestBase {
 
   test("skew: giant docs spread across partitions (targeted salt exchange)") {
     import org.apache.spark.sql.functions._
-    // replicate enough that several giant docs (1/97 of ids) exist
-    val out = ExtractJob.extractFromRaw(spark, sfDir, replicate = 4,
-      ExtractJob.Config(numPartitions = 8))
+    // replicate enough that several giant docs (1/97 of ids) exist; the
+    // round-robin spread of DocSynth.docs is the only spread they get
+    val out = spansOf(DocSynth.docs(spark, sfDir, replicate = 4))
     val byPart = out.toDF()
       .select(spark_partition_id().as("pid"),
         aggregate(col("spans"), lit(0L), (acc, s) => acc + length(s.getField("text"))).as("chars"))
       .groupBy("pid").agg(sum("chars").as("chars"), count(lit(1)).as("docs"))
       .collect()
-    // union of (salted giants, pass-through normals): ≤ 2×8 partitions
-    assert(byPart.length <= 16 && byPart.length >= 8)
+    assert(byPart.length == spark.sparkContext.defaultParallelism)
     val loads = byPart.map(r => r.getAs[Long]("chars").toDouble)
-    // giants are ~40x normal docs; without spreading, one partition would
-    // carry multiples of the mean. The targeted exchange keeps max within
-    // 3x the mean over the actual task count.
+    // giants are ~40x normal docs; if they piled up, one partition would
+    // carry multiples of the mean. The spread keeps max within 3x the mean.
     assert(loads.max < loads.sum / loads.length * 3.0,
       s"skewed partition loads: ${loads.sorted.reverse.take(3).mkString(",")} vs mean ${loads.sum / loads.length}")
-  }
-
-  test("skew routing is observable-size-based: non-hash-selected giants spread") {
-    import org.apache.spark.sql.functions._
-    // Hand-built raw table: ids chosen so NONE are hash-selected giants
-    // (DocSynth.giantOf is false for all), but six rows carry genuinely long
-    // text — on a real table that's the only signal there is.
-    val ids = (0 until 400).map(i => s"doc$i").filterNot(DocSynth.giantOf)
-    val giants = ids.take(6).map(id => (id, "real content words here ok fine " * 200))
-    val normals = ids.drop(6).map(id => (id, "short normal text row"))
-    val raw = (giants ++ normals).toDF("doc_id", "text")
-      .withColumn("n_chars", length(col("text")).cast("long")) // observable size only
-      .repartition(2) // pretend the source had 2 splits
-    val cfg = ExtractJob.Config(numPartitions = 8)
-    val out = ExtractJob.extractRaw(raw, cfg)
-    // giant rows landed on multiple partitions (their own exchange), and the
-    // output is complete and per-doc correct regardless of routing
-    val giantParts = out.toDF()
-      .select(spark_partition_id().as("pid"), col("doc_id"))
-      .where(col("doc_id").isin(giants.map(_._1): _*))
-      .select("pid").distinct().count()
-    assert(giantParts >= 2, s"giants all serialized on $giantParts partition(s)")
-    val docs = out.collect()
-    assert(docs.length == ids.length)
-    assert(docs.map(_.doc_id).toSet == ids.toSet)
-  }
-
-  test("extractRaw: a NULL n_chars row routes to the normals branch, never dropped") {
-    import org.apache.spark.sql.functions._
-    val raw = Seq(
-      ("docA", "tiny row", Some(8L)),
-      ("docB", "size column not populated on this row", None),
-      ("docC", "real content words here ok fine " * 200, None), // big but unsized: normals (perf-only misroute)
-      ("docD", null.asInstanceOf[String], None) // null text AND size: empty doc, never dropped
-    ).toDF("doc_id", "text", "n_chars")
-    val out = ExtractJob.extractRaw(raw, ExtractJob.Config(numPartitions = 4)).collect()
-    assert(out.map(_.doc_id).toSet == Set("docA", "docB", "docC", "docD"))
   }
 
   test("curation staging: marker-after-data commit; resume never re-reads the input") {
@@ -187,7 +142,7 @@ class PipelineSpec extends SparkTestBase {
   test("paragraph mode: spans are kernel extract_paragraphs outputs in order") {
     import graft.kernel.{ExtractMode, Paragraphs}
     val docs = DocSynth.docs(spark, sfDir)
-    val out = ExtractJob.extract(docs, ExtractJob.Config(mode = ExtractMode.ParagraphMode))
+    val out = spansOf(docs, ExtractJob.Config(mode = ExtractMode.ParagraphMode))
       .collect().sortBy(_.doc_id)
     val in = docs.collect().sortBy(_.doc_id)
     assert(out.nonEmpty && out.length == in.length)
@@ -223,6 +178,21 @@ class PipelineSpec extends SparkTestBase {
     // real metrics are unaffected by markers
     val real = Checkpoint.readLineage(spark, dir).where($"status" === "complete")
     assert(real.agg(org.apache.spark.sql.functions.sum($"docs_parsed")).head.getLong(0) == 1L)
+  }
+
+  test("resume: a NULL-text input row commits as a zero-span doc, never aborts the run") {
+    val in = Files.createTempDirectory("graft-null-text").toString
+    Seq((1L, Some("real content words here ok fine " * 20)), (2L, None), (3L, Some("short row")))
+      .toDF("doc_id", "text").write.parquet(s"$in/documents.parquet")
+    val dir = Files.createTempDirectory("graft-null-out").toString
+    assert(Checkpoint.runResumable(DocSynth.docs(spark, in), dir, numGroups = 4) == 4)
+    val out = Checkpoint.readSpans(spark, dir).as[Doc].collect().sortBy(_.doc_id)
+    assert(out.map(_.doc_id).toSeq == Seq("1", "2", "3"))
+    assert(out(1).spans.isEmpty && out(0).spans.nonEmpty && out(2).spans.nonEmpty)
+    val real = Checkpoint.readLineage(spark, dir).where($"status" === "complete")
+      .agg(org.apache.spark.sql.functions.sum($"docs_parsed"),
+        org.apache.spark.sql.functions.sum($"parse_failures")).head
+    assert(real.getLong(0) == 3L && real.getLong(1) == 0L)
   }
 
   test("resume: kill after 3 groups -> re-run converges to single-shot output") {
