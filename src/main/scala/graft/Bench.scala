@@ -12,8 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * pipeline (BASELINE.json metric) alongside the per-query suite seconds.
   *
   * The extraction/sustained phases run in a SELF-SPAWNED child JVM pinned
-  * with `taskset` to exactly `cpus` cores and a known-good 16g heap
-  * (override: SPARK_GRAFT_CHILD_MEM), the ScalingBench pattern. Rationale
+  * with `taskset` to exactly `cpus` cores and a host-sized heap (`childMem`,
+  * override: SPARK_GRAFT_CHILD_MEM), the ScalingBench pattern. Rationale
   * (rounds 2-3): the round driver launches Bench with a ~90 GB driver heap,
   * which BASELINE.md documents as pathological on this box (lazy-commit
   * page faulting shows up as multi-second stalls) — the official sustained
@@ -44,6 +44,23 @@ object Bench {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** `local[N]` cores: SPARK_GRAFT_CPUS, else the cores this JVM sees. */
+  def cpus: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
+  /** Extraction child heap: SPARK_GRAFT_CHILD_MEM, else half of MemTotal
+    * clamped to 2–8 GiB (2g when MemTotal is unreadable).
+    */
+  def childMem: String = sys.env.getOrElse("SPARK_GRAFT_CHILD_MEM", {
+    val halfGiB = scala.util.Try {
+      val memTotal = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get("/proc/meminfo")), "UTF-8")
+        .linesIterator.find(_.startsWith("MemTotal:")).get
+      memTotal.split("\\s+")(1).toLong / (2L * 1024 * 1024) // kB -> GiB / 2
+    }.getOrElse(2L)
+    s"${math.min(8L, math.max(2L, halfGiB))}g"
+  })
 
   def force(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
@@ -173,7 +190,6 @@ object Bench {
       java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
         .filter(a => a.startsWith("--add-opens") || a.startsWith("-D"))
     }
-    val childMem = sys.env.getOrElse("SPARK_GRAFT_CHILD_MEM", "16g")
     val cmd = Seq("taskset", "-c", s"0-${cpus - 1}", javaBin) ++ jvmArgs ++
       Seq(s"-Xmx$childMem", "-cp", sys.props("java.class.path"), "graft.Bench")
     val pb = new ProcessBuilder(cmd: _*)
@@ -201,7 +217,7 @@ object Bench {
     // process (parent AND child re-entry) must format with '.' decimals
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Bench.cpus
 
     if (sys.env.contains("SPARK_GRAFT_BENCH_CHILD")) {
       // child: extraction phases only, one JSON line, exit

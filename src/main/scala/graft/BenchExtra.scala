@@ -23,7 +23,7 @@ object BenchExtra {
     val names =
       if (names0.contains("all")) SparkEntry.queries.keys.toSeq.sorted
       else names0
-    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Bench.session(Bench.cpus)
     // warm codegen/JIT on the smallest input so per-query numbers measure
     // the plan, not first-run compilation
     try Bench.force(SparkEntry.queries("q1_agg")(spark, "/root/testdata/sf0.001"))

@@ -48,8 +48,21 @@ object QueryScaling {
 
   private def rotated(r: Int): String = {
     val a = "abcdefghijklmnopqrstuvwxyz"
-    val k = r % 26
-    a.substring(k) + a.substring(0, k)
+    a.substring(r) + a.substring(0, r)
+  }
+
+  /** Fails unless `factor` replicas of doc_ids in `[minId, maxId]` stay
+    * independent copies: ids must lie in `[0, ReplicaOffset)` so that no
+    * shifted id meets another replica's, and there are only 26 distinct
+    * rotations of [a-z], so replica 26 would clone replica 0's texts.
+    */
+  private[graft] def checkReplicable(factor: Int, minId: Long, maxId: Long): Unit = {
+    require(factor >= 1 && factor <= 26,
+      s"SPARK_GRAFT_SCALE=$factor: replica texts are the 26 rotations of [a-z], " +
+        "so a factor above 26 would repeat texts; use 1..26")
+    require(minId >= 0 && maxId < ReplicaOffset,
+      s"doc_id range [$minId, $maxId] is not inside [0, $ReplicaOffset): replica " +
+        s"doc_ids (doc_id + r × $ReplicaOffset) would collide across replicas")
   }
 
   def main(args: Array[String]): Unit = {
@@ -61,9 +74,12 @@ object QueryScaling {
     val names = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(DefaultQueries)
-    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Bench.session(Bench.cpus)
 
     // ---- stage the replicated corpus ----
+    val ids = spark.read.parquet(s"$sfDir/documents.parquet")
+      .agg(min("doc_id"), max("doc_id")).head()
+    checkReplicable(factor, ids.getLong(0), ids.getLong(1))
     val scaled = s"/tmp/graft_qscale_x$factor"
     val scaledPath = java.nio.file.Paths.get(scaled)
     if (java.nio.file.Files.exists(scaledPath)) {

@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Imperative registration of the engine's native functions, for sessions
   * built WITHOUT `spark.sql.extensions=graft.GraftExtensions` (a host that
@@ -29,37 +30,38 @@ object GraftFunctions {
     Md5Prefix64(children.head)
   }
 
+  /** The Int a constant builder argument folds to: any foldable integral
+    * expression (`4`, `4L`, `CAST(4 AS SMALLINT)`) in Int range. Anything
+    * else (a column, a string, NULL) fails analysis naming the function.
+    */
+  private def intArg(function: String, param: String, e: Expression): Int = {
+    val v = e.dataType match {
+      case ByteType | ShortType | IntegerType | LongType if e.foldable =>
+        Option(e.eval()).map(_.asInstanceOf[Number].longValue)
+      case _ => None
+    }
+    v.filter(_.isValidInt).map(_.toInt).getOrElse(throw new AnalysisException(
+      "INVALID_PARAMETER_VALUE.INTEGER",
+      Map("parameter" -> s"`$param`", "functionName" -> s"`$function`",
+        "invalidValue" -> e.sql)))
+  }
+
   private[graft] def minHashSigsBuilder(children: Seq[Expression]): Expression = {
     require(children.length == 2,
       s"minhash_sigs requires exactly 2 arguments (array<string>, numHashes literal), got ${children.length}")
-    val n = children(1) match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"minhash_sigs numHashes must be an integer literal, got $other")
-    }
-    MinHashSigs(children.head, n)
+    MinHashSigs(children.head, intArg("minhash_sigs", "numHashes", children(1)))
   }
 
   private[graft] def winnowPairsBuilder(children: Seq[Expression]): Expression = {
     require(children.length == 2,
       s"winnow_pairs requires exactly 2 arguments (array<bigint>, window literal), got ${children.length}")
-    val w = children(1) match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"winnow_pairs window must be an integer literal, got $other")
-    }
-    WinnowPairs(children.head, w)
+    WinnowPairs(children.head, intArg("winnow_pairs", "window", children(1)))
   }
 
   private[graft] def simHashBitsBuilder(children: Seq[Expression]): Expression = {
     require(children.length == 2,
       s"simhash_bits requires exactly 2 arguments (array<bigint>, numBits literal), got ${children.length}")
-    val n = children(1) match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"simhash_bits numBits must be an integer literal, got $other")
-    }
-    SimHashBits(children.head, n)
+    SimHashBits(children.head, intArg("simhash_bits", "numBits", children(1)))
   }
 
   def ensure(spark: SparkSession): Unit = {

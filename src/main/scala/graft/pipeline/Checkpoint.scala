@@ -1,7 +1,7 @@
 package graft.pipeline
 
-import graft.model.Doc
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import graft.model.{Doc, Lineage}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -23,23 +23,28 @@ import org.apache.spark.storage.StorageLevel
   * never duplicates it, because extraction is deterministic and a group is
   * rewritten wholesale.
   *
-  * Each group runs `ExtractJob`'s one kernel stage over its slice of the
-  * input, persisted between the spans write and the lineage commit so both
-  * read the same extraction. The stage adds no exchange: the input arrives
-  * spread by `DocSynth.docs` (or by a real table's scan splits) and the
-  * group filter keeps that spread.
+  * A run touches its input once: `ExtractJob`'s kernel stage runs over the
+  * docs of every group still to do, tagged with each doc's group, and is
+  * persisted (MEMORY_AND_DISK) for the whole run. The lineage of all those
+  * groups is one aggregate over `(grp, partition_id)`, collected as at
+  * most groups × partitions rows. Each group then commits from the cache:
+  * its spans write is one filter over the cached stage (no scan, no
+  * exchange) and its lineage append is one single-partition write. The
+  * cost is memory: the run's whole extracted output stays cached until the
+  * last group commits, spilling to disk past the storage memory.
   *
-  * At cluster scale each group is itself a full distributed job over 1/G of
-  * the input, so checkpoint granularity trades straggler re-work (small G)
-  * against commit overhead (large G); G≈#(Iceberg partitions touched) in a
-  * real deployment.
+  * Checkpoint granularity trades re-work after a kill (small G: each group,
+  * and the work a kill throws away with it, is larger) against per-group
+  * commit overhead (large G); G≈#(Iceberg partitions touched) in a real
+  * deployment.
   */
 object Checkpoint {
 
   def spansDir(outDir: String)   = s"$outDir/spans"
   def lineageDir(outDir: String) = s"$outDir/lineage"
 
-  def groupOf(numGroups: Int) = pmod(xxhash64(col("doc_id")), lit(numGroups.toLong))
+  def groupOf(numGroups: Int, docId: Column = col("doc_id")): Column =
+    pmod(xxhash64(docId), lit(numGroups.toLong))
 
   /** The writer seam (SURVEY §7.1): Iceberg-style per-group commit. A real
     * Iceberg catalog slots in by implementing `overwriteGroup` as
@@ -114,24 +119,28 @@ object Checkpoint {
 
     val done = writer.doneGroups()
     val todo = (0L until numGroups.toLong).filterNot(done).take(maxGroups)
-    val withGrp = docs.toDF().withColumn("grp", groupOf(numGroups))
+    if (todo.isEmpty) return 0
 
-    for (g <- todo) {
-      val slice = withGrp.filter($"grp" === g).select($"doc_id", $"spans").as[Doc]
-      // The spans write and the lineage commit are two actions over the same
-      // kernel output; the persist runs the kernel once per group, not twice.
-      val stage = ExtractJob.tagged(slice, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val (spans, lineage) = ExtractJob.split(stage)
-        writer.overwriteGroup(g, spans.toDF())
-        // The lineage append IS the commit marker, so it must be non-empty even
-        // for a zero-doc group: a synthetic partition_id=-1 marker row makes
-        // empty groups durably "done" (otherwise every resume re-runs them).
-        val marker = spark.createDataset(Seq(
-          graft.model.Lineage(-1, 0L, 0L, 0L, "marker")))
-        writer.commitGroup(g, lineage.union(marker).toDF())
-      } finally stage.unpersist()
-    }
+    // One kernel pass over the todo groups' docs; every group's write and
+    // lineage below reads this cache, never the input.
+    val stage = ExtractJob.tagged(docs.filter(groupOf(numGroups).isin(todo: _*)), cfg)
+      .toDF("doc", "partition_id", "failed")
+      .withColumn("grp", groupOf(numGroups, $"doc.doc_id"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val lineage = ExtractJob.lineageBy(stage, $"grp")
+        .select($"grp", $"lineage").as[(Long, Lineage)].collect().toSeq.groupMap(_._1)(_._2)
+      // The lineage append IS the commit marker, so it must be non-empty even
+      // for a zero-doc group: a synthetic partition_id=-1 marker row makes
+      // empty groups durably "done" (otherwise every resume re-runs them).
+      val marker = Lineage(-1, 0L, 0L, 0L, "marker")
+      for (g <- todo) {
+        writer.overwriteGroup(g, stage.filter($"grp" === g).select($"doc.*"))
+        // one partition: the group's few rows land as one file
+        writer.commitGroup(g,
+          spark.createDataset(lineage.getOrElse(g, Nil) :+ marker).toDF().coalesce(1))
+      }
+    } finally stage.unpersist()
     todo.size
   }
 

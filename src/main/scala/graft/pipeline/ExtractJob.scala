@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.kernel.{Extract, ExtractMode}
 import graft.model.{Doc, Lineage}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
 
@@ -52,18 +52,23 @@ object ExtractJob {
     */
   def split(stage: Dataset[(Doc, Int, Boolean)]): (Dataset[Doc], Dataset[Lineage]) = {
     import stage.sparkSession.implicits._
-    val lineage = stage.toDF("doc", "partition_id", "failed")
-      .groupBy($"partition_id")
-      .agg(
-        count(lit(1)).as("docs_parsed"),
-        sum(size($"doc.spans")).as("spans_emitted"),
-        sum(when($"failed", 1L).otherwise(0L)).as("parse_failures"))
-      .withColumn("status", lit("complete"))
-      .select($"partition_id", $"docs_parsed", $"spans_emitted",
-        $"parse_failures", $"status")
-      .as[Lineage]
+    val lineage = lineageBy(stage.toDF("doc", "partition_id", "failed"))
+      .select($"lineage.*").as[Lineage]
     (stage.map(_._1), lineage)
   }
+
+  /** Lineage of a tagged stage (columns `doc`, `partition_id`, `failed`),
+    * one row per `(keys…, partition_id)`: those columns, then a `lineage`
+    * struct in the [[Lineage]] shape.
+    */
+  def lineageBy(stage: DataFrame, keys: Column*): DataFrame =
+    stage.groupBy(keys :+ col("partition_id"): _*)
+      .agg(struct(
+        col("partition_id"),
+        count(lit(1)).as("docs_parsed"),
+        sum(size(col("doc.spans"))).as("spans_emitted"),
+        sum(when(col("failed"), 1L).otherwise(0L)).as("parse_failures"),
+        lit("complete").as("status")).as("lineage"))
 
   /** Extraction with lineage: `(spans, lineage)` over `docs`. */
   def extractWithLineage(docs: Dataset[Doc], cfg: Config = Config())

@@ -72,4 +72,15 @@ class MinHashSigsSpec extends SparkTestBase {
       Seq(Tuple1(1L)).toDF("x").select(expr("minhash_sigs(x, 8)")).collect())
     assert(e2.getMessage != null)
   }
+
+  test("minhash_sigs numHashes: any foldable integral is accepted; a column fails analysis naming the function") {
+    GraftFunctions.ensure(spark)
+    val df = Seq(Tuple1(Array("a b c", "b c d")), Tuple1(Array("x y z"))).toDF("shingles")
+    val want = df.select(expr("minhash_sigs(shingles, 4)")).collect().toSeq
+    assert(df.select(expr("minhash_sigs(shingles, 4L)")).collect().toSeq == want)
+    assert(df.select(expr("minhash_sigs(shingles, CAST(4 AS SMALLINT))")).collect().toSeq == want)
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      df.withColumn("k", lit(4)).select(expr("minhash_sigs(shingles, k)")).collect())
+    assert(e.getMessage.contains("`minhash_sigs`"), e.getMessage)
+  }
 }

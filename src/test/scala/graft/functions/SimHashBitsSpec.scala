@@ -55,4 +55,15 @@ class SimHashBitsSpec extends SparkTestBase {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("*(1) Project [simhash_bits"), plan.take(2000))
   }
+
+  test("simhash_bits numBits: any foldable integral is accepted; a column fails analysis naming the function") {
+    GraftFunctions.ensure(spark)
+    val df = Seq(Tuple1(Array(5L, 7L, 1L)), Tuple1(Array(-1L, 7L))).toDF("hashes")
+    val want = df.select(expr("simhash_bits(hashes, 8)")).collect().toSeq
+    assert(df.select(expr("simhash_bits(hashes, 8L)")).collect().toSeq == want)
+    assert(df.select(expr("simhash_bits(hashes, CAST(8 AS SMALLINT))")).collect().toSeq == want)
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      df.withColumn("k", lit(8)).select(expr("simhash_bits(hashes, k)")).collect())
+    assert(e.getMessage.contains("`simhash_bits`"), e.getMessage)
+  }
 }

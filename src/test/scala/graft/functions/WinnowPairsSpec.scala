@@ -131,4 +131,15 @@ class WinnowPairsSpec extends SparkTestBase {
     val e3 = intercept[Exception](df.select(expr("winnow_pairs(hs, 0)")).collect())
     assert(e3.getMessage != null)
   }
+
+  test("winnow_pairs window: any foldable integral is accepted; a column fails analysis naming the function") {
+    GraftFunctions.ensure(spark)
+    val df = Seq(Tuple1(Array(5L, 3L, 9L, 3L, 7L)), Tuple1(Array(1L))).toDF("hs")
+    val want = df.select(expr("winnow_pairs(hs, 2)")).collect().toSeq
+    assert(df.select(expr("winnow_pairs(hs, 2L)")).collect().toSeq == want)
+    assert(df.select(expr("winnow_pairs(hs, CAST(2 AS SMALLINT))")).collect().toSeq == want)
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      df.withColumn("k", lit(2)).select(expr("winnow_pairs(hs, k)")).collect())
+    assert(e.getMessage.contains("`winnow_pairs`"), e.getMessage)
+  }
 }

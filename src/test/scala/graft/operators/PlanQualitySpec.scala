@@ -157,6 +157,43 @@ class PlanQualitySpec extends SparkTestBase {
     assert(keys == Set("partition_id"), l.take(4000))
   }
 
+  /** A resumable run extracts once and commits each group from that cache:
+    * a group's spans write finds the cache already built and adds no
+    * exchange and no input scan of its own.
+    */
+  test("resumable run: each group's spans write reads the built cache, no exchange, no input scan") {
+    import graft.pipeline.{Checkpoint, ExtractJob}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-resume").toString
+    val inner = new Checkpoint.ParquetSpanWriter(spark, dir)
+    val seen = scala.collection.mutable.ArrayBuffer[(SparkPlan, Boolean)]()
+    val writer = new Checkpoint.SpanWriter {
+      def doneGroups(): Set[Long] = inner.doneGroups()
+      def overwriteGroup(grp: Long, spans: DataFrame): Unit = {
+        val p = spans.queryExecution.executedPlan
+        val built = aqe.collect(p) { case s: InMemoryTableScanExec => s }
+          .forall(_.relation.cacheBuilder.isCachedColumnBuffersLoaded)
+        seen += ((p, built))
+        inner.overwriteGroup(grp, spans)
+      }
+      def commitGroup(grp: Long, lineage: DataFrame): Unit = inner.commitGroup(grp, lineage)
+    }
+    assert(Checkpoint.runResumable(graft.sources.DocSynth.docs(spark, sfDir), writer,
+      ExtractJob.Config(), numGroups = 8, maxGroups = Int.MaxValue) == 8)
+    assert(seen.size == 8)
+    for ((p, built) <- seen) {
+      assert(aqe.collect(p) { case s: InMemoryTableScanExec => s }.nonEmpty, p.toString.take(4000))
+      assert(built, s"the group write builds the cache itself:\n${p.toString.take(4000)}")
+      assert(aqe.collect(p) { case e: Exchange => e }.isEmpty, p.toString.take(4000))
+      assert(aqe.collect(p) { case f: FileSourceScanExec => f }.isEmpty, p.toString.take(4000))
+    }
+  }
+
   /** Replicas explode after the round-robin exchange, so only base rows
     * are shuffled.
     */

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.SparkTestBase
 import graft.kernel.ExtractMode
-import graft.model.{Doc, Span}
+import graft.model.{Doc, Lineage, Span}
 import graft.sources.DocSynth
 import java.nio.file.Files
 
@@ -217,6 +217,31 @@ class PipelineSpec extends SparkTestBase {
     assert(a == b)
     assert(a.map(_.doc_id).distinct.size == 500) // no duplicates: MERGE semantics
     assert(Checkpoint.readLineage(spark, dirA).select("grp").distinct().count() == 8)
+  }
+
+  test("runResumable synthesises each input doc once per run, not once per group") {
+    val synthesised = spark.sparkContext.longAccumulator("synthesised")
+    val docs = DocSynth.docs(spark, sfDir).map { d => synthesised.add(1); d }
+    val dir = Files.createTempDirectory("graft-resume-once").toString
+    assert(Checkpoint.runResumable(docs, dir, numGroups = 8) == 8)
+    assert(synthesised.value == 500L)
+  }
+
+  test("each group commits exactly one lineage file") {
+    val docs = DocSynth.docs(spark, sfDir)
+    val dir = Files.createTempDirectory("graft-resume-lineage").toString
+    assert(Checkpoint.runResumable(docs, dir, numGroups = 8) == 8)
+    val files = new java.io.File(Checkpoint.lineageDir(dir)).listFiles().map(_.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith("."))
+    assert(files.length == 8, files.mkString(", "))
+    val marker = Lineage(-1, 0L, 0L, 0L, "marker")
+    for (g <- 0L until 8L) {
+      val want = ExtractJob.extractWithLineage(docs.filter(Checkpoint.groupOf(8) === g))._2
+        .collect() :+ marker
+      val got = Checkpoint.readLineage(spark, dir).where($"grp" === g).drop("grp")
+        .as[Lineage].collect()
+      assert(got.sortBy(_.partition_id).toSeq == want.sortBy(_.partition_id).toSeq, s"group $g")
+    }
   }
 
   test("resume through JsonlSpanWriter converges to the parquet writer's output") {
