@@ -124,7 +124,7 @@ object DedupOps {
     * scan feeds the minhash fold here AND both sides of the exact-Jaccard
     * verify join (MinHash is duplicate-insensitive, so signatures over the
     * DISTINCT sets equal the oracle's multiset fold — the precedent
-    * curationStagesFrom already relies on). The fold is pinned behind a
+    * verdictsFrom already relies on). The fold is pinned behind a
     * SECOND Aggregate barrier before the per-column extraction (the 8
     * `mh$j` projections would otherwise each re-inline it — the
     * q_simhash_pairs lesson); that barrier rides the shingle barrier's
@@ -443,14 +443,6 @@ object DedupOps {
        |          CAST(len($toksDuck) - 2 AS DOUBLE) AS dup_frac
        |  FROM documents WHERE len($toksDuck) >= 3)""".stripMargin
 
-  /** Curation's Spark-side stage tables, all derived from ONE checkpointed
-    * doc-feature pass (see the q_curation_pipeline comment for why).
-    */
-  private final case class CurationStages(
-      scored: DataFrame,       // (doc_id, lang, quality, dup_frac)
-      contaminated: DataFrame, // (doc_id)
-      dupDrops: DataFrame)     // (doc_id)
-
   /** The one-pass doc-feature projection every curation stage derives from:
     * `(doc_id, lang, n_toks, n_stops, shingles)` — exactly the narrow table
     * a 100 TB curation job persists as its first stage.
@@ -466,17 +458,19 @@ object DedupOps {
         expr(s"array_distinct($shinglesFromToks)").as("shingles"))
   }
 
-  private def curationStages(s: org.apache.spark.sql.SparkSession, dir: String): CurationStages =
-    curationStagesFrom(docFeatures(s, dir).localCheckpoint(true))
+  private def verdicts(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    verdictsFrom(docFeatures(s, dir).localCheckpoint(true))
 
-  /** Stage tables over an already-materialized doc-feature table. The
-    * caller decides the staging medium: the in-query registry form uses
-    * `localCheckpoint(true)` (fast, but its blocks die with an executor);
-    * the deployed job (`curationRunStaged`) persists the table to durable
-    * storage first, so a lost executor — or a killed job — recomputes
-    * nothing upstream of the features.
+  /** The per-doc verdict table over an already-materialized doc-feature
+    * table: one row per tokenizable doc, `(doc_id, lang, quality)` plus the
+    * five cumulative funnel flags `f_bench, f_quality, f_rep, f_cont,
+    * f_dup`. The curated table is the AND of the flags and the funnel is
+    * one conditional aggregate over them, so each predicate is stated once
+    * and both outputs read the same table. The anti joins of the stage
+    * predicates are left joins + null tests here: doc_ids are unique on
+    * both sides, so no fanout and identical membership.
     */
-  private def curationStagesFrom(base: DataFrame): CurationStages = {
+  private def verdictsFrom(base: DataFrame): DataFrame = {
     val sig = base.select(col("doc_id"), expr(mhSparkAll).as("sigs"))
       .select(col("doc_id") +: (0 until NumHashes).map(j => col("sigs")(j).as(s"mh$j")): _*)
     val bands = bandsSpark(sig)
@@ -493,28 +487,34 @@ object DedupOps {
       .select(col("doc_a"), col("doc_b"))
     // near-dup victims: every clustered doc except its component's min
     val dupDrops = connectedComponents(pairs)
-      .where(col("cluster") =!= col("doc_id")).select(col("doc_id"))
+      .where(col("cluster") =!= col("doc_id")).select(col("doc_id"), lit(1).as("is_dup"))
     val bench = base.where(col("doc_id") % 97 === 0)
       .select(explode(col("shingles")).as("shingle")).distinct()
     val contaminated = base.where(col("doc_id") % 97 =!= 0)
       .select(col("doc_id"), explode(col("shingles")).as("shingle"))
       .join(broadcast(bench), "shingle")
-      .select(col("doc_id")).distinct()
+      .select(col("doc_id")).distinct().withColumn("is_cont", lit(1))
     val words = col("n_toks").cast("double")
     val stops = col("n_stops").cast("double")
-    val scored = base.select(col("doc_id"), col("lang"),
-      ((least(col("n_toks"), lit(100)).cast("double") / 100.0) * 0.7 +
-        (lit(1.0) - stops / words) * 0.3).as("quality"),
-      (lit(1.0) - size(col("shingles")).cast("double") /
-        (words - lit(2.0))).as("dup_frac"))
-    CurationStages(scored, contaminated, dupDrops)
+    base.select(col("doc_id"), col("lang"),
+        ((least(col("n_toks"), lit(100)).cast("double") / 100.0) * 0.7 +
+          (lit(1.0) - stops / words) * 0.3).as("quality"),
+        (lit(1.0) - size(col("shingles")).cast("double") /
+          (words - lit(2.0))).as("dup_frac"))
+      .join(contaminated, Seq("doc_id"), "left")
+      .join(dupDrops, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("lang"), col("quality"),
+        (col("doc_id") % 97 =!= 0).as("f_bench"),
+        (col("quality") >= 0.5).as("f_quality"),
+        (col("dup_frac") <= 0.05).as("f_rep"),
+        col("is_cont").isNull.as("f_cont"),
+        col("is_dup").isNull.as("f_dup"))
   }
 
-  private def curatedFrom(st: CurationStages): DataFrame =
-    st.scored
-      .where(col("doc_id") % 97 =!= 0 && col("quality") >= 0.5 && col("dup_frac") <= 0.05)
-      .join(st.contaminated, Seq("doc_id"), "left_anti")
-      .join(st.dupDrops, Seq("doc_id"), "left_anti")
+  private val funnelFlags: Seq[String] = Seq("f_bench", "f_quality", "f_rep", "f_cont", "f_dup")
+
+  private def curatedFrom(v: DataFrame): DataFrame =
+    v.where(funnelFlags.map(col).reduce(_ && _))
       .select(col("doc_id"), col("lang"), col("quality"),
         when(expr(s"${h60Spark("cast(doc_id as string)")} % 10") < 8, "train")
           .when(expr(s"${h60Spark("cast(doc_id as string)")} % 10") === 8, "val")
@@ -532,27 +532,16 @@ object DedupOps {
     "4_decontaminated"  -> "shares a shingle with the benchmark set",
     "5_deduped"         -> "non-keeper in a near-dup cluster")
 
-  private def funnelFrom(st: CurationStages): DataFrame = {
+  private def funnelFrom(v: DataFrame): DataFrame = {
     // ONE conditional-aggregation pass instead of a six-branch count union:
-    // each funnel stage is a cumulative conjunction of per-doc flags, so
-    // all six survivor counts ride a single aggregate over the flagged
-    // table (the anti joins become left joins + null tests — doc_ids are
-    // unique on both sides, so no fanout and identical membership). The
-    // six report rows (and the dropped = prevStage − stage differences)
-    // are then built IN-PLAN from the one aggregate row — no per-stage
-    // job, no window, no data-sized anything above the aggregate.
-    val flagged = st.scored
-      .join(st.contaminated.withColumn("is_cont", lit(1)), Seq("doc_id"), "left")
-      .join(st.dupDrops.withColumn("is_dup", lit(1)), Seq("doc_id"), "left")
-      .select(
-        (col("doc_id") % 97 =!= 0).as("f_bench"),
-        (col("quality") >= 0.5).as("f_quality"),
-        (col("dup_frac") <= 0.05).as("f_rep"),
-        col("is_cont").isNull.as("f_cont"),
-        col("is_dup").isNull.as("f_dup"))
-    val cum = Seq(col("f_bench"), col("f_quality"), col("f_rep"), col("f_cont"), col("f_dup"))
+    // each funnel stage is a cumulative conjunction of the verdict flags,
+    // so all six survivor counts ride a single aggregate. The six report
+    // rows (and the dropped = prevStage − stage differences) are then built
+    // IN-PLAN from the one aggregate row — no per-stage job, no window, no
+    // data-sized anything above the aggregate.
+    val cum = funnelFlags.map(col)
       .scanLeft(lit(true))(_ && _) // cumulative stage predicates, 0_base first
-    val agg = flagged.agg(
+    val agg = v.agg(
       count(when(cum(0), 1)).as("c0"),
       cum.tail.zipWithIndex.map { case (c, i) => count(when(c, 1)).as(s"c${i + 1}") }: _*)
     val stageRows = funnelReasons.zipWithIndex.map { case ((stage, reason), i) =>
@@ -568,30 +557,31 @@ object DedupOps {
       .orderBy("stage")
   }
 
-  /** One shared doc-feature pass → (curated table, funnel report): the
-    * deployed-job entry (CurateMain). Calling the two registry queries
-    * separately builds and executes the checkpoint + LSH + connected-
-    * components DAG twice; this derives both outputs from a single stage
-    * computation.
+  /** One shared doc-feature pass → (curated table, funnel report), the
+    * in-memory form of [[curationRunStaged]]: the verdict table is
+    * checkpointed once (`localCheckpoint`, nothing left persisted to
+    * release) and both outputs read it, where the two registry queries
+    * would each run the LSH + connected-components DAG.
     */
   def curationRun(s: org.apache.spark.sql.SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val st = curationStages(s, dir)
-    (curatedFrom(st), funnelFrom(st))
+    val v = verdicts(s, dir).localCheckpoint(true)
+    (curatedFrom(v), funnelFrom(v))
   }
 
   /** Deployed-job curation (CurateMain): the doc-feature table is staged to
     * DURABLE storage (parquet + commit marker written strictly after the
-    * data), and every downstream stage reads the staged copy. Contrast with
-    * the in-query `localCheckpoint(true)` form: localCheckpoint blocks die
-    * with an executor, so at 100 TB a single lost executor would kill the
-    * job instead of recomputing — the staged table costs one extra
-    * write/read of the narrow feature projection and removes that failure
-    * mode entirely. Resume semantics: a present marker means the feature
-    * write committed — the input is not touched again (tested by resuming
+    * data); the rest of the job reads the staged copy. Durability contract:
+    * everything up to the feature stage is durable; connected components'
+    * labels and the verdict table are `localCheckpoint`s, whose blocks die
+    * with their executor — a lost executor after the stage fails the job,
+    * and a re-run resumes from the durable stage without touching the
+    * input. Resume semantics: a present marker means the feature write
+    * committed — the input is not touched again (tested by resuming
     * against a deleted input dir); an absent marker (crash mid-write) means
     * the partial stage is ignored and rewritten. Everything downstream is a
     * pure function of the staged table, so a re-run after any crash
-    * converges to identical output.
+    * converges to identical output. The verdict table is built (eagerly
+    * checkpointed) by this call; both returned frames read only it.
     */
   def curationRunStaged(
       s: org.apache.spark.sql.SparkSession,
@@ -629,8 +619,8 @@ object DedupOps {
       // reaching here means the input was scanned, so ident is defined
       try out.write(ident.get.getBytes("UTF-8")) finally out.close()
     }
-    val st = curationStagesFrom(s.read.parquet(featDir))
-    (curatedFrom(st), funnelFrom(st))
+    val v = verdictsFrom(s.read.parquet(featDir)).localCheckpoint(true)
+    (curatedFrom(v), funnelFrom(v))
   }
 
   /** Connected components over an undirected pair list (`doc_a`, `doc_b`)
@@ -658,12 +648,24 @@ object DedupOps {
     * be ≡ 0 (mod 2^64) would falsely read as converged and return an
     * unconverged labeling. `localCheckpoint` truncates each round's lineage
     * so the plan doesn't grow with iteration count.
+    *
+    * Early exit: before the first round, an exact SETTLED test (two joins
+    * + `isEmpty`: no edge (u, v) has label(u) ≠ label(v)) is the proof
+    * round. Labels that agree across every edge are constant per
+    * component, and by the invariant that constant is the component's min
+    * (no sum, so nothing can wrap). Components whose min neighbours every
+    * node (pairs, stars around their min) settle from the seed and run no
+    * propagate/jump round; so do the verified-pair graphs of sf0.001–sf0.1
+    * and of the perfbench `curate` input. A graph that does not settle
+    * pays the check on top of its rounds (≈0.4 s at local[4] for 1,000
+    * six-node chains, whose three rounds take ≈1.3–2 s).
     */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 25): DataFrame =
     connectedComponentsWithStats(pairs, maxIters)._1
 
   /** As [[connectedComponents]], also returning the number of rounds run
-    * (including the final no-change round that proves convergence).
+    * (including the proof: the settled check, or the final no-change
+    * round).
     */
   def connectedComponentsWithStats(pairs: DataFrame, maxIters: Int = 25): (DataFrame, Int) = {
     // edges is marked for lazy checkpoint: the eager labels checkpoint
@@ -682,8 +684,14 @@ object DedupOps {
       .agg(least(col("u"), min(col("v"))).as("cluster"))
       .select(col("u").as("doc_id"), col("cluster"))
       .localCheckpoint(true)
-    var converged = false
-    var it = 0
+    // early exit (see the scaladoc): a seed no edge disagrees with is final
+    val settled = edges
+      .join(labels.select(col("doc_id").as("u"), col("cluster").as("cu")), "u")
+      .join(labels.select(col("doc_id").as("v"), col("cluster").as("cv")), "v")
+      .where(col("cu") =!= col("cv"))
+      .isEmpty
+    var converged = settled
+    var it = if (settled) 1 else 0
     while (!converged && it < maxIters) {
       val viaNbr = edges.join(labels, edges("v") === labels("doc_id"))
         .select(edges("u").as("doc_id"), col("cluster"))
@@ -1159,14 +1167,14 @@ object DedupOps {
          |  AND doc_id NOT IN (SELECT doc_id FROM contaminated)
          |  AND doc_id NOT IN (SELECT doc_id FROM dup_drops)
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      // ONE doc-feature pass (localCheckpoint inside curationStages) feeds
+      // ONE doc-feature pass (localCheckpoint inside verdicts) feeds
       // every stage. Without it, each stage's doc_id filters specialize its
       // subplan (they push below the Aggregate barrier), defeating exchange
       // reuse — measured 5 documents scans re-running tokenize→shingle per
       // branch (13s vs ~4s at sf0.1). MinHash is duplicate-insensitive, so
       // signatures derive from the DISTINCT shingle sets with values
       // identical to the oracle's multiset fold.
-      curatedFrom(curationStages(s, dir))
+      curatedFrom(verdicts(s, dir))
     },
 
     // The curation funnel: survivor counts after each cumulative stage —
@@ -1191,7 +1199,7 @@ object DedupOps {
          |  UNION ALL SELECT '4_decontaminated', CAST(count(*) AS BIGINT) FROM s4
          |  UNION ALL SELECT '5_deduped', CAST(count(*) AS BIGINT) FROM s5)
          |ORDER BY stage""".stripMargin) { (s, dir) =>
-      funnelFrom(curationStages(s, dir))
+      funnelFrom(verdicts(s, dir))
     },
 
     // n-gram Jaccard between neighboring docs (blocked pairs — the pairwise

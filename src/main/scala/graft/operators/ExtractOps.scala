@@ -60,6 +60,25 @@ object ExtractOps {
        |    '[ \\t]+', ' ', 'g'),
        |  ' ' || chr(10))""".stripMargin
 
+  // Shape gate before the parse: try_to_timestamp swallows failures by
+  // THROWING-and-catching per row, so a column of always-malformed
+  // values (norm_bad) pays one exception construction per row —
+  // measured as the bulk of this query's time. On unsigned input the
+  // regex admits exactly the strings the strict yyyy-MM-dd parser could
+  // accept: non-matching strings would have failed the parse and fallen
+  // back to `c` anyway, and matching-but-invalid dates (e.g. month 13)
+  // still go through try_to_timestamp and take the same fallback. Signed
+  // years are the one place the gate is stricter than the parser: Spark's
+  // `yyyy` parses "-2024-01-01" (and "+12024-01-01"), and a year beyond
+  // ±290307 makes it throw an ArithmeticException that try_to_timestamp
+  // does not catch; the gate returns such strings unchanged, as the
+  // reference (Python strptime, DuckDB `%Y`) does. Both halves are
+  // property-tested in DateNormGateSpec.
+  private[operators] def dateNorm(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    when(c.rlike("^[0-9]{4}-[0-9]{2}-[0-9]{2}$"),
+      coalesce(date_format(try_to_timestamp(c, lit("yyyy-MM-dd")), "yyyy-MM-dd'T'HH:mm:ss"), c))
+      .otherwise(c)
+
   val ops: Seq[Op] = Seq(
 
     // C1–C3: fixed 500/80 chunking (chunk_document.py; live path). Pure
@@ -191,22 +210,9 @@ object ExtractOps {
         |  coalesce(strftime(try_strptime(o_orderpriority, '%Y-%m-%d'), '%Y-%m-%dT%H:%M:%S'),
         |           o_orderpriority) AS norm_bad
         |FROM orders ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
-      // Shape gate before the parse: try_to_timestamp swallows failures by
-      // THROWING-and-catching per row, so a column of always-malformed
-      // values (norm_bad) pays one exception construction per row —
-      // measured as the bulk of this query's time. The regex admits exactly
-      // the strings the strict yyyy-MM-dd parser could accept, so gated and
-      // ungated results are identical for EVERY input: non-matching strings
-      // would have failed the parse and fallen back to `c` anyway, and
-      // matching-but-invalid dates (e.g. month 13) still go through
-      // try_to_timestamp and take the same fallback.
-      def norm(c: org.apache.spark.sql.Column) =
-        when(c.rlike("^[0-9]{4}-[0-9]{2}-[0-9]{2}$"),
-          coalesce(date_format(try_to_timestamp(c, lit("yyyy-MM-dd")), "yyyy-MM-dd'T'HH:mm:ss"), c))
-          .otherwise(c)
       Tables.orders(s, dir).select(col("o_orderkey"),
-          norm(date_format(col("o_orderdate"), "yyyy-MM-dd")).as("norm_date"),
-          norm(col("o_orderpriority")).as("norm_bad"))
+          dateNorm(date_format(col("o_orderdate"), "yyyy-MM-dd")).as("norm_date"),
+          dateNorm(col("o_orderpriority")).as("norm_bad"))
         .orderBy("o_orderkey")
     },
 

@@ -14,9 +14,11 @@ import org.apache.spark.sql.SparkSession
   *  - everything downstream is a pure function of the staged table and is
   *    written with plain overwrite, so a re-run after ANY crash converges
   *    to the same bytes (validated by the kill-resume case in
-  *    `PipelineSpec`); a lost executor mid-job recomputes from the durable
-  *    stage instead of failing the job (the localCheckpoint form used by
-  *    the in-query registry entries cannot survive that).
+  *    `PipelineSpec`);
+  *  - only the feature stage is durable: connected components' labels and
+  *    the per-doc verdict table both outputs read are `localCheckpoint`s,
+  *    so a lost executor after the stage fails the job, and the re-run
+  *    resumes from the durable stage.
   *
   *   spark-submit --class graft.pipeline.CurateMain <jar> <sfDir> <outDir> [stageDir]
   */

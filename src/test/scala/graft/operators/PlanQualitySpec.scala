@@ -194,6 +194,26 @@ class PlanQualitySpec extends SparkTestBase {
     }
   }
 
+  /** Both curation outputs read the one checkpointed verdict table: no
+    * stage join is rebuilt per output, and the staged features are not
+    * scanned again.
+    */
+  test("curationRunStaged: curated and funnel read one checkpointed verdict table") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val stage = java.nio.file.Files.createTempDirectory("graft-plan-curate").toString
+    val (curated, funnel) = DedupOps.curationRunStaged(spark, sfDir, stage)
+    for ((name, df) <- Seq("curated" -> curated, "funnel" -> funnel)) {
+      val p = df.queryExecution.executedPlan
+      assert(aqe.collect(p) { case j: BaseJoinExec => j }.isEmpty,
+        s"$name joins the stages again:\n${p.toString.take(4000)}")
+      assert(aqe.collect(p) { case f: FileSourceScanExec => f }.isEmpty,
+        s"$name scans the staged features:\n${p.toString.take(4000)}")
+    }
+  }
+
   /** Replicas explode after the round-robin exchange, so only base rows
     * are shuffled.
     */
