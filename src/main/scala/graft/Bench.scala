@@ -28,7 +28,7 @@ object Bench {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-bench")
-      .withExtensions(new GraftExtensions) // native-hash rewrite rule + md5prefix64
+      .withExtensions(new GraftExtensions) // md5prefix64 and the other native functions
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -29,10 +29,6 @@ object BenchExtra {
     try Bench.force(SparkEntry.queries("q1_agg")(spark, "/root/testdata/sf0.001"))
     catch { case _: Throwable => () }
     planDir.foreach(d => new java.io.File(d).mkdirs())
-    // SPARK_GRAFT_AB=<conf-key>: run each rep twice, alternating the conf
-    // between true/false INSIDE one session, so co-tenant noise hits both
-    // arms equally (this VM's load spikes make sequential A/B unreadable)
-    val abKey = sys.env.get("SPARK_GRAFT_AB")
     for (name <- names) {
       val fn = SparkEntry.queries(name)
       planDir.foreach { d =>
@@ -50,22 +46,9 @@ object BenchExtra {
       }
       spark.sparkContext.setJobDescription(name)
       if (reps == 0) println(s"[benchextra] $name plan-only")
-      else abKey match {
-        case Some(k) =>
-          val on = scala.collection.mutable.ArrayBuffer[Double]()
-          val off = scala.collection.mutable.ArrayBuffer[Double]()
-          (1 to reps).foreach { _ =>
-            spark.conf.set(k, "true")
-            on += Bench.timeSec(Bench.force(fn(spark, sfDir)))
-            spark.conf.set(k, "false")
-            off += Bench.timeSec(Bench.force(fn(spark, sfDir)))
-          }
-          spark.conf.set(k, "true")
-          println(f"[benchextra] $name on=${on.min}%.3f off=${off.min}%.3f " +
-            f"onReps=${on.map(x => f"$x%.3f").mkString(",")} offReps=${off.map(x => f"$x%.3f").mkString(",")} load=${Bench.loadavg1m}%.2f")
-        case None =>
-          val secs = (1 to reps).map(_ => Bench.timeSec(Bench.force(fn(spark, sfDir))))
-          println(f"[benchextra] $name min=${secs.min}%.3f reps=${secs.map(x => f"$x%.3f").mkString(",")} load=${Bench.loadavg1m}%.2f")
+      else {
+        val secs = (1 to reps).map(_ => Bench.timeSec(Bench.force(fn(spark, sfDir))))
+        println(f"[benchextra] $name min=${secs.min}%.3f reps=${secs.map(x => f"$x%.3f").mkString(",")} load=${Bench.loadavg1m}%.2f")
       }
       spark.sparkContext.setJobDescription(null)
     }

@@ -1,43 +1,18 @@
 package graft
 
-import graft.functions.Md5Prefix64
-import graft.plans.NativeHashRule
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session extensions: register with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
   * `SparkSession.builder().withExtensions(new GraftExtensions)`.
   *
-  * Injects:
-  *  - `md5prefix64(str)` SQL function (native 60-bit content hash);
-  *  - [[NativeHashRule]], which rewrites the portable conv-based hash
-  *    pattern used by the oracle-compatible queries into the native
-  *    expression — same results, one digest pass, no hex round-trip.
+  * Injects the native SQL functions of [[GraftFunctions.registrations]]
+  * (`md5prefix64`, `vec_dot`, `minhash_sigs`, `simhash_bits`,
+  * `winnow_pairs`), the same table [[GraftFunctions.ensure]] registers on
+  * a session built without it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("md5prefix64"),
-      new ExpressionInfo(classOf[Md5Prefix64].getName, "md5prefix64"),
-      graft.functions.GraftFunctions.md5Prefix64Builder))
-    ext.injectFunction((
-      new FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[graft.functions.VecDot].getName, "vec_dot"),
-      graft.functions.GraftFunctions.vecDotBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_sigs"),
-      new ExpressionInfo(classOf[graft.functions.MinHashSigs].getName, "minhash_sigs"),
-      graft.functions.GraftFunctions.minHashSigsBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash_bits"),
-      new ExpressionInfo(classOf[graft.functions.SimHashBits].getName, "simhash_bits"),
-      graft.functions.GraftFunctions.simHashBitsBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("winnow_pairs"),
-      new ExpressionInfo(classOf[graft.functions.WinnowPairs].getName, "winnow_pairs"),
-      graft.functions.GraftFunctions.winnowPairsBuilder))
-    ext.injectOptimizerRule(_ => NativeHashRule)
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.registrations.foreach(ext.injectFunction)
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.GraftFunctions
 import graft.operators._
 import graft.pipeline.ExtractJob
 import graft.sources.DocSynth
@@ -33,9 +34,14 @@ object SparkEntry {
         col("span.media_ref"), col("span.offset"))
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each registers
+    * the native functions on the caller's session first, so a bare session
+    * runs the same plan as one built with [[GraftExtensions]].
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    allOps.map(op => op.name -> op.fn).toMap
+    allOps.map { op =>
+      op.name -> { (s: SparkSession, dir: String) => GraftFunctions.ensure(s); op.fn(s, dir) }
+    }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops

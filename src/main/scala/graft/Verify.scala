@@ -9,7 +9,7 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions) // native-hash rewrite (results unchanged)
+      .withExtensions(new GraftExtensions) // the native functions the queries call
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

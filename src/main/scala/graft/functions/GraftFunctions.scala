@@ -2,29 +2,33 @@ package graft.functions
 
 import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
-/** Imperative registration of the engine's native functions, for sessions
-  * built WITHOUT `spark.sql.extensions=graft.GraftExtensions` (a host that
-  * calls `SparkEntry.queries` from its own bare session). Idempotent;
-  * operator code that uses the functions calls this first.
+/** The engine's native functions (`md5prefix64`, `vec_dot`, `minhash_sigs`,
+  * `simhash_bits`, `winnow_pairs`) as ONE registration table. Operator code
+  * calls them by name, so every session that runs it must have them:
+  * [[graft.GraftExtensions]] injects [[registrations]] into sessions built
+  * with it, and [[ensure]] registers the same entries on a bare session (a
+  * host that calls `SparkEntry.queries` or a public helper from its own
+  * session). Idempotent; `SparkEntry.queries` and the public helpers that
+  * emit a native function call it first.
   */
 object GraftFunctions {
 
-  /** Arity-checked builders, shared with [[graft.GraftExtensions]] — the
-    * functions are injected session-wide for arbitrary SQL, so `vec_dot(a)`
-    * must fail analysis with a clear message rather than throw an index
-    * error, and `vec_dot(a, b, c)` must not silently ignore the third
-    * argument.
+  /** Arity-checked builders — the functions are registered session-wide
+    * for arbitrary SQL, so `vec_dot(a)` must fail analysis with a clear
+    * message rather than throw an index error, and `vec_dot(a, b, c)` must
+    * not silently ignore the third argument.
     */
-  private[graft] def vecDotBuilder(children: Seq[Expression]): Expression = {
+  private def vecDotBuilder(children: Seq[Expression]): Expression = {
     require(children.length == 2,
       s"vec_dot requires exactly 2 arguments (two float/double arrays), got ${children.length}")
     VecDot(children.head, children(1))
   }
 
-  private[graft] def md5Prefix64Builder(children: Seq[Expression]): Expression = {
+  private def md5Prefix64Builder(children: Seq[Expression]): Expression = {
     require(children.length == 1,
       s"md5prefix64 requires exactly 1 argument, got ${children.length}")
     Md5Prefix64(children.head)
@@ -46,50 +50,37 @@ object GraftFunctions {
         "invalidValue" -> e.sql)))
   }
 
-  private[graft] def minHashSigsBuilder(children: Seq[Expression]): Expression = {
+  private def minHashSigsBuilder(children: Seq[Expression]): Expression = {
     require(children.length == 2,
       s"minhash_sigs requires exactly 2 arguments (array<string>, numHashes literal), got ${children.length}")
     MinHashSigs(children.head, intArg("minhash_sigs", "numHashes", children(1)))
   }
 
-  private[graft] def winnowPairsBuilder(children: Seq[Expression]): Expression = {
+  private def winnowPairsBuilder(children: Seq[Expression]): Expression = {
     require(children.length == 2,
       s"winnow_pairs requires exactly 2 arguments (array<bigint>, window literal), got ${children.length}")
     WinnowPairs(children.head, intArg("winnow_pairs", "window", children(1)))
   }
 
-  private[graft] def simHashBitsBuilder(children: Seq[Expression]): Expression = {
+  private def simHashBitsBuilder(children: Seq[Expression]): Expression = {
     require(children.length == 2,
       s"simhash_bits requires exactly 2 arguments (array<bigint>, numBits literal), got ${children.length}")
     SimHashBits(children.head, intArg("simhash_bits", "numBits", children(1)))
   }
 
+  private def entry(name: String, cls: Class[_], builder: FunctionBuilder) =
+    (new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
+
+  private[graft] val registrations: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    entry("md5prefix64", classOf[Md5Prefix64], md5Prefix64Builder),
+    entry("vec_dot", classOf[VecDot], vecDotBuilder),
+    entry("minhash_sigs", classOf[MinHashSigs], minHashSigsBuilder),
+    entry("simhash_bits", classOf[SimHashBits], simHashBitsBuilder),
+    entry("winnow_pairs", classOf[WinnowPairs], winnowPairsBuilder))
+
   def ensure(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(new FunctionIdentifier("vec_dot")))
-      reg.registerFunction(
-        new FunctionIdentifier("vec_dot"),
-        new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-        vecDotBuilder _)
-    if (!reg.functionExists(new FunctionIdentifier("md5prefix64")))
-      reg.registerFunction(
-        new FunctionIdentifier("md5prefix64"),
-        new ExpressionInfo(classOf[Md5Prefix64].getName, "md5prefix64"),
-        md5Prefix64Builder _)
-    if (!reg.functionExists(new FunctionIdentifier("minhash_sigs")))
-      reg.registerFunction(
-        new FunctionIdentifier("minhash_sigs"),
-        new ExpressionInfo(classOf[MinHashSigs].getName, "minhash_sigs"),
-        minHashSigsBuilder _)
-    if (!reg.functionExists(new FunctionIdentifier("simhash_bits")))
-      reg.registerFunction(
-        new FunctionIdentifier("simhash_bits"),
-        new ExpressionInfo(classOf[SimHashBits].getName, "simhash_bits"),
-        simHashBitsBuilder _)
-    if (!reg.functionExists(new FunctionIdentifier("winnow_pairs")))
-      reg.registerFunction(
-        new FunctionIdentifier("winnow_pairs"),
-        new ExpressionInfo(classOf[WinnowPairs].getName, "winnow_pairs"),
-        winnowPairsBuilder _)
+    for ((id, info, builder) <- registrations if !reg.functionExists(id))
+      reg.registerFunction(id, info, builder)
   }
 }

@@ -29,14 +29,13 @@ object Md5Prefix64Util {
   }
 }
 
-/** Native codegen'd equivalent of the engine's cross-engine content hash
-  * `cast(conv(substring(md5(x), 1, 15), 16, 10) as bigint)` — one digest
-  * pass, no hex-string round-trip (~3 allocations saved per call; the
-  * dedup/fingerprint queries evaluate this per shingle, i.e. per word of
-  * input). Installed two ways by [[graft.GraftExtensions]]:
-  *  - SQL function `md5prefix64(str)`;
-  *  - an optimizer rule that rewrites the portable conv-based pattern to
-  *    this expression, so oracle-compatible query text gets native speed.
+/** SQL function `md5prefix64(str)`: the engine's 60-bit content hash
+  * (`Idioms.h60Spark`), bit-identical to the portable
+  * `cast(conv(substring(md5(x), 1, 15), 16, 10) as bigint)` and to the
+  * DuckDB oracle's `h60Duck`, but one digest pass with no hex-string
+  * round-trip (~3 allocations saved per call; the dedup/fingerprint
+  * queries evaluate this per shingle, i.e. per word of input). Registered
+  * by [[GraftFunctions]].
   */
 case class Md5Prefix64(child: Expression) extends UnaryExpression {
 

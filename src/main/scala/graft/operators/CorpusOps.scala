@@ -38,10 +38,13 @@ object CorpusOps {
     * deployed export job ([[graft.pipeline.ExportJob]]) so the two surfaces
     * sample identically by construction.
     */
-  def withMixture(docs: DataFrame): DataFrame = docs
-    .withColumn("target_ppm", domainWeightCol)
-    .withColumn("mix_u",
-      expr(h60Spark("cast(doc_id as string) || ':' || source")) % 1000000L)
+  def withMixture(docs: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.ensure(docs.sparkSession)
+    docs
+      .withColumn("target_ppm", domainWeightCol)
+      .withColumn("mix_u",
+        expr(h60Spark("cast(doc_id as string) || ':' || source")) % 1000000L)
+  }
 
   /** Deterministic shard + intra-shard training order (`shard`, `pos`):
     * ONE hash shuffle + per-shard window — never a global sort. Shared by
@@ -49,6 +52,7 @@ object CorpusOps {
     */
   def withShardPos(docs: DataFrame, nShards: Int): DataFrame = {
     require(nShards > 0, s"nShards must be positive, got $nShards")
+    graft.functions.GraftFunctions.ensure(docs.sparkSession)
     val w = Window.partitionBy(col("shard")).orderBy(col("ord"), col("doc_id"))
     docs
       .withColumn("shard", expr(h60Spark("'shard:' || cast(doc_id as string)")) % nShards)

@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
   * MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine near-dup.
   *
   * Cross-engine determinism: every hash is `md5`-derived — the first 15 hex
-  * chars parsed as a 60-bit integer — which Spark (`conv(...,16,10)`) and
-  * DuckDB (`'0x'||... cast`) compute identically, so signatures/buckets match
-  * bit-for-bit between the plan and the oracle.
+  * chars parsed as a 60-bit integer — which Spark (native `md5prefix64`,
+  * see `Idioms.h60Spark`) and DuckDB (`'0x'||... cast`) compute
+  * identically, so signatures/buckets match bit-for-bit between the plan
+  * and the oracle.
   *
   * Scale notes: exact dedup is one shuffle on the content hash; MinHash/LSH
   * turns O(n²) similarity into a band-bucket equi-join (shuffle on band
@@ -214,7 +215,6 @@ object DedupOps {
     * dup-rate, curation) reads this one implementation.
     */
   private def verifiedPairsSpark(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensure(s)
     // ONE barrier'd shingle table: the signature branch and both verify
     // sides reference the identical subtree, so the scan + tokenize +
     // shingle pass runs once and the other references are ReusedExchange
@@ -260,7 +260,6 @@ object DedupOps {
     * fold ([[substringRunsSpark]]).
     */
   private def kgramSpark(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensure(s)
     val khExpr = h60Spark(s"concat_ws(' ', slice(toks, i, $SubK))")
     Tables.documents(s, dir)
       .select(col("doc_id"), expr(toksSpark).as("toks"))
@@ -283,23 +282,13 @@ object DedupOps {
     import org.apache.spark.sql.expressions.Window
     val kg = kgramSpark(s, dir)
     // winnow: every full SubW-window's minimum over the hash sequence
-    // (short docs: one window over the whole array — slice caps at the
-    // array end, mirroring the oracle's `h[s : least(s+wEnd, len(h))]`).
-    // MAP-ONLY array fold over the barrier'd khs — the previous relational
-    // form paid a doc_id window sort plus a distinct exchange here; the
-    // per-doc array_distinct replaces the distinct (fingerprints of
-    // different docs can't collide on the (doc_id, fp) key). The winnow
-    // rightmost-tie POSITION rule is irrelevant to this consumer: only the
-    // fingerprint VALUE set feeds candidate nomination.
-    val winnowFps =
-      if (kg.sparkSession.conf.get("spark.graft.nativewinnow", "true").toBoolean)
-        // native one-pass winnow (tie position discarded — only the VALUE
-        // set feeds candidate nomination); the HOF form evaluates
-        // interpreted per window with a slice allocation each
-        s"array_distinct(transform(winnow_pairs(khs, $SubW), p -> p.fp))"
-      else
-        s"array_distinct(transform(sequence(1, greatest(size(khs) - ${SubW - 1}, 1))," +
-          s" w -> array_min(slice(khs, w, $SubW))))"
+    // (short docs: one window over the whole array, mirroring the oracle's
+    // `h[s : least(s+wEnd, len(h))]`). MAP-ONLY native one-pass fold over
+    // the barrier'd khs; the per-doc array_distinct replaces a row-level
+    // distinct (fingerprints of different docs can't collide on the
+    // (doc_id, fp) key). The winnow rightmost-tie POSITION is discarded:
+    // only the fingerprint VALUE set feeds candidate nomination.
+    val winnowFps = s"array_distinct(transform(winnow_pairs(khs, $SubW), p -> p.fp))"
     // explode_OUTER: exempts the generator from InferFiltersFromGenerate,
     // whose inferred `size/isnotnull` filter re-evaluates the winnow fold
     // two extra times above the barrier (kg guarantees non-empty khs, so
@@ -587,6 +576,7 @@ object DedupOps {
       s: org.apache.spark.sql.SparkSession,
       dir: String,
       stageDir: String): (DataFrame, DataFrame) = {
+    graft.functions.GraftFunctions.ensure(s) // a resume skips docFeatures
     val featDir = s"$stageDir/features"
     val marker = new org.apache.hadoop.fs.Path(s"$stageDir/_features_done")
     val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -774,7 +764,6 @@ object DedupOps {
          |       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming_next
          |FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1
          |ORDER BY a.doc_id""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.ensure(s)
       val sh = Tables.documents(s, dir)
         .select(col("doc_id"), expr(toksSpark).as("toks"))
         .where(expr("size(toks) > 0"))
@@ -815,7 +804,6 @@ object DedupOps {
          |FROM bands a JOIN bands b ON a.band = b.band AND a.bval = b.bval AND a.doc_id < b.doc_id
          |WHERE bit_count(xor(a.simhash, b.simhash)) <= 5
          |GROUP BY 1, 2, 3 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.ensure(s)
       val sh0 = Tables.spreadSmall(Tables.documents(s, dir), col("doc_id"))
         .select(col("doc_id"), expr(toksSpark).as("toks"))
         .where(expr("size(toks) >= 3"))
@@ -864,54 +852,28 @@ object DedupOps {
          |SELECT DISTINCT doc_id, CAST(u.f.pos AS BIGINT) AS pos, u.f.fp AS fp
          |FROM (SELECT doc_id, unnest(fps) AS f FROM wins) u(doc_id, f)
          |ORDER BY doc_id, pos""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.ensure(s)
       val toks = Tables.documents(s, dir)
         .select(col("doc_id"), expr(toksSpark).as("toks"))
         .where(expr("size(toks) >= 3"))
-      if (s.conf.get("spark.graft.nativewinnow", "true").toBoolean) {
-        // Native winnowing — MAP-ONLY: `winnow_pairs` selects every
-        // window's (rightmost-tie pos, min hash) in one tight pass per
-        // document and emits the per-doc DISTINCT pairs by construction
-        // (selection positions are non-decreasing, see the expression
-        // scaladoc), so the relational form's doc_id window exchange +
-        // sort AND the row-level distinct exchange both disappear: at
-        // corpus scale the only remaining exchange is the output ORDER BY.
-        // (The earlier HOF `aggregate` fold attempt was slower than the
-        // window — interpreted per element; the native expression is why
-        // this shape now wins, the r6 "not yet optimized" #4 item.)
-        // explode_OUTER: InferFiltersFromGenerate adds `size(e) > 0 AND
-        // isnotnull(e)` for a plain explode and pushes it below the
-        // projections, re-inlining the whole tokenize→md5→winnow chain
-        // TWICE into the Filter (the q_ngram_novelty r5 pathology —
-        // measured 9× here). The outer generator is exempt from the rule
-        // and identical in results: size(toks) >= 3 guarantees >= 1
-        // shingle, so wp is never empty or null.
-        toks.select(col("doc_id"),
-            expr(s"winnow_pairs(transform($shinglesFromToks," +
-              s" s -> ${h60Spark("s")}), 8)").as("wp"))
-          .select(col("doc_id"), explode_outer(col("wp")).as("f"))
-          .select(col("doc_id"), col("f.pos").cast("bigint").as("pos"), col("f.fp").as("fp"))
-          .orderBy("doc_id", "pos")
-      } else {
-        // Relational winnowing (the pre-r6 shape, kept as the A/B arm):
-        // posexplode the shingle hashes to (doc_id, pos, h) rows, then one
-        // doc_id-partitioned forward window: min(struct(h, -pos)) gives
-        // each window's minimum with the rightmost-tie rule.
-        import org.apache.spark.sql.expressions.Window
-        val rows = toks.select(col("doc_id"),
-          posexplode(expr(s"transform($shinglesFromToks, s -> ${h60Spark("s")})"))
-            .as(Seq("pos", "h")))
-        val fwd = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, 7)
-        val wins = rows.select(col("doc_id"), col("pos"),
-          min(struct(col("h"), (-col("pos")).as("np"))).over(fwd).as("m"),
-          count(lit(1)).over(fwd).as("wlen"),
-          count(lit(1)).over(Window.partitionBy("doc_id")).as("dlen"))
-        wins
-          .where(col("wlen") === 8 || (col("pos") === 0 && col("dlen") < 8))
-          .select(col("doc_id"), (-col("m.np")).cast("bigint").as("pos"), col("m.h").as("fp"))
-          .distinct()
-          .orderBy("doc_id", "pos")
-      }
+      // MAP-ONLY: `winnow_pairs` selects every window's (rightmost-tie pos,
+      // min hash) in one tight pass per document and emits the per-doc
+      // DISTINCT pairs by construction (selection positions are
+      // non-decreasing, see the expression scaladoc), so neither a doc_id
+      // window exchange + sort nor a row-level distinct exchange is needed:
+      // at corpus scale the only exchange is the output ORDER BY.
+      // explode_OUTER: InferFiltersFromGenerate adds `size(e) > 0 AND
+      // isnotnull(e)` for a plain explode and pushes it below the
+      // projections, re-inlining the whole tokenize→md5→winnow chain
+      // TWICE into the Filter (the q_ngram_novelty r5 pathology —
+      // measured 9× here). The outer generator is exempt from the rule
+      // and identical in results: size(toks) >= 3 guarantees >= 1
+      // shingle, so wp is never empty or null.
+      toks.select(col("doc_id"),
+          expr(s"winnow_pairs(transform($shinglesFromToks," +
+            s" s -> ${h60Spark("s")}), 8)").as("wp"))
+        .select(col("doc_id"), explode_outer(col("wp")).as("f"))
+        .select(col("doc_id"), col("f.pos").cast("bigint").as("pos"), col("f.fp").as("fp"))
+        .orderBy("doc_id", "pos")
     },
 
     // End-to-end near-dup pipeline: MinHash/LSH candidate generation →
@@ -1044,7 +1006,6 @@ object DedupOps {
          |       len(list_distinct(list_concat(x.sh, y.sh)))) AS BIGINT) AS err_micro
          |FROM est e JOIN sh x ON x.doc_id = e.doc_a JOIN sh y ON y.doc_id = e.doc_b
          |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.ensure(s)
       // one barrier'd shingle table feeds signatures, candidates AND the
       // exact-Jaccard sides (the verifiedPairsSpark one-scan shape)
       val sh = shingleSetSpark(s, dir)
@@ -1260,7 +1221,6 @@ object DedupOps {
         |     sqrt(list_aggregate(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))), 4) AS cosine
         |FROM e a JOIN e b ON b.vec_id = a.vec_id + 1
         |ORDER BY vec_a""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.ensure(s)
       val e = Tables.embeddings(s, dir)
       val a = e.as("a"); val b = e.as("b")
       val dot = "vec_dot(a.embedding, b.embedding)"

@@ -64,22 +64,21 @@ private[operators] object DeltaBatches {
     *
     * The fpp must be read PER APPEND, not per id: an append falls back to
     * the exact scan if ANY of its ids false-positives in ANY digest, i.e.
-    * with probability ≈ batchRows × digests × fpp. At the 1e-6 default a
-    * 10k-row micro-batch against a base + 100 committed batches falls back
-    * ~once per thousand appends; the conventional 1% would fall back
-    * EVERY time and silently reinstate the O(index) scan. Cost: ~3.6 B/id
+    * with probability ≈ batchRows × digests × fpp. At 1e-6 a 10k-row
+    * micro-batch against a base + 100 committed batches falls back ~once
+    * per thousand appends; the conventional 1% would fall back EVERY time
+    * and silently reinstate the O(index) scan. Cost: ~3.6 B/id
     * (≈30 MB at the cap).
     *
     * The cap bounds digest bytes; a base index or batch beyond it
     * saturates its bloom GRACEFULLY — the guard stays correct (blooms have
-    * no false negatives) but falls back more often. Both knobs are
+    * no false negatives) but falls back more often. The cap is
     * session-conf overridable (tests use a tiny cap to force the
     * false-positive fallback path deterministically).
     */
   private val BloomCapKey = "spark.graft.index.bloomCap"
   private val BloomCapDefault = 8L << 20
-  private val BloomFppKey = "spark.graft.index.bloomFpp"
-  private val BloomFppDefault = 1e-6
+  private val BloomFpp = 1e-6
 
   /** Above this batch size the exact-fallback join drops the broadcast hint
     * (a backlogged streaming micro-batch could exceed the broadcast limit
@@ -158,10 +157,8 @@ private[operators] object DeltaBatches {
 
   /** One distributed pass building the id digest for `n` ids. */
   def idBloom(ids: DataFrame, n: Long): BloomFilter = {
-    val spark = ids.sparkSession
-    val fpp = spark.conf.getOption(BloomFppKey).map(_.toDouble).getOrElse(BloomFppDefault)
     ids.stat.bloomFilter("vec_id",
-      math.min(math.max(n, 1L), bloomCap(spark)), fpp)
+      math.min(math.max(n, 1L), bloomCap(ids.sparkSession)), BloomFpp)
   }
 
   /** Persist the BASE index's id digest — called by `build` after the cell

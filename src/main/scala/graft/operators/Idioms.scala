@@ -1,17 +1,18 @@
 package graft.operators
 
 /** The cross-engine SQL idioms every operator family shares. ONE copy —
-  * `NativeHashRule` rewrites the exact textual form of `h60Spark`, and the
-  * DuckDB twin must stay in lockstep with it, so drift between per-file
-  * copies would silently break both the native rewrite and oracle parity.
+  * each Spark form must stay in lockstep with its DuckDB twin, so drift
+  * between per-file copies would silently break oracle parity.
   */
 private[graft] object Idioms {
 
   /** Uniform 60-bit hash of a string expression — md5 prefix as bigint.
     * 60 bits (15 hex digits) because DuckDB's BIGINT is signed: a 16-digit
-    * prefix could go negative there while Spark's conv() stays unsigned.
+    * prefix could go negative there. The Spark side is the native
+    * `md5prefix64` (registered by `GraftFunctions`), which equals the
+    * portable `cast(conv(substring(md5(x), 1, 15), 16, 10) as bigint)`.
     */
-  def h60Spark(x: String) = s"cast(conv(substring(md5($x), 1, 15), 16, 10) as bigint)"
+  def h60Spark(x: String) = s"md5prefix64($x)"
   def h60Duck(x: String)  = s"CAST('0x' || substring(md5($x), 1, 15) AS BIGINT)"
 
   /** Whitespace tokenization with empties dropped — the token definition

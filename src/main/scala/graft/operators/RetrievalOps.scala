@@ -48,10 +48,8 @@ object RetrievalOps {
   }
 
   /** Shared dense scoring plan: (vec_id, score_exact). */
-  private def denseScores(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensure(s)
+  private def denseScores(s: SparkSession, dir: String): DataFrame =
     withQvec(s, dir).select(col("vec_id"), expr(dotExpr).as("score_exact"))
-  }
 
   /** Constant-valued but non-foldable partition key: every row lands in one
     * partition (same as no partitionBy), but WindowExec's "no partition

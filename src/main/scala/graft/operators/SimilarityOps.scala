@@ -48,7 +48,6 @@ object SimilarityOps {
          |ORDER BY ${duckDotAB("e.embedding", "q.embedding")} /
          |         (${duckNrm("e.embedding")} * ${duckNrm("q.embedding")}) DESC, e.vec_id
          |LIMIT 10""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.ensure(s)
       val e = Tables.embeddings(s, dir)
       val q = e.where(col("vec_id") === 0).select(col("embedding").as("qvec"))
       e.crossJoin(broadcast(q))
@@ -77,7 +76,6 @@ object SimilarityOps {
          |JOIN assign a ON a.vec_id = e.vec_id
          |JOIN probes p ON p.cid = a.cid, q
          |ORDER BY ${duckDotAB("e.embedding", "q.qvec")} DESC, e.vec_id LIMIT 5""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.ensure(s)
       val e = Tables.embeddings(s, dir)
       val cent = e.where(col("vec_id") < nCellsOf(e)).select(col("vec_id").as("cid"), col("embedding").as("cvec"))
       val q = e.where(col("vec_id") === 0).select(col("embedding").as("qvec"))
@@ -125,7 +123,6 @@ object SimilarityOps {
          |ORDER BY ${duckDotAB("a.embedding", "b.embedding")} /
          |         (${duckNrm("a.embedding")} * ${duckNrm("b.embedding")}) DESC, vec_a, vec_b
          |LIMIT 20""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.ensure(s)
       val e = Tables.embeddings(s, dir)
       val cent = e.where(col("vec_id") < nCellsOf(e)).select(col("vec_id").as("cell"), col("embedding").as("cvec"))
       val assign = AnnIndex.assignTo(e, cent)
@@ -168,7 +165,6 @@ object SimilarityOps {
          |       CAST(count(d.vec_id) AS BIGINT) AS dropped
          |FROM assign a LEFT JOIN drops d ON d.vec_id = a.vec_id
          |GROUP BY a.cid ORDER BY a.cid""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.ensure(s)
       val e = Tables.embeddings(s, dir)
       val cent = e.where(col("vec_id") < nCellsOf(e)).select(col("vec_id").as("cell"), col("embedding").as("cvec"))
       val assign = AnnIndex.assignTo(e, cent)
@@ -214,7 +210,6 @@ object SimilarityOps {
          |  FROM scored WHERE cos < 0.9)
          |SELECT anchor_id, rnk, vec_id, round(cos, 4) AS cosine
          |FROM neg WHERE rnk <= 5 ORDER BY anchor_id, rnk""".stripMargin) { (s, dir) =>
-      graft.functions.GraftFunctions.ensure(s)
       val e = Tables.embeddings(s, dir)
       val anchors = e.where(col("vec_id").isin(0L, 1L, 2L))
         .select(col("vec_id").as("anchor_id"), col("embedding").as("qvec"))

@@ -25,20 +25,19 @@ object Tables {
     *
     * Apply ONLY where the downstream per-row work dominates the exchange —
     * tokenize→shingle→minhash/md5 folds, heavy regex chains. Interleaved
-    * A/B at sf0.1 (SPARK_GRAFT_AB=spark.graft.spread, co-tenant noise
-    * hitting both arms): heavy chains win 1.3–1.7× (q_dedup_pipeline
-    * 1.18→0.70s, q_fingerprint 1.00→0.72s, q_pii_scrub 0.87→0.66s) while
-    * cheap map-only queries LOSE 0.2–0.5s to the extra AQE stage +
-    * codegen (q_truncate 0.27→0.72s, q_window_events 0.32→0.88s) — which
-    * is why this is a per-call-site decision, not a blanket reader rewrite.
+    * in-session A/B at sf0.1 on a 32-core host (OPTIMIZATION_r06.md,
+    * co-tenant noise hitting both arms): heavy chains win 1.3–1.7×
+    * (q_dedup_pipeline 1.18→0.70s, q_fingerprint 1.00→0.72s, q_pii_scrub
+    * 0.87→0.66s) while cheap map-only queries LOSE 0.2–0.5s to the extra
+    * AQE stage + codegen (q_truncate 0.27→0.72s, q_window_events
+    * 0.32→0.88s) — which is why this is a per-call-site decision, not a
+    * blanket reader rewrite.
     * The spread key must be deterministic (safe under task retry, unlike
     * rand-derived keys) and is the table's primary key so downstream
     * `groupBy(doc_id)` barriers reuse the exchange.
     */
   def spreadSmall(df: DataFrame, key: Column): DataFrame = {
     val sess = df.sparkSession
-    // production tuning knob (and the A/B lever for the isolation bench)
-    if (!sess.conf.get("spark.graft.spread", "true").toBoolean) return df
     val target = sess.sparkContext.defaultParallelism
     val maxSplit = BigInt(sess.sessionState.conf.filesMaxPartitionBytes)
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes

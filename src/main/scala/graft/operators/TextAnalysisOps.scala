@@ -33,21 +33,15 @@ object TextAnalysisOps {
   private val PhonePat = """\b555-[0-9]{4}\b"""
   private val Ipv4Pat  = """\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b"""
 
-  /** Vocabulary size for `q_oov_rate`, overridable via SPARK_GRAFT_OOV_K
-    * (a real deployment sizes K to its tokenizer — 32k/50k/100k; both the
-    * Spark plan and the oracle SQL are built from this ONE value, so an
-    * override keeps the two engines in lockstep). The default is sized to
-    * the fixture: the testdata corpus has exactly 31 distinct tokens, so
-    * K=16 covers the frequency head while leaving a real OOV tail to
-    * measure (K ≥ 31 would make the statistic identically zero and the
-    * operator untestable). Parsing fails LOUDLY on a garbage value.
+  /** Vocabulary size for `q_oov_rate` (a real deployment sizes K to its
+    * tokenizer — 32k/50k/100k; both the Spark plan and the oracle SQL are
+    * built from this ONE value, so the two engines stay in lockstep).
+    * Sized to the fixture: the testdata corpus has exactly 31 distinct
+    * tokens, so K=16 covers the frequency head while leaving a real OOV
+    * tail to measure (K ≥ 31 would make the statistic identically zero and
+    * the operator untestable).
     */
-  private[graft] val OovVocabK: Int = {
-    val k = sys.env.get("SPARK_GRAFT_OOV_K").map(_.toInt).getOrElse(16)
-    require(k > 0, s"SPARK_GRAFT_OOV_K must be positive, got $k — K=0 would make " +
-      "every token OOV on both engines, a silently meaningless diagnostic")
-    k
-  }
+  private[graft] val OovVocabK = 16
 
   /** Domains dropped by the URL curation stage (batch `q_url_curation` and
     * the streaming gate share this one list).

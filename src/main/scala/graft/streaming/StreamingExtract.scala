@@ -141,7 +141,7 @@ object StreamingExtract {
     * pays O(batch + manifest), independent of index size; only a digest
     * hit (a real duplicate, or a bloom false positive at the per-append
     * fpp of ~1e-6 — i.e. a spurious fallback roughly once per million
-    * appended ids, see DeltaBatches.BloomFppDefault's sizing rationale)
+    * appended ids, see DeltaBatches.BloomFpp's sizing rationale)
     * falls back to the exact index scan. The strict guard stays because a silent
     * duplicate corrupts every subsequent top-k. The sink is the single
     * writer of its indexDir (micro-batches are serial) — don't run batch

@@ -37,7 +37,7 @@ object DumpPlans {
     sb ++= "What to look for (PlanQualitySpec asserts these shapes): pruned `ReadSchema`,\n"
     sb ++= "`PushedFilters`, `BroadcastHashJoin`/`BroadcastExchange` for dims,\n"
     sb ++= "`partial_*` map-side aggregation, `TakeOrderedAndProject` top-k, and the\n"
-    sb ++= "`md5prefix64` native hash injected by NativeHashRule.\n"
+    sb ++= "`md5prefix64` native content hash (`Idioms.h60Spark`).\n"
     for (name <- flagship) {
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       sb ++= s"\n## $name\n\n```\n"

@@ -1,8 +1,13 @@
 package graft
 
+import graft.operators.Tables
+import graft.pipeline.ExportJob
+import org.apache.spark.sql.functions.{col, lit}
+
 /** Driver-contract smoke: entry() returns rows on sf0.001; every queries key
   * has either a DuckDB oracle or a documented rows-only rationale; all
-  * oracle keys exist in queries.
+  * oracle keys exist in queries; every query and the export assembly run on
+  * a bare session (no `GraftExtensions`).
   */
 class EntrySpec extends SparkTestBase {
 
@@ -29,5 +34,22 @@ class EntrySpec extends SparkTestBase {
       } catch { case e: Throwable => Some(s"$name: ${e.getMessage.linesIterator.next()}") }
     }
     assert(failures.isEmpty, failures.mkString("; "))
+  }
+
+  test("bare session: every query and ExportJob analyse without GraftExtensions; hashing runs md5prefix64") {
+    // one fresh session per op (its own function registry, no extensions),
+    // so one op's registration cannot hide another op's missing one
+    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      try { fn(spark.newSession(), sfDir).queryExecution.analyzed; None }
+      catch { case e: Throwable => Some(s"$name: ${e.getMessage.linesIterator.next()}") }
+    }
+    assert(failures.isEmpty, failures.mkString("; "))
+    val docs = Tables.documents(spark.newSession(), sfDir)
+    val exported = ExportJob.assembleFrom(
+      docs.select(col("doc_id"), lit("train").as("split")), docs, nShards = 4)
+    assert(exported.queryExecution.executedPlan.toString.contains("md5prefix64"))
+    val plan = SparkEntry.queries("q_split_stratified")(spark.newSession(), sfDir)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("md5prefix64") && !plan.contains("conv("), plan)
   }
 }

@@ -5,12 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** The native winnow must be indistinguishable from the portable forms it
   * replaces: the per-window `array_min(slice(...))` HOF fold (the DuckDB
-  * oracle text for the substring family) and q_winnow's relational
-  * doc_id-window `min(struct(h, -pos))` — including the rightmost-tie
-  * rule, the single-whole-array window for short inputs, and null
-  * handling. The expression emits the per-doc DISTINCT pairs directly
-  * (selection positions are non-decreasing, so duplicates are consecutive
-  * runs); the reference model here re-derives that from first principles.
+  * oracle text for the substring family) and the reference model below —
+  * including the rightmost-tie rule, the single-whole-array window for
+  * short inputs, and null handling. The expression emits the per-doc
+  * DISTINCT pairs directly (selection positions are non-decreasing, so
+  * duplicates are consecutive runs); the reference model here re-derives
+  * that from first principles.
   */
 class WinnowPairsSpec extends SparkTestBase {
   import spark.implicits._
@@ -34,15 +34,20 @@ class WinnowPairsSpec extends SparkTestBase {
     }
   }
 
+  /** Per-doc 3-gram hashes `(doc_id, hs)` over the corpus, hashed with
+    * the portable conv form: q_winnow's input, built independently of it.
+    */
+  private def gramHashes = spark.read.parquet(s"$sfDir/documents.parquet")
+    .select(col("doc_id"), expr("filter(split(text, ' '), t -> t <> '')").as("toks"))
+    .where(expr("size(toks) >= 3"))
+    .select(col("doc_id"), expr(
+      "transform(transform(sequence(1, size(toks) - 2), i -> concat_ws(' '," +
+        " element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2)))," +
+        " s -> cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint))").as("hs"))
+
   test("winnow_pairs equals the reference winnow on corpus gram hashes (w=4 and w=8)") {
     GraftFunctions.ensure(spark)
-    val rows = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), expr("filter(split(text, ' '), t -> t <> '')").as("toks"))
-      .where(expr("size(toks) >= 3"))
-      .select(col("doc_id"), expr(
-        "transform(transform(sequence(1, size(toks) - 2), i -> concat_ws(' '," +
-          " element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2)))," +
-          " s -> cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint))").as("hs"))
+    val rows = gramHashes
       .select(col("doc_id"), col("hs"),
         expr("winnow_pairs(hs, 4)").as("w4"), expr("winnow_pairs(hs, 8)").as("w8"))
       .collect()
@@ -86,28 +91,31 @@ class WinnowPairsSpec extends SparkTestBase {
     for ((id, ps) <- out) assert(ps.distinct.size == ps.size, s"id $id")
   }
 
-  test("q_winnow: native map-only arm equals the relational window arm") {
-    val fn = SparkEntry.queries("q_winnow")
-    def run(native: Boolean) = {
-      spark.conf.set("spark.graft.nativewinnow", native.toString)
-      try fn(spark, sfDir).collect().toSeq
-      finally spark.conf.unset("spark.graft.nativewinnow")
-    }
-    val nat = run(true)
-    val rel = run(false)
-    assert(nat.nonEmpty && nat == rel)
+  test("q_winnow equals the reference winnow (w = 8) over the corpus") {
+    val got = SparkEntry.queries("q_winnow")(spark, sfDir).collect().toSeq
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("pos"), r.getAs[Long]("fp")))
+    val want = gramHashes.collect().toSeq.flatMap { r =>
+      ref(r.getSeq[Long](1).map(java.lang.Long.valueOf), 8)
+        .map { case (pos, fp) => (r.getLong(0), pos.toLong, fp) }
+    }.sortBy(t => (t._1, t._2))
+    assert(got.nonEmpty && got == want)
   }
 
-  test("q_substring_dedup: native fps arm equals the portable HOF arm") {
-    val fn = SparkEntry.queries("q_substring_dedup")
-    def run(native: Boolean) = {
-      spark.conf.set("spark.graft.nativewinnow", native.toString)
-      try fn(spark, sfDir).collect().toSeq
-      finally spark.conf.unset("spark.graft.nativewinnow")
-    }
-    val nat = run(true)
-    val rel = run(false)
-    assert(nat == rel)
+  test("substring winnow: native fp set equals the portable HOF fold") {
+    GraftFunctions.ensure(spark)
+    // q_substring_dedup's kgram table and both winnow forms (SubK = 8, SubW = 4)
+    val rows = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select(col("doc_id"), expr("filter(split(text, ' '), t -> t <> '')").as("toks"))
+      .where(expr("size(toks) >= 8"))
+      .select(col("doc_id"), expr("transform(sequence(1, size(toks) - 7)," +
+        " i -> md5prefix64(concat_ws(' ', slice(toks, i, 8))))").as("khs"))
+      .select(col("doc_id"),
+        expr("array_distinct(transform(winnow_pairs(khs, 4), p -> p.fp))").as("native"),
+        expr("array_distinct(transform(sequence(1, greatest(size(khs) - 3, 1))," +
+          " w -> array_min(slice(khs, w, 4))))").as("hof"))
+      .collect()
+    assert(rows.nonEmpty)
+    for (r <- rows) assert(r.getSeq[Long](1) == r.getSeq[Long](2), s"doc ${r.getLong(0)}")
   }
 
   test("winnow_pairs stays inside whole-stage codegen") {
