@@ -117,7 +117,7 @@ object QueryScaling {
 
     // ---- time both arms, REP-INTERLEAVED (1×, F×, 1×, F×, …) so a
     // co-tenant load spike lands on both arms of the same query rather
-    // than poisoning one side of the ratio (the BenchExtra A/B idiom) ----
+    // than poisoning one side of the ratio ----
     val rows = names.map { name =>
       val fn = SparkEntry.queries(name)
       val a1 = scala.collection.mutable.ArrayBuffer[Double]()

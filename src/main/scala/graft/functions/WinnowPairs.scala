@@ -23,12 +23,14 @@ object WinnowPairsUtil {
     * previous selection is still in the window unless it fell out, and a
     * new equal-or-smaller entrant is selected under the rightmost rule),
     * so duplicate selections are always CONSECUTIVE runs and later pairs
-    * have strictly larger `pos` — run-length compression IS the distinct
-    * set. (This replaces a per-doc `array_distinct` over struct elements,
-    * whose pairwise interpreted equality is O(windows²) per document —
-    * measured 9× slower than the window form it was meant to beat.)
-    * Null elements are skipped like `array_min`; a window with no non-null
-    * values contributes one null element per run of such windows.
+    * have strictly larger `pos` — run-length compression makes the pairs
+    * distinct. (This replaces a per-doc `array_distinct` over struct
+    * elements, whose pairwise interpreted equality is O(windows²) per
+    * document — measured 9× slower than the window form it was meant to
+    * beat.) Null elements are skipped like `array_min`; windows with no
+    * non-null values contribute ONE null element per array, at the first
+    * such window — where `array_distinct` over the per-window fold keeps
+    * its null — so the output is exactly that distinct set.
     *
     * O(n·w) tight loop with no per-window allocations beyond the emitted
     * rows; w is 4/8 here, far below the crossover where a monotonic-deque
@@ -38,7 +40,8 @@ object WinnowPairsUtil {
     val n = arr.numElements()
     val nw = if (n >= w) n - w + 1 else 1
     val out = new scala.collection.mutable.ArrayBuffer[Any](math.min(nw, 2 * (n / w + 1)))
-    var prev = -2 // -1 = null-selection run; -2 = nothing emitted yet
+    var prev = -1 // position of the last emitted pair
+    var nullSeen = false
     var s = 0
     while (s < nw) {
       val end = if (s + w < n) s + w else n
@@ -54,7 +57,7 @@ object WinnowPairsUtil {
       }
       // emit on selection change (bp == prev implies the identical pair)
       if (bp < 0) {
-        if (prev != -1) { out += null; prev = -1 }
+        if (!nullSeen) { out += null; nullSeen = true }
       } else if (bp != prev) {
         out += new GenericInternalRow(Array[Any](bp, best))
         prev = bp

@@ -558,56 +558,31 @@ object DedupOps {
   }
 
   /** Deployed-job curation (CurateMain): the doc-feature table is staged to
-    * DURABLE storage (parquet + commit marker written strictly after the
-    * data); the rest of the job reads the staged copy. Durability contract:
-    * everything up to the feature stage is durable; connected components'
-    * labels and the verdict table are `localCheckpoint`s, whose blocks die
-    * with their executor — a lost executor after the stage fails the job,
-    * and a re-run resumes from the durable stage without touching the
-    * input. Resume semantics: a present marker means the feature write
-    * committed — the input is not touched again (tested by resuming
-    * against a deleted input dir); an absent marker (crash mid-write) means
-    * the partial stage is ignored and rewritten. Everything downstream is a
-    * pure function of the staged table, so a re-run after any crash
-    * converges to identical output. The verdict table is built (eagerly
-    * checkpointed) by this call; both returned frames read only it.
+    * DURABLE storage, a [[graft.pipeline.VersionedTable]] root at
+    * `<stageDir>/features` whose generation commits marker-after-data with
+    * the input digest; the rest of the job reads the staged copy.
+    * Durability contract: everything up to the feature stage is durable;
+    * connected components' labels and the verdict table are
+    * `localCheckpoint`s, whose blocks die with their executor — a lost
+    * executor after the stage fails the job, and a re-run resumes from the
+    * durable stage without touching the input. Resume semantics: a
+    * committed generation is reused for the same input or for an
+    * unreachable one (tested by resuming against a deleted input dir); a
+    * refreshed input, or a crash before the commit, rewrites the stage.
+    * One generation is kept, because the stage is its own only reader.
+    * Everything downstream is a pure function of the staged table, so a
+    * re-run after any crash converges to identical output. The verdict
+    * table is built (eagerly checkpointed) by this call; both returned
+    * frames read only it.
     */
   def curationRunStaged(
       s: org.apache.spark.sql.SparkSession,
       dir: String,
       stageDir: String): (DataFrame, DataFrame) = {
     graft.functions.GraftFunctions.ensure(s) // a resume skips docFeatures
-    val featDir = s"$stageDir/features"
-    val marker = new org.apache.hadoop.fs.Path(s"$stageDir/_features_done")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // The marker records the INPUT IDENTITY (path + file-metadata
-    // fingerprint of documents.parquet — lengths and mtimes, no data
-    // scan), not just "done": a staged feature table is only reusable for
-    // the exact input it was computed from. A resume against the same
-    // input skips the feature pass; a re-run against a refreshed or
-    // different corpus recomputes instead of silently serving stale
-    // features labeled as the new run.
-    // None = input not reachable (decommissioned after staging — the
-    // resume-from-stage-alone case the kill/resume test exercises): trust
-    // the committed marker. Some(ident) = input visible: a committed stage
-    // is only reused if the identity matches what it was computed from.
-    val ident: Option[String] = graft.util.InputIdentity.of(s, dir)
-    val staleOrMissing =
-      if (!fs.exists(marker)) true
-      else ident match {
-        case None => false // input gone: the committed stage is the truth
-        case Some(id) =>
-          val in = fs.open(marker)
-          val recorded = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-          recorded != id
-      }
-    if (staleOrMissing) {
-      fs.delete(marker, false) // stale marker down BEFORE the data rewrite
-      docFeatures(s, dir).write.mode("overwrite").parquet(featDir)
-      val out = fs.create(marker, true)
-      // reaching here means the input was scanned, so ident is defined
-      try out.write(ident.get.getBytes("UTF-8")) finally out.close()
+    val (featDir, _) = graft.pipeline.VersionedTable.reuseOrInstall(
+      s, s"$stageDir/features", "curation-features-v1", dir, keepGenerations = 1) { gen =>
+      docFeatures(s, dir).write.parquet(gen)
     }
     val v = verdictsFrom(s.read.parquet(featDir)).localCheckpoint(true)
     (curatedFrom(v), funnelFrom(v))

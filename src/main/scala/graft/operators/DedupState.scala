@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import graft.pipeline.VersionedTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,30 +11,22 @@ import org.apache.spark.sql.functions._
   * materialized once per corpus snapshot and every incoming batch probes
   * the parquet state instead of the corpus.
   *
-  * Layout (all under one stateDir):
+  * Layout: stateDir is a [[VersionedTable]] root; each generation holds
+  * both tables, so they commit together and cannot disagree.
   * {{{
-  *   bands/        distinct (band INT, bh BIGINT) parquet — the probe table
-  *   sigs/         (doc_id, mh0..mh7) parquet — kept so band retuning or
-  *                 calibration never needs a corpus re-scan
-  *   _state_done   marker-after-data: format version + input identity
+  *   gen-N/bands/      distinct (band INT, bh BIGINT) parquet — the probe table
+  *   gen-N/sigs/       (doc_id, mh0..mh7) parquet — kept so band retuning or
+  *                     calibration never needs a corpus re-scan
+  *   gen-N/_committed  marker-after-data: format version + input digest
   * }}}
   *
-  * Commit protocol — the same rules as `curationRunStaged` / `DeltaBatches`:
-  *  - marker-after-data: a build killed mid-write leaves no marker, so the
-  *    partial state is invisible and the next build rewrites it;
-  *  - the marker records the INPUT IDENTITY (file-metadata fingerprint of
-  *    the corpus — no data scan), so a refreshed corpus invalidates the
-  *    state instead of silently serving stale bands;
-  *  - a build against unreachable input with a committed marker trusts the
-  *    marker (resume-from-state-alone);
-  *  - SINGLE WRITER per stateDir. Readers must not SPAN a rebuild: a
-  *    rebuild overwrites bands/ in place, so a dedupBatch job that listed
-  *    the old files can fail mid-action (or, under ignoreMissingFiles,
-  *    silently probe a partial table). Rebuilds are maintenance-window
-  *    operations here; a deployment with always-on readers should house
-  *    bands/sigs in a `VersionedTable` (gen-N + pointer) so rebuilds
-  *    install invisibly — the same trade documented on `Compact` vs
-  *    `VersionedTable`.
+  * [[build]] reuses the committed generation built from the same corpus
+  * (or from a corpus that is no longer reachable) and otherwise installs a
+  * new one, so a refreshed corpus never serves stale bands and a crashed
+  * build is an uncommitted generation no reader sees. Readers resolve the
+  * newest committed generation of this format; two generations are kept,
+  * so a reader that resolved generation N keeps reading it while N+1
+  * commits. Single writer per stateDir.
   *
   * Signatures and banding come from the same private expressions as the
   * batch and streaming dedup paths ([[DedupOps.sigSpark]] /
@@ -44,68 +36,44 @@ import org.apache.spark.sql.functions._
 object DedupState {
 
   /** Bumped whenever sigs/bands layout or hashing changes — a version
-    * mismatch reads as stale and forces a rebuild, never a misread.
+    * mismatch reads as no state and forces a rebuild, never a misread.
     */
   private val FormatVersion = "dedupstate-v1"
-
-  private def marker(stateDir: String) = new Path(s"$stateDir/_state_done")
-
-  /** Some(recorded input identity) iff the marker is committed under THIS
-    * format version — the one parse both the builder and the probe use, so
-    * a marker-shape change cannot make them disagree about committedness.
-    */
-  private def committedIdent(
-      fs: org.apache.hadoop.fs.FileSystem, m: Path): Option[String] =
-    graft.util.Markers.read(fs, m).flatMap { v =>
-      val parts = v.split("\n", 2)
-      if (parts(0) == FormatVersion) Some(parts.lift(1).getOrElse("")) else None
-    }
 
   /** Build the state from `corpusDir`, or reuse a committed build for the
     * identical input. Returns true iff a (re)build happened.
     */
-  def build(s: SparkSession, corpusDir: String, stateDir: String): Boolean = {
-    val m = marker(stateDir)
-    val fs = m.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val ident = graft.util.InputIdentity.digestOf(s, corpusDir)
-    val fresh = committedIdent(fs, m).exists(rec => ident.forall(_ == rec))
-    if (fresh) false
-    else {
-      require(ident.isDefined,
-        s"cannot build dedup state: $corpusDir/documents.parquet unreachable and no committed state")
-      fs.delete(m, false) // stale marker down BEFORE the data rewrite
-      val sig = DedupOps.sigSpark(s, corpusDir)
-      sig.write.mode("overwrite").parquet(s"$stateDir/sigs")
+  def build(s: SparkSession, corpusDir: String, stateDir: String): Boolean =
+    VersionedTable.reuseOrInstall(s, stateDir, FormatVersion, corpusDir) { gen =>
+      DedupOps.sigSpark(s, corpusDir).write.parquet(s"$gen/sigs")
       // bands derive from the just-written sigs (not the corpus): ONE
-      // corpus scan per build, and the two tables cannot disagree
-      DedupOps.bandsSpark(s.read.parquet(s"$stateDir/sigs"))
+      // corpus scan per build
+      DedupOps.bandsSpark(s.read.parquet(s"$gen/sigs"))
         .select(col("band"), col("bh")).distinct()
-        .write.mode("overwrite").parquet(s"$stateDir/bands")
-      graft.util.Markers.write(fs, m, s"$FormatVersion\n${ident.get}")
-      true
-    }
-  }
+        .write.parquet(s"$gen/bands")
+    }._2
+
+  /** The newest committed generation directory — fails fast when there is
+    * none of this format.
+    */
+  def generation(s: SparkSession, stateDir: String): String =
+    VersionedTable.resolve(s, stateDir, Some(FormatVersion)).getOrElse(
+      throw new IllegalStateException(
+        s"dedup state at $stateDir has no committed $FormatVersion generation — run DedupState.build first"))
+
+  /** The committed band table of the resolved generation. Long-lived
+    * readers (the streaming sink) load ONCE and cache; per-call probes go
+    * through [[dedupBatch]].
+    */
+  def loadBands(s: SparkSession, stateDir: String): DataFrame =
+    s.read.parquet(s"${generation(s, stateDir)}/bands")
 
   /** Dedup an incoming batch `(doc_id, text, ...)` against the persisted
     * state: same verdicts as `q_incremental_dedup` — a batch doc is 'dup'
     * iff any of its LSH bands collides with a corpus band — but the corpus
     * side reads ONLY the state's band table (never the corpus). The batch
-    * side is the small side and broadcasts. Fails fast on an uncommitted
-    * or version-mismatched state.
+    * side is the small side and broadcasts.
     */
-  /** The committed band table, marker-validated — fails fast on an
-    * uncommitted or version-mismatched state. Long-lived readers (the
-    * streaming sink) load ONCE and cache; per-call probes go through
-    * [[dedupBatch]].
-    */
-  def loadBands(s: SparkSession, stateDir: String): DataFrame = {
-    val m = marker(stateDir)
-    val fs = m.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (committedIdent(fs, m).isEmpty) throw new IllegalStateException(
-      s"dedup state at $stateDir is uncommitted or a different format — run DedupState.build first")
-    s.read.parquet(s"$stateDir/bands")
-  }
-
   def dedupBatch(s: SparkSession, stateDir: String, batch: DataFrame): DataFrame =
     // ONE shared verdict implementation with q_incremental_dedup — only the
     // corpus-band source differs (persisted parquet here, in-query there)

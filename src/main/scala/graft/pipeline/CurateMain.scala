@@ -8,9 +8,10 @@ import org.apache.spark.sql.SparkSession
   * reason) next to it, and prints the funnel.
   *
   * Crash/resume semantics:
-  *  - the feature stage commits via marker-after-data (`_features_done`);
-  *    a re-run after a crash mid-stage rewrites it, a re-run after the
-  *    marker landed never re-reads the input;
+  *  - the feature stage is a [[VersionedTable]] generation under
+  *    `<stageDir>/features`, committed marker-after-data with the input
+  *    digest; a re-run after a crash mid-stage rewrites it, a re-run after
+  *    the commit never re-reads the input (unless the input changed);
   *  - everything downstream is a pure function of the staged table and is
   *    written with plain overwrite, so a re-run after ANY crash converges
   *    to the same bytes (validated by the kill-resume case in

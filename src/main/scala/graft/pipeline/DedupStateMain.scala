@@ -6,7 +6,9 @@ import org.apache.spark.sql.SparkSession
   * no-op-reuses) the persisted LSH band/signature state for a corpus
   * snapshot — the table every incremental-ingest dedup probes instead of
   * rescanning the corpus (see `DedupState`). Safe to re-run after any
-  * crash: marker-after-data with the input identity recorded.
+  * crash: each build installs a new [[VersionedTable]] generation whose
+  * marker, written after the data, records the input digest. The counts
+  * it prints are read from the resolved generation.
   *
   *   spark-submit --class graft.pipeline.DedupStateMain <jar> <sfDir> <stateDir>
   */
@@ -23,9 +25,10 @@ object DedupStateMain {
     spark.sparkContext.setLogLevel("WARN")
 
     val rebuilt = graft.operators.DedupState.build(spark, inDir, stateDir)
-    val bands = spark.read.parquet(s"$stateDir/bands").count()
-    val sigs = spark.read.parquet(s"$stateDir/sigs").count()
-    println(s"""{"rebuilt":$rebuilt,"bands":$bands,"sig_docs":$sigs,"state":"$stateDir"}""")
+    val gen = graft.operators.DedupState.generation(spark, stateDir)
+    val bands = spark.read.parquet(s"$gen/bands").count()
+    val sigs = spark.read.parquet(s"$gen/sigs").count()
+    println(s"""{"rebuilt":$rebuilt,"bands":$bands,"sig_docs":$sigs,"state":"$stateDir","generation":"$gen"}""")
     spark.stop()
   }
 }

@@ -1,18 +1,21 @@
 package graft.pipeline
 
-import graft.util.Markers
+import graft.util.{InputIdentity, Markers}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Generation-versioned parquet table — the snapshot half of an Iceberg
   * table re-expressed over a plain directory, built so MAINTENANCE REWRITES
   * ARE INVISIBLE TO CONCURRENT READERS (the gap `Compact.compact`'s rename
-  * swap cannot close; see ADVICE on the absent-path window).
+  * swap cannot close; see ADVICE on the absent-path window). It is the
+  * engine's one "reuse or rebuild by input identity" protocol: callers are
+  * [[graft.operators.DedupState]] (the persisted LSH band/signature state)
+  * and `DedupOps.curationRunStaged` (CurateMain's durable feature stage).
   *
   * Layout:
   * {{{
-  *   <root>/gen-00000001/  ... parquet data + _committed marker
-  *   <root>/gen-00000002/  ... parquet data + _committed marker
+  *   <root>/gen-00000001/  ... data + _committed marker
+  *   <root>/gen-00000002/  ... data + _committed marker
   * }}}
   *
   * The directory name deliberately uses `gen-N`, not `gen=N`: Spark's
@@ -23,7 +26,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `ExportMain`): a writer creates the next `gen-N` directory, writes data
   * into it, and only then writes the non-empty `_committed` marker
   * ([[Markers]] — an empty marker, the footprint of a kill mid-create,
-  * reads as absent). Readers resolve the HIGHEST committed generation; a
+  * reads as absent). The marker records the generation's [[Tag]]: the
+  * writer's format version and the digest of the input it was built from.
+  * Readers resolve the HIGHEST committed generation (of their format); a
   * crashed install is an uncommitted directory no reader ever sees, swept
   * by the next successful install.
   *
@@ -44,6 +49,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object VersionedTable {
 
+  /** What a generation was built from: the writer's format version and the
+    * [[InputIdentity.digestOf]] of its input directory. Both are empty for
+    * a generation not derived from an input (a plain `install`).
+    */
+  final case class Tag(format: String = "", input: String = "")
+
   private val GenRe = "^gen-(\\d{8})$".r
   private def genName(n: Int): String = f"gen-$n%08d"
   private def marker(gen: Path): Path = new Path(gen, "_committed")
@@ -51,26 +62,39 @@ object VersionedTable {
   private def fsOf(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** All generation numbers present under root, committed or not. */
-  private def generations(fs: FileSystem, root: Path): Seq[(Int, Path, Boolean)] = {
+  /** All generations present under root, committed (Some(tag)) or not. The
+    * marker holds the generation number, then the tag's two fields, one a
+    * line; a marker without them reads as the empty tag.
+    */
+  private def generations(fs: FileSystem, root: Path): Seq[(Int, Path, Option[Tag])] = {
     if (!fs.exists(root)) Seq.empty
     else
       fs.listStatus(root).toSeq.collect {
         case st if st.isDirectory =>
           st.getPath.getName match {
             case GenRe(n) =>
-              Some((n.toInt, st.getPath, Markers.read(fs, marker(st.getPath)).isDefined))
+              val tag = Markers.read(fs, marker(st.getPath)).map { v =>
+                val f = v.split("\n", -1).lift
+                Tag(f(1).getOrElse(""), f(2).getOrElse(""))
+              }
+              Some((n.toInt, st.getPath, tag))
             case _ => None
           }
         case _ => None
       }.flatten.sortBy(_._1)
   }
 
-  /** Path of the newest committed generation, or None for an empty/new root. */
-  def resolve(spark: SparkSession, root: String): Option[String] = {
-    val fs = fsOf(spark, new Path(root).toString)
-    generations(fs, new Path(root)).filter(_._3).lastOption.map(_._2.toString)
-  }
+  /** The newest committed generation, of `format` when one is given. */
+  private def tip(fs: FileSystem, root: String, format: Option[String]): Option[(Path, Tag)] =
+    generations(fs, new Path(root)).collect {
+      case (_, p, Some(t)) if format.forall(_ == t.format) => (p, t)
+    }.lastOption
+
+  /** Path of the newest committed generation (of `format`, if given), or
+    * None for an empty/new root.
+    */
+  def resolve(spark: SparkSession, root: String, format: Option[String] = None): Option[String] =
+    tip(fsOf(spark, root), root, format).map(_._1.toString)
 
   /** Read the current generation as a DataFrame (fails on an empty root). */
   def read(spark: SparkSession, root: String): DataFrame =
@@ -78,25 +102,44 @@ object VersionedTable {
       sys.error(s"versioned table $root has no committed generation")))
 
   /** Install the next generation: `write(genDir)` produces the data, the
-    * commit marker lands after it returns, then retention prunes. Returns
-    * the committed generation directory. Works for initial creation too
-    * (an empty root commits gen 1).
+    * commit marker (carrying `tag`) lands after it returns, then retention
+    * prunes. Returns the committed generation directory. Works for initial
+    * creation too (an empty root commits gen 1).
     */
-  def install(spark: SparkSession, root: String, keepGenerations: Int = 2)(
+  def install(spark: SparkSession, root: String, keepGenerations: Int = 2, tag: Tag = Tag())(
       write: String => Unit): String = {
     require(keepGenerations >= 1, s"keepGenerations must be >= 1, got $keepGenerations")
     val rootPath = new Path(root)
     val fs = fsOf(spark, root)
-    val existing = generations(fs, rootPath)
-    val next = existing.lastOption.map(_._1 + 1).getOrElse(1)
+    val next = generations(fs, rootPath).lastOption.map(_._1 + 1).getOrElse(1)
     val genDir = new Path(rootPath, genName(next))
     fs.delete(genDir, true) // stale debris from a crashed prior install
     write(genDir.toString)
-    Markers.write(fs, marker(genDir), next.toString)
+    Markers.write(fs, marker(genDir), Seq(next.toString, tag.format, tag.input).mkString("\n"))
     prune(fs, rootPath, keepGenerations)
     // filesystem-qualified, matching what resolve returns (listStatus paths
     // carry the scheme; an unqualified sibling string would compare unequal)
     fs.makeQualified(genDir).toString
+  }
+
+  /** Reuse the committed tip of `format` if it was built from this input,
+    * else install a new generation from it. The tip is reused when the
+    * input is unreachable (decommissioned after the build: the commit is
+    * the truth) or its [[InputIdentity.digestOf]] equals the recorded one;
+    * a refreshed input installs a new generation instead of serving a stale
+    * one. An unreachable input with no committed generation of `format`
+    * fails fast. Returns (generation dir, whether it was installed now).
+    */
+  def reuseOrInstall(spark: SparkSession, root: String, format: String, inputDir: String,
+      keepGenerations: Int = 2)(write: String => Unit): (String, Boolean) = {
+    val digest = InputIdentity.digestOf(spark, inputDir)
+    tip(fsOf(spark, root), root, Some(format)) match {
+      case Some((gen, t)) if digest.forall(_ == t.input) => (gen.toString, false)
+      case _ =>
+        require(digest.isDefined, s"cannot build $root: $inputDir/documents.parquet " +
+          s"unreachable and no committed generation of format $format")
+        (install(spark, root, keepGenerations, Tag(format, digest.get))(write), true)
+    }
   }
 
   /** Drop all but the newest `keep` committed generations, and any
@@ -105,18 +148,18 @@ object VersionedTable {
     */
   private def prune(fs: FileSystem, root: Path, keep: Int): Unit = {
     val gens = generations(fs, root)
-    val committed = gens.filter(_._3)
-    val keepNums = committed.takeRight(keep).map(_._1).toSet
-    gens.foreach { case (n, p, isCommitted) =>
-      val stale = if (isCommitted) !keepNums.contains(n) else n < gens.last._1
+    val keepNums = gens.filter(_._3.isDefined).takeRight(keep).map(_._1).toSet
+    gens.foreach { case (n, p, tag) =>
+      val stale = if (tag.isDefined) !keepNums.contains(n) else n < gens.last._1
       if (stale) fs.delete(p, true)
     }
   }
 
   /** Reader-safe compaction: rewrite the current generation into the next
     * one at ~targetFileBytes per file (same redistribution as
-    * [[Compact.compact]], including the per-partition salt budget), commit,
-    * prune. Concurrent readers of the old generation are undisturbed.
+    * [[Compact.compact]], including the per-partition salt budget), commit
+    * with the tip's tag carried forward, prune. Concurrent readers of the
+    * old generation are undisturbed.
     */
   def compact(
       spark: SparkSession,
@@ -124,11 +167,11 @@ object VersionedTable {
       targetFileBytes: Long = 128L * 1024 * 1024,
       partitionBy: Seq[String] = Nil,
       keepGenerations: Int = 2): Compact.Result = {
-    val cur = resolve(spark, root).getOrElse(
+    val (cur, tag) = tip(fsOf(spark, root), root, None).getOrElse(
       sys.error(s"versioned table $root has no committed generation to compact"))
     var stats = (0, 0L)
-    val installed = install(spark, root, keepGenerations) { dest =>
-      stats = Compact.rewrite(spark, cur, dest, targetFileBytes, partitionBy)
+    val installed = install(spark, root, keepGenerations, tag) { dest =>
+      stats = Compact.rewrite(spark, cur.toString, dest, targetFileBytes, partitionBy)
     }
     Compact.Result(stats._1, Compact.countDataFiles(spark, installed), stats._2)
   }

@@ -191,14 +191,15 @@ object StreamingExtract {
     * that would need stream state to express as a plain stream-static
     * join; inside foreachBatch it is the exact shared batch code path
     * ([[graft.operators.DedupOps.incrementalVerdicts]]), so the stream and
-    * the batch gate agree by construction. The band table is
-    * marker-validated and CACHED once at sink construction (the state is
-    * contractually immutable while the stream is up — do not run a rebuild
-    * against it, see [[graft.operators.DedupState]]), so a micro-batch
-    * costs O(batch) against cached bands, not a per-batch state scan; the
-    * cache is RELEASED when the query terminates (listener below), so a
-    * session cycling through sinks/snapshots doesn't accumulate dead
-    * cached band tables.
+    * the batch gate agree by construction. The band table of the state's
+    * resolved generation is CACHED once at sink construction, so a
+    * micro-batch costs O(batch) against cached bands, not a per-batch
+    * state scan. A rebuild installs a new generation beside the one the
+    * sink reads (see [[graft.operators.DedupState]]); the running sink
+    * keeps gating against its snapshot and re-resolves the tip on
+    * restart. The cache is RELEASED when the query terminates (listener
+    * below), so a session cycling through sinks/snapshots doesn't
+    * accumulate dead cached band tables.
     * Exactly-once effect under foreachBatch's at-least-once replay:
     * survivors land in a PER-MICRO-BATCH directory `batch=<id>` written
     * with overwrite — a replayed micro-batch overwrites its own directory

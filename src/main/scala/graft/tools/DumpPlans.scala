@@ -2,13 +2,15 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Dumps `explain("formatted")` for the flagship queries into docs/PLANS.md
-  * (dev tool; output committed for review).
+/** Dumps `explain("formatted")` for the flagship queries, by default into
+  * the git-ignored target/plans/PLANS.md (dev tool, run on demand:
+  * `runMain graft.tools.DumpPlans [sfDir] [outFile]`). The enforced plan
+  * contract is `PlanQualitySpec`.
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = args.lift(1).getOrElse("docs/PLANS.md")
+    val out = args.lift(1).getOrElse("target/plans/PLANS.md")
     val spark = SparkSession.builder()
       .master("local[4]")
       .withExtensions(new graft.GraftExtensions)

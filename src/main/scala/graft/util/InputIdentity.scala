@@ -5,9 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** File-metadata fingerprint of an input corpus directory — the identity a
   * resumable job records so a committed stage/export is only reused for
   * the EXACT input it was computed from (path + per-file length + mtime,
-  * no data scan). Shared by `DedupOps.curationRunStaged` and
-  * `ExportMain`; the two must agree or the curation stage could refresh
-  * while the export's no-op check still matches, and vice versa.
+  * no data scan). Shared by `VersionedTable.reuseOrInstall` (the dedup
+  * state and the curation stage) and `ExportMain`; they must agree or the
+  * curation stage could refresh while the export's no-op check still
+  * matches, and vice versa.
   */
 object InputIdentity {
 
@@ -15,7 +16,7 @@ object InputIdentity {
     * None if the input has been decommissioned (resume-from-stage-alone —
     * callers trust their committed marker in that case).
     */
-  def of(spark: SparkSession, dir: String): Option[String] = {
+  private def of(spark: SparkSession, dir: String): Option[String] = {
     val docsPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
     val docsFs = docsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
@@ -33,7 +34,7 @@ object InputIdentity {
     } catch { case _: java.io.FileNotFoundException => None }
   }
 
-  /** Compact digest of [[of]], for markers that also carry other fields. */
+  /** MD5 digest of the identity string, or None for an unreachable input. */
   def digestOf(spark: SparkSession, dir: String): Option[String] =
     of(spark, dir).map { id =>
       java.security.MessageDigest.getInstance("MD5")

@@ -62,16 +62,26 @@ class WinnowPairsSpec extends SparkTestBase {
 
   test("edge semantics: rightmost ties, short arrays, nulls, run-compressed distinctness") {
     GraftFunctions.ensure(spark)
-    val df = Seq(
+    val fixture = Seq(
       (1L, Array[java.lang.Long](5L, 3L, 3L, 7L, 3L, 9L)),      // ties -> rightmost
       (2L, Array[java.lang.Long](4L, 2L)),                       // n < w: one whole-array window
       (3L, Array[java.lang.Long](8L)),                           // single element
       (4L, Array[java.lang.Long](null, 6L, null, 1L)),           // null elements skipped
       (5L, Array[java.lang.Long](null, null)),                   // all-null -> one null element
       (6L, Array.empty[java.lang.Long]),                         // empty -> one empty window -> null
-      (7L, Array[java.lang.Long](1L, 1L, 1L, 1L, 1L))            // constant run collapses
-    ).toDF("id", "hs").select(col("id"), expr("winnow_pairs(hs, 3)").as("wp"))
-    val out = df.collect().map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
+      (7L, Array[java.lang.Long](1L, 1L, 1L, 1L, 1L)),           // constant run collapses
+      (8L, Array[java.lang.Long](null, null, null, 1L, null, null, null)) // two all-null runs -> one null
+    ).toDF("id", "hs")
+    // the portable per-window fold (rightmost-tie min pair) under
+    // array_distinct, the set the native expression must equal
+    val hof = "array_distinct(transform(sequence(1, greatest(size(hs) - 2, 1)), s ->" +
+      " aggregate(slice(transform(hs, (x, i) -> named_struct('pos', i, 'fp', x)), s, 3)," +
+      " cast(null as struct<pos:int,fp:bigint>), (acc, p) -> CASE WHEN p.fp IS NULL THEN acc" +
+      " WHEN acc IS NULL OR p.fp <= acc.fp THEN p ELSE acc END)))"
+    val df = fixture.select(col("id"), expr("winnow_pairs(hs, 3)").as("wp"), expr(hof).as("hof"))
+    val rows = df.collect()
+    for (r <- rows) assert(r.getSeq[Any](1) == r.getSeq[Any](2), s"id ${r.getLong(0)}")
+    val out = rows.map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
 
     def pairs(id: Long) = out(id).map {
       case null => null
@@ -87,7 +97,9 @@ class WinnowPairsSpec extends SparkTestBase {
     assert(pairs(6L) == Seq(null))
     // id 7: every window selects its rightmost 1 -> positions 2, 3, 4
     assert(pairs(7L) == Seq((2, 1L), (3, 1L), (4, 1L)))
-    // run-compression IS distinctness: no output may contain a duplicate
+    // id 8: [n,n,n] -> null, three windows -> (3,1), [n,n,n] -> null again
+    assert(pairs(8L) == Seq(null, (3, 1L)))
+    // no output may contain a duplicate, null elements included
     for ((id, ps) <- out) assert(ps.distinct.size == ps.size, s"id $id")
   }
 

@@ -101,22 +101,26 @@ class PipelineSpec extends SparkTestBase {
     val (c2, f2) = DedupOps.curationRunStaged(spark, "/nonexistent-input-dir", stage)
     assert(c2.collect().map(_.toSeq).toSeq == curated1)
     assert(f2.collect().map(_.toSeq).toSeq == funnel1)
-    // crash BEFORE the marker landed (partial feature data, no marker):
-    // the stage is ignored and rewritten from the input
+    // crash BEFORE the marker landed (a partial gen-N, no marker): the
+    // stage is ignored and rewritten from the input
     val fs = new org.apache.hadoop.fs.Path(stage).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$stage/_features_done"), false)
     fs.delete(new org.apache.hadoop.fs.Path(s"$stage/features"), true)
-    docFeaturesPartial(stage) // half-written stage data, as a crash leaves it
+    val partial = docFeaturesPartial(stage) // half-written stage data, as a crash leaves it
     val (c3, f3) = DedupOps.curationRunStaged(spark, sfDir, stage)
     assert(c3.collect().map(_.toSeq).toSeq == curated1)
     assert(f3.collect().map(_.toSeq).toSeq == funnel1)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(partial)), "crashed generation not swept")
   }
 
-  /** Simulate a feature-stage crash: some rows durable, no commit marker. */
-  private def docFeaturesPartial(stage: String): Unit =
-    graft.operators.DedupOps.docFeatures(spark, sfDir).limit(7)
-      .write.mode("overwrite").parquet(s"$stage/features")
+  /** Simulate a feature-stage crash: some rows durable in the stage's first
+    * generation, no commit marker. Returns that generation's directory.
+    */
+  private def docFeaturesPartial(stage: String): String = {
+    val gen = s"$stage/features/gen-00000001"
+    graft.operators.DedupOps.docFeatures(spark, sfDir).limit(7).write.parquet(gen)
+    gen
+  }
 
   test("curation staging: a visibly CHANGED input invalidates the stage (no stale serve)") {
     import graft.operators.DedupOps
