@@ -64,7 +64,7 @@ object Checkpoint {
     def commitGroup(grp: Long, lineage: DataFrame): Unit
   }
 
-  /** Default writer: plain parquet (the local jars carry no Iceberg
+  /** The production writer: plain parquet (the local jars carry no Iceberg
     * runtime). Dynamic partition-overwrite gives the per-group atomicity;
     * the lineage append is the commit marker.
     */
@@ -114,6 +114,7 @@ object Checkpoint {
       cfg: ExtractJob.Config,
       numGroups: Int,
       maxGroups: Int): Int = {
+    require(numGroups >= 1, s"numGroups must be >= 1, got $numGroups")
     val spark = docs.sparkSession
     import spark.implicits._
 

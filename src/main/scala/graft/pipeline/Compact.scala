@@ -106,6 +106,7 @@ object Compact {
       destDir: String,
       targetFileBytes: Long,
       partitionBy: Seq[String]): (Int, Long) = {
+    require(targetFileBytes > 0, s"targetFileBytes must be > 0, got $targetFileBytes")
     val before = dataFiles(spark, srcDir)
     val totalBytes = before.map(_._2).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)

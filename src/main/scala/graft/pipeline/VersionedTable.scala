@@ -7,10 +7,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Generation-versioned parquet table — the snapshot half of an Iceberg
   * table re-expressed over a plain directory, built so MAINTENANCE REWRITES
   * ARE INVISIBLE TO CONCURRENT READERS (the gap `Compact.compact`'s rename
-  * swap cannot close; see ADVICE on the absent-path window). It is the
-  * engine's one "reuse or rebuild by input identity" protocol: callers are
+  * swap cannot close; see ADVICE on the absent-path window). Its
+  * `reuseOrInstall` is the "reuse or rebuild by input identity" protocol of
   * [[graft.operators.DedupState]] (the persisted LSH band/signature state)
   * and `DedupOps.curationRunStaged` (CurateMain's durable feature stage).
+  * It is not yet the only one: `ExportMain.run` still hand-rolls the same
+  * check, parsing `input=<digest>` out of its `_export_done` marker and
+  * deleting that marker before a rewrite of the flat `<outDir>/data`.
   *
   * Layout:
   * {{{

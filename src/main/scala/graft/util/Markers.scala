@@ -2,7 +2,7 @@ package graft.util
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Tiny single-value marker files (backend pins, format versions, commit
+/** Tiny single-value marker files (format versions, input digests, commit
   * flags) with ONE shared crash-robustness rule: a marker that exists but
   * is empty — the footprint of a kill between create and write — reads as
   * ABSENT, never as a distinct (and unserviceable) third state. Every

@@ -130,6 +130,29 @@ class CompactionSpec extends SparkTestBase {
     assert(spark.read.parquet(dir).count() == 20000)
   }
 
+  test("a non-positive target file size is rejected and leaves the table untouched") {
+    val dir = Files.createTempDirectory("graft-compact-zero").toString + "/t"
+    spark.range(100).selectExpr("id AS doc_id", "repeat('z', 20) AS text")
+      .repartition(8).write.parquet(dir)
+    val rows = spark.read.parquet(dir).as[(Long, String)].collect().sortBy(_._1).toSeq
+    val files = Compact.countDataFiles(spark, dir)
+    for (target <- Seq(0L, -1L)) {
+      val e = intercept[IllegalArgumentException](Compact.compact(spark, dir, targetFileBytes = target))
+      assert(e.getMessage.contains(s"got $target"), e.getMessage)
+    }
+    assert(Compact.countDataFiles(spark, dir) == files)
+    assert(spark.read.parquet(dir).as[(Long, String)].collect().sortBy(_._1).toSeq == rows)
+
+    val root = Files.createTempDirectory("graft-vt-zero").toString + "/t"
+    val g1 = VersionedTable.install(spark, root) { dest =>
+      spark.range(100).selectExpr("id AS doc_id").repartition(8).write.parquet(dest)
+    }
+    intercept[IllegalArgumentException](VersionedTable.compact(spark, root, targetFileBytes = 0L))
+    assert(VersionedTable.resolve(spark, root).contains(g1))
+    assert(Compact.countDataFiles(spark, g1) == 8)
+    assert(VersionedTable.read(spark, root).count() == 100)
+  }
+
   test("versioned table: install commits generations, resolve tracks the tip, retention prunes") {
     val root = Files.createTempDirectory("graft-vt").toString + "/t"
     val fs = new org.apache.hadoop.fs.Path(root)

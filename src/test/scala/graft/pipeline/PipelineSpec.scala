@@ -248,69 +248,24 @@ class PipelineSpec extends SparkTestBase {
     }
   }
 
-  test("resume through JsonlSpanWriter converges to the parquet writer's output") {
+  test("runResumable rejects a non-positive group count before touching the output") {
     val docs = DocSynth.docs(spark, sfDir)
-    val dirJ = Files.createTempDirectory("graft-resume-jsonl").toString
-    val dirP = Files.createTempDirectory("graft-resume-parq").toString
-    val cfg = ExtractJob.Config()
-
-    // kill after 3 of 8 groups, then resume — all through the JSONL writer
-    val wJ = new JsonlSpanWriter(spark, dirJ)
-    assert(Checkpoint.runResumable(docs, wJ, cfg, numGroups = 8, maxGroups = 3) == 3)
-    assert(Checkpoint.runResumable(docs, wJ, cfg, numGroups = 8, maxGroups = Int.MaxValue) == 5)
-    assert(Checkpoint.runResumable(docs, wJ, cfg, numGroups = 8, maxGroups = Int.MaxValue) == 0)
-
-    // single-shot parquet reference run: the two writers must agree exactly
-    Checkpoint.runResumable(docs, dirP, cfg, numGroups = 8)
-    val j = collectSorted(JsonlSpanWriter.readSpans(spark, dirJ).as[Doc])
-    val p = collectSorted(Checkpoint.readSpans(spark, dirP).as[Doc])
-    assert(j.nonEmpty && j == p)
-    assert(JsonlSpanWriter.readLineage(spark, dirJ).select("grp").distinct().count() == 8)
+    val dir = Files.createTempDirectory("graft-resume-zero").toString
+    for (n <- Seq(0, -3)) {
+      val e = intercept[IllegalArgumentException](Checkpoint.runResumable(docs, dir, numGroups = n))
+      assert(e.getMessage.contains(s"got $n"), e.getMessage)
+    }
+    assert(new java.io.File(dir).list().isEmpty)
   }
 
-  test("backend pin: marker-less checkpoint re-derives its format from file magic, not assumed parquet") {
-    val fs = new org.apache.hadoop.fs.Path("/tmp")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def mkCheckpoint(firstBytes: Array[Byte]): String = {
-      val dir = Files.createTempDirectory("graft-pin").toString
-      val f = new org.apache.hadoop.fs.Path(s"${Checkpoint.lineageDir(dir)}/part-00000")
-      val out = fs.create(f, true)
-      try out.write(firstBytes) finally out.close()
-      dir
+  test("ExtractMain parses the three mode names and rejects any other") {
+    assert(ExtractMain.parseMode("chunk") == ExtractMode.ChunkMode)
+    assert(ExtractMain.parseMode("paragraph") == ExtractMode.ParagraphMode)
+    assert(ExtractMain.parseMode("semantic") == ExtractMode.SemanticMode)
+    for (bad <- Seq("semntic", "Semantic", "")) {
+      val e = intercept[IllegalArgumentException](ExtractMain.parseMode(bad))
+      assert(e.getMessage.contains(s"'$bad'") && e.getMessage.contains("chunk|paragraph|semantic"),
+        e.getMessage)
     }
-    // a jsonl checkpoint whose _writer marker was lost: resuming as parquet
-    // must fail NAMING the sniffed format, and resuming as jsonl must re-pin
-    val dirJ = mkCheckpoint("""{"grp":0,"docs_parsed":1}""".getBytes("UTF-8"))
-    val eJ = intercept[IllegalArgumentException] {
-      ExtractMain.resolveBackendPin(fs, dirJ, "parquet")
-    }
-    assert(eJ.getMessage.contains("'jsonl'"), eJ.getMessage)
-    ExtractMain.resolveBackendPin(fs, dirJ, "jsonl") // re-pins
-    assert(graft.util.Markers.read(fs,
-      new org.apache.hadoop.fs.Path(s"$dirJ/_writer")).contains("jsonl"))
-    // the marker now takes the fast path: mismatch still rejected
-    val eJ2 = intercept[IllegalArgumentException] {
-      ExtractMain.resolveBackendPin(fs, dirJ, "parquet")
-    }
-    assert(eJ2.getMessage.contains("was written with the 'jsonl' backend"), eJ2.getMessage)
-
-    // the symmetric legacy-parquet case (PAR1 magic)
-    val dirP = mkCheckpoint("PAR1xxxx".getBytes("UTF-8"))
-    val eP = intercept[IllegalArgumentException] {
-      ExtractMain.resolveBackendPin(fs, dirP, "jsonl")
-    }
-    assert(eP.getMessage.contains("'parquet'"), eP.getMessage)
-    ExtractMain.resolveBackendPin(fs, dirP, "parquet")
-
-    // hidden files (staging dirs, crc) never decide the sniff; a dir with
-    // only hidden data pins fresh without complaint
-    val dirH = Files.createTempDirectory("graft-pin-hidden").toString
-    val hf = new org.apache.hadoop.fs.Path(
-      s"${Checkpoint.spansDir(dirH)}/_staging_grp_0/part-00000")
-    val out = fs.create(hf, true)
-    try out.write("PAR1xxxx".getBytes("UTF-8")) finally out.close()
-    ExtractMain.resolveBackendPin(fs, dirH, "jsonl")
-    assert(graft.util.Markers.read(fs,
-      new org.apache.hadoop.fs.Path(s"$dirH/_writer")).contains("jsonl"))
   }
 }

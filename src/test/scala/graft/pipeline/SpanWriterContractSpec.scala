@@ -119,37 +119,4 @@ class SpanWriterContractSpec extends SparkTestBase {
     assert(v.exists(_.contains("before commitGroup")), v.mkString("; "))
     assert(v.exists(_.contains("marker-only lineage not durably done")), v.mkString("; "))
   }
-
-  test("JsonlSpanWriter satisfies the full SpanWriter contract") {
-    val out = Files.createTempDirectory("graft-jsonlwriter").toString
-    val writer = new JsonlSpanWriter(spark, out)
-    def readGroupDocs(g: Long): Seq[String] = {
-      val p = new org.apache.hadoop.fs.Path(Checkpoint.spansDir(out))
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) Seq.empty
-      else spark.read
-        .schema(org.apache.spark.sql.Encoders.product[Doc].schema
-          .add("grp", org.apache.spark.sql.types.LongType))
-        .json(Checkpoint.spansDir(out))
-        .where(org.apache.spark.sql.functions.col("grp") === g)
-        .select("doc_id").as[String].collect().toSeq
-    }
-    val v = violations(writer, readGroupDocs)
-    assert(v.isEmpty, s"contract violations: ${v.mkString("; ")}")
-  }
-
-  test("JsonlSpanWriter: a crashed staging write is invisible to readers") {
-    val out = Files.createTempDirectory("graft-jsonlcrash").toString
-    val writer = new JsonlSpanWriter(spark, out)
-    writer.overwriteGroup(1L, spansDf("a"))
-    writer.commitGroup(1L, lineageDf(1L))
-    // Simulate a crash mid-overwrite of group 2: staging dir exists with
-    // data, but the rename never happened. Readers must not see group 2.
-    spansDf("z").write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .json(s"${Checkpoint.spansDir(out)}/_staging_grp_2")
-    val visible = JsonlSpanWriter.readSpans(spark, out)
-      .select("doc_id").as[String].collect().toSeq
-    assert(visible == Seq("a"), s"staging leaked into the read path: $visible")
-    assert(writer.doneGroups() == Set(1L))
-  }
 }
