@@ -8,15 +8,18 @@ import org.apache.spark.storage.StorageLevel
 /** Resumable, idempotent extraction runs — Iceberg MERGE-on-doc_id semantics
   * over plain Parquet (the local jars carry no Iceberg runtime; SURVEY.md §4.2).
   *
-  * Commit unit = "group" = `pmod(xxhash64(doc_id), numGroups)` — the stand-in
-  * for an Iceberg partition commit. For each group:
+  * Group = `pmod(xxhash64(doc_id), numGroups)` — the stand-in for an Iceberg
+  * partition. Commit unit = one run's set of todo groups, committed the way
+  * one Iceberg overwrite snapshot replaces several partitions at once:
   *
-  *   1. spans written with dynamic partition-overwrite into `out/spans/grp=g`
-  *      (job-level atomic; a killed mid-group job leaves nothing visible, a
-  *      re-run *overwrites* the group rather than appending → idempotent even
-  *      if the previous run died between data commit and lineage commit);
-  *   2. lineage rows appended to `out/lineage` (this append IS the group's
-  *      commit marker).
+  *   1. the spans of every todo group written in ONE dynamic partition-
+  *      overwrite job into `out/spans/grp=g` (job-level atomic; a killed job
+  *      leaves nothing visible, a re-run *overwrites* the groups rather than
+  *      appending → idempotent even if the previous run died between data
+  *      commit and lineage commit);
+  *   2. the lineage rows of every todo group, plus one marker row per group,
+  *      appended to `out/lineage` in ONE single-file append after the data
+  *      write returns (this append IS the groups' commit marker).
   *
   * On resume, groups present in the lineage table are skipped entirely — the
   * observable behavior of `MERGE INTO spans ON doc_id`: reprocessing a doc
@@ -25,18 +28,23 @@ import org.apache.spark.storage.StorageLevel
   *
   * A run touches its input once: `ExtractJob`'s kernel stage runs over the
   * docs of every group still to do, tagged with each doc's group, and is
-  * persisted (MEMORY_AND_DISK) for the whole run. The lineage of all those
-  * groups is one aggregate over `(grp, partition_id)`, collected as at
-  * most groups × partitions rows. Each group then commits from the cache:
-  * its spans write is one filter over the cached stage (no scan, no
-  * exchange) and its lineage append is one single-partition write. The
-  * cost is memory: the run's whole extracted output stays cached until the
-  * last group commits, spilling to disk past the storage memory.
+  * persisted (MEMORY_AND_DISK) for the run. It has two consumers: the
+  * lineage of all those groups, one aggregate over `(grp, partition_id)`
+  * collected as at most groups × partitions rows, and the spans write, one
+  * scan of the cache (no input scan, no exchange). The cost is memory: the
+  * run's whole extracted output stays cached until the write returns,
+  * spilling to disk past the storage memory.
   *
-  * Checkpoint granularity trades re-work after a kill (small G: each group,
-  * and the work a kill throws away with it, is larger) against per-group
-  * commit overhead (large G); G≈#(Iceberg partitions touched) in a real
-  * deployment.
+  * Kill granularity: a kill before the lineage append lands redoes every
+  * group of the run on resume; a kill after it redoes nothing. The kernel
+  * already runs over all todo groups before anything commits, so what the
+  * run-wide commit adds to the loss is the write work of groups a
+  * per-group commit would have finished first.
+  *
+  * G decides the `grp=` directory layout of the spans table and the unit
+  * of `maxGroups` (a run commits at most that many groups, which is how
+  * tests simulate a kill). The number of Spark jobs a run starts does not
+  * depend on G.
   */
 object Checkpoint {
 
@@ -46,27 +54,41 @@ object Checkpoint {
   def groupOf(numGroups: Int, docId: Column = col("doc_id")): Column =
     pmod(xxhash64(docId), lit(numGroups.toLong))
 
-  /** The writer seam (SURVEY §7.1): Iceberg-style per-group commit. A real
-    * Iceberg catalog slots in by implementing `overwriteGroup` as
-    * MERGE/overwrite-partition and `commitGroup` as the snapshot commit that
-    * appends the group's lineage rows; `doneGroups` reads the lineage table.
-    * The contract `runResumable` relies on:
-    *  - `overwriteGroup` is idempotent and all-or-nothing per group (a
-    *    killed write leaves nothing visible; a re-run replaces, never
-    *    appends);
-    *  - `commitGroup` runs strictly AFTER the group's data is durable — its
-    *    lineage append IS the commit marker;
-    *  - `doneGroups` returns exactly the groups whose `commitGroup` landed.
+  /** The writer seam (SURVEY §7.1): Iceberg-style partition commit. A real
+    * Iceberg catalog slots in by implementing `overwriteGroups` as a
+    * dynamic partition overwrite and `commitGroups` as the snapshot commit
+    * that appends the groups' lineage rows; `doneGroups` reads the lineage
+    * table. The batch methods are the production path: `runResumable`
+    * calls each once per run, with DataFrames that carry a `grp` column.
+    * The per-group methods serve writers that commit one group at a time
+    * and decorators that time each group; the batch defaults loop over
+    * them. The contract `runResumable` relies on:
+    *  - `overwriteGroups` / `overwriteGroup` are idempotent and all-or-
+    *    nothing (a killed write leaves nothing visible; a re-run replaces,
+    *    never appends);
+    *  - `commitGroups` / `commitGroup` run strictly AFTER the groups' data
+    *    is durable — the lineage append IS the commit marker;
+    *  - `doneGroups` returns exactly the groups whose lineage landed.
     */
   trait SpanWriter {
     def doneGroups(): Set[Long]
     def overwriteGroup(grp: Long, spans: DataFrame): Unit
     def commitGroup(grp: Long, lineage: DataFrame): Unit
+
+    /** Replaces the data of every group in `grps`; `spans` has a `grp` column. */
+    def overwriteGroups(grps: Seq[Long], spans: DataFrame): Unit =
+      grps.foreach(g => overwriteGroup(g, spans.filter(col("grp") === g).drop("grp")))
+
+    /** Commits every group in `grps`; `lineage` has a `grp` column and at
+      * least one row per group.
+      */
+    def commitGroups(grps: Seq[Long], lineage: DataFrame): Unit =
+      grps.foreach(g => commitGroup(g, lineage.filter(col("grp") === g).drop("grp")))
   }
 
   /** The production writer: plain parquet (the local jars carry no Iceberg
-    * runtime). Dynamic partition-overwrite gives the per-group atomicity;
-    * the lineage append is the commit marker.
+    * runtime). One dynamic partition-overwrite job replaces all the given
+    * groups; one lineage append is the commit marker.
     */
   final class ParquetSpanWriter(spark: SparkSession, outDir: String) extends SpanWriter {
 
@@ -84,14 +106,18 @@ object Checkpoint {
     // static cells/ overwrite, where leaving stale cell=N partitions from a
     // previous larger index would make probes read vectors assigned under
     // old centroids.
-    override def overwriteGroup(grp: Long, spans: DataFrame): Unit =
-      spans.withColumn("grp", lit(grp))
-        .write.mode(SaveMode.Overwrite).partitionBy("grp")
+    override def overwriteGroups(grps: Seq[Long], spans: DataFrame): Unit =
+      spans.write.mode(SaveMode.Overwrite).partitionBy("grp")
         .option("partitionOverwriteMode", "dynamic").parquet(spansDir(outDir))
 
+    override def commitGroups(grps: Seq[Long], lineage: DataFrame): Unit =
+      lineage.write.mode(SaveMode.Append).parquet(lineageDir(outDir))
+
+    override def overwriteGroup(grp: Long, spans: DataFrame): Unit =
+      overwriteGroups(Seq(grp), spans.withColumn("grp", lit(grp)))
+
     override def commitGroup(grp: Long, lineage: DataFrame): Unit =
-      lineage.withColumn("grp", lit(grp))
-        .write.mode(SaveMode.Append).parquet(lineageDir(outDir))
+      commitGroups(Seq(grp), lineage.withColumn("grp", lit(grp)))
   }
 
   /** Run (or resume) an extraction against the default parquet writer.
@@ -122,25 +148,25 @@ object Checkpoint {
     val todo = (0L until numGroups.toLong).filterNot(done).take(maxGroups)
     if (todo.isEmpty) return 0
 
-    // One kernel pass over the todo groups' docs; every group's write and
-    // lineage below reads this cache, never the input.
+    // One kernel pass over the todo groups' docs; the lineage aggregate and
+    // the spans write below both read this cache, never the input.
     val stage = ExtractJob.tagged(docs.filter(groupOf(numGroups).isin(todo: _*)), cfg)
       .toDF("doc", "partition_id", "failed")
       .withColumn("grp", groupOf(numGroups, $"doc.doc_id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val lineage = ExtractJob.lineageBy(stage, $"grp")
-        .select($"grp", $"lineage").as[(Long, Lineage)].collect().toSeq.groupMap(_._1)(_._2)
-      // The lineage append IS the commit marker, so it must be non-empty even
-      // for a zero-doc group: a synthetic partition_id=-1 marker row makes
-      // empty groups durably "done" (otherwise every resume re-runs them).
+        .select($"grp", $"lineage").as[(Long, Lineage)].collect().toSeq
+      writer.overwriteGroups(todo, stage.select($"doc.*", $"grp"))
+      // The lineage append IS the commit marker, so it must hold a row for
+      // every group, even a zero-doc one: a synthetic partition_id=-1 marker
+      // row per group makes empty groups durably "done" (otherwise every
+      // resume re-runs them).
       val marker = Lineage(-1, 0L, 0L, 0L, "marker")
-      for (g <- todo) {
-        writer.overwriteGroup(g, stage.filter($"grp" === g).select($"doc.*"))
-        // one partition: the group's few rows land as one file
-        writer.commitGroup(g,
-          spark.createDataset(lineage.getOrElse(g, Nil) :+ marker).toDF().coalesce(1))
-      }
+      val rows = lineage ++ todo.map(g => (g, marker))
+      // one partition: the run's few lineage rows land as one file
+      writer.commitGroups(todo,
+        spark.createDataset(rows).select($"_2.*", $"_1".as("grp")).coalesce(1))
     } finally stage.unpersist()
     todo.size
   }

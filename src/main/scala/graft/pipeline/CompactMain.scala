@@ -15,11 +15,19 @@ import org.apache.spark.sql.SparkSession
   * — and with it partition pruning — survives the rewrite.
   */
 object CompactMain {
+  private val Usage = "usage: CompactMain <tableDir> [targetFileMB] [partitionCols]"
+
+  /** `(tableDir, targetFileMB, partitionCols)`; bad arguments fail with the
+    * usage line.
+    */
+  private[pipeline] def parseArgs(args: Array[String]): (String, Int, Seq[String]) = {
+    require(args.nonEmpty && args.length <= 3, Usage)
+    (args(0), args.lift(1).fold(128)(MainArgs.positiveInt("targetFileMB", _, Usage)),
+      args.lift(2).map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil))
+  }
+
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: CompactMain <tableDir> [targetFileMB] [partitionCols]")
-    val dir = args(0)
-    val targetMb = args.lift(1).map(_.toInt).getOrElse(128)
-    val partCols = args.lift(2).map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
+    val (dir, targetMb, partCols) = parseArgs(args)
 
     val spark = SparkSession.builder()
       .appName("graft-compact")

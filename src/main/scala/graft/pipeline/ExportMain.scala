@@ -26,10 +26,16 @@ import org.apache.spark.sql.functions._
   *     <inputSfDir> <outDir> [nShards]
   */
 object ExportMain {
+  private val Usage = "usage: ExportMain <inputSfDir> <outDir> [nShards]"
+
+  /** `(inputSfDir, outDir, nShards)`; bad arguments fail with the usage line. */
+  private[pipeline] def parseArgs(args: Array[String]): (String, String, Int) = {
+    require(args.length >= 2 && args.length <= 3, Usage)
+    (args(0), args(1), args.lift(2).fold(8)(MainArgs.positiveInt("nShards", _, Usage)))
+  }
+
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: ExportMain <inputSfDir> <outDir> [nShards]")
-    val Array(inDir, outDir) = args.take(2)
-    val nShards = args.lift(2).map(_.toInt).getOrElse(8)
+    val (inDir, outDir, nShards) = parseArgs(args)
     val spark = SparkSession.builder()
       .appName("graft-export")
       .withExtensions(new graft.GraftExtensions)
@@ -43,6 +49,7 @@ object ExportMain {
 
   /** The resumable body (separated from main for in-process testing). */
   def run(spark: SparkSession, inDir: String, outDir: String, nShards: Int): Unit = {
+    require(nShards >= 1, s"nShards must be positive, got $nShards")
     val fs = new org.apache.hadoop.fs.Path(outDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val marker = new org.apache.hadoop.fs.Path(s"$outDir/_export_done")

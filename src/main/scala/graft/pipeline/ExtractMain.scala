@@ -32,10 +32,7 @@ object ExtractMain {
     require(args.length >= 2 && args.length <= 4, Usage)
     val Array(inDir, outDir) = args.take(2)
     val mode = parseMode(args.lift(2).getOrElse("chunk"))
-    val numGroups = args.lift(3).fold(8) { s =>
-      s.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
-        s"numGroups must be a positive integer, got '$s'; $Usage"))
-    }
+    val numGroups = args.lift(3).fold(8)(MainArgs.positiveInt("numGroups", _, Usage))
 
     // spark-submit provides master/conf; default local[*] for bare runs.
     val spark = SparkSession.builder()

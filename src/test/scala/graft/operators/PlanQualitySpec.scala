@@ -157,11 +157,11 @@ class PlanQualitySpec extends SparkTestBase {
     assert(keys == Set("partition_id"), l.take(4000))
   }
 
-  /** A resumable run extracts once and commits each group from that cache:
-    * a group's spans write finds the cache already built and adds no
+  /** A resumable run extracts once and writes every group's spans from
+    * that cache in one write: it finds the cache already built and adds no
     * exchange and no input scan of its own.
     */
-  test("resumable run: each group's spans write reads the built cache, no exchange, no input scan") {
+  test("resumable run: the one spans write reads only the built cache") {
     import graft.pipeline.{Checkpoint, ExtractJob}
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
@@ -174,21 +174,24 @@ class PlanQualitySpec extends SparkTestBase {
     val seen = scala.collection.mutable.ArrayBuffer[(SparkPlan, Boolean)]()
     val writer = new Checkpoint.SpanWriter {
       def doneGroups(): Set[Long] = inner.doneGroups()
-      def overwriteGroup(grp: Long, spans: DataFrame): Unit = {
+      def overwriteGroup(grp: Long, spans: DataFrame): Unit = inner.overwriteGroup(grp, spans)
+      def commitGroup(grp: Long, lineage: DataFrame): Unit = inner.commitGroup(grp, lineage)
+      override def overwriteGroups(grps: Seq[Long], spans: DataFrame): Unit = {
         val p = spans.queryExecution.executedPlan
         val built = aqe.collect(p) { case s: InMemoryTableScanExec => s }
           .forall(_.relation.cacheBuilder.isCachedColumnBuffersLoaded)
         seen += ((p, built))
-        inner.overwriteGroup(grp, spans)
+        inner.overwriteGroups(grps, spans)
       }
-      def commitGroup(grp: Long, lineage: DataFrame): Unit = inner.commitGroup(grp, lineage)
+      override def commitGroups(grps: Seq[Long], lineage: DataFrame): Unit =
+        inner.commitGroups(grps, lineage)
     }
     assert(Checkpoint.runResumable(graft.sources.DocSynth.docs(spark, sfDir), writer,
       ExtractJob.Config(), numGroups = 8, maxGroups = Int.MaxValue) == 8)
-    assert(seen.size == 8)
+    assert(seen.size == 1)
     for ((p, built) <- seen) {
       assert(aqe.collect(p) { case s: InMemoryTableScanExec => s }.nonEmpty, p.toString.take(4000))
-      assert(built, s"the group write builds the cache itself:\n${p.toString.take(4000)}")
+      assert(built, s"the spans write builds the cache itself:\n${p.toString.take(4000)}")
       assert(aqe.collect(p) { case e: Exchange => e }.isEmpty, p.toString.take(4000))
       assert(aqe.collect(p) { case f: FileSourceScanExec => f }.isEmpty, p.toString.take(4000))
     }

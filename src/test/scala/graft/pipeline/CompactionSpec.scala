@@ -153,6 +153,16 @@ class CompactionSpec extends SparkTestBase {
     assert(VersionedTable.read(spark, root).count() == 100)
   }
 
+  test("CompactMain.parseArgs rejects a bad targetFileMB with the usage line") {
+    for (bad <- Seq("0", "-1", "x", "1.5")) {
+      val e = intercept[IllegalArgumentException](CompactMain.parseArgs(Array("t", bad)))
+      assert(e.getMessage.contains(s"'$bad'") && e.getMessage.contains("usage: CompactMain"),
+        e.getMessage)
+    }
+    assert(CompactMain.parseArgs(Array("t")) == (("t", 128, Nil)))
+    assert(CompactMain.parseArgs(Array("t", "64", "grp,lang")) == (("t", 64, Seq("grp", "lang"))))
+  }
+
   test("versioned table: install commits generations, resolve tracks the tip, retention prunes") {
     val root = Files.createTempDirectory("graft-vt").toString + "/t"
     val fs = new org.apache.hadoop.fs.Path(root)

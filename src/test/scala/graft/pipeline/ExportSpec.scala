@@ -49,6 +49,23 @@ class ExportSpec extends SparkTestBase {
     assert(again == base)
   }
 
+  test("ExportMain.run: a non-positive shard count fails before anything is written") {
+    val outDir = Files.createTempDirectory("graft-export-zero").toString
+    val e = intercept[IllegalArgumentException](ExportMain.run(spark, sfDir, outDir, nShards = 0))
+    assert(e.getMessage.contains("got 0"), e.getMessage)
+    assert(new java.io.File(outDir).list().isEmpty)
+  }
+
+  test("ExportMain.parseArgs rejects a bad nShards with the usage line") {
+    for (bad <- Seq("0", "-1", "x", "1.5")) {
+      val e = intercept[IllegalArgumentException](ExportMain.parseArgs(Array("in", "out", bad)))
+      assert(e.getMessage.contains(s"'$bad'") && e.getMessage.contains("usage: ExportMain"),
+        e.getMessage)
+    }
+    assert(ExportMain.parseArgs(Array("in", "out")) == (("in", "out", 8)))
+    assert(ExportMain.parseArgs(Array("in", "out", "3")) == (("in", "out", 3)))
+  }
+
   test("ExportMain.run: marker-after-data commit — crash rewrites, committed run is a no-op") {
     val outDir = Files.createTempDirectory("graft-export").toString
     ExportMain.run(spark, sfDir, outDir, nShards = 4)

@@ -23,6 +23,10 @@ import java.nio.file.Files
   *     group never disturbs another's data;
   *  6. an empty group committed with only the synthetic marker row is
   *     durably done (otherwise every resume re-runs it).
+  *
+  * The batch methods (`overwriteGroups` / `commitGroups`, the path
+  * `runResumable` takes) carry the same clauses over a set of groups, and
+  * an already committed group outside the set keeps its data untouched.
   */
 class SpanWriterContractSpec extends SparkTestBase {
   import spark.implicits._
@@ -37,6 +41,24 @@ class SpanWriterContractSpec extends SparkTestBase {
 
   private def markerOnly: DataFrame =
     spark.createDataset(Seq(Lineage(-1, 0L, 0L, 0L, "marker"))).toDF()
+
+  /** Spans of several groups, as `runResumable` hands them over: doc
+    * columns plus `grp`.
+    */
+  private def groupedSpans(byGroup: (Long, Seq[String])*): DataFrame =
+    spark.createDataset(byGroup.flatMap { case (g, ids) => ids.map(id => (doc(id), g)) })
+      .select($"_1.*", $"_2".as("grp"))
+
+  /** Lineage of several groups: one real row per group with docs, and one
+    * marker row per group.
+    */
+  private def groupedLineage(docsByGroup: (Long, Long)*): DataFrame = {
+    val rows = docsByGroup.flatMap { case (g, n) =>
+      (if (n > 0) Seq(Lineage(0, n, n, 0L, "complete") -> g) else Nil) :+
+        (Lineage(-1, 0L, 0L, 0L, "marker") -> g)
+    }
+    spark.createDataset(rows).select($"_1.*", $"_2".as("grp"))
+  }
 
   /** Runs the contract against a fresh writer; returns the violated
     * clauses. `readGroupDocs(g)` must return the doc_ids currently visible
@@ -68,19 +90,63 @@ class SpanWriterContractSpec extends SparkTestBase {
     buf.toSeq
   }
 
+  /** The batch contract against a fresh writer; returns the violated
+    * clauses. `groupState(g)` is whatever the writer's storage holds for
+    * group g, compared by equality: it must not change while other groups
+    * are written.
+    */
+  private def batchViolations(writer: SpanWriter, readGroupDocs: Long => Seq[String],
+      groupState: Long => Any): Seq[String] = {
+    val buf = scala.collection.mutable.ArrayBuffer[String]()
+    writer.overwriteGroups(Seq(3L), groupedSpans(3L -> Seq("z")))
+    writer.commitGroups(Seq(3L), groupedLineage(3L -> 1L))
+    val before3 = groupState(3L)
+    writer.overwriteGroups(Seq(1L, 2L), groupedSpans(1L -> Seq("a", "b"), 2L -> Seq("c")))
+    if (writer.doneGroups() != Set(3L))
+      buf += s"overwriteGroups reported a group done before commitGroups: ${writer.doneGroups()}"
+    writer.overwriteGroups(Seq(1L, 2L), groupedSpans(1L -> Seq("a", "b"), 2L -> Seq("c")))
+    if (readGroupDocs(1L).sorted != Seq("a", "b") || readGroupDocs(2L) != Seq("c"))
+      buf += "re-running overwriteGroups appended instead of replacing"
+    if (groupState(3L) != before3)
+      buf += "overwriteGroups disturbed a committed group outside its set"
+    writer.commitGroups(Seq(1L, 2L), groupedLineage(1L -> 2L, 2L -> 1L))
+    if (writer.doneGroups() != Set(1L, 2L, 3L))
+      buf += s"commitGroups did not mark exactly its groups done: ${writer.doneGroups()}"
+    // group 4 has no docs: only its marker row commits it
+    writer.overwriteGroups(Seq(4L, 5L), groupedSpans(5L -> Seq("d")))
+    writer.commitGroups(Seq(4L, 5L), groupedLineage(4L -> 0L, 5L -> 1L))
+    if (writer.doneGroups() != Set(1L, 2L, 3L, 4L, 5L))
+      buf += s"zero-doc group not durably done by its marker row: ${writer.doneGroups()}"
+    buf.toSeq
+  }
+
+  private def readParquetGroupDocs(out: String)(g: Long): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(Checkpoint.spansDir(out))
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Seq.empty
+    else spark.read.parquet(Checkpoint.spansDir(out))
+      .where(org.apache.spark.sql.functions.col("grp") === g)
+      .select("doc_id").as[String].collect().toSeq
+  }
+
   test("ParquetSpanWriter satisfies the full SpanWriter contract") {
     val out = Files.createTempDirectory("graft-spanwriter").toString
     val writer = new Checkpoint.ParquetSpanWriter(spark, out)
-    def readGroupDocs(g: Long): Seq[String] = {
-      val p = new org.apache.hadoop.fs.Path(Checkpoint.spansDir(out))
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) Seq.empty
-      else spark.read.parquet(Checkpoint.spansDir(out))
-        .where(org.apache.spark.sql.functions.col("grp") === g)
-        .select("doc_id").as[String].collect().toSeq
-    }
-    val v = violations(writer, readGroupDocs)
+    val v = violations(writer, readParquetGroupDocs(out))
     assert(v.isEmpty, s"contract violations: ${v.mkString("; ")}")
+  }
+
+  test("ParquetSpanWriter satisfies the batch SpanWriter contract") {
+    val out = Files.createTempDirectory("graft-spanwriter-batch").toString
+    val writer = new Checkpoint.ParquetSpanWriter(spark, out)
+    // every file of the group's directory, byte for byte
+    def groupFiles(g: Long): Map[String, Seq[Byte]] =
+      Option(new java.io.File(s"${Checkpoint.spansDir(out)}/grp=$g").listFiles())
+        .fold(Map.empty[String, Seq[Byte]])(_.map(f => f.getName ->
+          Files.readAllBytes(f.toPath).toSeq).toMap)
+    val v = batchViolations(writer, readParquetGroupDocs(out), groupFiles)
+    assert(v.isEmpty, s"contract violations: ${v.mkString("; ")}")
+    assert(groupFiles(3L).keys.exists(_.endsWith(".parquet")), groupFiles(3L).keys.mkString(", "))
   }
 
   /** Faulty by design: overwriteGroup APPENDS — the bug a naive
@@ -107,10 +173,15 @@ class SpanWriterContractSpec extends SparkTestBase {
     override def commitGroup(grp: Long, lineage: DataFrame): Unit = ()
   }
 
+  // Both faulty writers implement only the per-group methods, so their
+  // batch runs go through the trait's default loops.
   test("contract catches an appending (non-idempotent) writer") {
     val w = new AppendingWriter
     val v = violations(w, g => w.data(g))
     assert(v.exists(_.contains("appended instead of replacing")), v.mkString("; "))
+    val b = new AppendingWriter
+    val bv = batchViolations(b, g => b.data(g), g => b.data(g))
+    assert(bv.exists(_.contains("overwriteGroups appended instead of replacing")), bv.mkString("; "))
   }
 
   test("contract catches a writer that reports done before commit") {
@@ -118,5 +189,9 @@ class SpanWriterContractSpec extends SparkTestBase {
     val v = violations(w, g => w.data.getOrElse(g, Vector()))
     assert(v.exists(_.contains("before commitGroup")), v.mkString("; "))
     assert(v.exists(_.contains("marker-only lineage not durably done")), v.mkString("; "))
+    val b = new EagerDoneWriter
+    val bv = batchViolations(b, g => b.data.getOrElse(g, Vector()), g => b.data.get(g))
+    assert(bv.exists(_.contains("overwriteGroups reported a group done before commitGroups")),
+      bv.mkString("; "))
   }
 }
