@@ -16,11 +16,13 @@ import org.apache.spark.sql.functions._
   * Search: score the query against the (tiny, broadcast) centroid set, read
   * only the top-`nprobe` cells, exact-score the candidates, top-k.
   *
-  * Durability ordering: the centroid table commits BEFORE the cell data —
-  * probes MUST use the exact centroids the cells were assigned under, so a
-  * crash mid-build must never leave cells on disk with no (or newer)
-  * centroids. A missing centroid table fails fast instead of silently
-  * re-deriving seeds that may not match the persisted assignment.
+  * Durability: `indexDir` is a [[graft.pipeline.VersionedTable]] root, and
+  * each build installs one generation holding the centroids, the cells they
+  * were assigned under and the id digest, so probes always use the exact
+  * centroids of the cells they read. A crashed build is an uncommitted
+  * generation no reader sees: the previous index stays searchable. A
+  * search planned before a rebuild keeps reading its generation (two are
+  * kept).
   *
   * Everything is deterministic: hash-ordered sampling, vec_id tie-breaks,
   * and a single materialization of the refined centroids (Lloyd's avg()
@@ -157,82 +159,61 @@ object AnnIndex {
   def kmeansCentroids(embeddings: DataFrame, nCells: Int, iters: Int): DataFrame =
     (1 to iters).foldLeft(seedCentroids(embeddings, nCells))((c, _) => lloydStep(embeddings, c))
 
-  private def centroidsDir(indexDir: String) = s"$indexDir/_centroids"
-  def cellsDir(indexDir: String): String     = s"$indexDir/cells"
-  private def commitMarker(indexDir: String) = s"$indexDir/_committed"
+  private def centroidsDir(gen: String) = s"$gen/_centroids"
+  def cellsDir(gen: String): String      = s"$gen/cells"
 
-  private def fsOf(spark: SparkSession, p: String) =
-    new org.apache.hadoop.fs.Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Build and persist: `indexDir/_centroids` (the tiny centroid table),
-    * `indexDir/cells` (the assignment, partitioned by cell — partition
-    * pruning = probe), and a `_committed` marker written LAST. The marker is
-    * deleted before any write starts, so a crash at ANY point mid-build —
-    * including between the centroid and cell writes, which would otherwise
-    * leave cells pruned under centroids they weren't assigned under — leaves
-    * an index that `search` refuses with a clear error instead of silently
-    * losing recall.
+  /** Build and persist one new generation of the index: `_centroids` (the
+    * tiny centroid table), `cells` (the assignment, partitioned by cell —
+    * partition pruning = probe) and the base id digest, committed by
+    * `VersionedTable.install` after all three are written. Appended deltas
+    * live in the generation they were assigned under, so the new one starts
+    * with none.
     */
   def build(embeddings: DataFrame, indexDir: String, nCells: Int = 16,
       refineIters: Int = 2): Unit = {
     val spark = embeddings.sparkSession
-    val fs = fsOf(spark, indexDir)
-    fs.delete(new org.apache.hadoop.fs.Path(commitMarker(indexDir)), false)
-    // a rebuild changes the centroids, so every appended delta batch was
-    // assigned under stale centroids — drop them with the marker down
-    DeltaBatches.clear(spark, indexDir)
-    // Materialize the centroids ONCE (nCells rows): Lloyd's avg() merges
-    // partial sums in shuffle-fetch order, so two lazy evaluations of the
-    // same plan could round a boundary assignment differently — the cells
-    // on disk MUST be assigned under exactly the persisted centroids.
-    val centPlan = kmeansCentroids(embeddings, nCells, refineIters)
-    val centRows = centPlan.collect()
-    val cent = spark.createDataFrame(
-      spark.sparkContext.parallelize(centRows.toIndexedSeq, 1), centPlan.schema)
-    cent.write.mode("overwrite").parquet(centroidsDir(indexDir))
-    // STATIC overwrite pinned per-write: a rebuild with fewer cells must
-    // wipe the whole cells/ tree. Under an (inherited) dynamic mode, stale
-    // cell=N partitions from a previous larger index would survive with the
-    // fresh _committed marker, and probes would read vectors assigned under
-    // the old centroids.
-    assignTo(embeddings, spark.read.parquet(centroidsDir(indexDir)))
-      .write.mode("overwrite").partitionBy("cell")
-      .option("partitionOverwriteMode", "static").parquet(cellsDir(indexDir))
-    // base id digest lands before the commit marker — a committed index
-    // always carries it, so appends never pay an O(index) duplicate scan
-    DeltaBatches.writeBaseBloom(spark, indexDir,
-      spark.read.parquet(cellsDir(indexDir)).select("vec_id"))
-    fs.create(new org.apache.hadoop.fs.Path(commitMarker(indexDir)), true).close()
+    graft.pipeline.VersionedTable.install(spark, indexDir) { gen =>
+      // Materialize the centroids ONCE (nCells rows): Lloyd's avg() merges
+      // partial sums in shuffle-fetch order, so two lazy evaluations of the
+      // same plan could round a boundary assignment differently — the cells
+      // on disk MUST be assigned under exactly the persisted centroids.
+      val centPlan = kmeansCentroids(embeddings, nCells, refineIters)
+      val centRows = centPlan.collect()
+      spark.createDataFrame(spark.sparkContext.parallelize(centRows.toIndexedSeq, 1), centPlan.schema)
+        .write.parquet(centroidsDir(gen))
+      assignTo(embeddings, spark.read.parquet(centroidsDir(gen)))
+        .write.partitionBy("cell").parquet(cellsDir(gen))
+      // a committed index always carries its base id digest, so appends
+      // never pay an O(index) duplicate scan
+      DeltaBatches.writeBaseBloom(spark, gen, spark.read.parquet(cellsDir(gen)).select("vec_id"))
+    }
   }
 
-  /** Append a batch of new vectors to a COMMITTED index without rebuilding
-    * — daily index maintenance (the ANN analog of `q_incremental_dedup`):
-    * new vectors are assigned under the index's EXISTING persisted
-    * centroids (consistency with the base cells is what makes the probe
-    * stay correct), written to `delta/batch=<bid>/cell=N`, and committed by
-    * appending the batch id to the `_batches` manifest AFTER the data is
-    * durable.
+  /** Append a batch of new vectors to the committed index without
+    * rebuilding — daily index maintenance (the ANN analog of
+    * `q_incremental_dedup`): new vectors are assigned under the tip's
+    * persisted centroids (consistency with the base cells is what makes the
+    * probe stay correct), written to `delta/batch=<bid>/cell=N` inside that
+    * generation, and committed by appending the batch id to its `_batches`
+    * manifest AFTER the data is durable.
     *
     * `bid` derives deterministically from the batch's content — id AND
     * embedding payload, via the two-fold hash in [[DeltaBatches.contentStats]]
     * — so a crashed-and-retried append
     * OVERWRITES its own batch directory instead of duplicating rows, and a
-    * batch dir with no manifest row is invisible to `search`. Rebuilding
-    * the base index (`build`) invalidates deltas by centroid change, so it
-    * clears `delta/` and the manifest first.
+    * batch dir with no manifest row is invisible to `search`. A rebuild
+    * installs a new generation with no deltas: its centroids changed.
     *
     * SINGLE WRITER per indexDir (see [[DeltaBatches]]): concurrent appends
     * could both pass the disjointness guard and commit overlapping ids.
     */
   def append(spark: SparkSession, indexDir: String, newVectors: DataFrame): Long = {
-    require(fsOf(spark, indexDir).exists(new org.apache.hadoop.fs.Path(commitMarker(indexDir))),
-      s"AnnIndex.append: no commit marker at ${commitMarker(indexDir)} — append requires a " +
-        "complete base index (new vectors must be assigned under its persisted centroids)")
-    DeltaBatches.requireFormatCurrent(spark, indexDir, "AnnIndex.append")
+    val gen = DeltaBatches.tip(spark, indexDir, "AnnIndex.append")
+    DeltaBatches.requireFormatCurrent(spark, gen, "AnnIndex.append")
     val stats = DeltaBatches.contentStats(newVectors, "AnnIndex.append")
     if (stats.nDistinct < stats.n) DeltaBatches.failInternalDuplicates(newVectors, "AnnIndex.append")
     val bid = stats.bid
-    val manifest = DeltaBatches.committedManifest(spark, indexDir) // read ONCE, reused below
+    val manifest = DeltaBatches.committedManifest(spark, gen) // read ONCE, reused below
     // replaying an ALREADY-COMMITTED batch (at-least-once retry after a
     // successful commit) is a no-op — that, plus overwrite-on-retry below,
     // is what gives the streaming sink its exactly-once effect
@@ -240,47 +221,44 @@ object AnnIndex {
     // a vec_id may live in the index once — digest-guarded (O(batch), not
     // O(index)); the exact base+delta scan below is planned ONLY on a
     // digest hit (real duplicate or bloom false positive)
-    val batchBloom = DeltaBatches.guardDisjoint(spark, indexDir, newVectors, stats, manifest, {
-      val existing = spark.read.parquet(cellsDir(indexDir)).select("vec_id")
-      DeltaBatches.committedDeltaRows(spark, indexDir, Seq("vec_id"), manifest.map(_.bid))
+    val batchBloom = DeltaBatches.guardDisjoint(spark, gen, newVectors, stats, manifest, {
+      val existing = spark.read.parquet(cellsDir(gen)).select("vec_id")
+      DeltaBatches.committedDeltaRows(spark, gen, Seq("vec_id"), manifest.map(_.bid))
         .map(existing.unionByName(_)).getOrElse(existing)
     }, "AnnIndex.append")
-    val cent = spark.read.parquet(centroidsDir(indexDir))
+    val cent = spark.read.parquet(centroidsDir(gen))
     assignTo(newVectors, cent)
       .write.mode("overwrite").partitionBy("cell")
       .option("partitionOverwriteMode", "static")
-      .parquet(s"${DeltaBatches.deltaDir(indexDir)}/batch=$bid")
+      .parquet(s"${DeltaBatches.deltaDir(gen)}/batch=$bid")
     // the manifest append IS the batch's commit marker; it carries the
     // batch's id digest, so digest and commit are atomic
-    DeltaBatches.commit(spark, indexDir, bid, stats.n, batchBloom)
+    DeltaBatches.commit(spark, gen, bid, stats.n, batchBloom)
     bid
   }
 
-  /** Probe the persisted index: only `nprobe` cell partitions are scanned
+  /** Probe the committed index: only `nprobe` cell partitions are scanned
     * — in the base cells AND in every committed appended batch (uncommitted
     * batch dirs are excluded by the manifest filter, so a crashed append is
-    * invisible). Probes use the centroid table persisted with the index; a
-    * missing commit marker means a build died mid-write and fails fast —
-    * silently probing cells under re-derived or mismatched centroids could
-    * prune the wrong cells and lose recall.
+    * invisible). The tip is resolved once, so the centroids, cells and
+    * deltas all come from the same generation; an index with no committed
+    * generation fails fast.
     */
   def search(spark: SparkSession, indexDir: String, embeddings: DataFrame,
       queryVecId: Long, nprobe: Int = 4, k: Int = 10): DataFrame = {
     graft.functions.GraftFunctions.ensure(spark)
+    val gen = DeltaBatches.tip(spark, indexDir, "AnnIndex.search")
     val q = embeddings.where(col("vec_id") === queryVecId).select(col("embedding").as("qvec"))
-    require(fsOf(spark, indexDir).exists(new org.apache.hadoop.fs.Path(commitMarker(indexDir))),
-      s"AnnIndex.search: no commit marker at ${commitMarker(indexDir)} — the index at " +
-        s"$indexDir is from an incomplete build (centroid/cell writes may disagree); rebuild it")
-    val cent = spark.read.parquet(centroidsDir(indexDir))
+    val cent = spark.read.parquet(centroidsDir(gen))
     val probeCells = cent.crossJoin(broadcast(q))
       .withColumn("qdot", dot("cvec", "qvec"))
       .orderBy(desc("qdot"), asc("cell")).limit(nprobe)
       .select(col("cell")).collect().map(_.getLong(0))
-    val base = spark.read.parquet(cellsDir(indexDir))
+    val base = spark.read.parquet(cellsDir(gen))
       .where(col("cell").isin(probeCells.toIndexedSeq: _*)) // partition-pruned scan
       .select(col("vec_id"), col("cell"), col("embedding"))
     val candidates = DeltaBatches
-      .committedDeltaRows(spark, indexDir, Seq("vec_id", "cell", "embedding"))
+      .committedDeltaRows(spark, gen, Seq("vec_id", "cell", "embedding"))
       .map(d => base.unionByName(
         d.where(col("cell").isin(probeCells.toIndexedSeq: _*)))) // same pruning
       .getOrElse(base)

@@ -6,7 +6,12 @@ import org.apache.spark.util.sketch.BloomFilter
 
 /** The shared incremental-append commit protocol used by [[AnnIndex]] and
   * [[IvfPq]] — one implementation so the two indexes can never diverge on
-  * durability semantics:
+  * durability semantics. An index directory is a
+  * [[graft.pipeline.VersionedTable]] root: each build installs a new
+  * generation, and `tip` resolves the committed one. Every other method
+  * takes that generation directory (`gen`), so deltas and the `_batches`
+  * manifest live inside the generation they were assigned under, and a
+  * rebuild starts with none:
   *
   *   - `contentStats` derives the batch id from the batch CONTENT — two
   *     independent order-free folds over `xxhash64(vec_id, embedding)` (an
@@ -40,15 +45,15 @@ import org.apache.spark.util.sketch.BloomFilter
   *     hit — a real duplicate or a bloom false positive (~fpp 1%) — falls
   *     back to the exact scan of the index's vec_id column. An always-on
   *     streaming sink therefore pays O(batch + manifest) per micro-batch,
-  *     not O(index);
-  *   - `clear` drops deltas + manifest; a rebuild calls it because its
-  *     re-derived models invalidate every prior assignment.
+  *     not O(index).
   *
   * CONCURRENCY: the protocol assumes a SINGLE WRITER per indexDir. Two
   * concurrent appends of different batches could each pass the disjointness
-  * guard against base+committed and then both commit overlapping vec_ids,
-  * and an append racing a rebuild could commit a delta assigned under
-  * just-cleared centroids. Batch maintenance and the streaming sink (whose
+  * guard against base+committed and then both commit overlapping vec_ids.
+  * An append racing a rebuild lands in the generation it resolved, which
+  * the rebuild supersedes: the batch is invisible to every later search
+  * (it is never committed under the new centroids) and must be appended
+  * again to the new tip. Batch maintenance and the streaming sink (whose
   * foreachBatch micro-batches are already serial) must not share an
   * indexDir with another writer; readers are unrestricted.
   */
@@ -88,10 +93,18 @@ private[operators] object DeltaBatches {
     */
   private[graft] val BroadcastMaxRows = 1000000L
 
-  def deltaDir(indexDir: String): String    = s"$indexDir/delta"
-  def manifestDir(indexDir: String): String = s"$indexDir/_batches"
-  def baseBloomFile(indexDir: String): String = s"$indexDir/_idbloom"
-  private def formatMarker(indexDir: String) = s"${manifestDir(indexDir)}/_format"
+  /** The committed generation of the index at `indexDir`. `append`,
+    * `search` and `probeCells` each resolve it once and use only it.
+    */
+  def tip(spark: SparkSession, indexDir: String, what: String): String =
+    graft.pipeline.VersionedTable.resolve(spark, indexDir).getOrElse(throw new IllegalArgumentException(
+      s"$what: no committed index generation under $indexDir — build the index first " +
+        "(a build that died before its commit is never visible)"))
+
+  def deltaDir(gen: String): String    = s"$gen/delta"
+  def manifestDir(gen: String): String = s"$gen/_batches"
+  def baseBloomFile(gen: String): String = s"$gen/_idbloom"
+  private def formatMarker(gen: String) = s"${manifestDir(gen)}/_format"
 
   private def fsOf(spark: SparkSession, p: String) =
     new org.apache.hadoop.fs.Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -162,21 +175,21 @@ private[operators] object DeltaBatches {
   }
 
   /** Persist the BASE index's id digest — called by `build` after the cell
-    * data is durable and BEFORE the index commit marker, so a committed
+    * data is durable and BEFORE the generation commits, so a committed
     * index always has its digest (the guard treats a missing file as a
     * legacy index and falls back to the exact scan — correct, just slow).
     */
-  def writeBaseBloom(spark: SparkSession, indexDir: String, ids: DataFrame): Unit = {
+  def writeBaseBloom(spark: SparkSession, gen: String, ids: DataFrame): Unit = {
     val n = ids.count()
     val bytes = bloomBytes(idBloom(ids, n))
-    val fs = fsOf(spark, indexDir)
-    val out = fs.create(new org.apache.hadoop.fs.Path(baseBloomFile(indexDir)), true)
+    val fs = fsOf(spark, gen)
+    val out = fs.create(new org.apache.hadoop.fs.Path(baseBloomFile(gen)), true)
     try out.write(bytes) finally out.close()
   }
 
-  private def readBaseBloomBytes(spark: SparkSession, indexDir: String): Option[Array[Byte]] = {
-    val fs = fsOf(spark, indexDir)
-    val p = new org.apache.hadoop.fs.Path(baseBloomFile(indexDir))
+  private def readBaseBloomBytes(spark: SparkSession, gen: String): Option[Array[Byte]] = {
+    val fs = fsOf(spark, gen)
+    val p = new org.apache.hadoop.fs.Path(baseBloomFile(gen))
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
@@ -184,19 +197,19 @@ private[operators] object DeltaBatches {
     }
   }
 
-  def commit(spark: SparkSession, indexDir: String, bid: Long, n: Long,
+  def commit(spark: SparkSession, gen: String, bid: Long, n: Long,
       batchBloom: BloomFilter): Unit = {
-    val fs = fsOf(spark, indexDir)
+    val fs = fsOf(spark, gen)
     // version marker FIRST: a manifest row must never exist without its
     // format recorded. Markers go through the shared helper, so a marker
     // left empty by a kill between create and write reads as absent and is
     // simply rewritten here — never a bricked third state.
-    val marker = new org.apache.hadoop.fs.Path(formatMarker(indexDir))
+    val marker = new org.apache.hadoop.fs.Path(formatMarker(gen))
     if (graft.util.Markers.read(fs, marker).isEmpty)
       graft.util.Markers.write(fs, marker, FormatVersion)
     spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(Row(bid, n, bloomBytes(batchBloom))), 1), manifestSchema)
-      .write.mode("append").parquet(manifestDir(indexDir))
+      .write.mode("append").parquet(manifestDir(gen))
   }
 
   /** Append-time gate: replay classification compares content ids against
@@ -206,27 +219,27 @@ private[operators] object DeltaBatches {
     * a working index stays searchable across a format upgrade; only further
     * appends demand a rebuild.
     */
-  def requireFormatCurrent(spark: SparkSession, indexDir: String, what: String): Unit = {
-    val fs = fsOf(spark, indexDir)
-    if (fs.exists(new org.apache.hadoop.fs.Path(manifestDir(indexDir)))) {
-      val ver = graft.util.Markers.read(fs, new org.apache.hadoop.fs.Path(formatMarker(indexDir)))
+  def requireFormatCurrent(spark: SparkSession, gen: String, what: String): Unit = {
+    val fs = fsOf(spark, gen)
+    if (fs.exists(new org.apache.hadoop.fs.Path(manifestDir(gen)))) {
+      val ver = graft.util.Markers.read(fs, new org.apache.hadoop.fs.Path(formatMarker(gen)))
       require(ver.contains(FormatVersion),
-        s"$what: the delta manifest at ${manifestDir(indexDir)} was written under content-id " +
+        s"$what: the delta manifest at ${manifestDir(gen)} was written under content-id " +
           s"format ${ver.getOrElse("<unrecorded>")} but this build uses '$FormatVersion' — batch " +
           "ids are not comparable across formats (a replay could be mis-classified); rebuild " +
           "the index before appending (existing searches remain valid)")
     }
   }
 
-  def committed(spark: SparkSession, indexDir: String): Seq[Long] = {
-    val fs = fsOf(spark, indexDir)
-    val p = new org.apache.hadoop.fs.Path(manifestDir(indexDir))
+  def committed(spark: SparkSession, gen: String): Seq[Long] = {
+    val fs = fsOf(spark, gen)
+    val p = new org.apache.hadoop.fs.Path(manifestDir(gen))
     if (!fs.exists(p)) Seq.empty
     // explicit schema: a marker-only manifest (crash before the first
     // batch row landed) must read as empty, not fail schema inference.
     // No version gate here — see requireFormatCurrent: only appends
     // compare content ids, searches just need the committed set.
-    else spark.read.schema(manifestIdSchema).parquet(manifestDir(indexDir))
+    else spark.read.schema(manifestIdSchema).parquet(manifestDir(gen))
       .select("batch").distinct().collect().map(_.getLong(0)).toSeq
   }
 
@@ -234,36 +247,30 @@ private[operators] object DeltaBatches {
     * exactly once through here and reuses it for the replay check, the
     * disjointness guard, and the delta filter.
     */
-  def committedManifest(spark: SparkSession, indexDir: String): Seq[ManifestRow] = {
-    val fs = fsOf(spark, indexDir)
-    val p = new org.apache.hadoop.fs.Path(manifestDir(indexDir))
+  def committedManifest(spark: SparkSession, gen: String): Seq[ManifestRow] = {
+    val fs = fsOf(spark, gen)
+    val p = new org.apache.hadoop.fs.Path(manifestDir(gen))
     if (!fs.exists(p)) Seq.empty
-    else spark.read.schema(manifestSchema).parquet(manifestDir(indexDir))
+    else spark.read.schema(manifestSchema).parquet(manifestDir(gen))
       .collect().map(r => ManifestRow(r.getLong(0), r.getLong(1), r.getAs[Array[Byte]](2)))
       .groupBy(_.bid).map(_._2.head).toSeq
-  }
-
-  def clear(spark: SparkSession, indexDir: String): Unit = {
-    val fs = fsOf(spark, indexDir)
-    fs.delete(new org.apache.hadoop.fs.Path(deltaDir(indexDir)), true)
-    fs.delete(new org.apache.hadoop.fs.Path(manifestDir(indexDir)), true)
   }
 
   /** Committed delta rows with the given columns, or None if no batch was
     * ever committed. Always filter by `committed` — an uncommitted (crashed)
     * batch directory must stay invisible.
     */
-  def committedDeltaRows(spark: SparkSession, indexDir: String, cols: Seq[String]): Option[DataFrame] =
-    committedDeltaRows(spark, indexDir, cols, committed(spark, indexDir))
+  def committedDeltaRows(spark: SparkSession, gen: String, cols: Seq[String]): Option[DataFrame] =
+    committedDeltaRows(spark, gen, cols, committed(spark, gen))
 
   /** Overload taking a pre-read committed set — callers that already read
     * the manifest (append does, for the replay check) avoid a second
     * read+collect of it.
     */
-  def committedDeltaRows(spark: SparkSession, indexDir: String, cols: Seq[String],
+  def committedDeltaRows(spark: SparkSession, gen: String, cols: Seq[String],
       batches: Seq[Long]): Option[DataFrame] = {
     if (batches.isEmpty) None
-    else Some(spark.read.parquet(deltaDir(indexDir))
+    else Some(spark.read.parquet(deltaDir(gen))
       .where(col("batch").isin(batches: _*))
       .select(cols.map(col): _*))
   }
@@ -276,12 +283,12 @@ private[operators] object DeltaBatches {
     * hit) the exact index scan is never even planned — the guard's total
     * I/O is the batch itself plus the already-read manifest.
     */
-  def guardDisjoint(spark: SparkSession, indexDir: String, batch: DataFrame,
+  def guardDisjoint(spark: SparkSession, gen: String, batch: DataFrame,
       stats: ContentStats, manifest: Seq[ManifestRow],
       existingIds: => DataFrame, what: String): BloomFilter = {
     val batchBloom = idBloom(batch.select(col("vec_id")), stats.n)
     val digests: Option[Seq[Array[Byte]]] =
-      readBaseBloomBytes(spark, indexDir).collect {
+      readBaseBloomBytes(spark, gen).collect {
         // a null digest would mean a manifest written by an older format —
         // requireFormatCurrent already rejects that, but stay defensive
         case base if manifest.forall(_.bloom != null) => base +: manifest.map(_.bloom)

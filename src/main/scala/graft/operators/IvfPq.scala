@@ -22,19 +22,16 @@ import org.apache.spark.sql.functions._
   * float bytes at the defaults — and the full vectors are read only for
   * `candidates` rows.
   *
-  * Durability: same marker discipline as [[AnnIndex]] — centroids and
-  * codebooks commit before the cell data they explain, `_committed` lands
-  * strictly last, and `search` refuses an unmarked index.
+  * Durability: same generations as [[AnnIndex]] — each build installs one
+  * [[graft.pipeline.VersionedTable]] generation holding the centroids, the
+  * codebooks and the codes they explain, and readers use only the
+  * committed tip.
   */
 object IvfPq {
 
-  private def centroidsDir(d: String) = s"$d/_centroids"
-  private def codebooksDir(d: String) = s"$d/_codebooks"
-  def codesDir(d: String): String     = s"$d/codes"
-  private def commitMarker(d: String) = s"$d/_committed"
-
-  private def fsOf(spark: SparkSession, p: String) =
-    new org.apache.hadoop.fs.Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def centroidsDir(gen: String) = s"$gen/_centroids"
+  private def codebooksDir(gen: String) = s"$gen/_codebooks"
+  def codesDir(gen: String): String     = s"$gen/codes"
 
   def build(
       embeddings: DataFrame,
@@ -44,58 +41,46 @@ object IvfPq {
       numSub: Int = 8,
       codebookK: Int = 16): Unit = {
     val spark = embeddings.sparkSession
-    val fs = fsOf(spark, indexDir)
-    fs.delete(new org.apache.hadoop.fs.Path(commitMarker(indexDir)), false)
-    // a rebuild re-derives centroids AND codebooks — appended deltas were
-    // encoded under the old models, so they die with the marker down
-    DeltaBatches.clear(spark, indexDir)
-    // centroids materialized ONCE (the AnnIndex rule: a lazily re-evaluated
-    // Lloyd plan could round a boundary assignment differently)
-    val centPlan = AnnIndex.kmeansCentroids(embeddings, nCells, refineIters)
-    val centRows = centPlan.collect()
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(centRows.toIndexedSeq, 1), centPlan.schema)
-      .write.mode("overwrite").parquet(centroidsDir(indexDir))
-    val cb = PqIndex.train(embeddings, numSub, codebookK)
-    PqIndex.saveCodebooks(spark, cb, codebooksDir(indexDir))
-    // one pass: assign to the PERSISTED centroids, PQ-encode map-side, land
-    // partitioned by cell (static overwrite: stale cells must never survive)
-    val assigned = AnnIndex.assignTo(embeddings,
-      spark.read.parquet(centroidsDir(indexDir)))
-    PqIndex.encodeAssigned(assigned, PqIndex.loadCodebooks(spark, codebooksDir(indexDir)))
-      .write.mode("overwrite").partitionBy("cell")
-      .option("partitionOverwriteMode", "static").parquet(codesDir(indexDir))
-    // base id digest lands before the commit marker — a committed index
-    // always carries it, so appends never pay an O(index) duplicate scan
-    DeltaBatches.writeBaseBloom(spark, indexDir,
-      spark.read.parquet(codesDir(indexDir)).select("vec_id"))
-    fs.create(new org.apache.hadoop.fs.Path(commitMarker(indexDir)), true).close()
+    graft.pipeline.VersionedTable.install(spark, indexDir) { gen =>
+      // centroids materialized ONCE (the AnnIndex rule: a lazily re-evaluated
+      // Lloyd plan could round a boundary assignment differently)
+      val centPlan = AnnIndex.kmeansCentroids(embeddings, nCells, refineIters)
+      val centRows = centPlan.collect()
+      spark.createDataFrame(spark.sparkContext.parallelize(centRows.toIndexedSeq, 1), centPlan.schema)
+        .write.parquet(centroidsDir(gen))
+      val cb = PqIndex.train(embeddings, numSub, codebookK)
+      PqIndex.saveCodebooks(spark, cb, codebooksDir(gen))
+      // one pass: assign to the PERSISTED centroids, PQ-encode map-side, land
+      // partitioned by cell
+      val assigned = AnnIndex.assignTo(embeddings, spark.read.parquet(centroidsDir(gen)))
+      PqIndex.encodeAssigned(assigned, PqIndex.loadCodebooks(spark, codebooksDir(gen)))
+        .write.partitionBy("cell").parquet(codesDir(gen))
+      // a committed index always carries its base id digest, so appends
+      // never pay an O(index) duplicate scan
+      DeltaBatches.writeBaseBloom(spark, gen, spark.read.parquet(codesDir(gen)).select("vec_id"))
+    }
   }
 
-  private def requireCommitted(spark: SparkSession, indexDir: String): Unit =
-    require(fsOf(spark, indexDir).exists(new org.apache.hadoop.fs.Path(commitMarker(indexDir))),
-      s"IvfPq.search: no commit marker at ${commitMarker(indexDir)} — the index at $indexDir " +
-        "is from an incomplete build (centroid/codebook/code writes may disagree); rebuild it")
-
   /** Incremental append — the [[AnnIndex.append]] protocol lifted to the
-    * composed index: the new batch is assigned under the PERSISTED
-    * centroids and encoded with the PERSISTED codebooks (both are frozen —
+    * composed index: the new batch is assigned under the tip's PERSISTED
+    * centroids and encoded with its PERSISTED codebooks (both are frozen —
     * that consistency is what keeps probes and ADC lookup tables valid for
-    * old and new rows alike), written to `delta/batch=<bid>/cell=N`, and
-    * committed by a manifest row AFTER the data is durable. The
-    * content-derived batch id makes retried appends overwrite themselves;
-    * `build` clears the deltas because it re-derives both models.
+    * old and new rows alike), written to `delta/batch=<bid>/cell=N` inside
+    * that generation, and committed by a manifest row AFTER the data is
+    * durable. The content-derived batch id makes retried appends overwrite
+    * themselves; a rebuild's new generation starts with no deltas because
+    * it re-derives both models.
     *
     * SINGLE WRITER per indexDir (see [[DeltaBatches]]): concurrent appends
     * could both pass the disjointness guard and commit overlapping ids.
     */
   def append(spark: SparkSession, indexDir: String, newVectors: DataFrame): Long = {
-    requireCommitted(spark, indexDir)
-    DeltaBatches.requireFormatCurrent(spark, indexDir, "IvfPq.append")
+    val gen = DeltaBatches.tip(spark, indexDir, "IvfPq.append")
+    DeltaBatches.requireFormatCurrent(spark, gen, "IvfPq.append")
     val stats = DeltaBatches.contentStats(newVectors, "IvfPq.append")
     if (stats.nDistinct < stats.n) DeltaBatches.failInternalDuplicates(newVectors, "IvfPq.append")
     val bid = stats.bid
-    val manifest = DeltaBatches.committedManifest(spark, indexDir)
+    val manifest = DeltaBatches.committedManifest(spark, gen)
     // replaying an ALREADY-COMMITTED batch (at-least-once retry after a
     // successful commit) is a no-op — that, plus overwrite-on-retry below,
     // is what gives the streaming sink its exactly-once effect
@@ -103,27 +88,30 @@ object IvfPq {
     // a vec_id may live in the index once — digest-guarded (O(batch), not
     // O(index)); the exact base+delta scan below is planned ONLY on a
     // digest hit (real duplicate or bloom false positive)
-    val batchBloom = DeltaBatches.guardDisjoint(spark, indexDir, newVectors, stats, manifest, {
-      val existing = spark.read.parquet(codesDir(indexDir)).select("vec_id")
-      DeltaBatches.committedDeltaRows(spark, indexDir, Seq("vec_id"), manifest.map(_.bid))
+    val batchBloom = DeltaBatches.guardDisjoint(spark, gen, newVectors, stats, manifest, {
+      val existing = spark.read.parquet(codesDir(gen)).select("vec_id")
+      DeltaBatches.committedDeltaRows(spark, gen, Seq("vec_id"), manifest.map(_.bid))
         .map(existing.unionByName(_)).getOrElse(existing)
     }, "IvfPq.append")
-    val assigned = AnnIndex.assignTo(newVectors,
-      spark.read.parquet(centroidsDir(indexDir)))
-    PqIndex.encodeAssigned(assigned, PqIndex.loadCodebooks(spark, codebooksDir(indexDir)))
+    val assigned = AnnIndex.assignTo(newVectors, spark.read.parquet(centroidsDir(gen)))
+    PqIndex.encodeAssigned(assigned, PqIndex.loadCodebooks(spark, codebooksDir(gen)))
       .write.mode("overwrite").partitionBy("cell")
       .option("partitionOverwriteMode", "static")
-      .parquet(s"${DeltaBatches.deltaDir(indexDir)}/batch=$bid")
-    DeltaBatches.commit(spark, indexDir, bid, stats.n, batchBloom)
+      .parquet(s"${DeltaBatches.deltaDir(gen)}/batch=$bid")
+    DeltaBatches.commit(spark, gen, bid, stats.n, batchBloom)
     bid
   }
 
   /** Top-`nprobe` cells for a query vector — nCells driver-side dot
-    * products against the persisted centroid table (ties broken by cell).
+    * products against the committed tip's centroid table (ties broken by
+    * cell).
     */
-  def probeCells(spark: SparkSession, indexDir: String, query: Array[Float], nprobe: Int): Seq[Long] = {
-    requireCommitted(spark, indexDir)
-    spark.read.parquet(centroidsDir(indexDir)).collect()
+  def probeCells(spark: SparkSession, indexDir: String, query: Array[Float], nprobe: Int): Seq[Long] =
+    probeCellsOf(spark, DeltaBatches.tip(spark, indexDir, "IvfPq.probeCells"), query, nprobe)
+
+  private def probeCellsOf(spark: SparkSession, gen: String, query: Array[Float],
+      nprobe: Int): Seq[Long] =
+    spark.read.parquet(centroidsDir(gen)).collect()
       .map { r =>
         val cv = r.getSeq[Float](1)
         var s = 0.0; var i = 0
@@ -131,12 +119,12 @@ object IvfPq {
         (r.getLong(0), s)
       }
       .sortBy { case (c, s) => (-s, c) }.take(nprobe).map(_._1).toSeq
-  }
 
-  /** Two-stage probe: partition-pruned ADC over the probed cells' codes,
-    * then exact re-rank of the `candidates` survivors against the full
-    * vectors. Output: (vec_id, score) — `score` is the exact dot product,
-    * rounded like [[AnnIndex.search]] for oracle comparability.
+  /** Two-stage probe of the committed tip, resolved once: partition-pruned
+    * ADC over the probed cells' codes, then exact re-rank of the
+    * `candidates` survivors against the full vectors. Output: (vec_id,
+    * score) — `score` is the exact dot product, rounded like
+    * [[AnnIndex.search]] for oracle comparability.
     */
   def search(
       spark: SparkSession,
@@ -147,16 +135,16 @@ object IvfPq {
       k: Int = 10,
       candidates: Int = 100): DataFrame = {
     graft.functions.GraftFunctions.ensure(spark)
-    requireCommitted(spark, indexDir)
+    val gen = DeltaBatches.tip(spark, indexDir, "IvfPq.search")
     val q = embeddings.where(col("vec_id") === queryVecId)
       .select(col("embedding")).head().getSeq[Float](0).toArray
-    val cells = probeCells(spark, indexDir, q, nprobe)
-    val cb = PqIndex.loadCodebooks(spark, codebooksDir(indexDir))
-    val baseCodes = spark.read.parquet(codesDir(indexDir))
+    val cells = probeCellsOf(spark, gen, q, nprobe)
+    val cb = PqIndex.loadCodebooks(spark, codebooksDir(gen))
+    val baseCodes = spark.read.parquet(codesDir(gen))
       .where(col("cell").isin(cells: _*)) // partition-pruned scan of 8 B/vec codes
       .select(col("vec_id"), col("cell"), col("codes"))
     val codes = DeltaBatches
-      .committedDeltaRows(spark, indexDir, Seq("vec_id", "cell", "codes"))
+      .committedDeltaRows(spark, gen, Seq("vec_id", "cell", "codes"))
       .map(d => baseCodes.unionByName(d.where(col("cell").isin(cells: _*))))
       .getOrElse(baseCodes)
     val cand = codes

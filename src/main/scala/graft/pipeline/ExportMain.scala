@@ -6,21 +6,25 @@ import org.apache.spark.sql.functions._
 /** spark-submit entrypoint for the full training-data export: curation
   * (staged, input-identity-checked — see `DedupOps.curationRunStaged`) →
   * mixture sampling → shard/order/pack ([[ExportJob]]) → shard-partitioned
-  * parquet at `<outDir>/data`, plus a per-shard summary table at
-  * `<outDir>/summary`.
+  * parquet at `data/`, plus a per-shard summary table at `summary/`, both
+  * inside one [[VersionedTable]] generation of `<outDir>`:
+  * {{{
+  *   <outDir>/gen-N/data/shard=S/   the export (one partitionBy("shard") write)
+  *   <outDir>/gen-N/summary/        docs, tokens, sequences per shard
+  *   <outDir>/gen-N/_committed      format export-v1/shards=<nShards> + input digest
+  *   <outDir>/_stage/curation/      the curation feature stage (its own root)
+  * }}}
+  * Readers resolve the committed tip (`VersionedTable.resolve(spark, outDir)`).
   *
-  * Commit protocol: marker-after-data. The export write is ONE dynamic
-  * job (`partitionBy(shard)` overwrite); `_export_done` is written strictly
-  * after it returns and records the row/sequence totals. A kill anywhere
-  * mid-write leaves no marker → the next run rewrites the data (the
-  * assembly is deterministic, so the rewrite converges to identical
-  * bytes); a present marker means the data committed and the run is a
-  * no-op. The expensive stage (curation's tokenize/LSH/CC feature pass)
-  * is NOT redone on resume — it sits behind its own durable staged table.
-  * The done-marker records the INPUT DIGEST ([[graft.util.InputIdentity]])
-  * and the no-op check compares it: a refreshed corpus re-exports (and the
-  * curation stage re-runs via its own identity marker) instead of the
-  * bare marker short-circuiting into serving stale data.
+  * Commit protocol: `VersionedTable.reuseOrInstall`. A kill anywhere
+  * mid-export leaves an uncommitted generation no reader sees, and the next
+  * run installs a fresh one (the assembly is deterministic, so it converges
+  * to identical bytes). A run whose shard count and input identity match
+  * the committed tip is a no-op; a refreshed corpus or another shard count
+  * installs a new generation, and the previous export stays readable
+  * until the next install prunes it. The expensive stage (curation's
+  * tokenize/LSH/CC feature pass) is NOT redone on resume — it sits behind
+  * its own durable staged table.
   *
   *   spark-submit --class graft.pipeline.ExportMain <jar> \
   *     <inputSfDir> <outDir> [nShards]
@@ -50,56 +54,25 @@ object ExportMain {
   /** The resumable body (separated from main for in-process testing). */
   def run(spark: SparkSession, inDir: String, outDir: String, nShards: Int): Unit = {
     require(nShards >= 1, s"nShards must be positive, got $nShards")
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$outDir/_export_done")
-    // The no-op check must see the INPUT IDENTITY, not just "done": a
-    // refreshed corpus has to cascade into a fresh export here — the
-    // curation stage's own identity check sits BEHIND this early return
-    // and can never fire if a bare done-marker short-circuits first.
-    val inputDigest = graft.util.InputIdentity.digestOf(spark, inDir)
-    graft.util.Markers.read(fs, marker) match {
-      case Some(recorded) =>
-        val recordedInput = recorded.split(' ').collectFirst {
-          case f if f.startsWith("input=") => f.stripPrefix("input=")
-        }
-        val sameInput = inputDigest match {
-          case None         => true // input decommissioned: the commit is the truth
-          case Some(digest) => recordedInput.contains(digest)
-        }
-        if (sameInput) {
-          println(s"[export] $outDir already committed — no-op ($recorded)")
-          return
-        }
-        println(s"[export] $outDir committed against a DIFFERENT input — re-exporting")
-        fs.delete(marker, false) // marker down before any rewrite starts
-      case None => ()
-    }
-    val (curated, _) = graft.operators.DedupOps
-      .curationRunStaged(spark, inDir, s"$outDir/_stage/curation")
-    val docs = graft.operators.Tables.documents(spark, inDir)
-    val assembled = ExportJob.assembleFrom(curated, docs, nShards)
-    assembled.write.mode("overwrite").partitionBy("shard").parquet(s"$outDir/data")
-
-    // summary from the WRITTEN data (not the logical plan): what the loader
-    // will actually see
-    val written = spark.read.parquet(s"$outDir/data")
-    val summary = written.groupBy(col("shard"))
-      .agg(count(lit(1)).as("docs"), sum(col("n_tokens")).as("tokens"),
-        countDistinct(col("seq_id")).as("sequences"))
-      .orderBy("shard")
-    val rows = summary.collect()
+    val (gen, installed) =
+      VersionedTable.reuseOrInstall(spark, outDir, s"export-v1/shards=$nShards", inDir) { gen =>
+        val (curated, _) = graft.operators.DedupOps
+          .curationRunStaged(spark, inDir, s"$outDir/_stage/curation")
+        val docs = graft.operators.Tables.documents(spark, inDir)
+        ExportJob.assembleFrom(curated, docs, nShards).write.partitionBy("shard").parquet(s"$gen/data")
+        // summary from the WRITTEN data (not the logical plan): what the
+        // loader will actually see
+        spark.read.parquet(s"$gen/data").groupBy(col("shard"))
+          .agg(count(lit(1)).as("docs"), sum(col("n_tokens")).as("tokens"),
+            countDistinct(col("seq_id")).as("sequences"))
+          .coalesce(1).write.parquet(s"$gen/summary")
+      }
+    val rows = spark.read.parquet(s"$gen/summary").orderBy("shard").collect()
     rows.foreach(r => println(s"[export] shard=${r.get(0)}: ${r.getLong(1)} docs, " +
       s"${r.getLong(2)} tokens, ${r.getLong(3)} sequences"))
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), summary.schema)
-      .write.mode("overwrite").parquet(s"$outDir/summary")
-    val totalDocs = rows.map(_.getLong(1)).sum
-    val totalToks = rows.map(_.getLong(2)).sum
-    // marker LAST: its presence certifies data + summary are both durable;
-    // it records the input digest so a refreshed corpus invalidates it
-    graft.util.Markers.write(fs, marker,
-      s"input=${inputDigest.getOrElse("unknown")} " +
-        s"docs=$totalDocs tokens=$totalToks shards=${rows.length}")
-    println(s"[export] committed: $totalDocs docs, $totalToks tokens, ${rows.length} shards")
+    val totals = s"${rows.map(_.getLong(1)).sum} docs, ${rows.map(_.getLong(2)).sum} tokens, " +
+      s"${rows.length} shards"
+    println(if (installed) s"[export] committed $gen: $totals"
+      else s"[export] $gen already committed — no-op: $totals")
   }
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.util.{InputIdentity, Markers}
+import graft.util.Markers
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -9,11 +9,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ARE INVISIBLE TO CONCURRENT READERS (the gap `Compact.compact`'s rename
   * swap cannot close; see ADVICE on the absent-path window). Its
   * `reuseOrInstall` is the "reuse or rebuild by input identity" protocol of
-  * [[graft.operators.DedupState]] (the persisted LSH band/signature state)
-  * and `DedupOps.curationRunStaged` (CurateMain's durable feature stage).
-  * It is not yet the only one: `ExportMain.run` still hand-rolls the same
-  * check, parsing `input=<digest>` out of its `_export_done` marker and
-  * deleting that marker before a rewrite of the flat `<outDir>/data`.
+  * [[graft.operators.DedupState]] (the persisted LSH band/signature state),
+  * `DedupOps.curationRunStaged` (CurateMain's durable feature stage) and
+  * [[ExportMain]]; its `install` commits every rebuild of the persisted ANN
+  * indexes ([[graft.operators.AnnIndex]], [[graft.operators.IvfPq]]). It
+  * is the only commit protocol for tables rebuilt from scratch.
   *
   * Layout:
   * {{{
@@ -25,12 +25,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * partition discovery claims ANY `name=value` directory as a partition
   * column, even when it is meant as plumbing.
   *
-  * Commit protocol (marker-after-data, same rule as `DeltaBatches` /
-  * `ExportMain`): a writer creates the next `gen-N` directory, writes data
+  * Commit protocol (marker-after-data, same rule as `DeltaBatches`' batch
+  * manifest): a writer creates the next `gen-N` directory, writes data
   * into it, and only then writes the non-empty `_committed` marker
   * ([[Markers]] — an empty marker, the footprint of a kill mid-create,
   * reads as absent). The marker records the generation's [[Tag]]: the
-  * writer's format version and the digest of the input it was built from.
+  * writer's format and the digest of the input it was built from.
   * Readers resolve the HIGHEST committed generation (of their format); a
   * crashed install is an uncommitted directory no reader ever sees, swept
   * by the next successful install.
@@ -52,9 +52,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object VersionedTable {
 
-  /** What a generation was built from: the writer's format version and the
-    * [[InputIdentity.digestOf]] of its input directory. Both are empty for
-    * a generation not derived from an input (a plain `install`).
+  /** What a generation was built from: the writer's format (its version,
+    * plus any build setting that changes the output, such as the export's
+    * shard count) and the [[digestOf]] of its input directory. Both are
+    * empty for a generation not derived from an input (a plain `install`).
     */
   final case class Tag(format: String = "", input: String = "")
 
@@ -125,24 +126,52 @@ object VersionedTable {
     fs.makeQualified(genDir).toString
   }
 
-  /** Reuse the committed tip of `format` if it was built from this input,
-    * else install a new generation from it. The tip is reused when the
+  /** Reuse the committed tip if it is of `format` and was built from this
+    * input, else install a new generation from it. Only the newest committed
+    * generation is a candidate: an older one of the same format is
+    * superseded, so `a → b → a` installs three generations, never serves
+    * the first again. The tip is reused when its format matches and the
     * input is unreachable (decommissioned after the build: the commit is
-    * the truth) or its [[InputIdentity.digestOf]] equals the recorded one;
-    * a refreshed input installs a new generation instead of serving a stale
-    * one. An unreachable input with no committed generation of `format`
-    * fails fast. Returns (generation dir, whether it was installed now).
+    * the truth) or its [[digestOf]] equals the recorded one; a refreshed
+    * input installs a new generation instead of serving a stale one. An
+    * unreachable input whose tip is not of `format` fails fast. Returns
+    * (generation dir, whether it was installed now).
     */
   def reuseOrInstall(spark: SparkSession, root: String, format: String, inputDir: String,
       keepGenerations: Int = 2)(write: String => Unit): (String, Boolean) = {
-    val digest = InputIdentity.digestOf(spark, inputDir)
-    tip(fsOf(spark, root), root, Some(format)) match {
-      case Some((gen, t)) if digest.forall(_ == t.input) => (gen.toString, false)
+    val digest = digestOf(spark, inputDir)
+    tip(fsOf(spark, root), root, None) match {
+      case Some((gen, t)) if t.format == format && digest.forall(_ == t.input) =>
+        (gen.toString, false)
       case _ =>
         require(digest.isDefined, s"cannot build $root: $inputDir/documents.parquet " +
-          s"unreachable and no committed generation of format $format")
+          s"unreachable and no committed tip of format $format")
         (install(spark, root, keepGenerations, Tag(format, digest.get))(write), true)
     }
+  }
+
+  /** File-metadata fingerprint of `<dir>/documents.parquet` — path plus
+    * per-file length and mtime, no data scan — as an MD5 digest, or None
+    * when the input is unreachable (decommissioned: callers trust their
+    * committed generation). The listing is RECURSIVE: a partitioned
+    * documents.parquet keeps its data in subdirectories, and a top-level
+    * listing would degenerate the fingerprint to a constant.
+    */
+  private def digestOf(spark: SparkSession, dir: String): Option[String] = {
+    val docsPath = new Path(s"$dir/documents.parquet")
+    val docsFs = docsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val it = docsFs.listFiles(docsPath, true)
+      val parts = scala.collection.mutable.ArrayBuffer[String]()
+      while (it.hasNext) {
+        val f = it.next()
+        if (f.isFile)
+          parts += s"${f.getPath.toUri.getPath}:${f.getLen}:${f.getModificationTime}"
+      }
+      val id = s"$dir\n${parts.sorted.mkString("\n")}"
+      Some(java.security.MessageDigest.getInstance("MD5")
+        .digest(id.getBytes("UTF-8")).map("%02x".format(_)).mkString)
+    } catch { case _: java.io.FileNotFoundException => None }
   }
 
   /** Drop all but the newest `keep` committed generations, and any

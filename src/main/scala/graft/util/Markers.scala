@@ -6,8 +6,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * flags) with ONE shared crash-robustness rule: a marker that exists but
   * is empty — the footprint of a kill between create and write — reads as
   * ABSENT, never as a distinct (and unserviceable) third state. Every
-  * marker in the codebase goes through here so the recovery semantics
-  * cannot diverge between call sites.
+  * marker in the codebase goes through here — the `_committed` marker of a
+  * `VersionedTable` generation and the `_format` marker of a delta-batch
+  * manifest are the only two (`MarkerInventorySpec` pins that) — so the
+  * recovery semantics cannot diverge between call sites.
   */
 object Markers {
 

@@ -8,6 +8,14 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   def sfDir: String = "/root/testdata/sf0.001"
+
+  /** Local path of the committed tip of a `VersionedTable` root (an index
+    * directory, an export outDir); fails the test when there is none.
+    */
+  def tip(root: String): String =
+    graft.pipeline.VersionedTable.resolve(spark, root)
+      .map(new org.apache.hadoop.fs.Path(_).toUri.getPath)
+      .getOrElse(fail(s"no committed generation under $root"))
 }
 
 object SparkTestBase {

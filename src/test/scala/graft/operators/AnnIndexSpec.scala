@@ -16,10 +16,10 @@ class AnnIndexSpec extends SparkTestBase {
     AnnIndex.build(emb, dir, nCells = 16)
 
     // index covers every vector exactly once, laid out one dir per cell
-    val idx = spark.read.parquet(AnnIndex.cellsDir(dir))
+    val idx = spark.read.parquet(AnnIndex.cellsDir(tip(dir)))
     assert(idx.count() == emb.count())
     assert(idx.select("vec_id").distinct().count() == emb.count())
-    val cellDirs = new java.io.File(AnnIndex.cellsDir(dir)).listFiles()
+    val cellDirs = new java.io.File(AnnIndex.cellsDir(tip(dir))).listFiles()
       .count(_.getName.startsWith("cell="))
     assert(cellDirs == 16, s"expected 16 cell partitions, got $cellDirs")
 
@@ -53,10 +53,10 @@ class AnnIndexSpec extends SparkTestBase {
       AnnIndex.build(emb, dir, nCells = 8, refineIters = 0)
       AnnIndex.build(emb, dir, nCells = 4, refineIters = 0)
     } finally spark.conf.set(key, prev)
-    val cellDirs = new java.io.File(AnnIndex.cellsDir(dir)).listFiles()
+    val cellDirs = new java.io.File(AnnIndex.cellsDir(tip(dir))).listFiles()
       .count(_.getName.startsWith("cell="))
     assert(cellDirs == 4, s"stale cell partitions survived the rebuild: $cellDirs dirs")
-    val idx = spark.read.parquet(AnnIndex.cellsDir(dir))
+    val idx = spark.read.parquet(AnnIndex.cellsDir(tip(dir)))
     assert(idx.count() == emb.count())
     assert(idx.select("vec_id").distinct().count() == emb.count())
   }
@@ -79,15 +79,13 @@ class AnnIndexSpec extends SparkTestBase {
     val emb = Tables.embeddings(spark, sfDir)
     val dir = s"$root/index"
     AnnIndex.build(emb, dir, nCells = 8)
-    // simulate a crash mid-build by deleting the commit marker: search must
-    // refuse rather than probe cells whose centroids may not match
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_committed"), false)
+    // simulate a crash mid-build by deleting the only generation's commit
+    // marker: search must refuse rather than probe uncommitted cells
+    java.nio.file.Files.delete(java.nio.file.Paths.get(tip(dir), "_committed"))
     val e = intercept[IllegalArgumentException] {
       AnnIndex.search(spark, dir, emb, 0, 4, 10).collect()
     }
-    assert(e.getMessage.contains("incomplete build"), e.getMessage)
+    assert(e.getMessage.contains("no committed index generation"), e.getMessage)
   }
 
   test("k-means refined IVF: deterministic, complete, probes use persisted centroids") {
@@ -99,7 +97,7 @@ class AnnIndexSpec extends SparkTestBase {
     }
     val Seq(seedDir, refinedDir) = dirs
     // refinement never loses or duplicates vectors
-    val idx = spark.read.parquet(AnnIndex.cellsDir(refinedDir))
+    val idx = spark.read.parquet(AnnIndex.cellsDir(tip(refinedDir)))
     assert(idx.count() == emb.count())
     assert(idx.select("vec_id").distinct().count() == emb.count())
 
@@ -113,16 +111,16 @@ class AnnIndexSpec extends SparkTestBase {
     // determinism: rebuilding yields the identical centroid table
     val d2 = Files.createTempDirectory("graft-ann-km2b").toString + "/index"
     AnnIndex.build(emb, d2, nCells = 16, refineIters = 2)
-    val c1 = spark.read.parquet(s"$refinedDir/_centroids").orderBy("cell")
+    val c1 = spark.read.parquet(s"${tip(refinedDir)}/_centroids").orderBy("cell")
       .collect().map(_.toString).toSeq
-    val c2 = spark.read.parquet(s"$d2/_centroids").orderBy("cell")
+    val c2 = spark.read.parquet(s"${tip(d2)}/_centroids").orderBy("cell")
       .collect().map(_.toString).toSeq
     assert(c1 == c2)
 
     // Lloyd keeps cells balanced (these isotropic unit vectors seed fairly
     // evenly already, so assert no WORSE than mild skew rather than strict gain)
     def maxCell(d: String) =
-      spark.read.parquet(AnnIndex.cellsDir(d)).groupBy("cell").count()
+      spark.read.parquet(AnnIndex.cellsDir(tip(d))).groupBy("cell").count()
         .agg(max("count")).head.getLong(0)
     val (seedMax, refinedMax) = (maxCell(seedDir), maxCell(refinedDir))
     info(s"largest cell: seeded=$seedMax refined=$refinedMax")
@@ -145,10 +143,10 @@ class AnnIndexSpec extends SparkTestBase {
     for (nCells <- Seq(8, 16)) {
       val d = Files.createTempDirectory(s"graft-ann-grid$nCells").toString + "/index"
       AnnIndex.build(emb, d, nCells = nCells, refineIters = 2)
-      val assignment = spark.read.parquet(AnnIndex.cellsDir(d))
+      val assignment = spark.read.parquet(AnnIndex.cellsDir(tip(d)))
         .select(col("vec_id"), col("cell").cast("long")) // partition col reads back as int
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val cent = spark.read.parquet(s"$d/_centroids")
+      val cent = spark.read.parquet(s"${tip(d)}/_centroids")
       val cvecs = cent.orderBy("cell").collect()
         .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toArray)
       val evecs = emb.where(col("vec_id") < 64)
@@ -244,7 +242,7 @@ class AnnIndexSpec extends SparkTestBase {
 
     // idempotent: re-appending the identical batch is a committed no-op
     assert(AnnIndex.append(spark, dir, batch) == bid)
-    val total = spark.read.parquet(s"$dir/delta").count()
+    val total = spark.read.parquet(s"${tip(dir)}/delta").count()
     assert(total == batch.count(), s"re-append duplicated rows: $total")
 
     // an overlapping-but-DIFFERENT batch (same ids, different content id)
@@ -270,16 +268,16 @@ class AnnIndexSpec extends SparkTestBase {
       .select($"vec_id" + 1000000L as "vec_id",
         org.apache.spark.sql.functions.lit(0L).as("cell"), $"embedding")
       .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/delta/batch=$fakeBid")
+      .parquet(s"${tip(dir)}/delta/batch=$fakeBid")
     val afterCrash = AnnIndex.search(spark, dir, emb, 0, nprobe = 16, k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
     assert(afterCrash == brute, "uncommitted batch leaked into search results")
 
-    // rebuild drops deltas: centroids changed, stale assignments must die
+    // rebuild drops deltas: centroids changed, so the new tip has none
+    val appendedTip = tip(dir)
     AnnIndex.build(base, dir, nCells = 8)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/delta")))
+    assert(tip(dir) != appendedTip)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(tip(dir), "delta")))
     val rebuilt = AnnIndex.search(spark, dir, emb, 0, nprobe = 8, k = 10)
       .collect().map(_.getLong(0))
     assert(rebuilt.forall(_ % 2 == 0))
@@ -292,6 +290,24 @@ class AnnIndexSpec extends SparkTestBase {
     val e = intercept[IllegalArgumentException] {
       AnnIndex.append(spark, dir, emb.limit(3))
     }
-    assert(e.getMessage.contains("commit marker"))
+    assert(e.getMessage.contains("no committed index generation"), e.getMessage)
+  }
+
+  test("a search planned against one generation returns the same rows after a rebuild") {
+    import spark.implicits._
+    val emb = Tables.embeddings(spark, sfDir)
+    val dir = Files.createTempDirectory("graft-ann-reader").toString + "/index"
+    AnnIndex.build(emb.where($"vec_id" % 2 === 0), dir, nCells = 8, refineIters = 0)
+    val open = AnnIndex.search(spark, dir, emb, 0, nprobe = 8, k = 10)
+    val before = open.collect().toSeq
+    assert(before.map(_.getLong(0)).forall(_ % 2 == 0))
+    // the rebuild installs generation N+1 over a different corpus and cell count
+    AnnIndex.build(emb, dir, nCells = 4, refineIters = 0)
+    assert(open.collect().toSeq == before, "a planned search saw the rebuild")
+    val fresh = AnnIndex.search(spark, dir, emb, 0, nprobe = 4, k = 10)
+      .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
+    val brute = AnnIndex.bruteForce(emb, 0, 10)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(fresh == brute, "a search resolved after the rebuild did not read the new generation")
   }
 }

@@ -91,7 +91,7 @@ class PqIndexSpec extends SparkTestBase {
   test("IVF x PQ composed index: recall@10 >= 0.95 scoring only the probed cells' codes") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString + "/index"
     IvfPq.build(clustered, dir, nCells = 16, refineIters = 2, numSub = 8, codebookK = 16)
-    val codes = spark.read.parquet(IvfPq.codesDir(dir))
+    val codes = spark.read.parquet(IvfPq.codesDir(tip(dir)))
     assert(codes.count() == 1024) // every vector exactly once, 8 B each
     val queries = Seq(0L, 64L, 130L, 513L, 999L, 320L, 777L, 448L)
     val embById = clustered.collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
@@ -115,14 +115,13 @@ class PqIndexSpec extends SparkTestBase {
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [cell"), plan.take(3000))
     assert(plan.contains("TakeOrderedAndProject"), plan.take(3000))
-    // an unmarked (crashed mid-build) index is refused, like AnnIndex
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_committed"), false)
+    // an index whose only generation is unmarked (crashed mid-build) is
+    // refused, like AnnIndex
+    java.nio.file.Files.delete(java.nio.file.Paths.get(tip(dir), "_committed"))
     val e = intercept[IllegalArgumentException] {
       IvfPq.search(spark, dir, clustered, 0L, 4, 10, 64).collect()
     }
-    assert(e.getMessage.contains("incomplete build"), e.getMessage)
+    assert(e.getMessage.contains("no committed index generation"), e.getMessage)
   }
 
   test("codebooks round-trip persistence bit-identically") {
@@ -165,12 +164,30 @@ class PqIndexSpec extends SparkTestBase {
     info(f"IVFxPQ append: recall@10 $mean%.3f over ${queries.length} queries (models from half the corpus)")
     assert(mean >= 0.9, f"recall $mean%.3f < 0.9 after append")
 
-    // idempotent re-append; rebuild clears deltas
+    // idempotent re-append; a rebuild's new tip has no deltas
     assert(IvfPq.append(spark, dir, batch) == bid)
-    assert(spark.read.parquet(s"$dir/delta").count() == batch.count())
+    val appendedTip = tip(dir)
+    assert(spark.read.parquet(s"$appendedTip/delta").count() == batch.count())
     IvfPq.build(base, dir, nCells = 16)
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/delta")))
+    assert(tip(dir) != appendedTip)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(tip(dir), "delta")))
+  }
+
+  test("IVF x PQ: a build that throws mid-write leaves search answering from the previous generation") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-crash").toString + "/index"
+    IvfPq.build(clustered, dir, nCells = 16, refineIters = 2, numSub = 8, codebookK = 16)
+    val committed = tip(dir)
+    val before = IvfPq.search(spark, dir, clustered, 64L, nprobe = 4, k = 10, candidates = 64)
+      .collect().toSeq
+    // numSub 7 does not divide dim 32: codebook training throws after the
+    // new generation's centroids are already written
+    val e = intercept[IllegalArgumentException] {
+      IvfPq.build(clustered, dir, nCells = 8, refineIters = 0, numSub = 7, codebookK = 16)
+    }
+    assert(e.getMessage.contains("not divisible"), e.getMessage)
+    assert(tip(dir) == committed)
+    val after = IvfPq.search(spark, dir, clustered, 64L, nprobe = 4, k = 10, candidates = 64)
+      .collect().toSeq
+    assert(after == before, "the failed build changed what search returns")
   }
 }

@@ -66,39 +66,48 @@ class ExportSpec extends SparkTestBase {
     assert(ExportMain.parseArgs(Array("in", "out", "3")) == (("in", "out", 3)))
   }
 
+  /** The generation directories under an export's outDir, oldest first. */
+  private def generations(outDir: String): Seq[String] =
+    new java.io.File(outDir).list().filter(_.startsWith("gen-")).sorted.toSeq
+
+  /** A committed generation's tag: its marker minus the generation number. */
+  private def tag(gen: String): Seq[String] =
+    Files.readString(java.nio.file.Paths.get(gen, "_committed")).split("\n").toSeq.drop(1)
+
   test("ExportMain.run: marker-after-data commit — crash rewrites, committed run is a no-op") {
     val outDir = Files.createTempDirectory("graft-export").toString
     ExportMain.run(spark, sfDir, outDir, nShards = 4)
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$outDir/_export_done")
-    val recorded = graft.util.Markers.read(fs, marker)
-    assert(recorded.isDefined && recorded.get.contains("docs="), recorded.toString)
+    val committed = tip(outDir)
+    val recorded = tag(committed)
+    assert(recorded.headOption.contains("export-v1/shards=4"), recorded.toString)
 
-    def signature(): Seq[String] = spark.read.parquet(s"$outDir/data")
+    def signature(): Seq[String] = spark.read.parquet(s"${tip(outDir)}/data")
       .select(md5(concat_ws("|", $"shard", $"pos", $"doc_id", $"n_tokens",
         $"seq_id", $"seq_offset", $"text")))
       .as[String].collect().sorted.toSeq
     val sig = signature()
     assert(sig.nonEmpty)
     // summary agrees with the written data
-    val sum = spark.read.parquet(s"$outDir/summary")
+    val sum = spark.read.parquet(s"$committed/summary")
       .agg(org.apache.spark.sql.functions.sum($"docs")).as[Long].collect()(0)
     assert(sum == sig.length.toLong)
 
-    // committed: a re-run must not rewrite (sentinel survives)
-    val sentinel = new org.apache.hadoop.fs.Path(s"$outDir/data/_sentinel")
-    fs.create(sentinel, true).close()
+    // committed: a re-run is a no-op — the same tip, no generation added
     ExportMain.run(spark, sfDir, outDir, nShards = 4)
-    assert(fs.exists(sentinel), "committed export was rewritten on resume")
+    assert(tip(outDir) == committed, "committed export was rewritten on resume")
+    assert(generations(outDir) == Seq("gen-00000001"))
 
-    // crash simulation: marker missing + a shard destroyed -> full rewrite
-    // converges to the identical content signature
-    fs.delete(marker, false)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$outDir/data/shard=2"), true)
+    // crash simulation: the only generation lost its commit marker and a
+    // shard -> the next run installs a fresh generation that converges to
+    // the identical content signature, and the crashed one is swept
+    Files.delete(java.nio.file.Paths.get(committed, "_committed"))
+    val fs = new org.apache.hadoop.fs.Path(outDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$committed/data/shard=2"), true)
     ExportMain.run(spark, sfDir, outDir, nShards = 4)
     assert(signature() == sig, "resume after crash diverged from the clean run")
-    assert(graft.util.Markers.read(fs, marker) == recorded)
+    assert(generations(outDir) == Seq("gen-00000002"))
+    assert(tag(tip(outDir)) == recorded)
   }
 
   test("ExportMain.run: a refreshed input corpus invalidates a committed export") {
@@ -114,20 +123,17 @@ class ExportSpec extends SparkTestBase {
 
     val outDir = Files.createTempDirectory("graft-export-refresh").toString
     ExportMain.run(spark, inDir, outDir, nShards = 4)
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$outDir/_export_done")
-    val recorded = graft.util.Markers.read(fs, marker)
-    assert(recorded.exists(_.contains("input=")), recorded.toString)
+    val committed = tip(outDir)
+    val recorded = tag(committed)
+    assert(recorded.length == 2 && recorded(1).nonEmpty, "no input digest recorded: " + recorded)
 
     // unchanged input: still a no-op
-    val sentinel = new org.apache.hadoop.fs.Path(s"$outDir/data/_sentinel")
-    fs.create(sentinel, true).close()
     ExportMain.run(spark, inDir, outDir, nShards = 4)
-    assert(fs.exists(sentinel), "same-input resume should be a no-op")
+    assert(tip(outDir) == committed, "same-input resume should be a no-op")
+    assert(generations(outDir).length == 1)
 
     // refreshed input (an mtime bump changes the file-metadata identity):
-    // the committed marker must NOT short-circuit — the export re-runs
+    // the committed generation must NOT be reused — the export re-runs
     val someFile = {
       val it = fsIn.listFiles(new org.apache.hadoop.fs.Path(s"$inDir/documents.parquet"), true)
       var p: org.apache.hadoop.fs.Path = null
@@ -136,8 +142,24 @@ class ExportSpec extends SparkTestBase {
     }
     fsIn.setTimes(someFile, System.currentTimeMillis() + 60000, -1)
     ExportMain.run(spark, inDir, outDir, nShards = 4)
-    assert(!fs.exists(sentinel), "refreshed input served a stale committed export")
-    val after = graft.util.Markers.read(fs, marker)
-    assert(after.isDefined && after != recorded, "marker should record the new input identity")
+    assert(tip(outDir) != committed, "refreshed input served a stale committed export")
+    val after = tag(tip(outDir))
+    assert(after != recorded, "the new generation should record the new input identity")
+  }
+
+  test("ExportMain.run: a re-run with another shard count re-exports, and the tip is the one reused") {
+    val outDir = Files.createTempDirectory("graft-export-shards").toString
+    def shardDirs(): Int =
+      new java.io.File(s"${tip(outDir)}/data").list().count(_.startsWith("shard="))
+    ExportMain.run(spark, sfDir, outDir, nShards = 4)
+    assert(shardDirs() == 4)
+    ExportMain.run(spark, sfDir, outDir, nShards = 3)
+    assert(shardDirs() == 3, "a re-run with nShards = 3 kept serving the 4-shard export")
+    // back to 4: the superseded 4-shard generation is not the tip, so a new
+    // one is installed rather than the old one reused
+    ExportMain.run(spark, sfDir, outDir, nShards = 4)
+    assert(shardDirs() == 4)
+    assert(tip(outDir).endsWith("gen-00000003"), tip(outDir))
+    assert(generations(outDir) == Seq("gen-00000002", "gen-00000003"))
   }
 }

@@ -359,6 +359,6 @@ class StreamingSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(post == brute)
     // two committed micro-batches in the manifest
-    assert(spark.read.parquet(s"$dir/index/_batches").distinct().count() == 2)
+    assert(spark.read.parquet(s"${tip(s"$dir/index")}/_batches").distinct().count() == 2)
   }
 }
