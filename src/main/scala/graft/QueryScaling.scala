@@ -62,7 +62,7 @@ object QueryScaling {
         "so a factor above 26 would repeat texts; use 1..26")
     require(minId >= 0 && maxId < ReplicaOffset,
       s"doc_id range [$minId, $maxId] is not inside [0, $ReplicaOffset): replica " +
-        s"doc_ids (doc_id + r × $ReplicaOffset) would collide across replicas")
+        s"doc_ids (doc_id + r * $ReplicaOffset) would collide across replicas")
   }
 
   def main(args: Array[String]): Unit = {

@@ -1,25 +1,33 @@
 package graft.operators
 
+import graft.pipeline.VersionedTable
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted IVF index for embedding similarity — the production ANN shape
   * (q_ann_ivf shows the one-shot query; this module materializes the index).
+  * One inverted file whose lists store either the raw vectors or their
+  * product-quantized codes: the IVFADC design of Jégou, Douze & Schmid
+  * ("Product Quantization for Nearest Neighbor Search", TPAMI 2011).
   *
   * Build: seed centroids kmeans++-style (deterministic farthest-first over a
   * bounded hash-sample), refine with Lloyd iterations (default 2), assign
-  * every vector to its nearest centroid (inner product) and write the
-  * assignment partitioned by cell — at 100 TB each cell becomes a parquet
-  * partition, so a probe reads only `nprobe/nCells` of the data via
-  * partition pruning.
+  * every vector to its nearest centroid (inner product), encode it with the
+  * index's [[AnnIndex.Payload]] and write the rows partitioned by cell — at
+  * 100 TB each cell becomes a parquet partition, so a probe reads only
+  * `nprobe/nCells` of the data via partition pruning.
   *
-  * Search: score the query against the (tiny, broadcast) centroid set, read
-  * only the top-`nprobe` cells, exact-score the candidates, top-k.
+  * Search: rank the (tiny) centroid set against the query on the driver,
+  * read only the top-`nprobe` cells, score their rows with the payload's
+  * scorer, top-k. A `Pq` probe touches 8 bytes per vector instead of the
+  * float vector, and reads full vectors only for its `candidates` rows.
   *
   * Durability: `indexDir` is a [[graft.pipeline.VersionedTable]] root, and
-  * each build installs one generation holding the centroids, the cells they
-  * were assigned under and the id digest, so probes always use the exact
-  * centroids of the cells they read. A crashed build is an uncommitted
+  * each build installs one generation holding the centroids, the codebooks
+  * of a `Pq` payload, the cells they explain and the id digest, so probes
+  * always use the exact models of the cells they read. The generation's
+  * tag records its payload (`ivf-flat-v1` or `ivf-pq-v1`), so `append` and
+  * `search` take it from the generation. A crashed build is an uncommitted
   * generation no reader sees: the previous index stays searchable. A
   * search planned before a rebuild keeps reading its generation (two are
   * kept).
@@ -30,6 +38,19 @@ import org.apache.spark.sql.functions._
   * round a boundary assignment differently).
   */
 object AnnIndex {
+
+  /** What each cell row stores, fixed when the index is built. */
+  sealed trait Payload
+
+  /** The raw `embedding`: `search` scores every probed row exactly. */
+  case object Flat extends Payload
+
+  /** `numSub` PQ byte codes packed into one BIGINT `codes`, under
+    * codebooks of `codebookK` sub-centroids per subspace ([[PqIndex]]):
+    * `search` prunes the probed rows with ADC to `candidates`, then
+    * re-ranks those exactly.
+    */
+  final case class Pq(numSub: Int = 8, codebookK: Int = 16) extends Payload
 
   // Native codegen'd dot (bit-identical to the portable HOF form).
   private def dot(a: String, b: String) = expr(s"vec_dot($a, $b)")
@@ -129,12 +150,6 @@ object AnnIndex {
       .select(col("vec_id"), (-col("best.ncell")).as("cell"), col("embedding"))
   }
 
-  /** Assignment under the default first-`nCells` seed rule. */
-  def assign(embeddings: DataFrame, nCells: Int): DataFrame =
-    assignTo(embeddings,
-      embeddings.where(col("vec_id") < nCells)
-        .select(col("vec_id").as("cell"), col("embedding").as("cvec")))
-
   /** One Lloyd step: element-wise mean of each cell's members becomes the
     * new centroid. Distributed via posexplode to (cell, dim) keyed rows —
     * partial aggregation combines map-side, so the shuffle carries at most
@@ -159,20 +174,32 @@ object AnnIndex {
   def kmeansCentroids(embeddings: DataFrame, nCells: Int, iters: Int): DataFrame =
     (1 to iters).foldLeft(seedCentroids(embeddings, nCells))((c, _) => lloydStep(embeddings, c))
 
+  private val FlatFormat = "ivf-flat-v1"
+  private val PqFormat   = "ivf-pq-v1"
+
   private def centroidsDir(gen: String) = s"$gen/_centroids"
+  private def codebooksDir(gen: String) = s"$gen/_codebooks"
   def cellsDir(gen: String): String      = s"$gen/cells"
 
+  /** Assigned rows `(vec_id, cell, embedding)` in the generation's payload:
+    * unchanged for `Flat`, PQ-encoded to `(vec_id, cell, codes)` for `Pq`.
+    */
+  private def encode(assigned: DataFrame, codebooks: Option[PqIndex.Codebooks]): DataFrame =
+    codebooks.fold(assigned)(PqIndex.encode(assigned, _))
+
   /** Build and persist one new generation of the index: `_centroids` (the
-    * tiny centroid table), `cells` (the assignment, partitioned by cell —
-    * partition pruning = probe) and the base id digest, committed by
-    * `VersionedTable.install` after all three are written. Appended deltas
+    * tiny centroid table), the `_codebooks` of a `Pq` payload, `cells` (the
+    * encoded assignment, partitioned by cell — partition pruning = probe)
+    * and the base id digest, committed by `VersionedTable.install` under
+    * the payload's format after all of them are written. Appended deltas
     * live in the generation they were assigned under, so the new one starts
     * with none.
     */
   def build(embeddings: DataFrame, indexDir: String, nCells: Int = 16,
-      refineIters: Int = 2): Unit = {
+      refineIters: Int = 2, payload: Payload = Flat): Unit = {
     val spark = embeddings.sparkSession
-    graft.pipeline.VersionedTable.install(spark, indexDir) { gen =>
+    val format = payload match { case Flat => FlatFormat; case _: Pq => PqFormat }
+    VersionedTable.install(spark, indexDir, tag = VersionedTable.Tag(format)) { gen =>
       // Materialize the centroids ONCE (nCells rows): Lloyd's avg() merges
       // partial sums in shuffle-fetch order, so two lazy evaluations of the
       // same plan could round a boundary assignment differently — the cells
@@ -181,7 +208,14 @@ object AnnIndex {
       val centRows = centPlan.collect()
       spark.createDataFrame(spark.sparkContext.parallelize(centRows.toIndexedSeq, 1), centPlan.schema)
         .write.parquet(centroidsDir(gen))
-      assignTo(embeddings, spark.read.parquet(centroidsDir(gen)))
+      val codebooks = payload match {
+        case Flat => None
+        case Pq(numSub, codebookK) =>
+          val cb = PqIndex.train(embeddings, numSub, codebookK)
+          PqIndex.saveCodebooks(spark, cb, codebooksDir(gen))
+          Some(cb)
+      }
+      encode(assignTo(embeddings, spark.read.parquet(centroidsDir(gen))), codebooks)
         .write.partitionBy("cell").parquet(cellsDir(gen))
       // a committed index always carries its base id digest, so appends
       // never pay an O(index) duplicate scan
@@ -189,11 +223,44 @@ object AnnIndex {
     }
   }
 
+  /** The committed tip and its payload (the codebooks of a `Pq` index, None
+    * for `Flat`), resolved once so that centroids, codebooks, cells and
+    * deltas all come from the same generation. An index with no committed
+    * generation, or whose tip has another format (an untagged generation
+    * from an older build included), fails fast.
+    */
+  private def open(spark: SparkSession, indexDir: String,
+      what: String): (String, Option[PqIndex.Codebooks]) = {
+    val (gen, tag) = VersionedTable.resolveTagged(spark, indexDir).getOrElse(
+      throw new IllegalArgumentException(s"$what: no committed index generation under $indexDir - " +
+        "build the index first (a build that died before its commit is never visible)"))
+    tag.format match {
+      case FlatFormat => (gen, None)
+      case PqFormat   => (gen, Some(PqIndex.loadCodebooks(spark, codebooksDir(gen))))
+      case other => throw new IllegalArgumentException(
+        s"$what: generation $gen has index format '$other', not $FlatFormat or $PqFormat - " +
+          "rebuild the index with AnnIndex.build")
+    }
+  }
+
+  /** The generation's base cells plus its committed delta batches: the one
+    * base-plus-delta union, read by `search` and by the append guard's
+    * exact fallback. A cell filter on the result prunes partitions on both
+    * sides of the union.
+    */
+  private def rows(spark: SparkSession, gen: String, cols: Seq[String],
+      batches: Seq[Long]): DataFrame = {
+    val base = spark.read.parquet(cellsDir(gen)).select(cols.map(col): _*)
+    DeltaBatches.committedDeltaRows(spark, gen, cols, batches)
+      .map(base.unionByName(_)).getOrElse(base)
+  }
+
   /** Append a batch of new vectors to the committed index without
     * rebuilding — daily index maintenance (the ANN analog of
     * `q_incremental_dedup`): new vectors are assigned under the tip's
-    * persisted centroids (consistency with the base cells is what makes the
-    * probe stay correct), written to `delta/batch=<bid>/cell=N` inside that
+    * persisted centroids and encoded with its persisted codebooks (both are
+    * frozen, which is what keeps probes and ADC tables valid for old and
+    * new rows alike), written to `delta/batch=<bid>/cell=N` inside that
     * generation, and committed by appending the batch id to its `_batches`
     * manifest AFTER the data is durable.
     *
@@ -208,10 +275,11 @@ object AnnIndex {
     * could both pass the disjointness guard and commit overlapping ids.
     */
   def append(spark: SparkSession, indexDir: String, newVectors: DataFrame): Long = {
-    val gen = DeltaBatches.tip(spark, indexDir, "AnnIndex.append")
-    DeltaBatches.requireFormatCurrent(spark, gen, "AnnIndex.append")
-    val stats = DeltaBatches.contentStats(newVectors, "AnnIndex.append")
-    if (stats.nDistinct < stats.n) DeltaBatches.failInternalDuplicates(newVectors, "AnnIndex.append")
+    val what = "AnnIndex.append"
+    val (gen, codebooks) = open(spark, indexDir, what)
+    DeltaBatches.requireFormatCurrent(spark, gen, what)
+    val stats = DeltaBatches.contentStats(newVectors, what)
+    if (stats.nDistinct < stats.n) DeltaBatches.failInternalDuplicates(newVectors, what)
     val bid = stats.bid
     val manifest = DeltaBatches.committedManifest(spark, gen) // read ONCE, reused below
     // replaying an ALREADY-COMMITTED batch (at-least-once retry after a
@@ -219,15 +287,11 @@ object AnnIndex {
     // is what gives the streaming sink its exactly-once effect
     if (manifest.exists(_.bid == bid)) return bid
     // a vec_id may live in the index once — digest-guarded (O(batch), not
-    // O(index)); the exact base+delta scan below is planned ONLY on a
-    // digest hit (real duplicate or bloom false positive)
-    val batchBloom = DeltaBatches.guardDisjoint(spark, gen, newVectors, stats, manifest, {
-      val existing = spark.read.parquet(cellsDir(gen)).select("vec_id")
-      DeltaBatches.committedDeltaRows(spark, gen, Seq("vec_id"), manifest.map(_.bid))
-        .map(existing.unionByName(_)).getOrElse(existing)
-    }, "AnnIndex.append")
-    val cent = spark.read.parquet(centroidsDir(gen))
-    assignTo(newVectors, cent)
+    // O(index)); the exact base+delta scan is planned ONLY on a digest hit
+    // (real duplicate or bloom false positive)
+    val batchBloom = DeltaBatches.guardDisjoint(spark, gen, newVectors, stats, manifest,
+      rows(spark, gen, Seq("vec_id"), manifest.map(_.bid)), what)
+    encode(assignTo(newVectors, spark.read.parquet(centroidsDir(gen))), codebooks)
       .write.mode("overwrite").partitionBy("cell")
       .option("partitionOverwriteMode", "static")
       .parquet(s"${DeltaBatches.deltaDir(gen)}/batch=$bid")
@@ -237,37 +301,51 @@ object AnnIndex {
     bid
   }
 
-  /** Probe the committed index: only `nprobe` cell partitions are scanned
-    * — in the base cells AND in every committed appended batch (uncommitted
+  /** The top-`nprobe` cells of generation `gen` for a query vector: nCells
+    * driver-side dot products against its centroid table, summed in double
+    * in index order exactly as `vec_dot` sums them, ranked by dot
+    * descending, then cell ascending.
+    */
+  private[operators] def probe(spark: SparkSession, gen: String, query: Array[Float],
+      nprobe: Int): Seq[Long] =
+    spark.read.parquet(centroidsDir(gen)).collect()
+      .map { r =>
+        val cv = r.getSeq[Float](1)
+        var s = 0.0; var i = 0
+        while (i < cv.length) { s += cv(i).toDouble * query(i).toDouble; i += 1 }
+        (r.getLong(0), s)
+      }
+      .sortBy { case (c, s) => (-s, c) }.take(nprobe).map(_._1).toSeq
+
+  /** Probe the committed tip: only `nprobe` cell partitions are scanned —
+    * in the base cells AND in every committed appended batch (uncommitted
     * batch dirs are excluded by the manifest filter, so a crashed append is
-    * invisible). The tip is resolved once, so the centroids, cells and
-    * deltas all come from the same generation; an index with no committed
-    * generation fails fast.
+    * invisible). The probed rows are scored by the payload: `Flat` scores
+    * each exactly; `Pq` prunes with ADC to `candidates` rows and re-ranks
+    * those exactly against `embeddings` ([[PqIndex.searchRerank]]).
+    * Output: (vec_id, cell, score), `score` the exact dot product rounded
+    * to 4 places. A `queryVecId` absent from `embeddings` fails fast.
     */
   def search(spark: SparkSession, indexDir: String, embeddings: DataFrame,
-      queryVecId: Long, nprobe: Int = 4, k: Int = 10): DataFrame = {
+      queryVecId: Long, nprobe: Int = 4, k: Int = 10, candidates: Int = 100): DataFrame = {
     graft.functions.GraftFunctions.ensure(spark)
-    val gen = DeltaBatches.tip(spark, indexDir, "AnnIndex.search")
-    val q = embeddings.where(col("vec_id") === queryVecId).select(col("embedding").as("qvec"))
-    val cent = spark.read.parquet(centroidsDir(gen))
-    val probeCells = cent.crossJoin(broadcast(q))
-      .withColumn("qdot", dot("cvec", "qvec"))
-      .orderBy(desc("qdot"), asc("cell")).limit(nprobe)
-      .select(col("cell")).collect().map(_.getLong(0))
-    val base = spark.read.parquet(cellsDir(gen))
-      .where(col("cell").isin(probeCells.toIndexedSeq: _*)) // partition-pruned scan
-      .select(col("vec_id"), col("cell"), col("embedding"))
-    val candidates = DeltaBatches
-      .committedDeltaRows(spark, gen, Seq("vec_id", "cell", "embedding"))
-      .map(d => base.unionByName(
-        d.where(col("cell").isin(probeCells.toIndexedSeq: _*)))) // same pruning
-      .getOrElse(base)
-    candidates
-      .crossJoin(broadcast(q))
-      .withColumn("score_exact", dot("embedding", "qvec"))
-      .orderBy(desc("score_exact"), asc("vec_id")).limit(k)
-      .select(col("vec_id"), col("cell").cast("long").as("cell"),
-        round(col("score_exact"), 4).as("score"))
+    val (gen, codebooks) = open(spark, indexDir, "AnnIndex.search")
+    val q = embeddings.where(col("vec_id") === queryVecId).select(col("embedding"))
+      .limit(1).collect().headOption.map(_.getSeq[Float](0).toArray)
+      .getOrElse(throw new IllegalArgumentException(
+        s"AnnIndex.search: query vec_id $queryVecId is not in the embeddings table"))
+    val cells = probe(spark, gen, q, nprobe)
+    val probed = rows(spark, gen, Seq("vec_id", "cell", codebooks.fold("embedding")(_ => "codes")),
+      DeltaBatches.committed(spark, gen))
+      .where(col("cell").isin(cells: _*)) // partition-pruned scan
+    val top = codebooks match {
+      case None => probed
+        .withColumn("qv", typedLit(q.toSeq))
+        .withColumn("score", dot("embedding", "qv"))
+        .orderBy(desc("score"), asc("vec_id")).limit(k)
+      case Some(cb) => PqIndex.searchRerank(probed, embeddings, cb, q, k, candidates)
+    }
+    top.select(col("vec_id"), col("cell").cast("long").as("cell"), round(col("score"), 4).as("score"))
   }
 
   /** Exact brute-force top-k (recall baseline). */

@@ -4,14 +4,13 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
-/** The shared incremental-append commit protocol used by [[AnnIndex]] and
-  * [[IvfPq]] — one implementation so the two indexes can never diverge on
-  * durability semantics. An index directory is a
+/** The incremental-append commit protocol of [[AnnIndex]], the same for
+  * either payload (raw vectors or PQ codes). An index directory is a
   * [[graft.pipeline.VersionedTable]] root: each build installs a new
-  * generation, and `tip` resolves the committed one. Every other method
-  * takes that generation directory (`gen`), so deltas and the `_batches`
-  * manifest live inside the generation they were assigned under, and a
-  * rebuild starts with none:
+  * generation, and `AnnIndex` resolves the committed one. Every method
+  * here takes that generation directory (`gen`), so deltas and the
+  * `_batches` manifest live inside the generation they were assigned under,
+  * and a rebuild starts with none:
   *
   *   - `contentStats` derives the batch id from the batch CONTENT — two
   *     independent order-free folds over `xxhash64(vec_id, embedding)` (an
@@ -42,10 +41,10 @@ import org.apache.spark.util.sketch.BloomFilter
   *     ids against the persisted bloom digests (the base index's
   *     `_idbloom`, written at build, plus one per committed batch from the
   *     manifest) in a single map-only pass over the BATCH; only a digest
-  *     hit — a real duplicate or a bloom false positive (~fpp 1%) — falls
-  *     back to the exact scan of the index's vec_id column. An always-on
-  *     streaming sink therefore pays O(batch + manifest) per micro-batch,
-  *     not O(index).
+  *     hit — a real duplicate or a bloom false positive (`BloomFpp` = 1e-6
+  *     per tested id) — falls back to the exact scan of the index's vec_id
+  *     column. An always-on streaming sink therefore pays O(batch +
+  *     manifest) per micro-batch, not O(index).
   *
   * CONCURRENCY: the protocol assumes a SINGLE WRITER per indexDir. Two
   * concurrent appends of different batches could each pass the disjointness
@@ -92,14 +91,6 @@ private[operators] object DeltaBatches {
     * so both sinks gate their broadcasts consistently.
     */
   private[graft] val BroadcastMaxRows = 1000000L
-
-  /** The committed generation of the index at `indexDir`. `append`,
-    * `search` and `probeCells` each resolve it once and use only it.
-    */
-  def tip(spark: SparkSession, indexDir: String, what: String): String =
-    graft.pipeline.VersionedTable.resolve(spark, indexDir).getOrElse(throw new IllegalArgumentException(
-      s"$what: no committed index generation under $indexDir — build the index first " +
-        "(a build that died before its commit is never visible)"))
 
   def deltaDir(gen: String): String    = s"$gen/delta"
   def manifestDir(gen: String): String = s"$gen/_batches"
@@ -257,15 +248,9 @@ private[operators] object DeltaBatches {
   }
 
   /** Committed delta rows with the given columns, or None if no batch was
-    * ever committed. Always filter by `committed` — an uncommitted (crashed)
-    * batch directory must stay invisible.
-    */
-  def committedDeltaRows(spark: SparkSession, gen: String, cols: Seq[String]): Option[DataFrame] =
-    committedDeltaRows(spark, gen, cols, committed(spark, gen))
-
-  /** Overload taking a pre-read committed set — callers that already read
-    * the manifest (append does, for the replay check) avoid a second
-    * read+collect of it.
+    * ever committed. `batches` is the committed set (`committed`, or the ids
+    * of an already-read manifest) — an uncommitted (crashed) batch
+    * directory must stay invisible.
     */
   def committedDeltaRows(spark: SparkSession, gen: String, cols: Seq[String],
       batches: Seq[Long]): Option[DataFrame] = {

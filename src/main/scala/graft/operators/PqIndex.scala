@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Product quantization (Jégou/Douze/Schmid, "Product Quantization for
   * Nearest Neighbor Search", TPAMI 2011) — the memory-side scale path for
-  * similarity search, complementing [[AnnIndex]]'s IVF candidate pruning:
+  * similarity search and the `Pq` payload of [[AnnIndex]]'s IVF cells:
   * a 64-dim float32 embedding (256 B) compresses to `numSub` byte codes
   * (8 B at the defaults, 32×), and queries score compressed vectors via
   * asymmetric distance computation (ADC) — a per-query lookup table of
@@ -17,9 +17,9 @@ import org.apache.spark.sql.functions._
   *    subDim floats ≈ 4 KB at defaults) and train on a BOUNDED
   *    deterministic hash-sample (the same `xxhash64` rule as
   *    [[AnnIndex]]) — never on the full table.
-  *  - **encode**: map-only `mapPartitions` with broadcast codebooks (a
-  *    per-row 8×16×8 float loop — genuine imperative kernel work); output
-  *    is a narrow (vec_id, codes) table, the thing you'd persist.
+  *  - **encode**: a map-only UDF with broadcast codebooks (a per-row
+  *    8×16×8 float loop — genuine imperative kernel work) that replaces
+  *    the embedding with its 8-byte codes, the thing you'd persist.
   *  - **search**: the ADC table ships as a LITERAL column (it's per-query,
   *    numSub·k doubles), scoring is an unrolled codegen'd projection over
   *    the codes array — scan + arithmetic, zero shuffle — and top-k
@@ -86,65 +86,33 @@ object PqIndex {
     best
   }
 
-  /** Map-only encode: (vec_id, codes BIGINT) — the `numSub` byte codes PACK
-    * into one long (code s in bits 8s..8s+7), so a compressed vector is
-    * exactly 8 bytes with zero array/offset overhead, and code extraction
-    * at query time is plain integer bit math inside codegen. Requires
-    * numSub <= 8 and k <= 256. Broadcast codebooks; no shuffle.
+  /** Map-only encode: the `embedding` column becomes `codes BIGINT` — the
+    * `numSub` byte codes PACK into one long (code s in bits 8s..8s+7), so a
+    * compressed vector is exactly 8 bytes with zero array/offset overhead,
+    * and code extraction at query time is plain integer bit math inside
+    * codegen. Every other column rides through, so an IVF assignment
+    * `(vec_id, cell, embedding)` encodes to `(vec_id, cell, codes)`.
+    * Requires numSub <= 8 and k <= 256. Broadcast codebooks; no shuffle.
     */
   def encode(emb: DataFrame, cb: Codebooks): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
     val numSub = cb.length
     require(numSub <= 8 && cb(0).length <= 256, "packed encoding needs numSub <= 8, k <= 256")
-    val bc = spark.sparkContext.broadcast(cb)
+    val bc = emb.sparkSession.sparkContext.broadcast(cb)
     val subDim = cb(0)(0).length
-    emb.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Seq[Float])]
-      .mapPartitions { it =>
-        val books = bc.value
-        it.map { case (id, e) =>
-          val v = e.toArray
-          var codes = 0L
-          var s = 0
-          while (s < numSub) {
-            val c = nearest(books(s), java.util.Arrays.copyOfRange(v, s * subDim, (s + 1) * subDim))
-            codes |= c.toLong << (8 * s)
-            s += 1
-          }
-          (id, codes)
-        }
-      }.toDF("vec_id", "codes")
-  }
-
-  /** Map-only encode of an IVF-assigned table `(vec_id, cell, embedding)`
-    * — the IVF×PQ composition's one encode pass: the cell column rides
-    * through so the codes table can persist partitioned by cell (partition
-    * pruning = probe) while each vector still compresses to 8 bytes.
-    */
-  def encodeAssigned(assigned: DataFrame, cb: Codebooks): DataFrame = {
-    val spark = assigned.sparkSession
-    import spark.implicits._
-    val numSub = cb.length
-    require(numSub <= 8 && cb(0).length <= 256, "packed encoding needs numSub <= 8, k <= 256")
-    val bc = spark.sparkContext.broadcast(cb)
-    val subDim = cb(0)(0).length
-    assigned.select(col("vec_id").cast("long"), col("cell").cast("long"), col("embedding"))
-      .as[(Long, Long, Seq[Float])]
-      .mapPartitions { it =>
-        val books = bc.value
-        it.map { case (id, cell, e) =>
-          val v = e.toArray
-          var codes = 0L
-          var s = 0
-          while (s < numSub) {
-            val c = nearest(books(s), java.util.Arrays.copyOfRange(v, s * subDim, (s + 1) * subDim))
-            codes |= c.toLong << (8 * s)
-            s += 1
-          }
-          (id, cell, codes)
-        }
-      }.toDF("vec_id", "cell", "codes")
+    val pack = udf { (e: Seq[Float]) =>
+      val books = bc.value
+      val v = e.toArray
+      var codes = 0L
+      var s = 0
+      while (s < numSub) {
+        val c = nearest(books(s), java.util.Arrays.copyOfRange(v, s * subDim, (s + 1) * subDim))
+        codes |= c.toLong << (8 * s)
+        s += 1
+      }
+      codes
+    }
+    emb.withColumn("vec_id", col("vec_id").cast("long"))
+      .withColumn("codes", pack(col("embedding"))).drop("embedding")
   }
 
   /** Codebook persistence: one row per (sub, code) sub-centroid. Floats
@@ -188,15 +156,18 @@ object PqIndex {
   }
 
   /** ADC-only top-k over the compressed table: scan + codegen arithmetic +
-    * TakeOrderedAndProject; no shuffle, nothing decompressed.
+    * TakeOrderedAndProject; no shuffle, nothing decompressed. Output: the
+    * columns of `encoded` other than `codes`, plus `score_adc`.
     */
   def search(encoded: DataFrame, cb: Codebooks, query: Array[Float], topK: Int): DataFrame =
-    encoded.select(col("vec_id"), adcScore(cb, query).as("score_adc"))
+    encoded.withColumn("score_adc", adcScore(cb, query)).drop("codes")
       .orderBy(desc("score_adc"), asc("vec_id")).limit(topK)
 
   /** Production two-stage search: ADC prunes to `candidates`, exact dot
     * products re-rank just those against the full vectors (a semi-join-sized
-    * read, not a full-table scan of floats).
+    * read, not a full-table scan of floats). Output: the columns of
+    * `encoded` other than `codes` (an IVF row's `cell` rides through), plus
+    * the exact `score`.
     */
   def searchRerank(
       encoded: DataFrame,
@@ -206,10 +177,10 @@ object PqIndex {
       topK: Int,
       candidates: Int = 100): DataFrame = {
     graft.functions.GraftFunctions.ensure(emb.sparkSession)
-    val cand = search(encoded, cb, query, candidates).select(col("vec_id"))
-    emb.join(broadcast(cand), "vec_id")
+    val cand = search(encoded, cb, query, candidates).drop("score_adc")
+    emb.select(col("vec_id"), col("embedding")).join(broadcast(cand), "vec_id")
       .withColumn("qv", typedLit(query.toSeq))
-      .select(col("vec_id"), expr("vec_dot(embedding, qv)").as("score"))
+      .withColumn("score", expr("vec_dot(embedding, qv)")).drop("embedding", "qv")
       .orderBy(desc("score"), asc("vec_id")).limit(topK)
   }
 }

@@ -103,9 +103,9 @@ object Checkpoint {
     // Overwrite mode is scoped to THIS write (not session conf): a session-
     // wide dynamic mode would silently change the semantics of every other
     // partitioned overwrite in the same session — e.g. the static
-    // overwrite of delta/batch=<bid> in AnnIndex.append / IvfPq.append,
-    // which a retried append relies on to replace its crashed attempt's
-    // whole batch directory.
+    // overwrite of delta/batch=<bid> in AnnIndex.append, which a retried
+    // append relies on to replace its crashed attempt's whole batch
+    // directory.
     override def overwriteGroups(grps: Seq[Long], spans: DataFrame): Unit =
       spans.write.mode(SaveMode.Overwrite).partitionBy("grp")
         .option("partitionOverwriteMode", "dynamic").parquet(spansDir(outDir))

@@ -73,6 +73,6 @@ object ExportMain {
     val totals = s"${rows.map(_.getLong(1)).sum} docs, ${rows.map(_.getLong(2)).sum} tokens, " +
       s"${rows.length} shards"
     println(if (installed) s"[export] committed $gen: $totals"
-      else s"[export] $gen already committed — no-op: $totals")
+      else s"[export] $gen already committed - no-op: $totals")
   }
 }

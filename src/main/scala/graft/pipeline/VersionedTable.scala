@@ -12,8 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[graft.operators.DedupState]] (the persisted LSH band/signature state),
   * `DedupOps.curationRunStaged` (CurateMain's durable feature stage) and
   * [[ExportMain]]; its `install` commits every rebuild of the persisted ANN
-  * indexes ([[graft.operators.AnnIndex]], [[graft.operators.IvfPq]]). It
-  * is the only commit protocol for tables rebuilt from scratch.
+  * index ([[graft.operators.AnnIndex]]). It is the only commit protocol for
+  * tables rebuilt from scratch.
   *
   * Layout:
   * {{{
@@ -99,6 +99,10 @@ object VersionedTable {
     */
   def resolve(spark: SparkSession, root: String, format: Option[String] = None): Option[String] =
     tip(fsOf(spark, root), root, format).map(_._1.toString)
+
+  /** The newest committed generation of any format, with its [[Tag]]. */
+  def resolveTagged(spark: SparkSession, root: String): Option[(String, Tag)] =
+    tip(fsOf(spark, root), root, None).map { case (p, t) => (p.toString, t) }
 
   /** Read the current generation as a DataFrame (fails on an empty root). */
   def read(spark: SparkSession, root: String): DataFrame =

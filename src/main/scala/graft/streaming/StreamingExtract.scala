@@ -118,35 +118,6 @@ object StreamingExtract {
         col("text"), col("novel_bands"))
   }
 
-  /** Streaming corpus curation — the batch curation pipeline's stateless
-    * stages (quality gate, PII scrub) run UNCHANGED on unbounded input
-    * (same Catalyst expressions, shared with `q_quality_score` /
-    * `q_pii_scrub` via TextAnalysisOps), composed with the watermark-
-    * bounded exact dedup. The near-dup/decontamination stages stay batch:
-    * they need corpus-global joins, which is exactly the
-    * bounded-horizon-stream + periodic-batch-compaction split a 100 TB/day
-    * ingest runs.
-    */
-  /** Stream new embedding vectors INTO the persisted IVF index: each
-    * micro-batch goes through `AnnIndex.append` — assigned under the
-    * index's existing centroids, committed via the batch manifest. Because
-    * the batch id derives from the batch CONTENT, a micro-batch replayed
-    * after a sink failure overwrites its own delta directory and re-commits
-    * the same id: the effect is exactly-once even though foreachBatch is
-    * at-least-once. Empty micro-batches are skipped (append rejects them).
-    *
-    * Cost note: the duplicate-id guard is digest-based (the base index's
-    * bloom plus one per committed batch, carried in the manifest — see
-    * [[graft.operators.DeltaBatches.guardDisjoint]]), so a micro-batch
-    * pays O(batch + manifest), independent of index size; only a digest
-    * hit (a real duplicate, or a bloom false positive at the per-append
-    * fpp of ~1e-6 — i.e. a spurious fallback roughly once per million
-    * appended ids, see DeltaBatches.BloomFpp's sizing rationale)
-    * falls back to the exact index scan. The strict guard stays because a silent
-    * duplicate corrupts every subsequent top-k. The sink is the single
-    * writer of its indexDir (micro-batches are serial) — don't run batch
-    * maintenance appends against the same index while the stream is up.
-    */
   /** Shared foreachBatch scaffolding: persist the micro-batch (the body
     * runs multiple actions over it — without the persist each one would
     * re-execute the micro-batch's source plan), skip empties, always
@@ -165,6 +136,27 @@ object StreamingExtract {
       }
       .start()
 
+  /** Stream new embedding vectors INTO the persisted IVF index: each
+    * micro-batch goes through `AnnIndex.append` — assigned under the
+    * index's existing centroids (and encoded with its codebooks, for a PQ
+    * payload), committed via the batch manifest. Because the batch id
+    * derives from the batch CONTENT, a micro-batch replayed after a sink
+    * failure overwrites its own delta directory and re-commits the same
+    * id: the effect is exactly-once even though foreachBatch is
+    * at-least-once. Empty micro-batches are skipped (append rejects them).
+    *
+    * Cost note: the duplicate-id guard is digest-based (the base index's
+    * bloom plus one per committed batch, carried in the manifest — see
+    * [[graft.operators.DeltaBatches.guardDisjoint]]), so a micro-batch
+    * pays O(batch + manifest), independent of index size; only a digest
+    * hit (a real duplicate, or a bloom false positive at the per-append
+    * fpp of ~1e-6 — i.e. a spurious fallback roughly once per million
+    * appended ids, see DeltaBatches.BloomFpp's sizing rationale) falls
+    * back to the exact index scan. The strict guard stays because a silent
+    * duplicate corrupts every subsequent top-k. The sink is the single
+    * writer of its indexDir (micro-batches are serial) — don't run batch
+    * maintenance appends against the same index while the stream is up.
+    */
   def indexSink(vectors: DataFrame, indexDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
     persistedBatchSink(vectors, checkpointDir) { (b, _) =>
@@ -357,6 +349,15 @@ object StreamingExtract {
       }
   }
 
+  /** Streaming corpus curation — the batch curation pipeline's stateless
+    * stages (quality gate, PII scrub) run UNCHANGED on unbounded input
+    * (same Catalyst expressions, shared with `q_quality_score` /
+    * `q_pii_scrub` via TextAnalysisOps), composed with the watermark-
+    * bounded exact dedup. The near-dup/decontamination stages stay batch:
+    * they need corpus-global joins, which is exactly the
+    * bounded-horizon-stream + periodic-batch-compaction split a 100 TB/day
+    * ingest runs.
+    */
   def curateStream(
       docs: DataFrame,
       minQuality: Double = 0.5,

@@ -310,4 +310,68 @@ class AnnIndexSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(fresh == brute, "a search resolved after the rebuild did not read the new generation")
   }
+
+  test("search fails naming a query id that is not in embeddings, for both payloads") {
+    val emb = Tables.embeddings(spark, sfDir)
+    val missing = emb.agg(max("vec_id")).head().getLong(0) + 1
+    for (payload <- Seq(AnnIndex.Flat, AnnIndex.Pq())) {
+      val dir = Files.createTempDirectory("graft-ann-noquery").toString + "/index"
+      AnnIndex.build(emb, dir, nCells = 4, refineIters = 0, payload = payload)
+      val e = intercept[IllegalArgumentException] {
+        AnnIndex.search(spark, dir, emb, missing, nprobe = 4, k = 10).collect()
+      }
+      assert(e.getMessage.contains(s"vec_id $missing"), s"$payload: ${e.getMessage}")
+    }
+  }
+
+  test("search and append refuse a generation of an unrecognised format, asking for a rebuild") {
+    val emb = Tables.embeddings(spark, sfDir)
+    val dir = Files.createTempDirectory("graft-ann-format").toString + "/index"
+    AnnIndex.build(emb, dir, nCells = 4, refineIters = 0)
+    // an untagged generation (what builds before the payload tag wrote),
+    // then one tagged with a format this build does not know
+    for (tag <- Seq(graft.pipeline.VersionedTable.Tag(), graft.pipeline.VersionedTable.Tag("ivf-flat-v0"))) {
+      graft.pipeline.VersionedTable.install(spark, dir, tag = tag)(_ => ())
+      val onSearch = intercept[IllegalArgumentException] {
+        AnnIndex.search(spark, dir, emb, 0, nprobe = 4, k = 10).collect()
+      }
+      val onAppend = intercept[IllegalArgumentException] {
+        AnnIndex.append(spark, dir, emb.limit(3))
+      }
+      for (e <- Seq(onSearch, onAppend))
+        assert(e.getMessage.contains("rebuild the index"), s"$tag: ${e.getMessage}")
+    }
+  }
+
+  test("the cell probe ranks by vec_dot descending, then cell ascending") {
+    import spark.implicits._
+    graft.functions.GraftFunctions.ensure(spark)
+    // the test's own ranking: SQL vec_dot over the generation's centroids
+    def ranked(gen: String, q: Array[Float], nprobe: Int): Seq[Long] =
+      spark.read.parquet(s"$gen/_centroids")
+        .withColumn("qv", typedLit(q.toSeq))
+        .select(col("cell"), expr("vec_dot(cvec, qv)").as("d"))
+        .orderBy(desc("d"), asc("cell")).limit(nprobe)
+        .collect().map(_.getLong(0)).toSeq
+
+    val emb = Tables.embeddings(spark, sfDir)
+    val queries = emb.where(col("vec_id") < 16).collect().map(_.getSeq[Float](1).toArray)
+    for (payload <- Seq(AnnIndex.Flat, AnnIndex.Pq())) {
+      val dir = Files.createTempDirectory("graft-ann-probe").toString + "/index"
+      AnnIndex.build(emb, dir, nCells = 8, refineIters = 2, payload = payload)
+      for (q <- queries; nprobe <- Seq(1, 3, 8))
+        assert(AnnIndex.probe(spark, tip(dir), q, nprobe) == ranked(tip(dir), q, nprobe), s"$payload")
+    }
+
+    // hand-built centroids with an exact tie between cells 1 and 3, written
+    // in an order that puts cell 3 first
+    val gen = Files.createTempDirectory("graft-ann-probe-tie").toString
+    val tied = Seq(0.1f, 0.2f, 0.3f, 0.4f)
+    Seq(3L -> tied, 0L -> Seq(1f, 0f, 0f, 0f), 4L -> Seq(0f, 0f, 1f, 0f),
+      1L -> tied, 2L -> Seq(0f, 0f, 0f, 1f))
+      .toDF("cell", "cvec").coalesce(1).write.parquet(s"$gen/_centroids")
+    val q = Array(0.5f, 0.25f, -1f, 2f)
+    assert(AnnIndex.probe(spark, gen, q, 5) == Seq(2L, 1L, 3L, 0L, 4L))
+    for (nprobe <- 1 to 5) assert(AnnIndex.probe(spark, gen, q, nprobe) == ranked(gen, q, nprobe))
+  }
 }

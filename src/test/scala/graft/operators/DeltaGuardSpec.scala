@@ -132,16 +132,16 @@ class DeltaGuardSpec extends SparkTestBase {
 
   test("IvfPq append is digest-guarded through the same protocol") {
     val dir = Files.createTempDirectory("graft-guard-pq").toString + "/index"
-    IvfPq.build(localEmb(0 until indexRows), dir, nCells = 8, refineIters = 0,
-      numSub = 4, codebookK = 8)
+    AnnIndex.build(localEmb(0 until indexRows), dir, nCells = 8, refineIters = 0,
+      payload = AnnIndex.Pq(numSub = 4, codebookK = 8))
     val (_, read) = recordsReadDuring {
-      IvfPq.append(spark, dir, localEmb(100000 until 100100))
+      AnnIndex.append(spark, dir, localEmb(100000 until 100100))
     }
-    info(s"IvfPq append over a $indexRows-row index read $read records")
+    info(s"PQ-payload append over a $indexRows-row index read $read records")
     assert(read < indexRows / 2,
-      s"IvfPq guard read $read records against a $indexRows-row index")
+      s"PQ-payload guard read $read records against a $indexRows-row index")
     val e = intercept[IllegalArgumentException] {
-      IvfPq.append(spark, dir,
+      AnnIndex.append(spark, dir,
         localEmb(3 to 3).unionAll(localEmb(40000 until 40002))
           .selectExpr("vec_id", "transform(embedding, x -> x + 0.25f) as embedding"))
     }

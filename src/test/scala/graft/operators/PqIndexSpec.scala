@@ -90,8 +90,8 @@ class PqIndexSpec extends SparkTestBase {
 
   test("IVF x PQ composed index: recall@10 >= 0.95 scoring only the probed cells' codes") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString + "/index"
-    IvfPq.build(clustered, dir, nCells = 16, refineIters = 2, numSub = 8, codebookK = 16)
-    val codes = spark.read.parquet(IvfPq.codesDir(tip(dir)))
+    AnnIndex.build(clustered, dir, nCells = 16, refineIters = 2, payload = AnnIndex.Pq(8, 16))
+    val codes = spark.read.parquet(AnnIndex.cellsDir(tip(dir)))
     assert(codes.count() == 1024) // every vector exactly once, 8 B each
     val queries = Seq(0L, 64L, 130L, 513L, 999L, 320L, 777L, 448L)
     val embById = clustered.collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
@@ -99,9 +99,9 @@ class PqIndexSpec extends SparkTestBase {
     val recalls = queries.map { qid =>
       val brute = bruteTop10(clustered, qid)
       // rows the ADC stage can touch = rows in the probed cells only
-      val cells = IvfPq.probeCells(spark, dir, embById(qid), nprobe = 4)
+      val cells = AnnIndex.probe(spark, tip(dir), embById(qid), nprobe = 4)
       scoredMax = math.max(scoredMax, codes.where(col("cell").isin(cells: _*)).count())
-      val got = IvfPq.search(spark, dir, clustered, qid, nprobe = 4, k = 10, candidates = 64)
+      val got = AnnIndex.search(spark, dir, clustered, qid, nprobe = 4, k = 10, candidates = 64)
         .collect().map(_.getLong(0)).toSet
       brute.intersect(got).size / 10.0
     }
@@ -111,15 +111,15 @@ class PqIndexSpec extends SparkTestBase {
     // nprobe/nCells of the table (4/16 of 1024 = 256), x2 slack for cell imbalance
     assert(scoredMax <= 512, s"probe scored $scoredMax of 1024 rows — cell pruning broken")
     // probe plan: the codes scan is partition-pruned; ADC top-k never shuffles
-    val plan = IvfPq.search(spark, dir, clustered, 0L, 4, 10, 64)
+    val plan = AnnIndex.search(spark, dir, clustered, 0L, 4, 10, 64)
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [cell"), plan.take(3000))
     assert(plan.contains("TakeOrderedAndProject"), plan.take(3000))
     // an index whose only generation is unmarked (crashed mid-build) is
-    // refused, like AnnIndex
+    // refused, like a flat one
     java.nio.file.Files.delete(java.nio.file.Paths.get(tip(dir), "_committed"))
     val e = intercept[IllegalArgumentException] {
-      IvfPq.search(spark, dir, clustered, 0L, 4, 10, 64).collect()
+      AnnIndex.search(spark, dir, clustered, 0L, 4, 10, 64).collect()
     }
     assert(e.getMessage.contains("no committed index generation"), e.getMessage)
   }
@@ -148,15 +148,15 @@ class PqIndexSpec extends SparkTestBase {
     val base = clustered.where(col("vec_id") % 2 === 0)
     val batch = clustered.where(col("vec_id") % 2 === 1)
     // models trained on the base half only; the appended half reuses them
-    IvfPq.build(base, dir, nCells = 16, refineIters = 2, numSub = 8, codebookK = 16)
-    val bid = IvfPq.append(spark, dir, batch)
+    AnnIndex.build(base, dir, nCells = 16, refineIters = 2, payload = AnnIndex.Pq(8, 16))
+    val bid = AnnIndex.append(spark, dir, batch)
 
     // recall over the COMBINED corpus stays high even though the appended
     // half never influenced centroids or codebooks
     val queries = Seq(0L, 64L, 130L, 513L, 999L, 777L)
     val recalls = queries.map { qid =>
       val brute = bruteTop10(clustered, qid)
-      val got = IvfPq.search(spark, dir, clustered, qid, nprobe = 4, k = 10, candidates = 64)
+      val got = AnnIndex.search(spark, dir, clustered, qid, nprobe = 4, k = 10, candidates = 64)
         .collect().map(_.getLong(0)).toSet
       brute.intersect(got).size / 10.0
     }
@@ -165,28 +165,28 @@ class PqIndexSpec extends SparkTestBase {
     assert(mean >= 0.9, f"recall $mean%.3f < 0.9 after append")
 
     // idempotent re-append; a rebuild's new tip has no deltas
-    assert(IvfPq.append(spark, dir, batch) == bid)
+    assert(AnnIndex.append(spark, dir, batch) == bid)
     val appendedTip = tip(dir)
     assert(spark.read.parquet(s"$appendedTip/delta").count() == batch.count())
-    IvfPq.build(base, dir, nCells = 16)
+    AnnIndex.build(base, dir, nCells = 16, payload = AnnIndex.Pq())
     assert(tip(dir) != appendedTip)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(tip(dir), "delta")))
   }
 
   test("IVF x PQ: a build that throws mid-write leaves search answering from the previous generation") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-crash").toString + "/index"
-    IvfPq.build(clustered, dir, nCells = 16, refineIters = 2, numSub = 8, codebookK = 16)
+    AnnIndex.build(clustered, dir, nCells = 16, refineIters = 2, payload = AnnIndex.Pq(8, 16))
     val committed = tip(dir)
-    val before = IvfPq.search(spark, dir, clustered, 64L, nprobe = 4, k = 10, candidates = 64)
+    val before = AnnIndex.search(spark, dir, clustered, 64L, nprobe = 4, k = 10, candidates = 64)
       .collect().toSeq
     // numSub 7 does not divide dim 32: codebook training throws after the
     // new generation's centroids are already written
     val e = intercept[IllegalArgumentException] {
-      IvfPq.build(clustered, dir, nCells = 8, refineIters = 0, numSub = 7, codebookK = 16)
+      AnnIndex.build(clustered, dir, nCells = 8, refineIters = 0, payload = AnnIndex.Pq(7, 16))
     }
     assert(e.getMessage.contains("not divisible"), e.getMessage)
     assert(tip(dir) == committed)
-    val after = IvfPq.search(spark, dir, clustered, 64L, nprobe = 4, k = 10, candidates = 64)
+    val after = AnnIndex.search(spark, dir, clustered, 64L, nprobe = 4, k = 10, candidates = 64)
       .collect().toSeq
     assert(after == before, "the failed build changed what search returns")
   }

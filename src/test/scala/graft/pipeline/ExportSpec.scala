@@ -92,8 +92,16 @@ class ExportSpec extends SparkTestBase {
       .agg(org.apache.spark.sql.functions.sum($"docs")).as[Long].collect()(0)
     assert(sum == sig.length.toLong)
 
-    // committed: a re-run is a no-op — the same tip, no generation added
-    ExportMain.run(spark, sfDir, outDir, nShards = 4)
+    // committed: a re-run is a no-op — the same tip, no generation added —
+    // and says so in plain ASCII (a non-ASCII character prints as '?' under
+    // an ASCII stdout charset)
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
+      ExportMain.run(spark, sfDir, outDir, nShards = 4)
+    }
+    val noop = out.toString("UTF-8").split("\n").filter(_.contains("already committed"))
+    assert(noop.length == 1, out.toString("UTF-8"))
+    assert(noop.head.forall(_ < 128), s"progress line is not ASCII: ${noop.head}")
     assert(tip(outDir) == committed, "committed export was rewritten on resume")
     assert(generations(outDir) == Seq("gen-00000001"))
 
