@@ -77,7 +77,7 @@ object AnnIndex {
     */
   def seedCentroids(embeddings: DataFrame, nCells: Int, sampleSize: Int = 4096): DataFrame = {
     require(nCells <= sampleSize,
-      s"seedCentroids: nCells=$nCells exceeds sampleSize=$sampleSize — seeds are drawn from " +
+      s"seedCentroids: nCells=$nCells exceeds sampleSize=$sampleSize; seeds are drawn from " +
         "the collected sample, so this would silently build fewer cells than asked; raise " +
         "sampleSize to at least nCells (driver memory scales with it)")
     val spark = embeddings.sparkSession
@@ -111,7 +111,7 @@ object AnnIndex {
       // best stays -1 only if every candidate similarity is NaN — fail with
       // the cause rather than an index error from sample(-1)
       require(best >= 0,
-        "seedCentroids: no selectable seed (NaN similarities — check embeddings for NaN/Inf values)")
+        "seedCentroids: no selectable seed (NaN similarities; check embeddings for NaN/Inf values)")
       val next = sample(best)
       chosen += next
       picked(best) = true

@@ -59,7 +59,7 @@ object DedupState {
   def generation(s: SparkSession, stateDir: String): String =
     VersionedTable.resolve(s, stateDir, Some(FormatVersion)).getOrElse(
       throw new IllegalStateException(
-        s"dedup state at $stateDir has no committed $FormatVersion generation — run DedupState.build first"))
+        s"dedup state at $stateDir has no committed $FormatVersion generation; run DedupState.build first"))
 
   /** The committed band table of the resolved generation. Long-lived
     * readers (the streaming sink) load ONCE and cache; per-call probes go

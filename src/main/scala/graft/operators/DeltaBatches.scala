@@ -114,7 +114,7 @@ private[operators] object DeltaBatches {
     // this a null id would masquerade as an internal duplicate (or NPE in
     // the error path naming the offenders)
     require(r.getLong(4) == r.getLong(2),
-      s"$what: batch carries ${r.getLong(2) - r.getLong(4)} null vec_id row(s) — ids must be non-null")
+      s"$what: batch carries ${r.getLong(2) - r.getLong(4)} null vec_id row(s); ids must be non-null")
     ContentStats(
       r.getLong(0) ^ java.lang.Long.rotateLeft(r.getLong(1), 17) ^ r.getLong(2),
       r.getLong(2), r.getLong(3))
@@ -128,7 +128,7 @@ private[operators] object DeltaBatches {
     val ids = batch.groupBy(col("vec_id")).count()
       .where(col("count") > 1).limit(5).collect().map(_.getLong(0))
     throw new IllegalArgumentException(
-      s"$what: batch carries duplicate vec_ids within itself (${ids.mkString(", ")}…) — " +
+      s"$what: batch carries duplicate vec_ids within itself (${ids.mkString(", ")}, ...): " +
         "dedup the batch before appending; a duplicated id would appear twice in top-k")
   }
 
@@ -216,7 +216,7 @@ private[operators] object DeltaBatches {
       val ver = graft.util.Markers.read(fs, new org.apache.hadoop.fs.Path(formatMarker(gen)))
       require(ver.contains(FormatVersion),
         s"$what: the delta manifest at ${manifestDir(gen)} was written under content-id " +
-          s"format ${ver.getOrElse("<unrecorded>")} but this build uses '$FormatVersion' — batch " +
+          s"format ${ver.getOrElse("<unrecorded>")} but this build uses '$FormatVersion'; batch " +
           "ids are not comparable across formats (a replay could be mis-classified); rebuild " +
           "the index before appending (existing searches remain valid)")
     }
@@ -307,7 +307,7 @@ private[operators] object DeltaBatches {
       .join(probe, "vec_id")
       .limit(5).collect().map(_.getLong(0))
     require(dup.isEmpty,
-      s"$what: batch re-carries vec_ids already in the index (${dup.mkString(", ")}…) — " +
+      s"$what: batch re-carries vec_ids already in the index (${dup.mkString(", ")}, ...): " +
         "upsert is not supported; a duplicated id would appear twice in top-k. " +
         "Rebuild the index, or assign fresh ids to the new vectors")
   }

@@ -1,8 +1,9 @@
 package graft.pipeline
 
 import graft.model.{Doc, Lineage}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Resumable, idempotent extraction runs — Iceberg MERGE-on-doc_id semantics
@@ -29,11 +30,13 @@ import org.apache.spark.storage.StorageLevel
   * A run touches its input once: `ExtractJob`'s kernel stage runs over the
   * docs of every group still to do, tagged with each doc's group, and is
   * persisted (MEMORY_AND_DISK) for the run. It has two consumers: the
-  * lineage of all those groups, one aggregate over `(grp, partition_id)`
-  * collected as at most groups × partitions rows, and the spans write, one
-  * scan of the cache (no input scan, no exchange). The cost is memory: the
-  * run's whole extracted output stays cached until the write returns,
-  * spilling to disk past the storage memory.
+  * lineage of all those groups, `ExtractJob.lineageBy`'s partition-local
+  * aggregate over `(grp, partition_id)` collected as at most groups ×
+  * partitions rows (no exchange; this collect is what builds the cache),
+  * and the spans write, one scan of the cache (no input scan, no
+  * exchange). The cost is memory: the run's whole extracted output stays
+  * cached until the write returns, spilling to disk past the storage
+  * memory.
   *
   * Kill granularity: a kill before the lineage append lands redoes every
   * group of the run on resume; a kill after it redoes nothing. The kernel
@@ -96,7 +99,7 @@ object Checkpoint {
       val path = new org.apache.hadoop.fs.Path(lineageDir(outDir))
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(path)) Set.empty
-      else spark.read.parquet(lineageDir(outDir))
+      else readLineage(spark, outDir)
         .select("grp").distinct().collect().map(_.getLong(0)).toSet
     }
 
@@ -155,8 +158,7 @@ object Checkpoint {
       .withColumn("grp", groupOf(numGroups, $"doc.doc_id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val lineage = ExtractJob.lineageBy(stage, $"grp")
-        .select($"grp", $"lineage").as[(Long, Lineage)].collect().toSeq
+      val lineage = ExtractJob.lineageBy(stage, $"grp").collect().toSeq
       writer.overwriteGroups(todo, stage.select($"doc.*", $"grp"))
       // The lineage append IS the commit marker, so it must hold a row for
       // every group, even a zero-doc one: a synthetic partition_id=-1 marker
@@ -174,6 +176,12 @@ object Checkpoint {
   def readSpans(spark: SparkSession, outDir: String): DataFrame =
     spark.read.parquet(spansDir(outDir)).drop("grp")
 
+  /** The lineage table's schema as `runResumable` writes it: the
+    * [[Lineage]] columns, then `grp`. Reading with it skips the one-task
+    * footer job that schema inference would start.
+    */
+  private val lineageSchema: StructType = Encoders.product[Lineage].schema.add("grp", LongType)
+
   def readLineage(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(lineageDir(outDir))
+    spark.read.schema(lineageSchema).parquet(lineageDir(outDir))
 }

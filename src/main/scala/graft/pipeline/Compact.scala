@@ -77,7 +77,7 @@ object Compact {
     // old table still parked aside -> roll it back, then proceed normally
     if (!fs.exists(new Path(dir)) && fs.exists(new Path(old)))
       require(fs.rename(new Path(old), new Path(dir)),
-        s"compaction repair failed restoring $old to $dir — fix manually before re-running")
+        s"compaction repair failed restoring $old to $dir; fix manually before re-running")
     fs.delete(new Path(tmp), true)
 
     val (filesBefore, totalBytes) = rewrite(spark, dir, tmp, targetFileBytes, partitionBy)

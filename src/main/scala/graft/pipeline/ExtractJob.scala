@@ -18,8 +18,9 @@ import scala.util.control.NonFatal
   * heaviest representation; the ~1/97 giant docs already balance out across
   * round-robin partitions (the skew test in PipelineSpec bounds it).
   *
-  *  - No collect(), no driver-side loops; lineage is aggregated distributed
-  *    and only the tiny per-partition summary reaches the driver.
+  *  - No collect() of spans, no driver-side loops; lineage is aggregated
+  *    inside each kernel partition (no exchange) and only the tiny
+  *    per-partition summary reaches the driver.
   *  - Determinism: output spans are a pure function of the input row, so
   *    task retries and job re-runs emit identical bytes — the precondition
   *    for MERGE-on-doc_id resume (Checkpoint).
@@ -52,23 +53,40 @@ object ExtractJob {
     */
   def split(stage: Dataset[(Doc, Int, Boolean)]): (Dataset[Doc], Dataset[Lineage]) = {
     import stage.sparkSession.implicits._
-    val lineage = lineageBy(stage.toDF("doc", "partition_id", "failed"))
-      .select($"lineage.*").as[Lineage]
-    (stage.map(_._1), lineage)
+    (stage.map(_._1), lineageBy(stage.toDF("doc", "partition_id", "failed"), lit(0L)).map(_._2))
   }
 
   /** Lineage of a tagged stage (columns `doc`, `partition_id`, `failed`),
-    * one row per `(keys…, partition_id)`: those columns, then a `lineage`
-    * struct in the [[Lineage]] shape.
+    * one row per `(key, partition_id)`: the key (a long column) and a
+    * [[Lineage]] row.
+    *
+    * A partition-local aggregate: one hash map per partition, no exchange.
+    * That is exact because `partition_id` is the kernel task's partition
+    * index, so every row of one `partition_id` sits in the same partition
+    * of `stage` as long as nothing between the kernel and here moves rows
+    * (true for `tagged` itself and for a persisted copy of it; a row seen
+    * in another partition fails the task). So the result holds at most
+    * keys x partitions rows, small enough to collect on the driver.
     */
-  def lineageBy(stage: DataFrame, keys: Column*): DataFrame =
-    stage.groupBy(keys :+ col("partition_id"): _*)
-      .agg(struct(
-        col("partition_id"),
-        count(lit(1)).as("docs_parsed"),
-        sum(size(col("doc.spans"))).as("spans_emitted"),
-        sum(when(col("failed"), 1L).otherwise(0L)).as("parse_failures"),
-        lit("complete").as("status")).as("lineage"))
+  def lineageBy(stage: DataFrame, key: Column): Dataset[(Long, Lineage)] = {
+    import stage.sparkSession.implicits._
+    stage.select(key, col("partition_id"), size(col("doc.spans")), col("failed"))
+      .as[(Long, Int, Long, Boolean)]
+      .mapPartitions { rows =>
+        val pid = TaskContext.getPartitionId()
+        // per key: docs parsed, spans emitted, parse failures
+        val byKey = scala.collection.mutable.LinkedHashMap[Long, Array[Long]]()
+        rows.foreach { case (k, p, spans, failed) =>
+          if (p != pid) throw new IllegalStateException(
+            s"lineage row of partition_id $p read in partition $pid: rows moved after the kernel")
+          val acc = byKey.getOrElseUpdate(k, new Array[Long](3))
+          acc(0) += 1
+          acc(1) += spans
+          if (failed) acc(2) += 1
+        }
+        byKey.iterator.map { case (k, a) => (k, Lineage(pid, a(0), a(1), a(2), "complete")) }
+      }
+  }
 
   /** Extraction with lineage: `(spans, lineage)` over `docs`. */
   def extractWithLineage(docs: Dataset[Doc], cfg: Config = Config())

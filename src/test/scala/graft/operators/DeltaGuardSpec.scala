@@ -148,6 +148,18 @@ class DeltaGuardSpec extends SparkTestBase {
     assert(e.getMessage.contains("already in the index"), e.getMessage)
   }
 
+  test("DeltaBatches error messages are pure ASCII") {
+    import spark.implicits._
+    val duplicated = localEmb(0 until 3).unionAll(localEmb(1 to 1))
+    val nullId = localEmb(0 until 2)
+      .unionAll(Seq((Option.empty[Long], Seq(0.5f))).toDF("vec_id", "embedding"))
+    val messages = Seq(
+      intercept[IllegalArgumentException](DeltaBatches.failInternalDuplicates(duplicated, "append")),
+      intercept[IllegalArgumentException](DeltaBatches.contentStats(nullId, "append")))
+      .map(_.getMessage)
+    for (m <- messages) assert(m.forall(_ < 128), m)
+  }
+
   test("seeding fails fast when nCells exceeds the seed sample bound") {
     val emb = localEmb(0 until 100)
     val e = intercept[IllegalArgumentException] {

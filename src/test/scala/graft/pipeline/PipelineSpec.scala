@@ -239,10 +239,17 @@ class PipelineSpec extends SparkTestBase {
     val dir = Files.createTempDirectory("graft-resume-lineage").toString
     assert(Checkpoint.runResumable(docs, dir, numGroups = 8) == 8)
     assert(lineageFiles(dir).length == 1, lineageFiles(dir).mkString(", "))
+    // the expected rows, from the tagged rows themselves: one per (group,
+    // kernel partition) that holds docs, plus the group's marker
+    val tagged = ExtractJob.tagged(docs).toDF("doc", "partition_id", "failed")
+      .select(Checkpoint.groupOf(8, $"doc.doc_id"), $"partition_id",
+        org.apache.spark.sql.functions.size($"doc.spans"), $"failed")
+      .as[(Long, Int, Int, Boolean)].collect()
     val marker = Lineage(-1, 0L, 0L, 0L, "marker")
     for (g <- 0L until 8L) {
-      val want = ExtractJob.extractWithLineage(docs.filter(Checkpoint.groupOf(8) === g))._2
-        .collect() :+ marker
+      val want = tagged.filter(_._1 == g).groupBy(_._2).map { case (pid, rows) =>
+        Lineage(pid, rows.length.toLong, rows.map(_._3.toLong).sum, rows.count(_._4).toLong, "complete")
+      }.toSeq :+ marker
       val got = Checkpoint.readLineage(spark, dir).where($"grp" === g).drop("grp")
         .as[Lineage].collect()
       assert(got.sortBy(_.partition_id).toSeq == want.sortBy(_.partition_id).toSeq, s"group $g")
