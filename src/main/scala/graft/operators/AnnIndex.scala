@@ -174,6 +174,9 @@ object AnnIndex {
   def kmeansCentroids(embeddings: DataFrame, nCells: Int, iters: Int): DataFrame =
     (1 to iters).foldLeft(seedCentroids(embeddings, nCells))((c, _) => lloydStep(embeddings, c))
 
+  // The generation formats. Each covers the cell layout and the delta
+  // manifest's batch-id formula and row layout (DeltaBatches): a change
+  // to any of them bumps the version.
   private val FlatFormat = "ivf-flat-v1"
   private val PqFormat   = "ivf-pq-v1"
 
@@ -277,7 +280,6 @@ object AnnIndex {
   def append(spark: SparkSession, indexDir: String, newVectors: DataFrame): Long = {
     val what = "AnnIndex.append"
     val (gen, codebooks) = open(spark, indexDir, what)
-    DeltaBatches.requireFormatCurrent(spark, gen, what)
     val stats = DeltaBatches.contentStats(newVectors, what)
     if (stats.nDistinct < stats.n) DeltaBatches.failInternalDuplicates(newVectors, what)
     val bid = stats.bid

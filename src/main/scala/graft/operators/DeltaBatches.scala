@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.pipeline.VersionedTable
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -23,16 +24,16 @@ import org.apache.spark.util.sketch.BloomFilter
   *     a NEW id (then rejected as an unsupported upsert). The same
   *     aggregation also returns the distinct-id count, so the
   *     batch-internal duplicate guard costs no extra job;
-  *   - `commit` appends the id to the `_batches` manifest strictly AFTER
-  *     the batch data is durable — the manifest row IS the commit marker,
-  *     and `committed` is the only set a search may read. Each manifest row
-  *     also carries the batch's id BLOOM DIGEST (see `guardDisjoint`), so
-  *     digest and commit are atomic by construction — a digest can never be
-  *     missing for a committed batch, and a crashed batch's digest dies
-  *     with its manifest row. The manifest carries a `_format` version
-  *     file: the id formula AND the row layout are part of the on-disk
-  *     contract, so a manifest written under a different format fails fast
-  *     instead of mis-classifying replays;
+  *   - `commit` appends the id to the generation's manifest
+  *     ([[VersionedTable.appendManifest]]) strictly AFTER the batch data is
+  *     durable — the manifest row IS the commit marker, and `committed` is
+  *     the only set a search may read. Each manifest row also carries the
+  *     batch's id BLOOM DIGEST (see `guardDisjoint`), so digest and commit
+  *     are atomic by construction — a digest can never be missing for a
+  *     committed batch, and a crashed batch's digest dies with its manifest
+  *     row. The id formula AND the row layout are part of the generation's
+  *     format tag (`ivf-flat-v1` / `ivf-pq-v1`): changing either bumps the
+  *     tag, and `AnnIndex` refuses a generation of any other tag;
   *   - `guardDisjoint` enforces the append precondition: a vec_id may live
   *     in the index exactly once. Upsert is NOT supported — a batch
   *     re-carrying an existing id would make top-k return the id twice
@@ -57,12 +58,6 @@ import org.apache.spark.util.sketch.BloomFilter
   * indexDir with another writer; readers are unrestricted.
   */
 private[operators] object DeltaBatches {
-
-  /** Bump when the `contentStats` id formula OR the manifest row layout
-    * changes — mismatched manifests must fail fast, not silently
-    * mis-classify replays. "3" added the per-batch id bloom digest columns.
-    */
-  private val FormatVersion = "3"
 
   /** Bloom parameters: expected-items cap and target false-positive rate.
     *
@@ -93,9 +88,7 @@ private[operators] object DeltaBatches {
   private[graft] val BroadcastMaxRows = 1000000L
 
   def deltaDir(gen: String): String    = s"$gen/delta"
-  def manifestDir(gen: String): String = s"$gen/_batches"
   def baseBloomFile(gen: String): String = s"$gen/_idbloom"
-  private def formatMarker(gen: String) = s"${manifestDir(gen)}/_format"
 
   private def fsOf(spark: SparkSession, p: String) =
     new org.apache.hadoop.fs.Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -189,63 +182,22 @@ private[operators] object DeltaBatches {
   }
 
   def commit(spark: SparkSession, gen: String, bid: Long, n: Long,
-      batchBloom: BloomFilter): Unit = {
-    val fs = fsOf(spark, gen)
-    // version marker FIRST: a manifest row must never exist without its
-    // format recorded. Markers go through the shared helper, so a marker
-    // left empty by a kill between create and write reads as absent and is
-    // simply rewritten here — never a bricked third state.
-    val marker = new org.apache.hadoop.fs.Path(formatMarker(gen))
-    if (graft.util.Markers.read(fs, marker).isEmpty)
-      graft.util.Markers.write(fs, marker, FormatVersion)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(Row(bid, n, bloomBytes(batchBloom))), 1), manifestSchema)
-      .write.mode("append").parquet(manifestDir(gen))
-  }
+      batchBloom: BloomFilter): Unit =
+    VersionedTable.appendManifest(gen, spark.createDataFrame(
+      java.util.List.of(Row(bid, n, bloomBytes(batchBloom))), manifestSchema))
 
-  /** Append-time gate: replay classification compares content ids against
-    * the manifest, which is only sound when the manifest was written under
-    * THIS id formula (and carries this format's digest columns). Searches
-    * never classify replays, so they read the manifest without this check —
-    * a working index stays searchable across a format upgrade; only further
-    * appends demand a rebuild.
-    */
-  def requireFormatCurrent(spark: SparkSession, gen: String, what: String): Unit = {
-    val fs = fsOf(spark, gen)
-    if (fs.exists(new org.apache.hadoop.fs.Path(manifestDir(gen)))) {
-      val ver = graft.util.Markers.read(fs, new org.apache.hadoop.fs.Path(formatMarker(gen)))
-      require(ver.contains(FormatVersion),
-        s"$what: the delta manifest at ${manifestDir(gen)} was written under content-id " +
-          s"format ${ver.getOrElse("<unrecorded>")} but this build uses '$FormatVersion'; batch " +
-          "ids are not comparable across formats (a replay could be mis-classified); rebuild " +
-          "the index before appending (existing searches remain valid)")
-    }
-  }
-
-  def committed(spark: SparkSession, gen: String): Seq[Long] = {
-    val fs = fsOf(spark, gen)
-    val p = new org.apache.hadoop.fs.Path(manifestDir(gen))
-    if (!fs.exists(p)) Seq.empty
-    // explicit schema: a marker-only manifest (crash before the first
-    // batch row landed) must read as empty, not fail schema inference.
-    // No version gate here — see requireFormatCurrent: only appends
-    // compare content ids, searches just need the committed set.
-    else spark.read.schema(manifestIdSchema).parquet(manifestDir(gen))
-      .select("batch").distinct().collect().map(_.getLong(0)).toSeq
-  }
+  def committed(spark: SparkSession, gen: String): Seq[Long] =
+    VersionedTable.readManifest(spark, gen, manifestIdSchema).fold(Seq.empty[Long])(
+      _.select("batch").distinct().collect().map(_.getLong(0)).toSeq)
 
   /** Full manifest rows (id + digest) — the append path reads the manifest
     * exactly once through here and reuses it for the replay check, the
     * disjointness guard, and the delta filter.
     */
-  def committedManifest(spark: SparkSession, gen: String): Seq[ManifestRow] = {
-    val fs = fsOf(spark, gen)
-    val p = new org.apache.hadoop.fs.Path(manifestDir(gen))
-    if (!fs.exists(p)) Seq.empty
-    else spark.read.schema(manifestSchema).parquet(manifestDir(gen))
-      .collect().map(r => ManifestRow(r.getLong(0), r.getLong(1), r.getAs[Array[Byte]](2)))
-      .groupBy(_.bid).map(_._2.head).toSeq
-  }
+  def committedManifest(spark: SparkSession, gen: String): Seq[ManifestRow] =
+    VersionedTable.readManifest(spark, gen, manifestSchema).fold(Seq.empty[ManifestRow])(
+      _.collect().map(r => ManifestRow(r.getLong(0), r.getLong(1), r.getAs[Array[Byte]](2)))
+        .groupBy(_.bid).map(_._2.head).toSeq)
 
   /** Committed delta rows with the given columns, or None if no batch was
     * ever committed. `batches` is the committed set (`committed`, or the ids
@@ -273,11 +225,7 @@ private[operators] object DeltaBatches {
       existingIds: => DataFrame, what: String): BloomFilter = {
     val batchBloom = idBloom(batch.select(col("vec_id")), stats.n)
     val digests: Option[Seq[Array[Byte]]] =
-      readBaseBloomBytes(spark, gen).collect {
-        // a null digest would mean a manifest written by an older format —
-        // requireFormatCurrent already rejects that, but stay defensive
-        case base if manifest.forall(_.bloom != null) => base +: manifest.map(_.bloom)
-      }
+      readBaseBloomBytes(spark, gen).map(_ +: manifest.map(_.bloom))
     val provenDisjoint = digests.exists { ds =>
       import spark.implicits._
       val bc = spark.sparkContext.broadcast(ds.toArray)

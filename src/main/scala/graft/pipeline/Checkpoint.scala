@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.model.{Doc, Lineage}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -9,23 +9,37 @@ import org.apache.spark.storage.StorageLevel
 /** Resumable, idempotent extraction runs — Iceberg MERGE-on-doc_id semantics
   * over plain Parquet (the local jars carry no Iceberg runtime; SURVEY.md §4.2).
   *
+  * `outDir` is a [[VersionedTable]] root whose tip is tagged `spans-v1`;
+  * the first run installs it empty. The generation directory is the spans
+  * table, and its manifest holds the lineage:
+  * {{{
+  *   <outDir>/gen-N/grp=g/      spans parquet, partitioned by group
+  *   <outDir>/gen-N/_batches/   lineage rows + one marker row per group
+  * }}}
+  *
   * Group = `pmod(xxhash64(doc_id), numGroups)` — the stand-in for an Iceberg
   * partition. Commit unit = one run's set of todo groups, committed the way
   * one Iceberg overwrite snapshot replaces several partitions at once:
   *
   *   1. the spans of every todo group written in ONE dynamic partition-
-  *      overwrite job into `out/spans/grp=g` (job-level atomic; a killed job
+  *      overwrite job into `gen-N/grp=g` (job-level atomic; a killed job
   *      leaves nothing visible, a re-run *overwrites* the groups rather than
   *      appending → idempotent even if the previous run died between data
   *      commit and lineage commit);
   *   2. the lineage rows of every todo group, plus one marker row per group,
-  *      appended to `out/lineage` in ONE single-file append after the data
-  *      write returns (this append IS the groups' commit marker).
+  *      appended to the generation's manifest in ONE single-file append
+  *      after the data write returns ([[VersionedTable.appendManifest]]:
+  *      this append IS the groups' commit).
   *
-  * On resume, groups present in the lineage table are skipped entirely — the
+  * On resume, groups present in the manifest are skipped entirely — the
   * observable behavior of `MERGE INTO spans ON doc_id`: reprocessing a doc
   * never duplicates it, because extraction is deterministic and a group is
-  * rewritten wholesale.
+  * rewritten wholesale. Readers ([[readSpans]]) see only committed groups.
+  *
+  * `CompactMain` compacts the root into the next generation, manifest
+  * included. It is a writer too: a run racing a compaction of the same root
+  * commits into the superseded generation and its groups are lost to every
+  * later reader (they re-run on the next resume).
   *
   * A run touches its input once: `ExtractJob`'s kernel stage runs over the
   * docs of every group still to do, tagged with each doc's group, and is
@@ -51,8 +65,7 @@ import org.apache.spark.storage.StorageLevel
   */
 object Checkpoint {
 
-  def spansDir(outDir: String)   = s"$outDir/spans"
-  def lineageDir(outDir: String) = s"$outDir/lineage"
+  private val SpansFormat = "spans-v1"
 
   def groupOf(numGroups: Int, docId: Column = col("doc_id")): Column =
     pmod(xxhash64(docId), lit(numGroups.toLong))
@@ -60,9 +73,10 @@ object Checkpoint {
   /** The writer seam (SURVEY §7.1): Iceberg-style partition commit. A real
     * Iceberg catalog slots in by implementing `overwriteGroups` as a
     * dynamic partition overwrite and `commitGroups` as the snapshot commit
-    * that appends the groups' lineage rows; `doneGroups` reads the lineage
-    * table. The batch methods are the production path: `runResumable`
-    * calls each once per run, with DataFrames that carry a `grp` column.
+    * that appends the groups' lineage rows; `doneGroups` reads the
+    * committed lineage. The batch methods are the production path:
+    * `runResumable` calls each once per run, with DataFrames that carry a
+    * `grp` column.
     * The per-group methods serve writers that commit one group at a time
     * and decorators that time each group; the batch defaults loop over
     * them. The contract `runResumable` relies on:
@@ -90,18 +104,18 @@ object Checkpoint {
   }
 
   /** The production writer: plain parquet (the local jars carry no Iceberg
-    * runtime). One dynamic partition-overwrite job replaces all the given
-    * groups; one lineage append is the commit marker.
+    * runtime) into the `spans-v1` tip of `outDir`. One dynamic partition-
+    * overwrite job replaces all the given groups inside the generation; one
+    * manifest append is the commit.
     */
   final class ParquetSpanWriter(spark: SparkSession, outDir: String) extends SpanWriter {
 
-    override def doneGroups(): Set[Long] = {
-      val path = new org.apache.hadoop.fs.Path(lineageDir(outDir))
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(path)) Set.empty
-      else readLineage(spark, outDir)
-        .select("grp").distinct().collect().map(_.getLong(0)).toSet
-    }
+    // resolved on first use, so a run that fails its argument checks writes
+    // nothing; an empty root gets an empty spans-v1 generation
+    private lazy val gen: String = spansTip(spark, outDir).getOrElse(
+      VersionedTable.install(spark, outDir, tag = VersionedTable.Tag(SpansFormat))(_ => ()))
+
+    override def doneGroups(): Set[Long] = committedGroups(spark, gen)
 
     // Overwrite mode is scoped to THIS write (not session conf): a session-
     // wide dynamic mode would silently change the semantics of every other
@@ -111,10 +125,10 @@ object Checkpoint {
     // directory.
     override def overwriteGroups(grps: Seq[Long], spans: DataFrame): Unit =
       spans.write.mode(SaveMode.Overwrite).partitionBy("grp")
-        .option("partitionOverwriteMode", "dynamic").parquet(spansDir(outDir))
+        .option("partitionOverwriteMode", "dynamic").parquet(gen)
 
     override def commitGroups(grps: Seq[Long], lineage: DataFrame): Unit =
-      lineage.write.mode(SaveMode.Append).parquet(lineageDir(outDir))
+      VersionedTable.appendManifest(gen, lineage)
 
     override def overwriteGroup(grp: Long, spans: DataFrame): Unit =
       overwriteGroups(Seq(grp), spans.withColumn("grp", lit(grp)))
@@ -166,22 +180,47 @@ object Checkpoint {
       // resume re-runs them).
       val marker = Lineage(-1, 0L, 0L, 0L, "marker")
       val rows = lineage ++ todo.map(g => (g, marker))
-      // one partition: the run's few lineage rows land as one file
-      writer.commitGroups(todo,
-        spark.createDataset(rows).select($"_2.*", $"_1".as("grp")).coalesce(1))
+      writer.commitGroups(todo, spark.createDataset(rows).select($"_2.*", $"_1".as("grp")))
     } finally stage.unpersist()
     todo.size
   }
 
-  def readSpans(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(spansDir(outDir)).drop("grp")
+  /** The `spans-v1` tip of `outDir`, or None when the root has no
+    * committed generation. A tip of another format is refused.
+    */
+  private def spansTip(spark: SparkSession, outDir: String): Option[String] =
+    VersionedTable.resolveTagged(spark, outDir).map { case (gen, tag) =>
+      require(tag.format == SpansFormat, s"$outDir is not extraction output: its tip $gen " +
+        s"has format '${tag.format}', not $SpansFormat - use a fresh outDir")
+      gen
+    }
 
-  /** The lineage table's schema as `runResumable` writes it: the
-    * [[Lineage]] columns, then `grp`. Reading with it skips the one-task
+  private def committedGen(spark: SparkSession, outDir: String): String =
+    spansTip(spark, outDir).getOrElse(throw new IllegalArgumentException(
+      s"$outDir has no committed extraction output - run runResumable into it first"))
+
+  /** The tables' schemas as `runResumable` writes them: the [[Doc]] or
+    * [[Lineage]] columns, then `grp`. Reading with them skips the one-task
     * footer job that schema inference would start.
     */
+  private val spansSchema: StructType = Encoders.product[Doc].schema.add("grp", LongType)
   private val lineageSchema: StructType = Encoders.product[Lineage].schema.add("grp", LongType)
 
+  private def committedGroups(spark: SparkSession, gen: String): Set[Long] =
+    VersionedTable.readManifest(spark, gen, lineageSchema)
+      .fold(Set.empty[Long])(_.select("grp").distinct().collect().map(_.getLong(0)).toSet)
+
+  /** The spans of the committed groups only: a group whose data landed but
+    * whose lineage append did not stays invisible. The filter is on `grp`,
+    * so it prunes partitions.
+    */
+  def readSpans(spark: SparkSession, outDir: String): DataFrame = {
+    val gen = committedGen(spark, outDir)
+    spark.read.schema(spansSchema).parquet(gen)
+      .where(col("grp").isin(committedGroups(spark, gen).toSeq: _*)).drop("grp")
+  }
+
   def readLineage(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.schema(lineageSchema).parquet(lineageDir(outDir))
+    VersionedTable.readManifest(spark, committedGen(spark, outDir), lineageSchema)
+      .getOrElse(spark.createDataFrame(java.util.List.of[Row](), lineageSchema))
 }

@@ -6,18 +6,22 @@ import org.apache.spark.sql.SparkSession
   *
   *   spark-submit --class graft.pipeline.CompactMain \
   *     target/scala-2.13/ragdocumentparserspark_2.13-0.1.0.jar \
-  *     <tableDir> [targetFileMB] [partitionCol[,partitionCol...]]
+  *     <tableRoot> [targetFileMB] [partitionCol[,partitionCol...]]
   *
-  * Compacts a parquet table's small files into ~targetFileMB files via
-  * write-new + atomic swap (kill-safe: either the old or the new table is
-  * visible, never a mix). Pass the partition columns of a partitioned
-  * table (e.g. `grp` for a Checkpoint spans table) so the directory layout
-  * — and with it partition pruning — survives the rewrite.
+  * Compacts the committed tip of a [[VersionedTable]] root (an
+  * `ExtractMain` outDir, for one) into ~targetFileMB files, installed as
+  * the next generation with the tip's manifest carried over
+  * ([[VersionedTable.compact]]): readers of the old generation are
+  * undisturbed. Pass the partition columns of a partitioned table (e.g.
+  * `grp` for extraction output) so the directory layout — and with it
+  * partition pruning — survives the rewrite. A root with no committed
+  * generation fails before anything is written. The job is a writer of the
+  * root: an extraction run racing it loses its commit.
   */
 object CompactMain {
-  private val Usage = "usage: CompactMain <tableDir> [targetFileMB] [partitionCols]"
+  private val Usage = "usage: CompactMain <tableRoot> [targetFileMB] [partitionCols]"
 
-  /** `(tableDir, targetFileMB, partitionCols)`; bad arguments fail with the
+  /** `(tableRoot, targetFileMB, partitionCols)`; bad arguments fail with the
     * usage line.
     */
   private[pipeline] def parseArgs(args: Array[String]): (String, Int, Seq[String]) = {
@@ -27,7 +31,7 @@ object CompactMain {
   }
 
   def main(args: Array[String]): Unit = {
-    val (dir, targetMb, partCols) = parseArgs(args)
+    val (root, targetMb, partCols) = parseArgs(args)
 
     val spark = SparkSession.builder()
       .appName("graft-compact")
@@ -35,8 +39,8 @@ object CompactMain {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val r = Compact.compact(spark, dir, targetMb.toLong * 1024 * 1024, partCols)
-    println(s"[compact] $dir: ${r.filesBefore} files -> ${r.filesAfter} " +
+    val r = VersionedTable.compact(spark, root, targetMb.toLong * 1024 * 1024, partCols)
+    println(s"[compact] $root: ${r.filesBefore} files -> ${r.filesAfter} " +
       s"(${r.bytes} bytes${if (partCols.nonEmpty) s", partitions preserved: ${partCols.mkString(",")}" else ""})")
     spark.stop()
   }

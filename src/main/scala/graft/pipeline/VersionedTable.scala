@@ -1,54 +1,67 @@
 package graft.pipeline
 
-import graft.util.Markers
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Generation-versioned parquet table — the snapshot half of an Iceberg
   * table re-expressed over a plain directory, built so MAINTENANCE REWRITES
-  * ARE INVISIBLE TO CONCURRENT READERS (the gap `Compact.compact`'s rename
-  * swap cannot close; see ADVICE on the absent-path window). Its
-  * `reuseOrInstall` is the "reuse or rebuild by input identity" protocol of
+  * ARE INVISIBLE TO CONCURRENT READERS. Its `reuseOrInstall` is the "reuse
+  * or rebuild by input identity" protocol of
   * [[graft.operators.DedupState]] (the persisted LSH band/signature state),
   * `DedupOps.curationRunStaged` (CurateMain's durable feature stage) and
   * [[ExportMain]]; its `install` commits every rebuild of the persisted ANN
-  * index ([[graft.operators.AnnIndex]]). It is the only commit protocol for
-  * tables rebuilt from scratch.
+  * index ([[graft.operators.AnnIndex]]) and the empty generation a
+  * resumable extraction ([[Checkpoint]]) starts from. It is the only commit
+  * protocol in the engine: rebuilds install generations, and appends into a
+  * generation commit through its manifest.
   *
   * Layout:
   * {{{
   *   <root>/gen-00000001/  ... data + _committed marker
-  *   <root>/gen-00000002/  ... data + _committed marker
+  *   <root>/gen-00000002/  ... data + _batches/ manifest + _committed marker
   * }}}
   *
   * The directory name deliberately uses `gen-N`, not `gen=N`: Spark's
   * partition discovery claims ANY `name=value` directory as a partition
   * column, even when it is meant as plumbing.
   *
-  * Commit protocol (marker-after-data, same rule as `DeltaBatches`' batch
-  * manifest): a writer creates the next `gen-N` directory, writes data
-  * into it, and only then writes the non-empty `_committed` marker
-  * ([[Markers]] — an empty marker, the footprint of a kill mid-create,
-  * reads as absent). The marker records the generation's [[Tag]]: the
-  * writer's format and the digest of the input it was built from.
-  * Readers resolve the HIGHEST committed generation (of their format); a
-  * crashed install is an uncommitted directory no reader ever sees, swept
-  * by the next successful install.
+  * Install (marker-after-data): a writer creates the next `gen-N`
+  * directory, writes data into it, and only then writes the non-empty
+  * `_committed` marker (an empty marker, the footprint of a kill
+  * mid-create, reads as absent). The marker records the generation's
+  * [[Tag]]: the writer's format and the digest of the input it was built
+  * from. Readers resolve the HIGHEST committed generation (of their
+  * format); a crashed install is an uncommitted directory no reader ever
+  * sees, swept by the next successful install.
   *
-  * Why this closes the swap gap: installation never touches the live
-  * generation — the old directory stays readable, byte-identical, until
-  * retention removes it. A reader that resolved gen N keeps reading gen N
-  * while gen N+1 commits; the next resolve sees N+1. There is no instant
-  * at which `resolve` can observe a missing or partially-written table.
+  * Append (manifest-after-data, the Iceberg append snapshot): a committed
+  * generation is immutable except for manifest-committed appends by its
+  * single writer. The writer puts an append's data files into the
+  * generation, then `appendManifest` adds the append's rows (its key and
+  * payload: a group's lineage, a batch id and its digest) to the
+  * generation's `_batches` manifest as one file. That file is the commit;
+  * readers consult `readManifest` and see only committed appends. The
+  * `_` prefix keeps the manifest out of `spark.read.parquet(gen)`. Its row
+  * layout belongs to the generation's format: a layout change bumps the
+  * [[Tag]] format.
+  *
+  * Reader safety: installation never touches the live generation — the
+  * old directory stays readable, byte-identical, until retention removes
+  * it. A reader that resolved gen N keeps reading gen N while gen N+1
+  * commits; the next resolve sees N+1. There is no instant at which
+  * `resolve` can observe a missing or partially-written table, and no
+  * maintenance job renames a path away.
   *
   * Retention: `install`/`compact` keep the newest `keepGenerations`
   * committed generations (default 2) and drop older ones plus any stale
   * uncommitted debris. As with Iceberg's `expire_snapshots`, a reader must
   * finish within the retention horizon — one full rewrite cycle by default.
   *
-  * Single-writer per root (same contract as `DeltaBatches`): two concurrent
-  * installs could allocate the same generation number. Readers are
-  * unrestricted.
+  * Single writer per root: two concurrent installs could allocate the same
+  * generation number, and an append into gen N that races an install of
+  * gen N+1 (a rebuild, a compaction) lands in the superseded generation, so
+  * its commit is lost to every later reader. Readers are unrestricted.
   */
 object VersionedTable {
 
@@ -62,6 +75,24 @@ object VersionedTable {
   private val GenRe = "^gen-(\\d{8})$".r
   private def genName(n: Int): String = f"gen-$n%08d"
   private def marker(gen: Path): Path = new Path(gen, "_committed")
+
+  /** A marker's trimmed value, or None when it is absent or empty: a marker
+    * that exists but is empty, the footprint of a kill between create and
+    * write, reads as absent, never as a third state.
+    */
+  private def readMarker(fs: FileSystem, path: Path): Option[String] =
+    if (!fs.exists(path)) None
+    else {
+      val in = fs.open(path)
+      val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+      finally in.close()
+      Option(raw).filter(_.nonEmpty)
+    }
+
+  private def writeMarker(fs: FileSystem, path: Path, value: String): Unit = {
+    val out = fs.create(path, true)
+    try out.write(value.getBytes("UTF-8")) finally out.close()
+  }
 
   private def fsOf(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -77,7 +108,7 @@ object VersionedTable {
         case st if st.isDirectory =>
           st.getPath.getName match {
             case GenRe(n) =>
-              val tag = Markers.read(fs, marker(st.getPath)).map { v =>
+              val tag = readMarker(fs, marker(st.getPath)).map { v =>
                 val f = v.split("\n", -1).lift
                 Tag(f(1).getOrElse(""), f(2).getOrElse(""))
               }
@@ -123,12 +154,30 @@ object VersionedTable {
     val genDir = new Path(rootPath, genName(next))
     fs.delete(genDir, true) // stale debris from a crashed prior install
     write(genDir.toString)
-    Markers.write(fs, marker(genDir), Seq(next.toString, tag.format, tag.input).mkString("\n"))
+    writeMarker(fs, marker(genDir), Seq(next.toString, tag.format, tag.input).mkString("\n"))
     prune(fs, rootPath, keepGenerations)
     // filesystem-qualified, matching what resolve returns (listStatus paths
     // carry the scheme; an unqualified sibling string would compare unequal)
     fs.makeQualified(genDir).toString
   }
+
+  /** The manifest of generation `gen`: its committed appends. */
+  def manifestDir(gen: String): String = s"$gen/_batches"
+
+  /** Commit an append into generation `gen`: `rows` land in its manifest
+    * as ONE parquet file, which is the append's commit. The caller has
+    * written the append's data into `gen` before.
+    */
+  def appendManifest(gen: String, rows: DataFrame): Unit =
+    rows.coalesce(1).write.mode(SaveMode.Append).parquet(manifestDir(gen))
+
+  /** The committed manifest rows of `gen`, read with the caller's declared
+    * `schema` (no schema-inference job), or None when nothing was ever
+    * appended: a caller with an empty manifest plans no query at all.
+    */
+  def readManifest(spark: SparkSession, gen: String, schema: StructType): Option[DataFrame] =
+    Option.when(fsOf(spark, gen).exists(new Path(manifestDir(gen))))(
+      spark.read.schema(schema).parquet(manifestDir(gen)))
 
   /** Reuse the committed tip if it is of `format` and was built from this
     * input, else install a new generation from it. Only the newest committed
@@ -191,11 +240,12 @@ object VersionedTable {
     }
   }
 
-  /** Reader-safe compaction: rewrite the current generation into the next
-    * one at ~targetFileBytes per file (same redistribution as
-    * [[Compact.compact]], including the per-partition salt budget), commit
+  /** Reader-safe compaction (the Iceberg `rewrite_data_files` action):
+    * rewrite the tip's data into the next generation at ~targetFileBytes
+    * per file ([[Compact.rewrite]]), copy the tip's manifest into it, commit
     * with the tip's tag carried forward, prune. Concurrent readers of the
-    * old generation are undisturbed.
+    * old generation are undisturbed. Like every install it is a writer: an
+    * append into the tip that races it is lost (see the object doc).
     */
   def compact(
       spark: SparkSession,
@@ -203,11 +253,16 @@ object VersionedTable {
       targetFileBytes: Long = 128L * 1024 * 1024,
       partitionBy: Seq[String] = Nil,
       keepGenerations: Int = 2): Compact.Result = {
-    val (cur, tag) = tip(fsOf(spark, root), root, None).getOrElse(
+    val fs = fsOf(spark, root)
+    val (cur, tag) = tip(fs, root, None).getOrElse(
       sys.error(s"versioned table $root has no committed generation to compact"))
     var stats = (0, 0L)
     val installed = install(spark, root, keepGenerations, tag) { dest =>
       stats = Compact.rewrite(spark, cur.toString, dest, targetFileBytes, partitionBy)
+      val manifest = new Path(manifestDir(cur.toString))
+      if (fs.exists(manifest))
+        FileUtil.copy(fs, manifest, fs, new Path(manifestDir(dest)), false,
+          spark.sparkContext.hadoopConfiguration)
     }
     Compact.Result(stats._1, Compact.countDataFiles(spark, installed), stats._2)
   }

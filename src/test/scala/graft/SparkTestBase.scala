@@ -16,6 +16,38 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     graft.pipeline.VersionedTable.resolve(spark, root)
       .map(new org.apache.hadoop.fs.Path(_).toUri.getPath)
       .getOrElse(fail(s"no committed generation under $root"))
+
+  /** `body`'s result and the number of Spark jobs it started. A listener
+    * sees job starts in submission order, so the start of a sentinel job
+    * submitted after `body` means every one of its jobs was seen.
+    */
+  def jobsDuring[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.jobCount"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some("body")     => jobs.incrementAndGet(); ()
+          case Some("sentinel") => drained.countDown()
+          case _                => ()
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setLocalProperty(key, "body")
+      val result = body
+      sc.setLocalProperty(key, "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never drained")
+      (result, jobs.get())
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(l)
+    }
+  }
 }
 
 object SparkTestBase {

@@ -234,7 +234,7 @@ class PipelineSpec extends SparkTestBase {
   test("a run commits every group's lineage in one file") {
     val docs = DocSynth.docs(spark, sfDir)
     def lineageFiles(dir: String): Seq[String] =
-      new java.io.File(Checkpoint.lineageDir(dir)).listFiles().map(_.getName).toSeq
+      new java.io.File(VersionedTable.manifestDir(tip(dir))).listFiles().map(_.getName).toSeq
         .filterNot(n => n.startsWith("_") || n.startsWith("."))
     val dir = Files.createTempDirectory("graft-resume-lineage").toString
     assert(Checkpoint.runResumable(docs, dir, numGroups = 8) == 8)
@@ -263,36 +263,12 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("a fresh run starts as many Spark jobs at 2 groups as at 8") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val docs = DocSynth.docs(spark, sfDir)
-    val sc = spark.sparkContext
-    val key = "graft.test.jobCount"
     def jobsOf(numGroups: Int): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val drained = new java.util.concurrent.CountDownLatch(1)
-      // a listener sees job starts in submission order, so the start of a
-      // sentinel job submitted after the run means every run job was seen
-      val l = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
-            case Some("run")      => jobs.incrementAndGet(); ()
-            case Some("sentinel") => drained.countDown()
-            case _                => ()
-          }
-      }
-      sc.addSparkListener(l)
-      try {
-        val dir = Files.createTempDirectory(s"graft-jobs-$numGroups").toString
-        sc.setLocalProperty(key, "run")
-        assert(Checkpoint.runResumable(docs, dir, numGroups = numGroups) == numGroups)
-        sc.setLocalProperty(key, "sentinel")
-        sc.parallelize(Seq(1), 1).count()
-        assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never drained")
-        jobs.get()
-      } finally {
-        sc.setLocalProperty(key, null)
-        sc.removeSparkListener(l)
-      }
+      val dir = Files.createTempDirectory(s"graft-jobs-$numGroups").toString
+      val (done, jobs) = jobsDuring(Checkpoint.runResumable(docs, dir, numGroups = numGroups))
+      assert(done == numGroups)
+      jobs
     }
     val (two, eight) = (jobsOf(2), jobsOf(8))
     assert(two > 0 && two == eight, s"jobs: $two at 2 groups, $eight at 8 groups")

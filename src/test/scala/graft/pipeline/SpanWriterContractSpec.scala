@@ -120,14 +120,11 @@ class SpanWriterContractSpec extends SparkTestBase {
     buf.toSeq
   }
 
-  private def readParquetGroupDocs(out: String)(g: Long): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(Checkpoint.spansDir(out))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else spark.read.parquet(Checkpoint.spansDir(out))
+  /** Group g's doc_ids in the tip's span data, committed or not. */
+  private def readParquetGroupDocs(out: String)(g: Long): Seq[String] =
+    spark.read.parquet(tip(out))
       .where(org.apache.spark.sql.functions.col("grp") === g)
       .select("doc_id").as[String].collect().toSeq
-  }
 
   test("ParquetSpanWriter satisfies the full SpanWriter contract") {
     val out = Files.createTempDirectory("graft-spanwriter").toString
@@ -141,12 +138,38 @@ class SpanWriterContractSpec extends SparkTestBase {
     val writer = new Checkpoint.ParquetSpanWriter(spark, out)
     // every file of the group's directory, byte for byte
     def groupFiles(g: Long): Map[String, Seq[Byte]] =
-      Option(new java.io.File(s"${Checkpoint.spansDir(out)}/grp=$g").listFiles())
+      Option(new java.io.File(s"${tip(out)}/grp=$g").listFiles())
         .fold(Map.empty[String, Seq[Byte]])(_.map(f => f.getName ->
           Files.readAllBytes(f.toPath).toSeq).toMap)
     val v = batchViolations(writer, readParquetGroupDocs(out), groupFiles)
     assert(v.isEmpty, s"contract violations: ${v.mkString("; ")}")
     assert(groupFiles(3L).keys.exists(_.endsWith(".parquet")), groupFiles(3L).keys.mkString(", "))
+  }
+
+  test("readSpans returns only committed groups; a fresh generation reads empty without a job") {
+    val out = Files.createTempDirectory("graft-readspans").toString
+    val writer = new Checkpoint.ParquetSpanWriter(spark, out)
+    assert(writer.doneGroups().isEmpty) // installs the empty spans-v1 generation
+    val (fresh, jobs) = jobsDuring(Checkpoint.readSpans(spark, out).collect())
+    assert(fresh.isEmpty && jobs == 0, s"${fresh.length} rows, $jobs jobs")
+    def visible: Seq[String] =
+      Checkpoint.readSpans(spark, out).select("doc_id").as[String].collect().sorted.toSeq
+    writer.overwriteGroups(Seq(1L, 2L), groupedSpans(1L -> Seq("a", "b"), 2L -> Seq("c")))
+    assert(visible.isEmpty, "spans visible before their lineage append")
+    writer.commitGroups(Seq(1L), groupedLineage(1L -> 2L))
+    assert(visible == Seq("a", "b"), "group 2's uncommitted spans are visible")
+    writer.commitGroups(Seq(2L), groupedLineage(2L -> 1L))
+    assert(visible == Seq("a", "b", "c"))
+  }
+
+  test("ParquetSpanWriter refuses a root whose tip has another format") {
+    val out = Files.createTempDirectory("graft-spanwriter-foreign").toString
+    VersionedTable.install(spark, out, tag = VersionedTable.Tag("export-v1/shards=2")) { gen =>
+      spark.range(3).write.parquet(gen)
+    }
+    val e = intercept[IllegalArgumentException](new Checkpoint.ParquetSpanWriter(spark, out).doneGroups())
+    assert(e.getMessage.contains("export-v1/shards=2") && e.getMessage.contains("fresh outDir") &&
+      e.getMessage.forall(_ < 128), e.getMessage)
   }
 
   /** Faulty by design: overwriteGroup APPENDS — the bug a naive
