@@ -184,6 +184,11 @@ object AnnIndex {
   private def codebooksDir(gen: String) = s"$gen/_codebooks"
   def cellsDir(gen: String): String      = s"$gen/cells"
 
+  /** The generation's persisted centroid table `(cell, centroid)`. */
+  private def centroids(spark: SparkSession, gen: String): DataFrame =
+    VersionedTable.readHidden(spark, centroidsDir(gen))
+      .getOrElse(sys.error(s"index generation $gen has no centroids"))
+
   /** Assigned rows `(vec_id, cell, embedding)` in the generation's payload:
     * unchanged for `Flat`, PQ-encoded to `(vec_id, cell, codes)` for `Pq`.
     */
@@ -218,7 +223,7 @@ object AnnIndex {
           PqIndex.saveCodebooks(spark, cb, codebooksDir(gen))
           Some(cb)
       }
-      encode(assignTo(embeddings, spark.read.parquet(centroidsDir(gen))), codebooks)
+      encode(assignTo(embeddings, centroids(spark, gen)), codebooks)
         .write.partitionBy("cell").parquet(cellsDir(gen))
       // a committed index always carries its base id digest, so appends
       // never pay an O(index) duplicate scan
@@ -293,7 +298,7 @@ object AnnIndex {
     // (real duplicate or bloom false positive)
     val batchBloom = DeltaBatches.guardDisjoint(spark, gen, newVectors, stats, manifest,
       rows(spark, gen, Seq("vec_id"), manifest.map(_.bid)), what)
-    encode(assignTo(newVectors, spark.read.parquet(centroidsDir(gen))), codebooks)
+    encode(assignTo(newVectors, centroids(spark, gen)), codebooks)
       .write.mode("overwrite").partitionBy("cell")
       .option("partitionOverwriteMode", "static")
       .parquet(s"${DeltaBatches.deltaDir(gen)}/batch=$bid")
@@ -310,7 +315,7 @@ object AnnIndex {
     */
   private[operators] def probe(spark: SparkSession, gen: String, query: Array[Float],
       nprobe: Int): Seq[Long] =
-    spark.read.parquet(centroidsDir(gen)).collect()
+    centroids(spark, gen).collect()
       .map { r =>
         val cv = r.getSeq[Float](1)
         var s = 0.0; var i = 0

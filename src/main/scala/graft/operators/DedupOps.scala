@@ -20,35 +20,9 @@ import org.apache.spark.sql.functions._
   */
 object DedupOps {
 
-  import Idioms.{h60Spark, h60Duck, toksSpark, toksDuck}
-
-  /** `q_quality_score`'s composite in EXACT integer micro units (×1e6),
-    * defined ONCE for both engines: 0.7·min(words,100)/100 becomes
-    * min(words,100)·7000 and 0.3·(1−stops/words) becomes
-    * ((words−stops)·300000) div words. bigint throughout on the Spark
-    * side — size() is 32-bit Int and (words−stops)·300000 wraps past
-    * ~7k tokens. `MiningOpsSpec` cross-checks the micro value against the
-    * double-valued `TextAnalysisOps.qualityOverToks` definition.
-    */
-  private[graft] val qualityMicroSpark =
-    s"least(cast(size($toksSpark) as bigint), 100) * 7000 + " +
-      s"((cast(size($toksSpark) as bigint) - " +
-      s"cast(size(filter($toksSpark, t -> t IN ('the', 'a'))) as bigint)) * 300000) " +
-      s"div cast(size($toksSpark) as bigint)"
-  private[graft] val qualityMicroDuck =
-    s"least(len($toksDuck), 100) * 7000 + " +
-      s"((len($toksDuck) - len(list_filter($toksDuck, t -> t IN ('the', 'a')))) * 300000) " +
-      s"// len($toksDuck)"
-
-  // 3-gram word shingles — Spark side computed over a *staged* `toks`
-  // column: inlining the split() into the lambda would re-evaluate it per
-  // array element (O(L²) per doc; measured 13-23s vs <2s at sf0.1).
-  private val shinglesFromToks =
-    "transform(sequence(1, size(toks) - 2)," +
-      " i -> concat_ws(' ', element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2)))"
-  private val shinglesDuck =
-    s"list_transform(generate_series(1, len($toksDuck) - 2)," +
-      s" i -> array_to_string(($toksDuck)[i:i+2], ' '))"
+  import Idioms.{h60Spark, h60Duck, toksSpark, toksDuck, stopCountSpark, stopCountDuck,
+    qualitySpark, qualityDuck, qualityMicroSpark, qualityMicroDuck, shinglesSpark, shinglesDuck,
+    splitSpark, splitDuck}
 
   /** LSH tuning knobs. Capture probability for Jaccard s is
     * 1 - (1 - s^RowsPerBand)^NumBands; with (2 bands × 4 rows) the S-curve
@@ -72,7 +46,11 @@ object DedupOps {
   // bit-identical to the portable per-j form below, which remains the
   // oracle text; see MinHashSigsSpec for the equality gate)
   private val mhSparkAll = s"minhash_sigs(shingles, $NumHashes)"
+  /** The `sigs` array column split into the `mh0..mh{NumHashes-1}` columns. */
+  private def mhCols: Seq[org.apache.spark.sql.Column] =
+    (0 until NumHashes).map(j => col("sigs")(j).as(s"mh$j"))
   private def mhDuck(j: Int)  = s"list_min(list_transform(shingles, s -> ${h60Duck(s"s || '#$j'")}))"
+  private val mhDuckCols = (0 until NumHashes).map(j => s"${mhDuck(j)} AS mh$j").mkString(", ")
 
   /** (band index, band-hash expr) per band — the expression string is valid
     * in BOTH engines, so the bucketing can never silently diverge.
@@ -108,16 +86,16 @@ object DedupOps {
     docs
       .withColumn("toks", expr(toksSpark))
       .where(expr("size(toks) >= 3"))
-      .withColumn("shingles", expr(s"array_distinct($shinglesFromToks)"))
+      .withColumn("shingles", expr(s"array_distinct($shinglesSpark)"))
       .withColumn("sigs", expr(mhSparkAll))
-      .select(orig ++ (0 until NumHashes).map(j => col("sigs")(j).as(s"mh$j")): _*)
+      .select(orig ++ mhCols: _*)
       .select(orig :+ posexplode(array(bandDefs.map { case (_, h) => expr(h) }: _*))
         .as(Seq("band", "bh")): _*)
   }
 
   private val sigDuckCte =
     s"""sig AS (
-       |  SELECT doc_id, ${(0 until NumHashes).map(j => s"${mhDuck(j)} AS mh$j").mkString(", ")}
+       |  SELECT doc_id, $mhDuckCols
        |  FROM (SELECT doc_id, $shinglesDuck AS shingles FROM documents WHERE len($toksDuck) >= 3))""".stripMargin
 
   /** Signature table derived from the barrier'd distinct-shingle table —
@@ -135,7 +113,7 @@ object DedupOps {
   private[graft] def sigFromShingles(sh: org.apache.spark.sql.DataFrame) =
     sh.select(col("doc_id"), expr(s"minhash_sigs(sh, $NumHashes)").as("sigs"))
       .groupBy(col("doc_id")).agg(first(col("sigs")).as("sigs"))
-      .select(col("doc_id") +: (0 until NumHashes).map(j => col("sigs")(j).as(s"mh$j")): _*)
+      .select(col("doc_id") +: mhCols: _*)
 
   private[graft] def sigSpark(s: org.apache.spark.sql.SparkSession, dir: String) = {
     graft.functions.GraftFunctions.ensure(s)
@@ -160,7 +138,7 @@ object DedupOps {
     (if (spread) Tables.spreadSmall(base, col("doc_id")) else base)
       .select(col("doc_id"), expr(toksSpark).as("toks"))
       .where(expr("size(toks) >= 3"))
-      .select(col("doc_id"), expr(s"array_distinct($shinglesFromToks)").as("sh"))
+      .select(col("doc_id"), expr(s"array_distinct($shinglesSpark)").as("sh"))
       .groupBy(col("doc_id")).agg(first(col("sh")).as("sh"))
   }
 
@@ -208,11 +186,27 @@ object DedupOps {
       .distinct()
   }
 
+  /** The exact-Jaccard verify: the candidate pairs whose distinct shingle
+    * sets (column `shCol` of the doc_id-keyed table `sh`) have n-gram
+    * Jaccard ≥ 0.5, as `(doc_a, doc_b, jaccard)` with the score rounded to
+    * 4 places (a consumer that drops it prunes the rounding away). The
+    * Spark twin of the `pairs` CTE in [[verifiedPairsDuckCtes]].
+    */
+  private def jaccardVerifiedSpark(cand: DataFrame, sh: DataFrame, shCol: String): DataFrame = {
+    val jac = size(array_intersect(col(s"x.$shCol"), col(s"y.$shCol"))).cast("double") /
+      size(array_union(col(s"x.$shCol"), col(s"y.$shCol"))).cast("double")
+    cand.join(sh.as("x"), col("x.doc_id") === col("doc_a"))
+      .join(sh.as("y"), col("y.doc_id") === col("doc_b"))
+      .where(jac >= 0.5)
+      .select(col("doc_a"), col("doc_b"), round(jac, 4).as("jaccard"))
+  }
+
   /** Verified near-dup pairs — the dedup pipeline's core: LSH candidates
-    * (band equi-join over the barrier'd signature table) → exact n-gram
-    * Jaccard ≥ 0.5. The Spark twin of [[verifiedPairsDuckCtes]]' `pairs`
-    * CTE; every consumer of that chain (pipeline, clusters, keep-best,
-    * dup-rate, curation) reads this one implementation.
+    * ([[lshCandidatesSpark]] over the barrier'd signature table) → exact
+    * n-gram Jaccard ≥ 0.5 ([[jaccardVerifiedSpark]]). The Spark twin of
+    * [[verifiedPairsDuckCtes]]' `pairs` CTE, read by the pipeline,
+    * clusters, keep-best and dup-rate operators; curation composes the
+    * same two helpers over its staged doc-feature table.
     */
   private def verifiedPairsSpark(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     // ONE barrier'd shingle table: the signature branch and both verify
@@ -220,14 +214,37 @@ object DedupOps {
     // shingle pass runs once and the other references are ReusedExchange
     // (plan-gated; previously sig and shingles were two separate scans).
     val sh = shingleSetSpark(s, dir)
-    val cand = lshCandidatesSpark(sigFromShingles(sh))
-    val jac = size(array_intersect(col("x.sh"), col("y.sh"))).cast("double") /
-      size(array_union(col("x.sh"), col("y.sh"))).cast("double")
-    cand.join(sh.as("x"), col("x.doc_id") === col("doc_a"))
-      .join(sh.as("y"), col("y.doc_id") === col("doc_b"))
-      .where(jac >= 0.5)
-      .select(col("doc_a"), col("doc_b"), round(jac, 4).as("jaccard"))
+    jaccardVerifiedSpark(lshCandidatesSpark(sigFromShingles(sh)), sh, "sh")
   }
+
+  /** The benchmark holdout: doc_id % 97 = 0. */
+  private def benchSpark: org.apache.spark.sql.Column = col("doc_id") % 97 === 0
+  private val benchDuck = "doc_id % 97 = 0"
+
+  /** Benchmark decontamination matches `(shingle, doc_id)`: every shingle
+    * of a training doc (column `shCol` of the doc_id-keyed table `sh`)
+    * that also occurs in a [[benchSpark]] holdout doc. The benchmark is
+    * always tiny next to the corpus, so its distinct-shingle set
+    * BROADCASTS and the match is a map-side hash join over the exploded
+    * training shingles — no shuffle of the corpus. `q_decontaminate`
+    * counts the matches; curation takes their distinct doc_ids.
+    */
+  private def benchMatchesSpark(sh: DataFrame, shCol: String): DataFrame = {
+    val bench = sh.where(benchSpark).select(explode(col(shCol)).as("shingle")).distinct()
+    sh.where(!benchSpark)
+      .select(col("doc_id"), explode(col(shCol)).as("shingle"))
+      .join(broadcast(bench), "shingle")
+  }
+
+  /** DuckDB twin of [[benchMatchesSpark]] over the `sh` CTE ([[shDuckCte]]):
+    * `bench_hits(doc_id, shingle)`.
+    */
+  private val benchMatchesDuckCtes =
+    s"""bench AS (SELECT DISTINCT unnest(sh) AS shingle FROM sh WHERE $benchDuck),
+       |bench_hits AS (
+       |  SELECT t.doc_id, t.shingle
+       |  FROM (SELECT doc_id, unnest(sh) AS shingle FROM sh WHERE NOT ($benchDuck)) t
+       |  JOIN bench b ON b.shingle = t.shingle)""".stripMargin
 
   /** Exact-substring dedup tuning (the Lee et al. 2022 "Deduplicating
     * Training Data Makes Language Models Better" family, re-expressed
@@ -374,6 +391,22 @@ object DedupOps {
        |  HAVING max(pa) - min(pa) + $SubK >= $SubMinRun)""".stripMargin
   }
 
+  /** The distinct-shingle-set CTE `sh(doc_id, sh)` of every doc with
+    * >= 3 tokens — the DuckDB twin of [[shingleSetSpark]].
+    */
+  private val shDuckCte =
+    s"""sh AS (SELECT doc_id, list_distinct($shinglesDuck) AS sh
+       |       FROM documents WHERE len($toksDuck) >= 3)""".stripMargin
+
+  /** DuckDB twin of [[lshCandidatesSpark]]: `sig → bands → cand(doc_a, doc_b)`. */
+  private def lshCandidatesDuckCtes: String =
+    s"""$sigDuckCte,
+       |bands AS (
+       |  $bandsDuckSql),
+       |cand AS (
+       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id)""".stripMargin
+
   /** Verified near-dup pair CTE chain — `sig → bands → cand → sh →
     * pairs(doc_a, doc_b, jaccard)` — the DuckDB twin of
     * [[verifiedPairsSpark]], factored to ONE copy: five oracles read the
@@ -382,14 +415,8 @@ object DedupOps {
     * silently desynchronize an oracle from the Spark side it checks.
     */
   private def verifiedPairsDuckCtes: String =
-    s"""$sigDuckCte,
-       |bands AS (
-       |  $bandsDuckSql),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
-       |sh AS (SELECT doc_id, list_distinct($shinglesDuck) AS sh
-       |       FROM documents WHERE len($toksDuck) >= 3),
+    s"""$lshCandidatesDuckCtes,
+       |$shDuckCte,
        |pairs AS (
        |  SELECT c.doc_a, c.doc_b,
        |    round(CAST(len(list_intersect(x.sh, y.sh)) AS DOUBLE) /
@@ -412,22 +439,22 @@ object DedupOps {
        |lbl AS (SELECT u AS doc_id, least(u, min(v)) AS cluster FROM reach GROUP BY u)""".stripMargin
 
   /** The curation pipeline's CTE chain, shared by the `q_curation_pipeline`
-    * and `q_curation_funnel` oracles (callers prepend WITH RECURSIVE).
+    * and `q_curation_funnel` oracles (callers prepend WITH RECURSIVE). It
+    * composes the same definitions the operators' oracles use: the
+    * verified pairs of [[verifiedPairsDuckCtes]], the decontamination
+    * matches of [[benchMatchesDuckCtes]], and the `Idioms` quality
+    * composite, stop count and shingle — the DuckDB side of
+    * [[verdictsFrom]].
     */
   private def curationDuckCtes: String =
     s"""$verifiedPairsDuckCtes,
        |$ccLblDuckCtes,
        |dup_drops AS (SELECT doc_id FROM lbl WHERE cluster <> doc_id),
-       |bench AS (SELECT DISTINCT unnest(sh) AS shingle FROM sh WHERE doc_id % 97 = 0),
-       |contaminated AS (
-       |  SELECT DISTINCT t.doc_id
-       |  FROM (SELECT doc_id, unnest(sh) AS shingle FROM sh WHERE doc_id % 97 <> 0) t
-       |  JOIN bench b ON b.shingle = t.shingle),
+       |$benchMatchesDuckCtes,
+       |contaminated AS (SELECT DISTINCT doc_id FROM bench_hits),
        |scored AS (
        |  SELECT doc_id, lang,
-       |    (CAST(least(len($toksDuck), 100) AS DOUBLE) / 100.0) * 0.7 +
-       |    (1.0 - CAST(len(list_filter($toksDuck, t -> t IN ('the', 'a'))) AS DOUBLE) /
-       |           CAST(len($toksDuck) AS DOUBLE)) * 0.3 AS quality,
+       |    ${qualityDuck(s"len($toksDuck)", stopCountDuck(toksDuck))} AS quality,
        |    1.0 - CAST(len(list_distinct($shinglesDuck)) AS DOUBLE) /
        |          CAST(len($toksDuck) - 2 AS DOUBLE) AS dup_frac
        |  FROM documents WHERE len($toksDuck) >= 3)""".stripMargin
@@ -443,8 +470,8 @@ object DedupOps {
       .where(expr("size(toks) >= 3"))
       .select(col("doc_id"), col("lang"),
         expr("size(toks)").as("n_toks"),
-        expr("size(filter(toks, t -> t IN ('the', 'a')))").as("n_stops"),
-        expr(s"array_distinct($shinglesFromToks)").as("shingles"))
+        expr(stopCountSpark("toks")).as("n_stops"),
+        expr(s"array_distinct($shinglesSpark)").as("shingles"))
   }
 
   private def verdicts(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
@@ -455,45 +482,33 @@ object DedupOps {
     * five cumulative funnel flags `f_bench, f_quality, f_rep, f_cont,
     * f_dup`. The curated table is the AND of the flags and the funnel is
     * one conditional aggregate over them, so each predicate is stated once
-    * and both outputs read the same table. The anti joins of the stage
-    * predicates are left joins + null tests here: doc_ids are unique on
-    * both sides, so no fanout and identical membership.
+    * and both outputs read the same table. The stages compose the shared
+    * definitions ([[lshCandidatesSpark]], [[jaccardVerifiedSpark]],
+    * [[benchMatchesSpark]], `Idioms.qualitySpark`); their DuckDB twins
+    * make up [[curationDuckCtes]]. The anti joins of the stage predicates
+    * are left joins + null tests here: doc_ids are unique on both sides, so
+    * no fanout and identical membership.
     */
   private def verdictsFrom(base: DataFrame): DataFrame = {
+    // signatures straight off the staged table: sigFromShingles' Aggregate
+    // barrier would add an exchange over it
     val sig = base.select(col("doc_id"), expr(mhSparkAll).as("sigs"))
-      .select(col("doc_id") +: (0 until NumHashes).map(j => col("sigs")(j).as(s"mh$j")): _*)
-    val bands = bandsSpark(sig)
-    val cand = bands.as("a")
-      .join(bands.as("b"), col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    val jac = size(array_intersect(col("x.shingles"), col("y.shingles"))).cast("double") /
-      size(array_union(col("x.shingles"), col("y.shingles"))).cast("double")
-    val pairs = cand.join(base.as("x"), col("x.doc_id") === col("doc_a"))
-      .join(base.as("y"), col("y.doc_id") === col("doc_b"))
-      .where(jac >= 0.5)
+      .select(col("doc_id") +: mhCols: _*)
+    val pairs = jaccardVerifiedSpark(lshCandidatesSpark(sig), base, "shingles")
       .select(col("doc_a"), col("doc_b"))
     // near-dup victims: every clustered doc except its component's min
     val dupDrops = connectedComponents(pairs)
       .where(col("cluster") =!= col("doc_id")).select(col("doc_id"), lit(1).as("is_dup"))
-    val bench = base.where(col("doc_id") % 97 === 0)
-      .select(explode(col("shingles")).as("shingle")).distinct()
-    val contaminated = base.where(col("doc_id") % 97 =!= 0)
-      .select(col("doc_id"), explode(col("shingles")).as("shingle"))
-      .join(broadcast(bench), "shingle")
+    val contaminated = benchMatchesSpark(base, "shingles")
       .select(col("doc_id")).distinct().withColumn("is_cont", lit(1))
-    val words = col("n_toks").cast("double")
-    val stops = col("n_stops").cast("double")
     base.select(col("doc_id"), col("lang"),
-        ((least(col("n_toks"), lit(100)).cast("double") / 100.0) * 0.7 +
-          (lit(1.0) - stops / words) * 0.3).as("quality"),
+        qualitySpark(col("n_toks"), col("n_stops")).as("quality"),
         (lit(1.0) - size(col("shingles")).cast("double") /
-          (words - lit(2.0))).as("dup_frac"))
+          (col("n_toks").cast("double") - lit(2.0))).as("dup_frac"))
       .join(contaminated, Seq("doc_id"), "left")
       .join(dupDrops, Seq("doc_id"), "left")
       .select(col("doc_id"), col("lang"), col("quality"),
-        (col("doc_id") % 97 =!= 0).as("f_bench"),
+        (!benchSpark).as("f_bench"),
         (col("quality") >= 0.5).as("f_quality"),
         (col("dup_frac") <= 0.05).as("f_rep"),
         col("is_cont").isNull.as("f_cont"),
@@ -504,10 +519,7 @@ object DedupOps {
 
   private def curatedFrom(v: DataFrame): DataFrame =
     v.where(funnelFlags.map(col).reduce(_ && _))
-      .select(col("doc_id"), col("lang"), col("quality"),
-        when(expr(s"${h60Spark("cast(doc_id as string)")} % 10") < 8, "train")
-          .when(expr(s"${h60Spark("cast(doc_id as string)")} % 10") === 8, "val")
-          .otherwise("test").as("split"))
+      .select(col("doc_id"), col("lang"), col("quality"), splitSpark.as("split"))
       .orderBy("doc_id")
 
   /** Per-stage drop reason strings — shared verbatim by the Spark funnel
@@ -709,19 +721,9 @@ object DedupOps {
     // an equi-join on the band hash (the at-scale path: no pairwise cross
     // product ever materializes).
     Op("q_minhash_lsh_pairs",
-      s"""WITH $sigDuckCte,
-         |bands AS (
-         |  $bandsDuckSql)
-         |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-         |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
-      val bands = bandsSpark(sigSpark(s, dir))
-      val a = bands.as("a"); val b = bands.as("b")
-      a.join(b, col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
-        .orderBy("doc_a", "doc_b")
+      s"""WITH $lshCandidatesDuckCtes
+         |SELECT doc_a, doc_b FROM cand ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
+      lshCandidatesSpark(sigSpark(s, dir)).orderBy("doc_a", "doc_b")
     },
 
     // SimHash: 32-bit signature from distinct-word hashes (per-row array
@@ -783,7 +785,7 @@ object DedupOps {
         .select(col("doc_id"), expr(toksSpark).as("toks"))
         .where(expr("size(toks) >= 3"))
         .select(col("doc_id"),
-          expr(s"transform(array_distinct($shinglesFromToks), t -> ${h60Spark("t")})").as("hashes"))
+          expr(s"transform(array_distinct($shinglesSpark), t -> ${h60Spark("t")})").as("hashes"))
         // native one-pass majority vote; portable fold = the oracle text
         .select(col("doc_id"), expr("simhash_bits(hashes, 60)").as("simhash"))
       // MATERIALIZE the signature table behind an Aggregate barrier: without
@@ -844,7 +846,7 @@ object DedupOps {
       // and identical in results: size(toks) >= 3 guarantees >= 1
       // shingle, so wp is never empty or null.
       toks.select(col("doc_id"),
-          expr(s"winnow_pairs(transform($shinglesFromToks," +
+          expr(s"winnow_pairs(transform($shinglesSpark," +
             s" s -> ${h60Spark("s")}), 8)").as("wp"))
         .select(col("doc_id"), explode_outer(col("wp")).as("f"))
         .select(col("doc_id"), col("f.pos").cast("bigint").as("pos"), col("f.fp").as("fp"))
@@ -1044,9 +1046,7 @@ object DedupOps {
     // distinct shingles) — identical on both engines, so exactness of the
     // oracle compare is unaffected. Exact-integer ppm.
     Op("q_ngram_novelty",
-      s"""WITH sh AS (
-         |  SELECT doc_id, list_distinct($shinglesDuck) AS sh
-         |  FROM documents WHERE len($toksDuck) >= 3),
+      s"""WITH $shDuckCte,
          |s AS (SELECT doc_id, unnest(sh) AS g FROM sh),
          |f AS (SELECT ${h60Duck("g")} AS gh, min(doc_id) AS fd FROM s GROUP BY gh),
          |nov AS (SELECT fd AS doc_id, CAST(count(*) AS BIGINT) AS novel FROM f GROUP BY fd)
@@ -1062,11 +1062,7 @@ object DedupOps {
       // re-evaluated per array element that's O(L²) per doc (measured 6.1s
       // vs 1.3s at sf0.1). The barrier stops the pushdown AND lets both
       // consumers (first-seen explode, map-only size) reuse ONE scan.
-      val staged = Tables.documents(s, dir)
-        .select(col("doc_id"), expr(toksSpark).as("toks"))
-        .where(expr("size(toks) >= 3"))
-        .select(col("doc_id"), expr(s"array_distinct($shinglesFromToks)").as("sh"))
-        .groupBy(col("doc_id")).agg(first(col("sh")).as("sh"))
+      val staged = shingleSetSpark(s, dir, spread = false)
       val novel = staged
         .select(col("doc_id"), explode(col("sh")).as("g"))
         .select(col("doc_id"), expr(h60Spark("g")).as("gh"))
@@ -1087,18 +1083,16 @@ object DedupOps {
     // ≤ 0.05) → benchmark decontamination (any shared shingle with the
     // held-out set, broadcast map-side) → near-dup removal (LSH → Jaccard →
     // connected components; only each cluster's min-id doc survives) →
-    // deterministic 80/10/10 split assignment. Every stage reuses the
-    // operators proven individually above; the staged shingle/signature
-    // tables are plan-identical across stages, so Spark computes them once
-    // and ReusedExchange feeds the rest.
+    // deterministic 80/10/10 split assignment. Every stage calls the one
+    // definition its own operator uses, on both engines: the LSH candidates
+    // and Jaccard verify of q_dedup_pipeline, the matches of
+    // q_decontaminate, and the Idioms quality composite (q_quality_score)
+    // and split (q_split_stratified).
     Op("q_curation_pipeline",
       s"""WITH RECURSIVE $curationDuckCtes
-         |SELECT doc_id, lang, quality,
-         |  CASE WHEN ${h60Duck("CAST(doc_id AS VARCHAR)")} % 10 < 8 THEN 'train'
-         |       WHEN ${h60Duck("CAST(doc_id AS VARCHAR)")} % 10 = 8 THEN 'val'
-         |       ELSE 'test' END AS split
+         |SELECT doc_id, lang, quality, $splitDuck AS split
          |FROM scored
-         |WHERE doc_id % 97 <> 0
+         |WHERE NOT ($benchDuck)
          |  AND quality >= 0.5 AND dup_frac <= 0.05
          |  AND doc_id NOT IN (SELECT doc_id FROM contaminated)
          |  AND doc_id NOT IN (SELECT doc_id FROM dup_drops)
@@ -1119,7 +1113,7 @@ object DedupOps {
     // All six counts derive from the same checkpointed doc-feature pass.
     Op("q_curation_funnel",
       s"""WITH RECURSIVE $curationDuckCtes,
-         |s1 AS (SELECT * FROM scored WHERE doc_id % 97 <> 0),
+         |s1 AS (SELECT * FROM scored WHERE NOT ($benchDuck)),
          |s2 AS (SELECT * FROM s1 WHERE quality >= 0.5),
          |s3 AS (SELECT * FROM s2 WHERE dup_frac <= 0.05),
          |s4 AS (SELECT * FROM s3 WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)),
@@ -1160,26 +1154,16 @@ object DedupOps {
 
     // Benchmark decontamination — the training-pipeline stage that removes
     // documents overlapping a held-out evaluation set (standard n-gram
-    // overlap rule). Held-out set here = doc_id % 97 == 0; a training doc is
-    // contaminated if it shares ANY 3-gram shingle with it. The at-scale
-    // shape: the benchmark is always tiny next to the corpus, so its
-    // distinct-shingle set BROADCASTS and the check is a map-side hash join
-    // over the exploded training shingles — no shuffle of the corpus.
+    // overlap rule, see benchMatchesSpark): a training doc is contaminated
+    // if it shares ANY 3-gram shingle with the holdout; reported per doc
+    // with the number of distinct shared shingles.
     Op("q_decontaminate",
-      s"""WITH sh AS (
-         |  SELECT doc_id, list_distinct($shinglesDuck) AS sh
-         |  FROM documents WHERE len($toksDuck) >= 3),
-         |bench AS (SELECT DISTINCT unnest(sh) AS shingle FROM sh WHERE doc_id % 97 = 0),
-         |train AS (SELECT doc_id, unnest(sh) AS shingle FROM sh WHERE doc_id % 97 <> 0)
-         |SELECT t.doc_id, CAST(count(DISTINCT t.shingle) AS BIGINT) AS n_shared
-         |FROM train t JOIN bench b ON b.shingle = t.shingle
-         |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
-      val sh = shingleSetSpark(s, dir, spread = false) // barrier'd: one scan feeds both sides
-      val bench = sh.where(col("doc_id") % 97 === 0)
-        .select(explode(col("sh")).as("shingle")).distinct()
-      val train = sh.where(col("doc_id") % 97 =!= 0)
-        .select(col("doc_id"), explode(col("sh")).as("shingle"))
-      train.join(broadcast(bench), "shingle")
+      s"""WITH $shDuckCte,
+         |$benchMatchesDuckCtes
+         |SELECT doc_id, CAST(count(DISTINCT shingle) AS BIGINT) AS n_shared
+         |FROM bench_hits GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
+      // barrier'd: one scan feeds both sides
+      benchMatchesSpark(shingleSetSpark(s, dir, spread = false), "sh")
         .groupBy(col("doc_id"))
         .agg(countDistinct(col("shingle")).as("n_shared"))
         .orderBy("doc_id")
@@ -1216,11 +1200,11 @@ object DedupOps {
     // indexed/bucketed corpus table; the batch side is small → broadcast.
     Op("q_incremental_dedup",
       s"""WITH corpus_sig AS (
-         |  SELECT doc_id, ${(0 until NumHashes).map(j => s"${mhDuck(j)} AS mh$j").mkString(", ")}
+         |  SELECT doc_id, $mhDuckCols
          |  FROM (SELECT doc_id, $shinglesDuck AS shingles FROM documents
          |        WHERE doc_id % 10 <> 0 AND len($toksDuck) >= 3)),
          |batch_sig AS (
-         |  SELECT doc_id, ${(0 until NumHashes).map(j => s"${mhDuck(j)} AS mh$j").mkString(", ")}
+         |  SELECT doc_id, $mhDuckCols
          |  FROM (SELECT doc_id, $shinglesDuck AS shingles FROM documents
          |        WHERE doc_id % 10 = 0 AND len($toksDuck) >= 3)),
          |corpus_bands AS (SELECT DISTINCT band, bh FROM (

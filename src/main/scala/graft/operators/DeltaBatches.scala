@@ -71,12 +71,9 @@ private[operators] object DeltaBatches {
     *
     * The cap bounds digest bytes; a base index or batch beyond it
     * saturates its bloom GRACEFULLY — the guard stays correct (blooms have
-    * no false negatives) but falls back more often. The cap is
-    * session-conf overridable (tests use a tiny cap to force the
-    * false-positive fallback path deterministically).
+    * no false negatives) but falls back more often.
     */
-  private val BloomCapKey = "spark.graft.index.bloomCap"
-  private val BloomCapDefault = 8L << 20
+  private val BloomCap = 8L << 20
   private val BloomFpp = 1e-6
 
   /** Above this batch size the exact-fallback join drops the broadcast hint
@@ -149,13 +146,10 @@ private[operators] object DeltaBatches {
   private def bloomOf(bytes: Array[Byte]): BloomFilter =
     BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
 
-  private def bloomCap(spark: SparkSession): Long =
-    spark.conf.getOption(BloomCapKey).map(_.toLong).getOrElse(BloomCapDefault)
-
   /** One distributed pass building the id digest for `n` ids. */
   def idBloom(ids: DataFrame, n: Long): BloomFilter = {
     ids.stat.bloomFilter("vec_id",
-      math.min(math.max(n, 1L), bloomCap(ids.sparkSession)), BloomFpp)
+      math.min(math.max(n, 1L), BloomCap), BloomFpp)
   }
 
   /** Persist the BASE index's id digest — called by `build` after the cell

@@ -1,8 +1,12 @@
 package graft.operators
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{expr, least, lit, when}
+
 /** The cross-engine SQL idioms every operator family shares. ONE copy —
   * each Spark form must stay in lockstep with its DuckDB twin, so drift
   * between per-file copies would silently break oracle parity.
+  * `RuleInventorySpec` pins every rule below to this file.
   */
 private[graft] object Idioms {
 
@@ -20,4 +24,67 @@ private[graft] object Idioms {
     */
   val toksSpark = "filter(split(text, ' '), t -> t <> '')"
   val toksDuck  = "list_filter(str_split(text, ' '), t -> t <> '')"
+
+  /** Number of stopwords in a token array expression — the stopword set of
+    * the quality composite.
+    */
+  def stopCountSpark(toks: String) = s"size(filter($toks, t -> t IN ('the', 'a')))"
+  def stopCountDuck(toks: String)  = s"len(list_filter($toks, t -> t IN ('the', 'a')))"
+
+  /** 3-gram word shingles (with repeats, in order). The Spark side reads a
+    * *staged* `toks` column: inlining the split() into the lambda would
+    * re-evaluate it per array element (O(L²) per doc; measured 13-23s vs
+    * <2s at sf0.1).
+    */
+  val shinglesSpark =
+    "transform(sequence(1, size(toks) - 2)," +
+      " i -> concat_ws(' ', element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2)))"
+  val shinglesDuck =
+    s"list_transform(generate_series(1, len($toksDuck) - 2)," +
+      s" i -> array_to_string(($toksDuck)[i:i+2], ' '))"
+
+  /** The quality composite 0.7·min(words,100)/100 + 0.3·(1 − stops/words)
+    * over integer word and stop counts. NO rounding: an identical
+    * expression tree (and cast order) on both engines is bit-identical
+    * IEEE-754, which the oracle compares at full precision — reordering
+    * either side breaks parity.
+    */
+  def qualitySpark(words: Column, stops: Column): Column =
+    (least(words, lit(100)).cast("double") / 100.0) * 0.7 +
+      (lit(1.0) - stops.cast("double") / words.cast("double")) * 0.3
+  def qualityDuck(words: String, stops: String): String =
+    s"(CAST(least($words, 100) AS DOUBLE) / 100.0) * 0.7 +\n" +
+      s"  (1.0 - CAST($stops AS DOUBLE) / CAST($words AS DOUBLE)) * 0.3"
+
+  /** [[qualitySpark]] over a staged `toks` column. */
+  def qualityOfToks: Column = qualitySpark(expr("size(toks)"), expr(stopCountSpark("toks")))
+
+  /** The quality composite in EXACT integer micro units (×1e6):
+    * 0.7·min(words,100)/100 becomes min(words,100)·7000 and
+    * 0.3·(1−stops/words) becomes ((words−stops)·300000) div words. bigint
+    * throughout on the Spark side — size() is 32-bit Int and
+    * (words−stops)·300000 wraps past ~7k tokens. `MiningOpsSpec`
+    * cross-checks the micro value against [[qualityOfToks]].
+    */
+  val qualityMicroSpark =
+    s"least(cast(size($toksSpark) as bigint), 100) * 7000 + " +
+      s"((cast(size($toksSpark) as bigint) - " +
+      s"cast(${stopCountSpark(toksSpark)} as bigint)) * 300000) " +
+      s"div cast(size($toksSpark) as bigint)"
+  val qualityMicroDuck =
+    s"least(len($toksDuck), 100) * 7000 + " +
+      s"((len($toksDuck) - ${stopCountDuck(toksDuck)}) * 300000) " +
+      s"// len($toksDuck)"
+
+  /** Deterministic 80/10/10 train/val/test assignment by a hash bucket of
+    * `doc_id` (stable across runs and engines, no RNG state).
+    */
+  def splitSpark: Column = {
+    val bucket = expr(s"${h60Spark("cast(doc_id as string)")} % 10")
+    when(bucket < 8, "train").when(bucket === 8, "val").otherwise("test")
+  }
+  val splitDuck: String = {
+    val bucket = s"${h60Duck("CAST(doc_id AS VARCHAR)")} % 10"
+    s"CASE WHEN $bucket < 8 THEN 'train' WHEN $bucket = 8 THEN 'val' ELSE 'test' END"
+  }
 }

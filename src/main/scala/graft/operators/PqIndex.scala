@@ -128,7 +128,8 @@ object PqIndex {
   }
 
   def loadCodebooks(spark: org.apache.spark.sql.SparkSession, dir: String): Codebooks = {
-    val rows = spark.read.parquet(dir).collect()
+    val rows = graft.pipeline.VersionedTable.readHidden(spark, dir)
+      .getOrElse(sys.error(s"no PQ codebooks under $dir")).collect()
       .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Float](2).toArray)).toMap
     val numSub = rows.keys.map(_._1).max + 1
     val k = rows.keys.map(_._2).max + 1

@@ -53,6 +53,5 @@ object Tables {
   def customer(s: SparkSession, dir: String): DataFrame   = s.read.parquet(s"$dir/customer.parquet")
   def nation(s: SparkSession, dir: String): DataFrame     = s.read.parquet(s"$dir/nation.parquet")
   def region(s: SparkSession, dir: String): DataFrame     = s.read.parquet(s"$dir/region.parquet")
-  def supplier(s: SparkSession, dir: String): DataFrame   = s.read.parquet(s"$dir/supplier.parquet")
   def part(s: SparkSession, dir: String): DataFrame       = s.read.parquet(s"$dir/part.parquet")
 }

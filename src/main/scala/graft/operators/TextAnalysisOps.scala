@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysisOps {
 
-  import Idioms.{h60Spark, h60Duck, toksSpark, toksDuck}
+  import Idioms.{h60Spark, h60Duck, toksSpark, toksDuck, stopCountSpark, stopCountDuck,
+    qualitySpark, qualityDuck, qualityMicroSpark, qualityMicroDuck, shinglesSpark, shinglesDuck,
+    splitSpark, splitDuck}
 
   // marker lists per language (n-gram heuristic; deterministic tie-break
   // en > fr > de via CASE order / greatest comparison order)
@@ -98,16 +100,6 @@ object TextAnalysisOps {
       lit(EmailPat), lit("<EMAIL>")),
       lit(PhonePat), lit("<PHONE>")),
       lit(Ipv4Pat), lit("<IP>"))
-
-  /** The `q_quality_score` composite over a staged `toks` column, shared
-    * with the streaming surface.
-    */
-  private[graft] def qualityOverToks: org.apache.spark.sql.Column = {
-    val words = expr("size(toks)").cast("double")
-    val stops = expr("size(filter(toks, t -> t IN ('the', 'a')))").cast("double")
-    (least(expr("size(toks)"), lit(100)).cast("double") / 100.0) * 0.7 +
-      (lit(1.0) - stops / words) * 0.3
-  }
 
   /** BPE training rounds for `q_bpe_vocab` / `q_bpe_encode` (Sennrich et
     * al. 2016, "Neural Machine Translation of Rare Words with Subword
@@ -246,12 +238,7 @@ object TextAnalysisOps {
     // with within-stratum fractions. Map-only assignment; one partial-agg'd
     // shuffle for the report.
     Op("q_split_stratified",
-      s"""WITH assigned AS (
-         |  SELECT lang,
-         |    CASE WHEN ${h60Duck("CAST(doc_id AS VARCHAR)")} % 10 < 8 THEN 'train'
-         |         WHEN ${h60Duck("CAST(doc_id AS VARCHAR)")} % 10 = 8 THEN 'val'
-         |         ELSE 'test' END AS split
-         |  FROM documents),
+      s"""WITH assigned AS (SELECT lang, $splitDuck AS split FROM documents),
          |counts AS (SELECT lang, split, CAST(count(*) AS BIGINT) AS docs
          |           FROM assigned GROUP BY lang, split),
          |totals AS (SELECT lang, CAST(sum(docs) AS BIGINT) AS total FROM counts GROUP BY lang)
@@ -259,10 +246,7 @@ object TextAnalysisOps {
          |       CAST(c.docs AS DOUBLE) / t.total AS frac
          |FROM counts c JOIN totals t ON t.lang = c.lang
          |ORDER BY lang, split""".stripMargin) { (s, dir) =>
-      val assigned = Tables.documents(s, dir).select(col("lang"),
-        when(expr(s"${h60Spark("cast(doc_id as string)")} % 10") < 8, "train")
-          .when(expr(s"${h60Spark("cast(doc_id as string)")} % 10") === 8, "val")
-          .otherwise("test").as("split"))
+      val assigned = Tables.documents(s, dir).select(col("lang"), splitSpark.as("split"))
       val counts = assigned.groupBy(col("lang"), col("split")).agg(count(lit(1)).as("docs"))
       val totals = counts.groupBy(col("lang")).agg(sum(col("docs")).as("total"))
       counts.join(broadcast(totals), "lang")
@@ -299,21 +283,19 @@ object TextAnalysisOps {
          |  CAST(length(text) AS BIGINT) AS chars,
          |  CAST(len($toksDuck) AS BIGINT) AS words,
          |  CAST(length(text) AS DOUBLE) / CAST(len($toksDuck) AS DOUBLE) AS avg_word_len,
-         |  CAST(len(list_filter($toksDuck, t -> t IN ('the', 'a'))) AS DOUBLE) / CAST(len($toksDuck) AS DOUBLE) AS stop_ratio,
-         |  (CAST(least(len($toksDuck), 100) AS DOUBLE) / 100.0) * 0.7 +
-         |  (1.0 - CAST(len(list_filter($toksDuck, t -> t IN ('the', 'a'))) AS DOUBLE) / CAST(len($toksDuck) AS DOUBLE)) * 0.3 AS quality
+         |  CAST(${stopCountDuck(toksDuck)} AS DOUBLE) / CAST(len($toksDuck) AS DOUBLE) AS stop_ratio,
+         |  ${qualityDuck(s"len($toksDuck)", stopCountDuck(toksDuck))} AS quality
          |FROM documents WHERE len($toksDuck) > 0 ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val words = expr(s"size($toksSpark)").cast("double")
-      val stops = expr(s"size(filter($toksSpark, t -> t IN ('the', 'a')))").cast("double")
+      val words = expr(s"size($toksSpark)")
+      val stops = expr(stopCountSpark(toksSpark))
       Tables.documents(s, dir)
         .where(expr(s"size($toksSpark) > 0"))
         .select(col("doc_id"),
           length(col("text")).cast("bigint").as("chars"),
-          expr(s"size($toksSpark)").cast("bigint").as("words"),
-          (length(col("text")).cast("double") / words).as("avg_word_len"),
-          (stops / words).as("stop_ratio"),
-          ((least(expr(s"size($toksSpark)"), lit(100)).cast("double") / 100.0) * 0.7 +
-            (lit(1.0) - stops / words) * 0.3).as("quality"))
+          words.cast("bigint").as("words"),
+          (length(col("text")).cast("double") / words.cast("double")).as("avg_word_len"),
+          (stops.cast("double") / words.cast("double")).as("stop_ratio"),
+          qualitySpark(words, stops).as("quality"))
         .orderBy("doc_id")
     },
 
@@ -330,8 +312,7 @@ object TextAnalysisOps {
          |FROM (
          |  SELECT doc_id,
          |    CAST(len($toksDuck) - 2 AS BIGINT) AS total_ngrams,
-         |    CAST(len(list_distinct(list_transform(generate_series(1, len($toksDuck) - 2),
-         |      i -> array_to_string(($toksDuck)[i:i+2], ' ')))) AS BIGINT) AS distinct_ngrams
+         |    CAST(len(list_distinct($shinglesDuck)) AS BIGINT) AS distinct_ngrams
          |  FROM documents WHERE len($toksDuck) >= 3)
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       Tables.documents(s, dir)
@@ -339,9 +320,7 @@ object TextAnalysisOps {
         .where(expr("size(toks) >= 3"))
         .select(col("doc_id"),
           expr("cast(size(toks) - 2 as bigint)").as("total_ngrams"),
-          expr("cast(size(array_distinct(transform(sequence(1, size(toks) - 2)," +
-            " i -> concat_ws(' ', element_at(toks, i), element_at(toks, i + 1)," +
-            " element_at(toks, i + 2))))) as bigint)").as("distinct_ngrams"))
+          expr(s"cast(size(array_distinct($shinglesSpark)) as bigint)").as("distinct_ngrams"))
         .withColumn("dup_frac",
           lit(1.0) - col("distinct_ngrams").cast("double") / col("total_ngrams").cast("double"))
         .orderBy("doc_id")
@@ -879,7 +858,7 @@ object TextAnalysisOps {
       * OWN quality distribution, so a boilerplate-heavy source doesn't
       * swallow the global budget and a clean source isn't over-pruned).
       * Threshold = the source's discrete lower median of the shared
-      * integer micro-quality (`DedupOps.qualityMicroSpark`, the same score
+      * integer micro-quality (`Idioms.qualityMicroSpark`, the same score
       * keep-best dedup ranks by). At-scale shape: the distribution is
       * compressed to (source, qm) COUNTS first — ONE partial-agg'd shuffle
       * whose output is bounded by the score space (≤ ~3·10^7 rows per
@@ -893,7 +872,7 @@ object TextAnalysisOps {
       // threshold join (NULL never equi-joins): the gate's output must
       // PARTITION the eligible corpus
       s"""WITH q AS (
-         |  SELECT doc_id, coalesce(source, '') AS source, ${DedupOps.qualityMicroDuck} AS qm
+         |  SELECT doc_id, coalesce(source, '') AS source, $qualityMicroDuck AS qm
          |  FROM documents WHERE len($toksDuck) > 0),
          |c AS (SELECT source, qm, count(*) AS c FROM q GROUP BY source, qm),
          |cum AS (SELECT source, qm,
@@ -910,7 +889,7 @@ object TextAnalysisOps {
       def q = Tables.documents(s, dir)
         .where(expr(s"size($toksSpark) > 0"))
         .select(col("doc_id"), coalesce(col("source"), lit("")).as("source"),
-          expr(DedupOps.qualityMicroSpark).as("qm"))
+          expr(qualityMicroSpark).as("qm"))
       val counts = q.groupBy("source", "qm").agg(count(lit(1)).as("c"))
       val thr = counts
         .withColumn("cum", sum(col("c")).over(Window.partitionBy("source").orderBy("qm")))

@@ -1,7 +1,8 @@
 package graft.pipeline
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** Small-file rewrite for a parquet table directory — the data half of the
@@ -14,11 +15,14 @@ import org.apache.spark.sql.functions._
   * compaction is a first-class maintenance job, not a nicety.
   *
   * `rewrite` reads the table and redistributes it into
-  * ceil(totalBytes/targetFileBytes) output tasks. Partitioned tables
-  * shuffle on (partition columns, row-hash salt): the salt splits a LARGE
-  * partition value across many tasks (each writes its own ~target-sized
-  * file into that partition's directory), while the directory layout — and
-  * with it partition pruning — survives the rewrite.
+  * ceil(totalBytes/targetFileBytes) output tasks. A partitioned table —
+  * one whose `name=value` directories Spark's reader discovers as
+  * partition columns — is rewritten with the same partition columns: it
+  * shuffles on (partition columns, row-hash salt), where the salt splits a
+  * LARGE partition value across many tasks (each writes its own
+  * ~target-sized file into that partition's directory), so the directory
+  * layout — and with it partition pruning and every later per-partition
+  * overwrite — survives the rewrite.
   *
   * Row multiset is unchanged (parquet table semantics carry no row order);
   * `CompactionSpec` asserts content equality and the file-count drop.
@@ -34,7 +38,7 @@ object Compact {
     * in Spark's reader: a generation's `_batches` manifest and a killed
     * write's `.spark-staging-*` directory are not data.
     */
-  private def dataFiles(spark: SparkSession, dir: String): Seq[(Path, Long)] = {
+  private[pipeline] def dataFiles(spark: SparkSession, dir: String): Seq[(Path, Long)] = {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) Seq.empty
@@ -59,14 +63,14 @@ object Compact {
       spark: SparkSession,
       srcDir: String,
       destDir: String,
-      targetFileBytes: Long,
-      partitionBy: Seq[String]): (Int, Long) = {
+      targetFileBytes: Long): (Int, Long) = {
     require(targetFileBytes > 0, s"targetFileBytes must be > 0, got $targetFileBytes")
     val before = dataFiles(spark, srcDir)
     val totalBytes = before.map(_._2).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
 
     val df = spark.read.parquet(srcDir)
+    val partitionBy = partitionColumns(df)
     val compacted =
       if (partitionBy.isEmpty) df.repartition(nOut)
       else {
@@ -100,6 +104,12 @@ object Compact {
     (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*)).parquet(destDir)
     (before.size, totalBytes)
   }
+
+  /** The partition columns Spark's reader discovered for a table read. */
+  private def partitionColumns(df: DataFrame): Seq[String] =
+    df.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation
+    }.collect { case fs: HadoopFsRelation => fs.partitionSchema.fieldNames.toSeq }.getOrElse(Nil)
 
   private[pipeline] def countDataFiles(spark: SparkSession, dir: String): Int =
     dataFiles(spark, dir).size

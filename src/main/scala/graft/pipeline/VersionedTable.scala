@@ -176,8 +176,25 @@ object VersionedTable {
     * appended: a caller with an empty manifest plans no query at all.
     */
   def readManifest(spark: SparkSession, gen: String, schema: StructType): Option[DataFrame] =
-    Option.when(fsOf(spark, gen).exists(new Path(manifestDir(gen))))(
-      spark.read.schema(schema).parquet(manifestDir(gen)))
+    readHidden(spark, manifestDir(gen), Some(schema))
+
+  /** The flat parquet table in the `_`-prefixed directory `dir` (a
+    * manifest, an index's `_centroids` or `_codebooks`), read by its
+    * visible data files, or None when it has none; `schema`, when given,
+    * skips inference. Naming the directory itself would make Spark's reader
+    * log "All paths were ignored" on every read, because its path filter
+    * hides `_` names even at the root. A listing above Spark's
+    * parallel-discovery threshold is read as the directory after all:
+    * naming that many files would start a listing job with a task per
+    * file.
+    */
+  private[graft] def readHidden(spark: SparkSession, dir: String,
+      schema: Option[StructType] = None): Option[DataFrame] = {
+    val files = Compact.dataFiles(spark, dir).map(_._1.toString)
+    val threshold = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+    val paths = if (files.size > threshold) Seq(dir) else files
+    Option.when(files.nonEmpty)(schema.fold(spark.read)(spark.read.schema).parquet(paths: _*))
+  }
 
   /** Reuse the committed tip if it is of `format` and was built from this
     * input, else install a new generation from it. Only the newest committed
@@ -242,23 +259,23 @@ object VersionedTable {
 
   /** Reader-safe compaction (the Iceberg `rewrite_data_files` action):
     * rewrite the tip's data into the next generation at ~targetFileBytes
-    * per file ([[Compact.rewrite]]), copy the tip's manifest into it, commit
-    * with the tip's tag carried forward, prune. Concurrent readers of the
-    * old generation are undisturbed. Like every install it is a writer: an
+    * per file, under the partition columns the reader discovers on the tip
+    * ([[Compact.rewrite]]), copy the tip's manifest into it, commit with the
+    * tip's tag carried forward, prune. Concurrent readers of the old
+    * generation are undisturbed. Like every install it is a writer: an
     * append into the tip that races it is lost (see the object doc).
     */
   def compact(
       spark: SparkSession,
       root: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
-      partitionBy: Seq[String] = Nil,
       keepGenerations: Int = 2): Compact.Result = {
     val fs = fsOf(spark, root)
     val (cur, tag) = tip(fs, root, None).getOrElse(
       sys.error(s"versioned table $root has no committed generation to compact"))
     var stats = (0, 0L)
     val installed = install(spark, root, keepGenerations, tag) { dest =>
-      stats = Compact.rewrite(spark, cur.toString, dest, targetFileBytes, partitionBy)
+      stats = Compact.rewrite(spark, cur.toString, dest, targetFileBytes)
       val manifest = new Path(manifestDir(cur.toString))
       if (fs.exists(manifest))
         FileUtil.copy(fs, manifest, fs, new Path(manifestDir(dest)), false,

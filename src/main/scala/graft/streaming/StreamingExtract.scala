@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import graft.kernel.{Extract, ExtractMode}
 import graft.model.Doc
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -30,13 +30,6 @@ object StreamingExtract {
     */
   def extractStream(docs: Dataset[Doc], mode: ExtractMode = ExtractMode.ChunkMode): Dataset[Doc] =
     docs.mapPartitions(_.map(Extract.extractDoc(_, mode)))(docs.encoder)
-
-  /** File-source variant: watch a directory of parquet docs. */
-  def extractFileStream(spark: SparkSession, inputDir: String): Dataset[Doc] = {
-    import spark.implicits._
-    val schema = spark.emptyDataset[Doc].schema
-    extractStream(spark.readStream.schema(schema).parquet(inputDir).as[Doc])
-  }
 
   /** Watermarked tumbling-window span-production metrics over a stream of
     * (ts, doc_id, n_spans) ingest events — the streaming analog of the A5
@@ -352,7 +345,7 @@ object StreamingExtract {
   /** Streaming corpus curation — the batch curation pipeline's stateless
     * stages (quality gate, PII scrub) run UNCHANGED on unbounded input
     * (same Catalyst expressions, shared with `q_quality_score` /
-    * `q_pii_scrub` via TextAnalysisOps), composed with the watermark-
+    * `q_pii_scrub` via `Idioms` and TextAnalysisOps), composed with the watermark-
     * bounded exact dedup. The near-dup/decontamination stages stay batch:
     * they need corpus-global joins, which is exactly the
     * bounded-horizon-stream + periodic-batch-compaction split a 100 TB/day
@@ -363,9 +356,9 @@ object StreamingExtract {
       minQuality: Double = 0.5,
       watermark: String = "10 minutes"): DataFrame =
     dedupStream(docs, watermark)
-      .withColumn("toks", expr("filter(split(text, ' '), t -> t <> '')"))
+      .withColumn("toks", expr(graft.operators.Idioms.toksSpark))
       .where(expr("size(toks) > 0"))
-      .withColumn("quality", graft.operators.TextAnalysisOps.qualityOverToks)
+      .withColumn("quality", graft.operators.Idioms.qualityOfToks)
       .where(col("quality") >= minQuality)
       .withColumn("scrubbed", graft.operators.TextAnalysisOps.scrubPii(col("text")))
       .select(col("ts"), col("doc_id"), col("scrubbed"), col("quality"))

@@ -11,7 +11,7 @@ import scala.jdk.CollectionConverters._
   */
 class KnobInventorySpec extends AnyFunSuite {
 
-  test("src/main reads exactly the spark.graft.* keys that have a stated reason") {
+  test("src/main reads no spark.graft.* key") {
     val root = Paths.get("src/main")
     assert(Files.isDirectory(root), s"expected the sources at ${root.toAbsolutePath}")
     val key = "\"(spark\\.graft\\.[A-Za-z0-9_.]*)".r
@@ -19,9 +19,6 @@ class KnobInventorySpec extends AnyFunSuite {
     val keys = try walk.iterator().asScala.filter(p => Files.isRegularFile(p))
       .flatMap(p => key.findAllMatchIn(Files.readString(p)).map(_.group(1))).toSet
     finally walk.close()
-    assert(keys == Set(
-      // DeltaGuardSpec sets a tiny cap to force the bloom false-positive
-      // fallback path deterministically
-      "spark.graft.index.bloomCap"))
+    assert(keys == Set.empty[String])
   }
 }

@@ -1,0 +1,50 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+
+/** Each curation rule has one Spark and one DuckDB spelling in main code:
+  * the cross-engine twins in `Idioms`, the Spark-only and oracle-only
+  * pieces of the near-dup and decontamination chain in one `DedupOps`
+  * helper each. Every operator that applies a rule (the curation verdict
+  * table, its oracle CTEs, `q_quality_score`, `q_repetition`,
+  * `q_split_stratified`, `q_decontaminate`, streaming curation) calls that
+  * definition. A second spelling of a rule needs an edit of this table.
+  */
+class RuleInventorySpec extends AnyFunSuite {
+
+  /** (rule, literal, occurrences of the literal per src/main file name). */
+  private val rules: Seq[(String, String, Map[String, Int])] = Seq(
+    ("stopword set, Spark", "size(filter($toks, t -> t IN ('the', 'a')))", Map("Idioms.scala" -> 1)),
+    ("stopword set, DuckDB", "len(list_filter($toks, t -> t IN ('the', 'a')))", Map("Idioms.scala" -> 1)),
+    ("quality composite, both engines", "/ 100.0) * 0.7", Map("Idioms.scala" -> 2)),
+    ("micro-unit quality composite, both engines", "* 7000", Map("Idioms.scala" -> 2)),
+    ("3-gram shingle, Spark", "element_at(toks, i + 2)", Map("Idioms.scala" -> 1)),
+    ("3-gram shingle, DuckDB", "[i:i+2]", Map("Idioms.scala" -> 1)),
+    ("80/10/10 split, Spark", "h60Spark(\"cast(doc_id as string)\")} % 10", Map("Idioms.scala" -> 1)),
+    ("80/10/10 split, DuckDB", "h60Duck(\"CAST(doc_id AS VARCHAR)\")} % 10", Map("Idioms.scala" -> 1)),
+    ("LSH candidate self-join, Spark", "col(\"a.bh\") === col(\"b.bh\")", Map("DedupOps.scala" -> 1)),
+    ("LSH candidate self-join, DuckDB", "a.bh = b.bh AND a.doc_id < b.doc_id", Map("DedupOps.scala" -> 1)),
+    ("signature split into mh columns", "col(\"sigs\")(j)", Map("DedupOps.scala" -> 1)),
+    ("exact-Jaccard verify, Spark", "jac >= 0.5", Map("DedupOps.scala" -> 1)),
+    ("exact-Jaccard verify, DuckDB", "AS DOUBLE) >= 0.5", Map("DedupOps.scala" -> 1)),
+    ("decontamination match, Spark", ".join(broadcast(bench), \"shingle\")", Map("DedupOps.scala" -> 1)),
+    ("decontamination match, DuckDB", "JOIN bench b ON b.shingle = t.shingle", Map("DedupOps.scala" -> 1)))
+
+  test("src/main spells each curation rule once per engine, in the file that defines it") {
+    val root = Paths.get("src/main")
+    assert(Files.isDirectory(root), s"expected the sources at ${root.toAbsolutePath}")
+    val walk = Files.walk(root)
+    val sources = try walk.iterator().asScala.filter((p: Path) => Files.isRegularFile(p))
+      .map(p => p.getFileName.toString -> Files.readString(p)).toSeq
+    finally walk.close()
+    def count(text: String, lit: String): Int =
+      Iterator.iterate(text.indexOf(lit))(i => text.indexOf(lit, i + 1)).takeWhile(_ >= 0).size
+    val drift = rules.flatMap { case (rule, lit, expected) =>
+      val seen = sources.map { case (f, text) => f -> count(text, lit) }.filter(_._2 > 0).toMap
+      Option.when(seen != expected)(s"$rule: `$lit` expected $expected, found $seen")
+    }
+    assert(drift.isEmpty, drift.mkString("\n"))
+  }
+}

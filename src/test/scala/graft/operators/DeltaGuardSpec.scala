@@ -106,28 +106,31 @@ class DeltaGuardSpec extends SparkTestBase {
     assert(e2.getMessage.contains("already in the index"), e2.getMessage)
   }
 
-  test("bloom false-positive path: saturated digests fall back to the EXACT scan") {
-    val key = "spark.graft.index.bloomCap"
-    // cap=1 builds ~10-bit blooms that saturate instantly: every membership
-    // test hits, so EVERY append takes the fallback — disjoint appends must
-    // still succeed (exact scan finds nothing) and must visibly read the index
-    spark.conf.set(key, "1")
-    try {
-      val dir = Files.createTempDirectory("graft-guard-fp").toString + "/index"
-      AnnIndex.build(localEmb(0 until indexRows), dir, nCells = 8, refineIters = 0)
-      val (_, read) = recordsReadDuring {
-        AnnIndex.append(spark, dir, localEmb(500000 until 500050))
-      }
-      info(s"saturated-digest append read $read records (index=$indexRows)")
-      assert(read >= indexRows,
-        s"fallback was supposed to scan the index exactly, but read only $read records")
-      // and the exact path still rejects a real duplicate
-      val e = intercept[IllegalArgumentException] {
-        AnnIndex.append(spark, dir,
-          localEmb(7 to 7).selectExpr("vec_id", "transform(embedding, x -> x + 0.25f) as embedding"))
-      }
-      assert(e.getMessage.contains("already in the index"), e.getMessage)
-    } finally spark.conf.unset(key)
+  test("bloom false-positive path: a digest hit on a fresh id falls back to the EXACT scan") {
+    val dir = Files.createTempDirectory("graft-guard-fp").toString + "/index"
+    AnnIndex.build(localEmb(0 until indexRows), dir, nCells = 8, refineIters = 0)
+    // the first id above the index range that the base digest claims: a
+    // false positive by construction (deterministic; ~1e6 probes expected
+    // at fpp 1e-6)
+    val bloom = {
+      val in = Files.newInputStream(java.nio.file.Paths.get(DeltaBatches.baseBloomFile(tip(dir))))
+      try org.apache.spark.util.sketch.BloomFilter.readFrom(in) finally in.close()
+    }
+    val fp = Iterator.from(1000000).take(100000000).find(i => bloom.mightContainLong(i.toLong))
+      .getOrElse(fail("no bloom false positive among 1e8 fresh ids"))
+    info(s"first false-positive id: $fp")
+    val (_, read) = recordsReadDuring {
+      AnnIndex.append(spark, dir, localEmb(fp to fp))
+    }
+    info(s"false-positive append read $read records (index=$indexRows)")
+    assert(read >= indexRows,
+      s"fallback was supposed to scan the index exactly, but read only $read records")
+    // and the exact path still rejects a real duplicate
+    val e = intercept[IllegalArgumentException] {
+      AnnIndex.append(spark, dir,
+        localEmb(7 to 7).selectExpr("vec_id", "transform(embedding, x -> x + 0.25f) as embedding"))
+    }
+    assert(e.getMessage.contains("already in the index"), e.getMessage)
   }
 
   test("IvfPq append is digest-guarded through the same protocol") {

@@ -248,15 +248,15 @@ class MiningOpsSpec extends SparkTestBase {
           ((toks.length - stops).toLong * 300000L) / toks.length)
       }.toMap
     // ... and anchor the micro weights to the ONE quality definition the
-    // engine documents (TextAnalysisOps.qualityOverToks): micro/1e6 must
-    // track the double-valued composite to integer-truncation error
+    // engine documents (Idioms.qualityOfToks): micro/1e6 must track the
+    // double-valued composite to integer-truncation error
     val composite = Tables.documents(spark, sfDir)
       .select($"doc_id", expr("filter(split(text, ' '), t -> t <> '')").as("toks"))
-      .select($"doc_id", TextAnalysisOps.qualityOverToks.as("q"))
+      .select($"doc_id", Idioms.qualityOfToks.as("q"))
       .as[(Long, Double)].collect().toMap
     quality.foreach { case (id, qm) =>
       assert(math.abs(qm / 1e6 - composite(id)) < 1e-3,
-        s"doc $id micro-quality $qm drifts from the qualityOverToks composite ${composite(id)}")
+        s"doc $id micro-quality $qm drifts from the qualityOfToks composite ${composite(id)}")
     }
     best.foreach { case (c, kept, qm, dropped) =>
       val members = byCluster(c).map(_._1)

@@ -44,8 +44,7 @@ class CompactionSpec extends SparkTestBase {
     val before = VersionedTable.read(spark, root)
       .as[(Long, String, Long)].collect().sortBy(_._1).toSeq
 
-    val r = VersionedTable.compact(spark, root, targetFileBytes = 8L * 1024 * 1024,
-      partitionBy = Seq("grp"))
+    val r = VersionedTable.compact(spark, root, targetFileBytes = 8L * 1024 * 1024)
     assert(r.filesAfter < r.filesBefore)
 
     // layout: grp=* directories still exist -> partition pruning still works
@@ -84,7 +83,7 @@ class CompactionSpec extends SparkTestBase {
         .repartition(4).write.partitionBy("grp").parquet(dest)
     }
     assert(VersionedTable.read(spark, root).where($"grp".isNull).count() == 100)
-    VersionedTable.compact(spark, root, targetFileBytes = 8L * 1024 * 1024, partitionBy = Seq("grp"))
+    VersionedTable.compact(spark, root, targetFileBytes = 8L * 1024 * 1024)
     // a null-dropping equi-join here would have lost them from the new tip
     assert(VersionedTable.read(spark, root).count() == 300)
     assert(VersionedTable.read(spark, root).where($"grp".isNull).count() == 100)
@@ -99,7 +98,7 @@ class CompactionSpec extends SparkTestBase {
           "repeat(md5(cast(id as string)), 4) AS text")
         .repartition(8).write.partitionBy("grp").parquet(dest)
     }
-    val r = VersionedTable.compact(spark, root, targetFileBytes = 64L * 1024, partitionBy = Seq("grp"))
+    val r = VersionedTable.compact(spark, root, targetFileBytes = 64L * 1024)
     // each ~130KB partition deserves ~2-3 files; shattering would give 16x20+
     val gen = tip(root)
     val perPart = (0 until 16).map { g =>
@@ -119,7 +118,7 @@ class CompactionSpec extends SparkTestBase {
           "repeat(md5(cast(id as string)), 8) AS text") // incompressible payload
         .repartition(4).write.partitionBy("grp").parquet(dest)
     }
-    VersionedTable.compact(spark, root, targetFileBytes = 64L * 1024, partitionBy = Seq("grp"))
+    VersionedTable.compact(spark, root, targetFileBytes = 64L * 1024)
     val files = new java.io.File(s"${tip(root)}/grp=0").listFiles()
       .count(f => f.getName.endsWith(".parquet"))
     assert(files > 1, s"oversized partition compacted to a single writer file (files=$files)")
@@ -154,7 +153,7 @@ class CompactionSpec extends SparkTestBase {
     spark.range(10).write.parquet(s"$crashed/gen-00000001")
     def listing = new java.io.File(crashed).list().sorted.toSeq
     val before = listing
-    val e2 = intercept[RuntimeException](CompactMain.main(Array(crashed, "1", "grp")))
+    val e2 = intercept[RuntimeException](CompactMain.main(Array(crashed, "1")))
     assert(e2.getMessage.contains(crashed), e2.getMessage)
     assert(listing == before)
   }
@@ -175,7 +174,7 @@ class CompactionSpec extends SparkTestBase {
     val spanFiles = new java.io.File(gen).listFiles().filter(_.getName.startsWith("grp="))
       .map(_.listFiles().count(_.getName.endsWith(".parquet"))).sum
 
-    val r = VersionedTable.compact(spark, out, partitionBy = Seq("grp"))
+    val r = VersionedTable.compact(spark, out)
     assert(tip(out) != gen)
     assert(r.filesBefore == spanFiles, s"counted ${r.filesBefore}, span files $spanFiles")
     assert(r.filesAfter < r.filesBefore, s"$r")
@@ -192,8 +191,25 @@ class CompactionSpec extends SparkTestBase {
       assert(e.getMessage.contains(s"'$bad'") && e.getMessage.contains("usage: CompactMain"),
         e.getMessage)
     }
-    assert(CompactMain.parseArgs(Array("t")) == (("t", 128, Nil)))
-    assert(CompactMain.parseArgs(Array("t", "64", "grp,lang")) == (("t", 64, Seq("grp", "lang"))))
+    assert(CompactMain.parseArgs(Array("t")) == (("t", 128)))
+    assert(CompactMain.parseArgs(Array("t", "64")) == (("t", 64)))
+    // the partition columns are discovered on the tip, never passed
+    for (bad <- Seq(Array.empty[String], Array("t", "64", "grp"))) {
+      val e = intercept[IllegalArgumentException](CompactMain.parseArgs(bad))
+      assert(e.getMessage.contains("usage: CompactMain <tableRoot> [targetFileMB]"), e.getMessage)
+    }
+  }
+
+  test("CompactMain on a partially extracted outDir keeps grp partitions: a resume sees every doc") {
+    val docs = DocSynth.docs(spark, sfDir)
+    val out = Files.createTempDirectory("graft-compact-resume").toString
+    assert(Checkpoint.runResumable(docs, out, numGroups = 8, maxGroups = 3) == 3)
+    CompactMain.main(Array(out))
+    val gen = tip(out)
+    assert(new java.io.File(gen).list().exists(_.startsWith("grp=")),
+      s"compaction flattened the grp layout: ${new java.io.File(gen).list().sorted.mkString(", ")}")
+    assert(Checkpoint.runResumable(docs, out, numGroups = 8) == 5)
+    assert(Checkpoint.readSpans(spark, out).select("doc_id").distinct().count() == 500)
   }
 
   test("versioned table: install commits generations, resolve tracks the tip, retention prunes") {
