@@ -22,7 +22,7 @@ object DedupOps {
 
   import Idioms.{h60Spark, h60Duck, toksSpark, toksDuck, stopCountSpark, stopCountDuck,
     qualitySpark, qualityDuck, qualityMicroSpark, qualityMicroDuck, shinglesSpark, shinglesDuck,
-    splitSpark, splitDuck}
+    splitSpark, splitDuck, dupFracSpark, dupFracDuck}
 
   /** LSH tuning knobs. Capture probability for Jaccard s is
     * 1 - (1 - s^RowsPerBand)^NumBands; with (2 bands × 4 rows) the S-curve
@@ -443,7 +443,7 @@ object DedupOps {
     * composes the same definitions the operators' oracles use: the
     * verified pairs of [[verifiedPairsDuckCtes]], the decontamination
     * matches of [[benchMatchesDuckCtes]], and the `Idioms` quality
-    * composite, stop count and shingle — the DuckDB side of
+    * composite, stop count, shingle and duplicate fraction — the DuckDB side of
     * [[verdictsFrom]].
     */
   private def curationDuckCtes: String =
@@ -455,8 +455,7 @@ object DedupOps {
        |scored AS (
        |  SELECT doc_id, lang,
        |    ${qualityDuck(s"len($toksDuck)", stopCountDuck(toksDuck))} AS quality,
-       |    1.0 - CAST(len(list_distinct($shinglesDuck)) AS DOUBLE) /
-       |          CAST(len($toksDuck) - 2 AS DOUBLE) AS dup_frac
+       |    ${dupFracDuck(s"len(list_distinct($shinglesDuck))", s"len($toksDuck) - 2")} AS dup_frac
        |  FROM documents WHERE len($toksDuck) >= 3)""".stripMargin
 
   /** The one-pass doc-feature projection every curation stage derives from:
@@ -484,7 +483,7 @@ object DedupOps {
     * one conditional aggregate over them, so each predicate is stated once
     * and both outputs read the same table. The stages compose the shared
     * definitions ([[lshCandidatesSpark]], [[jaccardVerifiedSpark]],
-    * [[benchMatchesSpark]], `Idioms.qualitySpark`); their DuckDB twins
+    * [[benchMatchesSpark]], `Idioms.qualitySpark` / `dupFracSpark`); their DuckDB twins
     * make up [[curationDuckCtes]]. The anti joins of the stage predicates
     * are left joins + null tests here: doc_ids are unique on both sides, so
     * no fanout and identical membership.
@@ -503,8 +502,7 @@ object DedupOps {
       .select(col("doc_id")).distinct().withColumn("is_cont", lit(1))
     base.select(col("doc_id"), col("lang"),
         qualitySpark(col("n_toks"), col("n_stops")).as("quality"),
-        (lit(1.0) - size(col("shingles")).cast("double") /
-          (col("n_toks").cast("double") - lit(2.0))).as("dup_frac"))
+        dupFracSpark(size(col("shingles")), col("n_toks") - 2).as("dup_frac"))
       .join(contaminated, Seq("doc_id"), "left")
       .join(dupDrops, Seq("doc_id"), "left")
       .select(col("doc_id"), col("lang"), col("quality"),
@@ -645,9 +643,13 @@ object DedupOps {
     * round).
     */
   def connectedComponentsWithStats(pairs: DataFrame, maxIters: Int = 25): (DataFrame, Int) = {
-    // edges is marked for lazy checkpoint: the eager labels checkpoint
-    // below computes it as part of the same job (one Spark job instead of
-    // two before the loop); every round then reads the truncated RDD.
+    // edges is marked for a lazy local checkpoint, which is not free under
+    // AQE: localCheckpoint(false) runs as its own SQL execution
+    // ("localCheckpoint at DedupOps.scala"), and planning its RDD
+    // materialises every shuffle stage below it, i.e. the verified-pairs
+    // stages (3 jobs on the perfbench curate input). Only edges' final,
+    // exchange-free stage is deferred: the eager labels checkpoint below
+    // computes and stores it. Every round then reads the truncated RDD.
     val edges = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
       .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
       .localCheckpoint(false)

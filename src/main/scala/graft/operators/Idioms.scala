@@ -56,6 +56,18 @@ private[graft] object Idioms {
     s"(CAST(least($words, 100) AS DOUBLE) / 100.0) * 0.7 +\n" +
       s"  (1.0 - CAST($stops AS DOUBLE) / CAST($words AS DOUBLE)) * 0.3"
 
+  /** The repetition rule's duplicate fraction 1 − distinct/total over
+    * integer counts (distinct and total 3-gram shingles of a doc). Both
+    * operands are exact small integers in double (below 2^53), so where
+    * the total is formed — `size(toks) - 2` as an integer or a double —
+    * does not change a bit: one IEEE-754 division and one subtraction on
+    * both engines give identical results.
+    */
+  def dupFracSpark(distinct: Column, total: Column): Column =
+    lit(1.0) - distinct.cast("double") / total.cast("double")
+  def dupFracDuck(distinct: String, total: String): String =
+    s"1.0 - CAST($distinct AS DOUBLE) / CAST($total AS DOUBLE)"
+
   /** [[qualitySpark]] over a staged `toks` column. */
   def qualityOfToks: Column = qualitySpark(expr("size(toks)"), expr(stopCountSpark("toks")))
 

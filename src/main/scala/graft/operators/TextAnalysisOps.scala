@@ -12,7 +12,7 @@ object TextAnalysisOps {
 
   import Idioms.{h60Spark, h60Duck, toksSpark, toksDuck, stopCountSpark, stopCountDuck,
     qualitySpark, qualityDuck, qualityMicroSpark, qualityMicroDuck, shinglesSpark, shinglesDuck,
-    splitSpark, splitDuck}
+    splitSpark, splitDuck, dupFracSpark, dupFracDuck}
 
   // marker lists per language (n-gram heuristic; deterministic tie-break
   // en > fr > de via CASE order / greatest comparison order)
@@ -308,7 +308,7 @@ object TextAnalysisOps {
     // exact integers, so both engines produce the identical bits.
     Op("q_repetition",
       s"""SELECT doc_id, total_ngrams, distinct_ngrams,
-         |       1.0 - CAST(distinct_ngrams AS DOUBLE) / CAST(total_ngrams AS DOUBLE) AS dup_frac
+         |       ${dupFracDuck("distinct_ngrams", "total_ngrams")} AS dup_frac
          |FROM (
          |  SELECT doc_id,
          |    CAST(len($toksDuck) - 2 AS BIGINT) AS total_ngrams,
@@ -321,8 +321,7 @@ object TextAnalysisOps {
         .select(col("doc_id"),
           expr("cast(size(toks) - 2 as bigint)").as("total_ngrams"),
           expr(s"cast(size(array_distinct($shinglesSpark)) as bigint)").as("distinct_ngrams"))
-        .withColumn("dup_frac",
-          lit(1.0) - col("distinct_ngrams").cast("double") / col("total_ngrams").cast("double"))
+        .withColumn("dup_frac", dupFracSpark(col("distinct_ngrams"), col("total_ngrams")))
         .orderBy("doc_id")
     },
 

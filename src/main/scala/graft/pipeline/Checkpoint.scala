@@ -4,7 +4,7 @@ import graft.model.{Doc, Lineage}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
-import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 /** Resumable, idempotent extraction runs — Iceberg MERGE-on-doc_id semantics
   * over plain Parquet (the local jars carry no Iceberg runtime; SURVEY.md §4.2).
@@ -41,22 +41,27 @@ import org.apache.spark.storage.StorageLevel
   * commits into the superseded generation and its groups are lost to every
   * later reader (they re-run on the next resume).
   *
-  * A run touches its input once: `ExtractJob`'s kernel stage runs over the
-  * docs of every group still to do, tagged with each doc's group, and is
-  * persisted (MEMORY_AND_DISK) for the run. It has two consumers: the
-  * lineage of all those groups, `ExtractJob.lineageBy`'s partition-local
-  * aggregate over `(grp, partition_id)` collected as at most groups ×
-  * partitions rows (no exchange; this collect is what builds the cache),
-  * and the spans write, one scan of the cache (no input scan, no
-  * exchange). The cost is memory: the run's whole extracted output stays
-  * cached until the write returns, spilling to disk past the storage
-  * memory.
+  * A run touches its input once, inside the spans write: the docs of
+  * every group still to do, keyed by their group, go through
+  * `ExtractJob`'s kernel, whose output is the write's input. No exchange
+  * sits between the kernel and the write, so the kernel runs in the
+  * write's result tasks, and each task reports its partition's lineage per
+  * group (docs parsed, spans emitted, parse failures) through an
+  * accumulator once its input is exhausted — the way an Iceberg data
+  * writer reports its files' record counts for the driver to commit. Spark
+  * applies a result task's accumulator update once per partition and drops
+  * those of failed attempts, so after the write returns the driver holds
+  * exactly one lineage row per `(grp, partition_id)` with docs. Nothing is
+  * cached and no second job reads the extracted output. A writer may
+  * evaluate the spans more than once; the kernel is deterministic, so the
+  * repeated entries are equal and count once ([[foldLineage]]), and
+  * entries that differ fail the run before anything commits.
   *
   * Kill granularity: a kill before the lineage append lands redoes every
-  * group of the run on resume; a kill after it redoes nothing. The kernel
-  * already runs over all todo groups before anything commits, so what the
-  * run-wide commit adds to the loss is the write work of groups a
-  * per-group commit would have finished first.
+  * group of the run on resume; a kill after it redoes nothing. Extraction
+  * and the write of all todo groups are one job, so a kill loses at most
+  * that job; what the run-wide commit adds to the loss is the work on
+  * groups a per-group commit would have finished first.
   *
   * G decides the `grp=` directory layout of the spans table and the unit
   * of `maxGroups` (a run commits at most that many groups, which is how
@@ -83,6 +88,10 @@ object Checkpoint {
     *  - `overwriteGroups` / `overwriteGroup` are idempotent and all-or-
     *    nothing (a killed write leaves nothing visible; a re-run replaces,
     *    never appends);
+    *  - `overwriteGroups` evaluates `spans` to the end, at least once: the
+    *    extraction runs inside that evaluation and counts the lineage
+    *    `commitGroups` receives. It may evaluate it more than once, at the
+    *    cost of another kernel pass each time;
     *  - `commitGroups` / `commitGroup` run strictly AFTER the groups' data
     *    is durable — the lineage append IS the commit marker;
     *  - `doneGroups` returns exactly the groups whose lineage landed.
@@ -92,9 +101,15 @@ object Checkpoint {
     def overwriteGroup(grp: Long, spans: DataFrame): Unit
     def commitGroup(grp: Long, lineage: DataFrame): Unit
 
-    /** Replaces the data of every group in `grps`; `spans` has a `grp` column. */
-    def overwriteGroups(grps: Seq[Long], spans: DataFrame): Unit =
-      grps.foreach(g => overwriteGroup(g, spans.filter(col("grp") === g).drop("grp")))
+    /** Replaces the data of every group in `grps`; `spans` has a `grp`
+      * column. The default writes each group in turn from one cached copy
+      * of `spans`, so the kernel runs once, not once per group.
+      */
+    def overwriteGroups(grps: Seq[Long], spans: DataFrame): Unit = {
+      val cached = spans.persist()
+      try grps.foreach(g => overwriteGroup(g, cached.filter(col("grp") === g).drop("grp")))
+      finally cached.unpersist()
+    }
 
     /** Commits every group in `grps`; `lineage` has a `grp` column and at
       * least one row per group.
@@ -165,25 +180,38 @@ object Checkpoint {
     val todo = (0L until numGroups.toLong).filterNot(done).take(maxGroups)
     if (todo.isEmpty) return 0
 
-    // One kernel pass over the todo groups' docs; the lineage aggregate and
-    // the spans write below both read this cache, never the input.
-    val stage = ExtractJob.tagged(docs.filter(groupOf(numGroups).isin(todo: _*)), cfg)
-      .toDF("doc", "partition_id", "failed")
-      .withColumn("grp", groupOf(numGroups, $"doc.doc_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val lineage = ExtractJob.lineageBy(stage, $"grp").collect().toSeq
-      writer.overwriteGroups(todo, stage.select($"doc.*", $"grp"))
-      // The lineage append IS the commit marker, so it must hold a row for
-      // every group, even a zero-doc one: a synthetic partition_id=-1 marker
-      // row per group makes empty groups durably "done" (otherwise every
-      // resume re-runs them).
-      val marker = Lineage(-1, 0L, 0L, 0L, "marker")
-      val rows = lineage ++ todo.map(g => (g, marker))
-      writer.commitGroups(todo, spark.createDataset(rows).select($"_2.*", $"_1".as("grp")))
-    } finally stage.unpersist()
+    // The one kernel pass runs inside the spans write; its tasks count the
+    // lineage into `counted`, which commits after the write returns.
+    val counted = spark.sparkContext.collectionAccumulator[(Long, Lineage)]
+    val keyed = docs.select(struct(docs.columns.toSeq.map(docs.col): _*).as("doc"),
+        groupOf(numGroups).as("grp"))
+      .where($"grp".isin(todo: _*)).as[(Doc, Long)]
+    writer.overwriteGroups(todo, ExtractJob.keyedWithLineage(keyed, cfg, counted)
+      .toDF("doc", "grp").select($"doc.*", $"grp"))
+    val lineage = foldLineage(counted.value.asScala.toSeq)
+    // The lineage append IS the commit marker, so it must hold a row for
+    // every group, even a zero-doc one: a synthetic partition_id=-1 marker
+    // row per group makes empty groups durably "done" (otherwise every
+    // resume re-runs them).
+    val marker = Lineage(-1, 0L, 0L, 0L, "marker")
+    val rows = lineage ++ todo.map(g => (g, marker))
+    writer.commitGroups(todo, spark.createDataset(rows).select($"_2.*", $"_1".as("grp")))
     todo.size
   }
+
+  /** One lineage row per `(grp, partition_id)` from the kernel tasks'
+    * entries. Every evaluation of the spans adds its entries, so a key can
+    * have several; the kernel is deterministic, so they are equal and count
+    * once. Entries that differ mean two evaluations saw different input:
+    * that throws, and the caller commits nothing.
+    */
+  private[pipeline] def foldLineage(entries: Seq[(Long, Lineage)]): Seq[(Long, Lineage)] =
+    entries.groupBy { case (g, l) => (g, l.partition_id) }.toSeq.sortBy(_._1).map {
+      case (_, Seq(one, rest @ _*)) if rest.forall(_ == one) => one
+      case ((g, pid), differing) => throw new IllegalStateException(
+        s"group $g, partition $pid: the spans were evaluated with differing lineage " +
+          s"${differing.map(_._2).distinct.mkString(", ")} - the input is not deterministic")
+    }
 
   /** The `spans-v1` tip of `outDir`, or None when the root has no
     * committed generation. A tip of another format is refused.

@@ -31,12 +31,13 @@ object Compact {
 
   final case class Result(filesBefore: Int, filesAfter: Int, bytes: Long)
 
-  /** (path, length) of every data file, from ONE recursive listing — the
-    * LocatedFileStatus already carries the length, so no per-file re-stat
-    * (millions of files = millions of avoided namenode/object-store RPCs).
-    * A file counts when no component of its path below `dir` is hidden, as
-    * in Spark's reader: a generation's `_batches` manifest and a killed
-    * write's `.spark-staging-*` directory are not data.
+  /** (path, length) of every data file, from one listing of each directory
+    * ([[VersionedTable.filesUnder]]) — the statuses already carry the
+    * length, so no per-file re-stat (millions of files = millions of
+    * avoided namenode/object-store RPCs). A file counts when no component
+    * of its path below `dir` is hidden, as in Spark's reader: a
+    * generation's `_batches` manifest and a killed write's
+    * `.spark-staging-*` directory are not data.
     */
   private[pipeline] def dataFiles(spark: SparkSession, dir: String): Seq[(Path, Long)] = {
     val root = new Path(dir)
@@ -44,15 +45,10 @@ object Compact {
     if (!fs.exists(root)) Seq.empty
     else {
       val prefix = fs.makeQualified(root).toUri.getPath.stripSuffix("/") + "/"
-      val it = fs.listFiles(root, true)
-      val buf = scala.collection.mutable.ArrayBuffer[(Path, Long)]()
-      while (it.hasNext) {
-        val f = it.next()
-        val rel = f.getPath.toUri.getPath.stripPrefix(prefix)
-        val hidden = rel.split('/').exists(n => n.startsWith("_") || n.startsWith("."))
-        if (f.isFile && !hidden) buf += ((f.getPath, f.getLen))
+      VersionedTable.filesUnder(fs, root).collect {
+        case f if !f.getPath.toUri.getPath.stripPrefix(prefix).split('/')
+            .exists(n => n.startsWith("_") || n.startsWith(".")) => (f.getPath, f.getLen)
       }
-      buf.toSeq
     }
   }
 

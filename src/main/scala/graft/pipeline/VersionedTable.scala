@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -243,18 +243,25 @@ object VersionedTable {
     val docsPath = new Path(s"$dir/documents.parquet")
     val docsFs = docsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
-      val it = docsFs.listFiles(docsPath, true)
-      val parts = scala.collection.mutable.ArrayBuffer[String]()
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.isFile)
-          parts += s"${f.getPath.toUri.getPath}:${f.getLen}:${f.getModificationTime}"
-      }
+      val parts = filesUnder(docsFs, docsPath)
+        .map(f => s"${f.getPath.toUri.getPath}:${f.getLen}:${f.getModificationTime}")
       val id = s"$dir\n${parts.sorted.mkString("\n")}"
       Some(java.security.MessageDigest.getInstance("MD5")
         .digest(id.getBytes("UTF-8")).map("%02x".format(_)).mkString)
     } catch { case _: java.io.FileNotFoundException => None }
   }
+
+  /** Every file under `path` (or `path` itself when it is a file), by one
+    * `listStatus` per directory. Not `FileSystem.listFiles`: its
+    * `LocatedFileStatus` copies each file's permission, owner and group,
+    * which Hadoop's local file system loads by forking `ls -ld` per file
+    * when libhadoop is absent; a plain status loads them only when asked.
+    * Throws FileNotFoundException when `path` does not exist.
+    */
+  private[pipeline] def filesUnder(fs: FileSystem, path: Path): Seq[FileStatus] =
+    fs.listStatus(path).toSeq.flatMap { st =>
+      if (st.isDirectory) filesUnder(fs, st.getPath) else Seq(st)
+    }
 
   /** Drop all but the newest `keep` committed generations, and any
     * uncommitted directory that is not the newest entry (a crashed install

@@ -20,6 +20,10 @@ class RuleInventorySpec extends AnyFunSuite {
     ("stopword set, DuckDB", "len(list_filter($toks, t -> t IN ('the', 'a')))", Map("Idioms.scala" -> 1)),
     ("quality composite, both engines", "/ 100.0) * 0.7", Map("Idioms.scala" -> 2)),
     ("micro-unit quality composite, both engines", "* 7000", Map("Idioms.scala" -> 2)),
+    ("duplicate 3-gram fraction, Spark", "distinct.cast(\"double\") / total.cast(\"double\")",
+      Map("Idioms.scala" -> 1)),
+    ("duplicate 3-gram fraction, DuckDB", "CAST($distinct AS DOUBLE) / CAST($total AS DOUBLE)",
+      Map("Idioms.scala" -> 1)),
     ("3-gram shingle, Spark", "element_at(toks, i + 2)", Map("Idioms.scala" -> 1)),
     ("3-gram shingle, DuckDB", "[i:i+2]", Map("Idioms.scala" -> 1)),
     ("80/10/10 split, Spark", "h60Spark(\"cast(doc_id as string)\")} % 10", Map("Idioms.scala" -> 1)),

@@ -164,30 +164,29 @@ class PlanQualitySpec extends SparkTestBase {
     }, l.toString.take(4000))
   }
 
-  /** A resumable run extracts once and writes every group's spans from
-    * that cache in one write: it finds the cache already built and adds no
-    * exchange and no input scan of its own.
+  /** A resumable run extracts inside its one spans write: that write scans
+    * the input once, its only exchange is the round-robin spread of
+    * `DocSynth.docs`, and it reads no cache — there is no other kernel
+    * pass for it to read.
     */
-  test("resumable run: the one spans write reads only the built cache") {
+  test("the one spans write is the run's only kernel pass") {
     import graft.pipeline.{Checkpoint, ExtractJob}
     import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
     val aqe = new AdaptiveSparkPlanHelper {}
     val dir = java.nio.file.Files.createTempDirectory("graft-plan-resume").toString
     val inner = new Checkpoint.ParquetSpanWriter(spark, dir)
-    val seen = scala.collection.mutable.ArrayBuffer[(SparkPlan, Boolean)]()
+    val seen = scala.collection.mutable.ArrayBuffer[SparkPlan]()
     val writer = new Checkpoint.SpanWriter {
       def doneGroups(): Set[Long] = inner.doneGroups()
       def overwriteGroup(grp: Long, spans: DataFrame): Unit = inner.overwriteGroup(grp, spans)
       def commitGroup(grp: Long, lineage: DataFrame): Unit = inner.commitGroup(grp, lineage)
       override def overwriteGroups(grps: Seq[Long], spans: DataFrame): Unit = {
-        val p = spans.queryExecution.executedPlan
-        val built = aqe.collect(p) { case s: InMemoryTableScanExec => s }
-          .forall(_.relation.cacheBuilder.isCachedColumnBuffersLoaded)
-        seen += ((p, built))
+        seen += spans.queryExecution.executedPlan
         inner.overwriteGroups(grps, spans)
       }
       override def commitGroups(grps: Seq[Long], lineage: DataFrame): Unit =
@@ -196,11 +195,14 @@ class PlanQualitySpec extends SparkTestBase {
     assert(Checkpoint.runResumable(graft.sources.DocSynth.docs(spark, sfDir), writer,
       ExtractJob.Config(), numGroups = 8, maxGroups = Int.MaxValue) == 8)
     assert(seen.size == 1)
-    for ((p, built) <- seen) {
-      assert(aqe.collect(p) { case s: InMemoryTableScanExec => s }.nonEmpty, p.toString.take(4000))
-      assert(built, s"the spans write builds the cache itself:\n${p.toString.take(4000)}")
-      assert(aqe.collect(p) { case e: Exchange => e }.isEmpty, p.toString.take(4000))
-      assert(aqe.collect(p) { case f: FileSourceScanExec => f }.isEmpty, p.toString.take(4000))
+    for (p <- seen) {
+      assert(aqe.collect(p) { case f: FileSourceScanExec => f }.size == 1, p.toString.take(4000))
+      val exchanges = aqe.collect(p) { case e: Exchange => e }
+      assert(exchanges.size == 1 && exchanges.forall {
+        case s: ShuffleExchangeExec => s.outputPartitioning.isInstanceOf[RoundRobinPartitioning]
+        case _ => false
+      }, p.toString.take(4000))
+      assert(aqe.collect(p) { case s: InMemoryTableScanExec => s }.isEmpty, p.toString.take(4000))
     }
   }
 

@@ -69,6 +69,20 @@ class LocalFileSystemSpec extends SparkTestBase {
     assert(forked.isEmpty, forked.take(5).mkString("\n"))
   }
 
+  test("a staged curation run and a compaction list their files without forking ls") {
+    import graft.operators.DedupOps
+    import graft.pipeline.VersionedTable
+    val root = Files.createTempDirectory("graft-nols")
+    val table = root.resolve("table").toString
+    VersionedTable.install(spark, table)(gen => spark.range(100).write.parquet(gen))
+    val started = commandsDuring {
+      DedupOps.curationRunStaged(spark, sfDir, root.resolve("stage").toString)
+      VersionedTable.compact(spark, table)
+    }
+    val forked = started.filter(c => program(c) == "ls")
+    assert(forked.isEmpty, forked.take(5).mkString("\n"))
+  }
+
   test("written files, checksums and directories carry stock Hadoop's mode bits") {
     for (umask <- Seq("022", "027", "077")) {
       val conf = new Configuration()
