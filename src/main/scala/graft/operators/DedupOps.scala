@@ -556,17 +556,6 @@ object DedupOps {
       .orderBy("stage")
   }
 
-  /** One shared doc-feature pass → (curated table, funnel report), the
-    * in-memory form of [[curationRunStaged]]: the verdict table is
-    * checkpointed once (`localCheckpoint`, nothing left persisted to
-    * release) and both outputs read it, where the two registry queries
-    * would each run the LSH + connected-components DAG.
-    */
-  def curationRun(s: org.apache.spark.sql.SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val v = verdicts(s, dir).localCheckpoint(true)
-    (curatedFrom(v), funnelFrom(v))
-  }
-
   /** Deployed-job curation (CurateMain): the doc-feature table is staged to
     * DURABLE storage, a [[graft.pipeline.VersionedTable]] root at
     * `<stageDir>/features` whose generation commits marker-after-data with

@@ -155,6 +155,14 @@ object Checkpoint {
   /** Run (or resume) an extraction against the default parquet writer.
     * Returns the number of groups processed in THIS invocation. `maxGroups`
     * limits work for kill-simulation tests.
+    *
+    * A resume must pass the first run's `cfg.mode` and `numGroups`: the
+    * output records neither, and the groups still to do are picked by
+    * number. A `numGroups = 8` run cut after 4 groups, resumed with
+    * `numGroups = 4`, finds groups 0-3 done and returns without writing,
+    * so the docs of the first run's groups 4-7 never land; a mode change
+    * mixes two modes' spans in one table. ROADMAP direction 6 records both
+    * in the output and refuses such a resume.
     */
   def runResumable(
       docs: Dataset[Doc],

@@ -3,8 +3,7 @@ package graft.pipeline
 import graft.kernel.{Extract, ExtractMode}
 import graft.model.{Doc, Lineage}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 import org.apache.spark.util.CollectionAccumulator
 import scala.util.control.NonFatal
 
@@ -20,10 +19,11 @@ import scala.util.control.NonFatal
   * round-robin partitions (the skew test in PipelineSpec bounds it).
   *
   *  - No collect() of spans, no driver-side loops; lineage is counted
-  *    inside each kernel partition (no exchange) and only the tiny
-  *    per-partition summary reaches the driver: as rows of its own job
-  *    ([[lineageBy]]), or, for `Checkpoint`'s runs, as an accumulator
-  *    update from the kernel tasks of the spans write itself
+  *    inside each kernel partition (no exchange) by the one partition
+  *    function both entry points run, and only the tiny per-partition
+  *    summary leaves the task: as the rows of a Dataset of its own
+  *    ([[extractWithLineage]]), or, for `Checkpoint`'s runs, as an
+  *    accumulator update from the kernel tasks of the spans write itself
   *    ([[keyedWithLineage]]), so a run extracts once without caching.
   *  - Determinism: output spans are a pure function of the input row, so
   *    task retries and job re-runs emit identical bytes — the precondition
@@ -44,87 +44,6 @@ object ExtractJob {
     try (Extract.extractDoc(d, mode), false)
     catch { case NonFatal(_) => (Doc(d.doc_id, Nil), true) }
 
-  /** The kernel stage: `(doc, partition_id, failed)` per input doc; a doc
-    * whose extraction throws becomes an empty doc with `failed = true`.
-    */
-  def tagged(docs: Dataset[Doc], cfg: Config = Config()): Dataset[(Doc, Int, Boolean)] = {
-    import docs.sparkSession.implicits._
-    val mode = cfg.mode
-    docs.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      it.map { d =>
-        val (out, failed) = extractOne(d, mode)
-        (out, pid, failed)
-      }
-    }
-  }
-
-  /** The kernel over docs keyed by a long (`Checkpoint`'s group): `(doc,
-    * key)` per input doc, failures handled as in [[tagged]]. Each task
-    * counts its partition's lineage per key and, once its input is
-    * exhausted, adds one `(key, Lineage)` entry per key to `lineage` — the
-    * rows [[lineageBy]] would compute over the same partition.
-    *
-    * The entries are exact when this stage runs in a job's result tasks
-    * (nothing between it and the action moves rows): Spark applies a
-    * result task's accumulator update once per partition and drops those
-    * of failed attempts. Each evaluation of the returned Dataset adds its
-    * entries again.
-    */
-  private[pipeline] def keyedWithLineage(
-      keyed: Dataset[(Doc, Long)],
-      cfg: Config,
-      lineage: CollectionAccumulator[(Long, Lineage)]): Dataset[(Doc, Long)] = {
-    import keyed.sparkSession.implicits._
-    val mode = cfg.mode
-    keyed.mapPartitions { it =>
-      val counts = new LineageCounter(TaskContext.getPartitionId())
-      // `++` takes its operand by name: the entries are added when the
-      // kernel's output is exhausted, not before
-      it.map { case (d, k) =>
-        val (out, failed) = extractOne(d, mode)
-        counts.add(k, out.spans.size, failed)
-        (out, k)
-      } ++ { counts.rows.foreach(lineage.add); Iterator.empty }
-    }
-  }
-
-  /** Spans and per-partition lineage of one tagged stage. Each is its own
-    * action over `stage`; persist it first to run the kernel once.
-    */
-  def split(stage: Dataset[(Doc, Int, Boolean)]): (Dataset[Doc], Dataset[Lineage]) = {
-    import stage.sparkSession.implicits._
-    (stage.map(_._1), lineageBy(stage.toDF("doc", "partition_id", "failed"), lit(0L)).map(_._2))
-  }
-
-  /** Lineage of a tagged stage (columns `doc`, `partition_id`, `failed`),
-    * one row per `(key, partition_id)`: the key (a long column) and a
-    * [[Lineage]] row.
-    *
-    * A partition-local aggregate: one hash map per partition, no exchange.
-    * That is exact because `partition_id` is the kernel task's partition
-    * index, so every row of one `partition_id` sits in the same partition
-    * of `stage` as long as nothing between the kernel and here moves rows
-    * (true for `tagged` itself and for a persisted copy of it; a row seen
-    * in another partition fails the task). So the result holds at most
-    * keys x partitions rows, small enough to collect on the driver.
-    */
-  def lineageBy(stage: DataFrame, key: Column): Dataset[(Long, Lineage)] = {
-    import stage.sparkSession.implicits._
-    stage.select(key, col("partition_id"), size(col("doc.spans")), col("failed"))
-      .as[(Long, Int, Long, Boolean)]
-      .mapPartitions { rows =>
-        val pid = TaskContext.getPartitionId()
-        val counts = new LineageCounter(pid)
-        rows.foreach { case (k, p, spans, failed) =>
-          if (p != pid) throw new IllegalStateException(
-            s"lineage row of partition_id $p read in partition $pid: rows moved after the kernel")
-          counts.add(k, spans, failed)
-        }
-        counts.rows
-      }
-  }
-
   /** One kernel partition's lineage: per key, docs parsed, spans emitted
     * and parse failures, as one [[Lineage]] row per key.
     */
@@ -142,8 +61,56 @@ object ExtractJob {
       byKey.iterator.map { case (k, a) => (k, Lineage(pid, a(0), a(1), a(2), "complete")) }
   }
 
-  /** Extraction with lineage: `(spans, lineage)` over `docs`. */
+  /** The kernel over one partition of `(doc, key)` rows: `(spans, key)` per
+    * row, a doc whose extraction throws becoming an empty doc counted as a
+    * parse failure. Once the input is exhausted, `lineage` receives the
+    * partition's counts, one `(key, Lineage)` row per key seen.
+    */
+  private def extractPartition(rows: Iterator[(Doc, Long)], mode: ExtractMode)(
+      lineage: Iterator[(Long, Lineage)] => Unit): Iterator[(Doc, Long)] = {
+    val counts = new LineageCounter(TaskContext.getPartitionId())
+    // `++` takes its operand by name: the counts are handed over when the
+    // kernel's output is exhausted, not before
+    rows.map { case (d, k) =>
+      val (out, failed) = extractOne(d, mode)
+      counts.add(k, out.spans.size, failed)
+      (out, k)
+    } ++ { lineage(counts.rows); Iterator.empty }
+  }
+
+  /** The kernel over docs keyed by a long (`Checkpoint`'s group): `(doc,
+    * key)` per input doc. Each task adds its partition's lineage, one
+    * `(key, Lineage)` entry per key, to `lineage`.
+    *
+    * The entries are exact when this stage runs in a job's result tasks
+    * (nothing between it and the action moves rows): Spark applies a
+    * result task's accumulator update once per partition and drops those
+    * of failed attempts. Each evaluation of the returned Dataset adds its
+    * entries again.
+    */
+  private[pipeline] def keyedWithLineage(
+      keyed: Dataset[(Doc, Long)],
+      cfg: Config,
+      lineage: CollectionAccumulator[(Long, Lineage)]): Dataset[(Doc, Long)] = {
+    import keyed.sparkSession.implicits._
+    val mode = cfg.mode
+    keyed.mapPartitions(extractPartition(_, mode)(_.foreach(lineage.add)))
+  }
+
+  /** Extraction with lineage: `(spans, lineage)` over `docs`, the lineage
+    * one row per kernel partition that holds docs. Each is its own action
+    * and runs the kernel.
+    */
   def extractWithLineage(docs: Dataset[Doc], cfg: Config = Config())
-      : (Dataset[Doc], Dataset[Lineage]) =
-    split(tagged(docs, cfg))
+      : (Dataset[Doc], Dataset[Lineage]) = {
+    import docs.sparkSession.implicits._
+    val mode = cfg.mode
+    val spans = docs.mapPartitions(it => extractPartition(it.map((_, 0L)), mode)(_ => ()).map(_._1))
+    val lineage = docs.mapPartitions { it =>
+      val rows = scala.collection.mutable.ArrayBuffer[Lineage]()
+      extractPartition(it.map((_, 0L)), mode)(rows ++= _.map(_._2)).foreach(_ => ())
+      rows.iterator
+    }
+    (spans, lineage)
+  }
 }

@@ -14,11 +14,16 @@ import org.apache.spark.sql.SparkSession
   * Reads the docs table, runs the resumable group-committed extraction
   * (Checkpoint: MERGE-on-doc_id-equivalent over parquet), prints the lineage
   * summary. Re-running after a kill resumes from the last committed group.
+  * A resume must repeat the first run's mode and numGroups: the output does
+  * not record them yet, and a resume with another numGroups skips docs
+  * whose new group number was committed under the old one (ROADMAP
+  * direction 6 makes the output refuse such a resume).
   * Bad arguments fail with the usage line before any Spark job runs.
   */
 object ExtractMain {
   private val Usage =
-    "usage: ExtractMain <inputSfDir> <outDir> [chunk|paragraph|semantic] [numGroups]"
+    "usage: ExtractMain <inputSfDir> <outDir> [chunk|paragraph|semantic] [numGroups]" +
+      " (a resume into <outDir> must repeat its first run's mode and numGroups)"
 
   /** The extraction mode named on the command line; an unknown name fails. */
   private[pipeline] def parseMode(name: String): ExtractMode = name match {

@@ -1,20 +1,21 @@
 package graft.pipeline
 
-import graft.SparkTestBase
-import graft.operators.{CorpusOps, DedupOps, Tables}
+import graft.{SparkEntry, SparkTestBase}
+import graft.operators.{CorpusOps, Tables}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 class ExportSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def assembled() = {
-    val curated = DedupOps.curationRun(spark, sfDir)._1
-    ExportJob.assembleFrom(curated, Tables.documents(spark, sfDir), nShards = 4)
-  }
+  /** The curated table of the `q_curation_pipeline` registry query. */
+  private def curatedTable() = SparkEntry.queries("q_curation_pipeline")(spark, sfDir)
+
+  private def assembled() =
+    ExportJob.assembleFrom(curatedTable(), Tables.documents(spark, sfDir), nShards = 4)
 
   test("assemble: admission = train split ∩ mixture rule; packing arithmetic exact per shard") {
-    val curated = DedupOps.curationRun(spark, sfDir)._1
+    val curated = curatedTable()
     val out = assembled().collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
       r.getString(3), r.getLong(4), r.getLong(5), r.getLong(6)))
 
@@ -42,7 +43,7 @@ class ExportSpec extends SparkTestBase {
 
   test("assemble: deterministic under input repartitioning") {
     val base = assembled().collect().toSet
-    val curated = DedupOps.curationRun(spark, sfDir)._1.repartition(7)
+    val curated = curatedTable().repartition(7)
     val again = ExportJob
       .assembleFrom(curated, Tables.documents(spark, sfDir).repartition(5), nShards = 4)
       .collect().toSet

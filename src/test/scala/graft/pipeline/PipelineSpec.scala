@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.SparkTestBase
-import graft.kernel.ExtractMode
+import graft.kernel.{Extract, ExtractMode}
 import graft.model.{Doc, Lineage, Span}
 import graft.sources.DocSynth
 import java.nio.file.Files
@@ -93,8 +93,10 @@ class PipelineSpec extends SparkTestBase {
     val curated1 = c1.collect().map(_.toSeq).toSeq
     val funnel1 = f1.collect().map(_.toSeq).toSeq
     assert(curated1.nonEmpty && funnel1.length == 6)
-    // the staged form is bit-identical to the in-query localCheckpoint form
-    val (c0, f0) = DedupOps.curationRun(spark, sfDir)
+    // the staged form is bit-identical to the in-query form of the registry
+    // queries, which run the same verdicts -> curated / funnel code
+    val c0 = graft.SparkEntry.queries("q_curation_pipeline")(spark, sfDir)
+    val f0 = graft.SparkEntry.queries("q_curation_funnel")(spark, sfDir)
     assert(curated1 == c0.collect().map(_.toSeq).toSeq)
     assert(funnel1 == f0.collect().map(_.toSeq).toSeq)
     // resume with the marker present: the input dir is gone, so identical
@@ -223,6 +225,27 @@ class PipelineSpec extends SparkTestBase {
     assert(real.getLong(0) == 3L && real.getLong(1) == 0L)
   }
 
+  test("a doc whose kernel call throws commits as an empty doc and counts one parse failure") {
+    // a NULL span array makes the kernel itself throw, unlike a NULL text
+    val ok = Doc("ok", Seq(Span("text", "real content words here ok fine " * 20, "", 0)))
+    val bad = Doc("bad", null)
+    val dir = Files.createTempDirectory("graft-kernel-throws").toString
+    assert(Checkpoint.runResumable(spark.createDataset(Seq(ok, bad)), dir, numGroups = 4) == 4)
+    val out = Checkpoint.readSpans(spark, dir).as[Doc].collect().sortBy(_.doc_id)
+    assert(out.map(_.doc_id).toSeq == Seq("bad", "ok"))
+    assert(out(0).spans.isEmpty && out(1).spans.nonEmpty)
+    val real = Checkpoint.readLineage(spark, dir).where($"status" === "complete")
+      .agg(org.apache.spark.sql.functions.sum($"docs_parsed"),
+        org.apache.spark.sql.functions.sum($"parse_failures")).head
+    assert(real.getLong(0) == 2L && real.getLong(1) == 1L)
+    // the other entry point counts the doc once, as parsed and as failed
+    val (spans, lineage) = ExtractJob.extractWithLineage(spark.createDataset(Seq(bad)))
+    val lin = lineage.collect()
+    assert(lin.map(_.docs_parsed).sum == 1L && lin.map(_.parse_failures).sum == 1L)
+    assert(lin.map(_.spans_emitted).sum == 0L)
+    assert(spans.collect().toSeq == Seq(Doc("bad", Nil)))
+  }
+
   test("resume: kill after 3 groups -> re-run converges to single-shot output") {
     val docs = DocSynth.docs(spark, sfDir)
     val dirA = Files.createTempDirectory("graft-resume-a").toString
@@ -324,6 +347,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("a run commits every group's lineage in one file") {
+    import org.apache.spark.sql.functions.{spark_partition_id, struct}
     val docs = DocSynth.docs(spark, sfDir)
     def lineageFiles(dir: String): Seq[String] =
       new java.io.File(VersionedTable.manifestDir(tip(dir))).listFiles().map(_.getName).toSeq
@@ -331,15 +355,20 @@ class PipelineSpec extends SparkTestBase {
     val dir = Files.createTempDirectory("graft-resume-lineage").toString
     assert(Checkpoint.runResumable(docs, dir, numGroups = 8) == 8)
     assert(lineageFiles(dir).length == 1, lineageFiles(dir).mkString(", "))
-    // the expected rows, from the tagged rows themselves: one per (group,
-    // kernel partition) that holds docs, plus the group's marker
-    val tagged = ExtractJob.tagged(docs).toDF("doc", "partition_id", "failed")
-      .select(Checkpoint.groupOf(8, $"doc.doc_id"), $"partition_id",
-        org.apache.spark.sql.functions.size($"doc.spans"), $"failed")
-      .as[(Long, Int, Int, Boolean)].collect()
+    // the expected rows, from each input doc's group and partition with the
+    // kernel run on the driver: one per (group, kernel partition) that holds
+    // docs, plus the group's marker
+    val perDoc = docs.select(Checkpoint.groupOf(8), spark_partition_id(),
+        struct(docs.columns.toSeq.map(docs.col): _*))
+      .as[(Long, Int, Doc)].collect().map { case (g, pid, d) =>
+        val (spans, failed) =
+          try (Extract.extractDoc(d, ExtractMode.ChunkMode).spans.size, false)
+          catch { case scala.util.control.NonFatal(_) => (0, true) }
+        (g, pid, spans, failed)
+      }
     val marker = Lineage(-1, 0L, 0L, 0L, "marker")
     for (g <- 0L until 8L) {
-      val want = tagged.filter(_._1 == g).groupBy(_._2).map { case (pid, rows) =>
+      val want = perDoc.filter(_._1 == g).groupBy(_._2).map { case (pid, rows) =>
         Lineage(pid, rows.length.toLong, rows.map(_._3.toLong).sum, rows.count(_._4).toLong, "complete")
       }.toSeq :+ marker
       val got = Checkpoint.readLineage(spark, dir).where($"grp" === g).drop("grp")
