@@ -24,14 +24,16 @@ object CorpusOps {
     * `q_mixture_epochs`, and [[withMixture]]: a weighting change that
     * edits one consumer but not the others would silently decouple the
     * epoch plan from the mixture it allocates against. Deterministic
-    * function of the domain suffix here; production joins a learned
-    * weight table — the consumers don't change.
+    * function of the domain suffix here (characters 4–13 of `source` as an
+    * integer; a source with no such suffix, a real domain name or NULL, gets
+    * the cap in both engines); production joins a learned weight table —
+    * the consumers don't change.
     */
   private[graft] def domainWeightCol: org.apache.spark.sql.Column =
     least(lit(1000000L),
-      lit(50000L) * (lit(1L) + substring(col("source"), 4, 10).cast("bigint")))
+      lit(50000L) * (lit(1L) + substring(col("source"), 4, 10).try_cast("bigint")))
   private[graft] val domainWeightDuck =
-    "least(1000000, 50000 * (1 + CAST(substring(source, 4) AS BIGINT)))"
+    "least(1000000, 50000 * (1 + TRY_CAST(substring(source, 4, 10) AS BIGINT)))"
 
   /** Mixture-admission columns (`target_ppm`, `mix_u`): a doc is admitted
     * iff `mix_u < target_ppm`. Shared verbatim by `q_domain_mixture` and the

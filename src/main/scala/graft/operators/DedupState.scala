@@ -61,6 +61,12 @@ object DedupState {
       throw new IllegalStateException(
         s"dedup state at $stateDir has no committed $FormatVersion generation; run DedupState.build first"))
 
+  /** The resolved generation with its band-row and signature-doc counts. */
+  def sizes(s: SparkSession, stateDir: String): (String, Long, Long) = {
+    val gen = generation(s, stateDir)
+    (gen, s.read.parquet(s"$gen/bands").count(), s.read.parquet(s"$gen/sigs").count())
+  }
+
   /** The committed band table of the resolved generation. Long-lived
     * readers (the streaming sink) load ONCE and cache; per-call probes go
     * through [[dedupBatch]].

@@ -43,17 +43,18 @@ object ExtractOps {
        |      '(?<!\\\\n)\\\\n(?!\\\\n)', ' '),
        |    '[ \\t]+', ' '))""".stripMargin
 
-  /** Same transform for RE2 (no lookarounds): after the 3+-newline collapse,
-    * newline runs are exactly 1 or 2 long, so `\n\n`→sentinel, `\n`→space,
-    * sentinel→`\n\n` is equivalent to the lookaround rule.
+  /** Same transform for RE2 (no lookarounds) over an arbitrary input
+    * expression: after the 3+-newline collapse, newline runs are exactly 1
+    * or 2 long, so `\n\n`→sentinel, `\n`→space, sentinel→`\n\n` is
+    * equivalent to the lookaround rule.
     */
-  private val cleanDuck =
+  private[operators] def cleanOf(inner: String) =
     s"""trim(
        |  regexp_replace(
        |    replace(replace(replace(
        |      regexp_replace(
        |        regexp_replace(
-       |          replace($structureDuck, chr(13), chr(10)),
+       |          replace($inner, chr(13), chr(10)),
        |          '(\\w)-\\n(\\w)', '\\1\\2', 'g'),
        |        '\\n{3,}', chr(10) || chr(10), 'g'),
        |      chr(10) || chr(10), chr(1)), chr(10), ' '), chr(1), chr(10) || chr(10)),
@@ -103,7 +104,7 @@ object ExtractOps {
 
     // T1–T5 cleaning chain over synthesized line structure.
     Op("q_clean_text",
-      s"SELECT doc_id, $cleanDuck AS cleaned FROM documents ORDER BY doc_id") { (s, dir) =>
+      s"SELECT doc_id, ${cleanOf(structureDuck)} AS cleaned FROM documents ORDER BY doc_id") { (s, dir) =>
       Tables.documents(s, dir)
         .select(col("doc_id"), expr(cleanSpark).as("cleaned"))
         .orderBy("doc_id")
@@ -263,28 +264,7 @@ object ExtractOps {
   */
 private[operators] object ParagraphOracles {
 
-  private[operators] val structureDuck =
-    """replace(replace(replace(replace(text,
-      |  ' merge ', '-' || chr(10) || 'merge '),
-      |  ' data ', ' ' || chr(10) || chr(10) || 'data '),
-      |  ' join ', ' ' || chr(13) || chr(10) || 'join '),
-      |  ' the ', ' ' || repeat(chr(10), 4) || 'the ')""".stripMargin
-
-  /** `_clean_page_text` over an arbitrary input expression (RE2 sentinel
-    * variant of ExtractOps.cleanDuck).
-    */
-  private def cleanOf(inner: String) =
-    s"""trim(
-       |  regexp_replace(
-       |    replace(replace(replace(
-       |      regexp_replace(
-       |        regexp_replace(
-       |          replace($inner, chr(13), chr(10)),
-       |          '(\\w)-\\n(\\w)', '\\1\\2', 'g'),
-       |        '\\n{3,}', chr(10) || chr(10), 'g'),
-       |      chr(10) || chr(10), chr(1)), chr(10), ' '), chr(1), chr(10) || chr(10)),
-       |    '[ \\t]+', ' ', 'g'),
-       |  ' ' || chr(10))""".stripMargin
+  import ExtractOps.{cleanOf, structureDuck}
 
   /** Python str.strip() character set. */
   private val ws = "' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)"

@@ -152,6 +152,9 @@ object Checkpoint {
       commitGroups(Seq(grp), lineage.withColumn("grp", lit(grp)))
   }
 
+  /** The group count of a [[runResumable]] run that names none. */
+  val DefaultGroups = 8
+
   /** Run (or resume) an extraction against the default parquet writer.
     * Returns the number of groups processed in THIS invocation. `maxGroups`
     * limits work for kill-simulation tests.
@@ -161,14 +164,16 @@ object Checkpoint {
     * number. A `numGroups = 8` run cut after 4 groups, resumed with
     * `numGroups = 4`, finds groups 0-3 done and returns without writing,
     * so the docs of the first run's groups 4-7 never land; a mode change
-    * mixes two modes' spans in one table. ROADMAP direction 6 records both
-    * in the output and refuses such a resume.
+    * mixes two modes' spans in one table. `ExtractMain` always runs
+    * [[DefaultGroups]], so there only the mode can differ; a caller of this
+    * API can pass any group count. ROADMAP direction 6 records both in the
+    * output and refuses such a resume.
     */
   def runResumable(
       docs: Dataset[Doc],
       outDir: String,
       cfg: ExtractJob.Config = ExtractJob.Config(),
-      numGroups: Int = 8,
+      numGroups: Int = DefaultGroups,
       maxGroups: Int = Int.MaxValue): Int =
     runResumable(docs, new ParquetSpanWriter(docs.sparkSession, outDir),
       cfg, numGroups, maxGroups)

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 /** Table-maintenance entrypoint (the Iceberg `rewrite_data_files` job):
   *
   *   spark-submit --class graft.pipeline.CompactMain \
@@ -24,22 +22,15 @@ object CompactMain {
 
   /** `(tableRoot, targetFileMB)`; bad arguments fail with the usage line. */
   private[pipeline] def parseArgs(args: Array[String]): (String, Int) = {
-    require(args.nonEmpty && args.length <= 2, Usage)
+    MainArgs.arity(args, Usage)
     (args(0), args.lift(1).fold(128)(MainArgs.positiveInt("targetFileMB", _, Usage)))
   }
 
   def main(args: Array[String]): Unit = {
     val (root, targetMb) = parseArgs(args)
-    // a host that already runs a session (an in-process caller) keeps it
-    val owned = SparkSession.getDefaultSession.isEmpty
-    val spark = SparkSession.builder()
-      .appName("graft-compact")
-      .master(sys.props.getOrElse("spark.master", "local[*]"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val r = VersionedTable.compact(spark, root, targetMb.toLong * 1024 * 1024)
-    println(s"[compact] $root: ${r.filesBefore} files -> ${r.filesAfter} (${r.bytes} bytes)")
-    if (owned) spark.stop()
+    MainArgs.launch("graft-compact") { spark =>
+      val r = VersionedTable.compact(spark, root, targetMb.toLong * 1024 * 1024)
+      println(s"[compact] $root: ${r.filesBefore} files -> ${r.filesAfter} (${r.bytes} bytes)")
+    }
   }
 }

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 /** spark-submit entrypoint for the corpus-curation pipeline: stages the
   * doc-feature table durably, then writes the curated table (doc_id, lang,
   * quality, split) and the per-stage funnel report (stage, docs, dropped,
@@ -24,30 +22,24 @@ import org.apache.spark.sql.SparkSession
   *   spark-submit --class graft.pipeline.CurateMain <jar> <sfDir> <outDir> [stageDir]
   */
 object CurateMain {
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: CurateMain <inputSfDir> <outDir> [stageDir]")
-    val Array(inDir, outDir) = args.take(2)
-    val stageDir = if (args.length >= 3) args(2) else s"$outDir/_stage"
-    val spark = SparkSession.builder()
-      .appName("graft-curate")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .master(sys.props.getOrElse("spark.master", "local[*]"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  private val Usage = "usage: CurateMain <inputSfDir> <outDir> [stageDir]"
 
-    // one shared stage computation feeds both outputs (invoking the two
-    // registry queries separately would run the LSH + connected-components
-    // DAG twice)
-    val (curated, funnel) = graft.operators.DedupOps.curationRunStaged(spark, inDir, stageDir)
-    curated.write.mode("overwrite").partitionBy("split").parquet(s"$outDir/curated")
-    // materialize the funnel rows ONCE: print from the collected copy and
-    // write them back as a local DataFrame instead of re-executing the plan
-    val rows = funnel.collect()
-    rows.foreach(r => println(
-      s"[curate] ${r.getString(0)}: ${r.getLong(1)} docs (dropped ${r.getLong(2)}: ${r.getString(3)})"))
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), funnel.schema)
-      .write.mode("overwrite").parquet(s"$outDir/funnel")
-    spark.stop()
+  def main(args: Array[String]): Unit = {
+    val Array(inDir, outDir) = MainArgs.arity(args, Usage).take(2)
+    val stageDir = args.lift(2).getOrElse(s"$outDir/_stage")
+    MainArgs.launch("graft-curate") { spark =>
+      // one shared stage computation feeds both outputs (invoking the two
+      // registry queries separately would run the LSH + connected-components
+      // DAG twice)
+      val (curated, funnel) = graft.operators.DedupOps.curationRunStaged(spark, inDir, stageDir)
+      curated.write.mode("overwrite").partitionBy("split").parquet(s"$outDir/curated")
+      // materialize the funnel rows ONCE: print from the collected copy and
+      // write them back as a local DataFrame instead of re-executing the plan
+      val rows = funnel.collect()
+      rows.foreach(r => println(
+        s"[curate] ${r.getString(0)}: ${r.getLong(1)} docs (dropped ${r.getLong(2)}: ${r.getString(3)})"))
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), funnel.schema)
+        .write.mode("overwrite").parquet(s"$outDir/funnel")
+    }
   }
 }

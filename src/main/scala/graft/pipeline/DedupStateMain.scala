@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import graft.operators.DedupState
 
 /** spark-submit entrypoint for dedup-state maintenance: builds (or
   * no-op-reuses) the persisted LSH band/signature state for a corpus
@@ -13,22 +13,14 @@ import org.apache.spark.sql.SparkSession
   *   spark-submit --class graft.pipeline.DedupStateMain <jar> <sfDir> <stateDir>
   */
 object DedupStateMain {
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: DedupStateMain <inputSfDir> <stateDir>")
-    val Array(inDir, stateDir) = args.take(2)
-    val spark = SparkSession.builder()
-      .appName("graft-dedup-state")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .master(sys.props.getOrElse("spark.master", "local[*]"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  private val Usage = "usage: DedupStateMain <inputSfDir> <stateDir>"
 
-    val rebuilt = graft.operators.DedupState.build(spark, inDir, stateDir)
-    val gen = graft.operators.DedupState.generation(spark, stateDir)
-    val bands = spark.read.parquet(s"$gen/bands").count()
-    val sigs = spark.read.parquet(s"$gen/sigs").count()
-    println(s"""{"rebuilt":$rebuilt,"bands":$bands,"sig_docs":$sigs,"state":"$stateDir","generation":"$gen"}""")
-    spark.stop()
+  def main(args: Array[String]): Unit = {
+    val Array(inDir, stateDir) = MainArgs.arity(args, Usage)
+    MainArgs.launch("graft-dedup-state") { spark =>
+      val rebuilt = DedupState.build(spark, inDir, stateDir)
+      val (gen, bands, sigs) = DedupState.sizes(spark, stateDir)
+      println(s"""{"rebuilt":$rebuilt,"bands":$bands,"sig_docs":$sigs,"state":"$stateDir","generation":"$gen"}""")
+    }
   }
 }

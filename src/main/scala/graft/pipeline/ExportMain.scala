@@ -34,21 +34,13 @@ object ExportMain {
 
   /** `(inputSfDir, outDir, nShards)`; bad arguments fail with the usage line. */
   private[pipeline] def parseArgs(args: Array[String]): (String, String, Int) = {
-    require(args.length >= 2 && args.length <= 3, Usage)
+    MainArgs.arity(args, Usage)
     (args(0), args(1), args.lift(2).fold(8)(MainArgs.positiveInt("nShards", _, Usage)))
   }
 
   def main(args: Array[String]): Unit = {
     val (inDir, outDir, nShards) = parseArgs(args)
-    val spark = SparkSession.builder()
-      .appName("graft-export")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .master(sys.props.getOrElse("spark.master", "local[*]"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    run(spark, inDir, outDir, nShards)
-    spark.stop()
+    MainArgs.launch("graft-export")(run(_, inDir, outDir, nShards))
   }
 
   /** The resumable body (separated from main for in-process testing). */

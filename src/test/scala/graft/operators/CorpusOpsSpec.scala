@@ -27,6 +27,15 @@ class CorpusOpsSpec extends SparkTestBase {
     assert(rows.exists { case (_, _, total, sampled, _) => sampled < total })
   }
 
+  test("domain weight: a source with no numeric suffix gets the cap instead of failing the cast") {
+    // under ANSI a plain cast of "mple.com" throws CAST_INVALID_INPUT
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val sources = Seq(Some("src7"), Some("example.com"), Some("src-1"), Some("src" + "9" * 19), None)
+    val weights = sources.toDF("source").select(CorpusOps.domainWeightCol).as[Long].collect().toSeq
+    // the 19-digit suffix is read as its first 10 digits, as DuckDB's twin does
+    assert(weights == Seq(400000L, 1000000L, 0L, 1000000L, 1000000L))
+  }
+
   test("q_shuffle_shard: a permutation — dense per-shard positions, all docs exactly once") {
     val rows = q("q_shuffle_shard").select("doc_id", "shard", "pos")
       .as[(Long, Long, Long)].collect()
