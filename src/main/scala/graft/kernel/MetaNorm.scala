@@ -1,12 +1,11 @@
 package graft.kernel
 
-/** T6–T10: metadata extract / normalize / date-normalize / flatten.
+/** T6–T9: metadata extract / normalize / date-normalize.
   *
   * Reference: `/root/reference/src/ingestion/metadata_schema.py:11-28`
   * (safe_str + 9-field projection), `src/ingestion/normalizer.py:3-23`
-  * (key/value normalize, date normalize), `src/storage/vector_store.py:45-59`
-  * (flatten with `meta_` prefix, drop-empty; duplicated at
-  * `sparse_store.py:34-46`).
+  * (key/value normalize, date normalize). T10's flatten is Catalyst, in
+  * `q_meta_flatten` and `q_meta_flatten_list`.
   */
 object MetaNorm {
 
@@ -65,21 +64,13 @@ object MetaNorm {
   def normalizeDate(dateStr: String): String = dateStr match {
     case IsoDate(y, m, d) =>
       try {
-        val ld = java.time.LocalDate.of(y.toInt, m.toInt, d.toInt)
-        f"${ld.getYear}%04d-${ld.getMonthValue}%02d-${ld.getDayOfMonth}%02dT00:00:00"
+        java.time.LocalDate.of(y.toInt, m.toInt, d.toInt) // rejects month 13, Feb 30, ...
+        // concatenation, not an f-interpolator: `q_date_normalize` runs this
+        // per row, and java.util.Formatter parses its pattern on every call
+        s"$y-${pad2(m)}-${pad2(d)}T00:00:00"
       } catch { case _: java.time.DateTimeException => dateStr }
     case _ => dateStr
   }
 
-  /** T10 flatten (vector_store.py:45-59): prefix keys with `meta_`; drop
-    * null/""/empty-list values; scalars pass as strings here (the engine's
-    * metadata values are strings post-normalize); lists → list[str].
-    * Returns (scalar fields, list fields).
-    */
-  def flatten(meta: Seq[(String, String)], lists: Seq[(String, Seq[String])] = Nil)
-      : (Seq[(String, String)], Seq[(String, Seq[String])]) = {
-    val scalars = meta.collect { case (k, v) if v != null && v.nonEmpty => (s"meta_$k", v) }
-    val listed  = lists.collect { case (k, v) if v != null && v.nonEmpty => (s"meta_$k", v.map(String.valueOf(_))) }
-    (scalars, listed)
-  }
+  private def pad2(field: String): String = if (field.length == 1) "0" + field else field
 }

@@ -2,12 +2,13 @@ package graft.kernel
 
 import java.util.regex.Pattern
 
-/** T1–T5 page-text cleaning chain + highlight/truncate scalars.
+/** T1–T5 page-text cleaning chain + whitespace normalization.
   *
   * Reference semantics: `/root/reference/src/ingestion/extract_paragraphs.py:9-21`
-  * (`_clean_page_text`), `src/web/app.py:44-48` (truncate), `app.py:69-80`
-  * (highlight). Pure Scala, zero Spark imports — runs inside the typed
-  * mapPartitions kernel stage and is unit-tested against reference goldens.
+  * (`_clean_page_text`), `src/ingestion/paragraph_utils.py:3-4`
+  * (`normalize_whitespace`). Pure Scala, zero Spark imports — runs inside
+  * the typed mapPartitions kernel stage and `q_clean_text`, and is
+  * unit-tested against reference goldens.
   */
 object TextClean {
 
@@ -64,24 +65,5 @@ object TextClean {
       i += 1
     }
     PyText.strip(sb.toString)
-  }
-
-  /** `truncate_text` (app.py:44-48): code-point truncate + "...". */
-  def truncate(text: String, maxChars: Int = 500): String =
-    if (PyText.len(text) <= maxChars) text
-    else PyText.slice(text, 0, maxChars) + "..."
-
-  /** `highlight` (app.py:69-80): wrap case-insensitive occurrences of each
-    * query token with len>2 in <mark>…</mark>. Tokens applied in query order;
-    * each pass rewrites the output of the previous one (reference does the
-    * same fold, so nested <mark>s for overlapping tokens are reproduced).
-    */
-  def highlight(text: String, query: String): String = {
-    // Python str.split() (no arg): split on whitespace runs, drop empties.
-    val tokens = query.split("(?U)\\s+").filter(t => t.nonEmpty && PyText.len(t) > 2)
-    tokens.foldLeft(text) { (acc, t) =>
-      val p = Pattern.compile(Pattern.quote(t), Pattern.CASE_INSENSITIVE | Pattern.UNICODE_CASE)
-      p.matcher(acc).replaceAll(m => "<mark>" + m.group(0) + "</mark>")
-    }
   }
 }

@@ -1,16 +1,19 @@
 package graft.operators
 
-import graft.kernel.Paragraphs
-import org.apache.spark.sql.SparkSession
+import graft.kernel.{Chunker, MetaNorm, Paragraphs, TextClean}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Extraction / cleaning operator queries (SURVEY.md §2.2, §2.3).
   *
   * The documents table text is single-line, so the cleaning queries first
   * synthesize line-structure deterministically (identical literal `replace`
   * chain on both engines) and then apply the reference-semantics transforms.
-  * Everything except the sequential-fold paragraph ops is pure Catalyst
-  * (whole-stage codegen; no UDFs).
+  * A rule that extraction runs or a golden checks (C1, C7, C8, T1–T5, T7)
+  * is served by its `graft.kernel` implementation through [[kernel]]; the
+  * other rules (T6, T10–T12) are Catalyst. The DuckDB oracles restate
+  * every rule in SQL.
   */
 object ExtractOps {
 
@@ -28,25 +31,11 @@ object ExtractOps {
       |  ' join ', ' ' || chr(13) || chr(10) || 'join '),
       |  ' the ', ' ' || repeat(chr(10), 4) || 'the ')""".stripMargin
 
-  /** T1–T5 `_clean_page_text` as a Catalyst regexp chain (Java regex supports
-    * the reference's lookarounds directly; extract_paragraphs.py:9-21).
-    */
-  private val cleanSpark =
-    s"""trim(BOTH ' \\n' FROM
-       |  regexp_replace(
-       |    regexp_replace(
-       |      regexp_replace(
-       |        regexp_replace(
-       |          replace($structureSpark, '\\r', '\\n'),
-       |          '(?U)(\\\\w)-\\\\n(\\\\w)', '$$1$$2'),
-       |        '\\\\n{3,}', '\\n\\n'),
-       |      '(?<!\\\\n)\\\\n(?!\\\\n)', ' '),
-       |    '[ \\t]+', ' '))""".stripMargin
-
-  /** Same transform for RE2 (no lookarounds) over an arbitrary input
-    * expression: after the 3+-newline collapse, newline runs are exactly 1
-    * or 2 long, so `\n\n`→sentinel, `\n`→space, sentinel→`\n\n` is
-    * equivalent to the lookaround rule.
+  /** The oracle's T1–T5 `_clean_page_text` (`TextClean.cleanPageText`)
+    * in RE2, which has no lookarounds, over an arbitrary input expression:
+    * after the 3+-newline collapse, newline runs are exactly 1 or 2 long, so
+    * `\n\n`→sentinel, `\n`→space, sentinel→`\n\n` is equivalent to the
+    * lookaround rule.
     */
   private[operators] def cleanOf(inner: String) =
     s"""trim(
@@ -61,29 +50,34 @@ object ExtractOps {
        |    '[ \\t]+', ' ', 'g'),
        |  ' ' || chr(10))""".stripMargin
 
-  // Shape gate before the parse: try_to_timestamp swallows failures by
-  // THROWING-and-catching per row, so a column of always-malformed
-  // values (norm_bad) pays one exception construction per row —
-  // measured as the bulk of this query's time. On unsigned input the
-  // regex admits exactly the strings the strict yyyy-MM-dd parser could
-  // accept: non-matching strings would have failed the parse and fallen
-  // back to `c` anyway, and matching-but-invalid dates (e.g. month 13)
-  // still go through try_to_timestamp and take the same fallback. Signed
-  // years are the one place the gate is stricter than the parser: Spark's
-  // `yyyy` parses "-2024-01-01" (and "+12024-01-01"), and a year beyond
-  // ±290307 makes it throw an ArithmeticException that try_to_timestamp
-  // does not catch; the gate returns such strings unchanged, as the
-  // reference (Python strptime, DuckDB `%Y`) does. Both halves are
-  // property-tested in DateNormGateSpec.
-  private[operators] def dateNorm(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    when(c.rlike("^[0-9]{4}-[0-9]{2}-[0-9]{2}$"),
-      coalesce(date_format(try_to_timestamp(c, lit("yyyy-MM-dd")), "yyyy-MM-dd'T'HH:mm:ss"), c))
-      .otherwise(c)
+  /** The oracle's T7 `normalize_date` of a VARCHAR expression. The shape
+    * gate is `MetaNorm.normalizeDate`'s: DuckDB's `try_strptime` also parses
+    * a padded or signed string (`' 2024-01-01'`) that Python's `strptime`
+    * returns unchanged.
+    */
+  private def normDateDuck(x: String) =
+    s"""coalesce(strftime(CASE WHEN regexp_full_match($x, '[0-9]{4}-[0-9]{1,2}-[0-9]{1,2}')
+       |  THEN try_strptime($x, '%Y-%m-%d') END, '%Y-%m-%dT%H:%M:%S'), $x)""".stripMargin
+
+  /** A `graft.kernel` rule, the golden-tested implementation that
+    * extraction runs, as a column function. A NULL text stays NULL: a
+    * rule that yields one value per row returns NULL, and a rule that
+    * yields rows gives a NULL array, which `posexplode` turns into no rows.
+    */
+  private def kernel[A: TypeTag](rule: String => A)(text: Column): Column =
+    udf((t: String) => if (t == null) null.asInstanceOf[A] else rule(t)).apply(text)
+
+  /** `key` and one row per item of [[kernel]]`(rule)` over `text`, numbered
+    * from 0 in the bigint column `index`.
+    */
+  private def kernelRows(rows: DataFrame, key: Column, text: Column, index: String, item: String)(
+      rule: String => Seq[String]): DataFrame =
+    rows.select(key, posexplode(kernel(rule)(text)).as(Seq(index, item)))
+      .withColumn(index, col(index).cast("bigint"))
 
   val ops: Seq[Op] = Seq(
 
-    // C1–C3: fixed 500/80 chunking (chunk_document.py; live path). Pure
-    // Catalyst: sequence+transform+posexplode keeps it in codegen; the
+    // C1–C3: fixed 500/80 chunking (chunk_document.py; live path). The
     // filter and 2-column projection push into the parquet scan.
     Op("q_chunk_fixed",
       """SELECT d.doc_id, g.i AS chunk_index,
@@ -92,13 +86,8 @@ object ExtractOps {
         |     LATERAL (SELECT unnest(generate_series(0, CAST(ceil(length(d.text)/420.0) AS BIGINT)-1)) AS i) g
         |WHERE length(d.text) > 0
         |ORDER BY doc_id, chunk_index""".stripMargin) { (s, dir) =>
-      Tables.documents(s, dir)
-        .where(length(col("text")) > 0)
-        .select(col("doc_id"),
-          posexplode(expr(
-            "transform(sequence(0, cast(ceil(length(text)/420.0) as int) - 1)," +
-              " i -> substring(text, i*420+1, 500))")).as(Seq("chunk_index", "chunk_text")))
-        .select(col("doc_id"), col("chunk_index").cast("bigint").as("chunk_index"), col("chunk_text"))
+      kernelRows(Tables.documents(s, dir).where(length(col("text")) > 0), col("doc_id"), col("text"),
+        "chunk_index", "chunk_text")(Chunker.chunkText(_))
         .orderBy("doc_id", "chunk_index")
     },
 
@@ -106,21 +95,16 @@ object ExtractOps {
     Op("q_clean_text",
       s"SELECT doc_id, ${cleanOf(structureDuck)} AS cleaned FROM documents ORDER BY doc_id") { (s, dir) =>
       Tables.documents(s, dir)
-        .select(col("doc_id"), expr(cleanSpark).as("cleaned"))
+        .select(col("doc_id"), kernel(TextClean.cleanPageText)(expr(structureSpark)).as("cleaned"))
         .orderBy("doc_id")
     },
 
     // T12 truncate (app.py:44-48): 500-char cap + "..." (docs up to 558 chars
     // exercise both branches).
     Op("q_truncate",
-      """SELECT doc_id,
-        |  CASE WHEN length(text) <= 500 THEN text
-        |       ELSE substring(text, 1, 500) || '...' END AS snippet
-        |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
+      s"SELECT doc_id, ${Idioms.truncateDuck("text")} AS snippet FROM documents ORDER BY doc_id") { (s, dir) =>
       Tables.documents(s, dir)
-        .select(col("doc_id"),
-          when(length(col("text")) <= 500, col("text"))
-            .otherwise(concat(substring(col("text"), 1, 500), lit("..."))).as("snippet"))
+        .select(col("doc_id"), Idioms.truncateSpark(col("text")).as("snippet"))
         .orderBy("doc_id")
     },
 
@@ -204,34 +188,25 @@ object ExtractOps {
     // T7 normalize_date (normalizer.py:17-23): ISO on parse success, original
     // on failure. Good input from o_orderdate; o_orderpriority as malformed.
     Op("q_date_normalize",
-      """SELECT o_orderkey,
-        |  coalesce(strftime(try_strptime(strftime(o_orderdate, '%Y-%m-%d'), '%Y-%m-%d'),
-        |                    '%Y-%m-%dT%H:%M:%S'),
-        |           strftime(o_orderdate, '%Y-%m-%d')) AS norm_date,
-        |  coalesce(strftime(try_strptime(o_orderpriority, '%Y-%m-%d'), '%Y-%m-%dT%H:%M:%S'),
-        |           o_orderpriority) AS norm_bad
-        |FROM orders ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
+      s"""SELECT o_orderkey,
+         |  ${normDateDuck("strftime(o_orderdate, '%Y-%m-%d')")} AS norm_date,
+         |  ${normDateDuck("o_orderpriority")} AS norm_bad
+         |FROM orders ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       Tables.orders(s, dir).select(col("o_orderkey"),
-          dateNorm(date_format(col("o_orderdate"), "yyyy-MM-dd")).as("norm_date"),
-          dateNorm(col("o_orderpriority")).as("norm_bad"))
+          kernel(MetaNorm.normalizeDate)(date_format(col("o_orderdate"), "yyyy-MM-dd")).as("norm_date"),
+          kernel(MetaNorm.normalizeDate)(col("o_orderpriority")).as("norm_bad"))
         .orderBy("o_orderkey")
     },
 
-    // C7 extract_paragraphs — Spark side is the typed kernel fold (also
-    // golden-tested); the DuckDB oracle re-expresses BOTH branches in SQL:
-    // the blank-line branch as split/strip/filter, and the greedy sentence-
-    // grouping fold via list_reduce over a sentinel-encoded (emitted, buf)
-    // state string (chr(3) joins emitted paragraphs, chr(4) separates state
-    // fields, chr(2) marks sentence boundaries — none occur in the data).
+    // C7 extract_paragraphs; the DuckDB oracle re-expresses BOTH branches
+    // in SQL: the blank-line branch as split/strip/filter, and the greedy
+    // sentence-grouping fold via list_reduce over a sentinel-encoded
+    // (emitted, buf) state string (chr(3) joins emitted paragraphs, chr(4)
+    // separates state fields, chr(2) marks sentence boundaries — none occur
+    // in the data).
     Op("q_paragraphs", ParagraphOracles.extractParagraphsSql) { (s, dir) =>
-      import s.implicits._
-      Tables.documents(s, dir)
-        .select(col("doc_id").cast("string").as("doc_id"), expr(structureSpark).as("structured"))
-        .as[(String, String)]
-        .flatMap { case (id, t) =>
-          Paragraphs.extractParagraphs(t).zipWithIndex.map { case (p, i) => (id, i.toLong, p) }
-        }
-        .toDF("doc_id", "paragraph_index", "paragraph")
+      kernelRows(Tables.documents(s, dir), col("doc_id").cast("string").as("doc_id"), expr(structureSpark),
+        "paragraph_index", "paragraph")(Paragraphs.extractParagraphs)
         .orderBy("doc_id", "paragraph_index")
     },
 
@@ -239,14 +214,8 @@ object ExtractOps {
     // trick (merge-into-previous == append-to-accumulator-tail, because the
     // previous paragraph is always the tail of the folded state string).
     Op("q_paragraphize", ParagraphOracles.paragraphizeSql) { (s, dir) =>
-      import s.implicits._
-      Tables.documents(s, dir)
-        .select(col("doc_id").cast("string").as("doc_id"), expr(structureSpark).as("structured"))
-        .as[(String, String)]
-        .flatMap { case (id, t) =>
-          Paragraphs.paragraphize(t).zipWithIndex.map { case (p, i) => (id, i.toLong, p) }
-        }
-        .toDF("doc_id", "paragraph_index", "paragraph")
+      kernelRows(Tables.documents(s, dir), col("doc_id").cast("string").as("doc_id"), expr(structureSpark),
+        "paragraph_index", "paragraph")(Paragraphs.paragraphize(_))
         .orderBy("doc_id", "paragraph_index")
     }
   )

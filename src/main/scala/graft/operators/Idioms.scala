@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{expr, least, lit, when}
+import org.apache.spark.sql.functions.{concat, expr, least, length, lit, substring, when}
 
 /** The cross-engine SQL idioms every operator family shares. ONE copy —
   * each Spark form must stay in lockstep with its DuckDB twin, so drift
@@ -87,6 +87,14 @@ private[graft] object Idioms {
     s"least(len($toksDuck), 100) * 7000 + " +
       s"((len($toksDuck) - ${stopCountDuck(toksDuck)}) * 300000) " +
       s"// len($toksDuck)"
+
+  /** T12 `truncate_text` (app.py:44-48): a text over 500 characters keeps
+    * its first 500 and gains "...".
+    */
+  def truncateSpark(text: Column): Column =
+    when(length(text) <= 500, text).otherwise(concat(substring(text, 1, 500), lit("...")))
+  def truncateDuck(text: String): String =
+    s"CASE WHEN length($text) <= 500 THEN $text ELSE substring($text, 1, 500) || '...' END"
 
   /** Deterministic 80/10/10 train/val/test assignment by a hash bucket of
     * `doc_id` (stable across runs and engines, no RNG state).

@@ -238,19 +238,7 @@ object RetrievalOps {
     // keep the maximal prefix with cumulative length <= 4000 (the reference's
     // break-at-first-overflow is exactly the monotone prefix filter).
     Op("q_context_budget",
-      """SELECT chunk_rank, doc_id, section, cum_chars FROM (
-        |  SELECT chunk_rank, doc_id, section,
-        |         CAST(sum(length(section)) OVER (ORDER BY chunk_rank
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_chars
-        |  FROM (
-        |    SELECT chunk_rank, doc_id,
-        |      chr(10) || '--- Chunk ' || CAST(chunk_rank AS VARCHAR) || ' ---' || chr(10) ||
-        |      (CASE WHEN length(text) <= 500 THEN text ELSE substring(text, 1, 500) || '...' END) AS section
-        |    FROM (
-        |      SELECT doc_id, text,
-        |             row_number() OVER (ORDER BY n_chars DESC, doc_id) AS chunk_rank
-        |      FROM documents) WHERE chunk_rank <= 20))
-        |WHERE cum_chars <= 4000 ORDER BY chunk_rank""".stripMargin) { (s, dir) =>
+      s"SELECT chunk_rank, doc_id, section, cum_chars FROM ($budgetDuck) ORDER BY chunk_rank") { (s, dir) =>
       budgetedSections(s, dir).orderBy("chunk_rank")
     },
 
@@ -260,20 +248,7 @@ object RetrievalOps {
     // context join is "\n".join(parts) (app.py:67), each part already
     // carrying its "\n--- Chunk i ---\n" header from the budget stage.
     Op("q_prompt_build",
-      s"""WITH budget AS (
-         |  SELECT chunk_rank, section FROM (
-         |    SELECT chunk_rank, section,
-         |           sum(length(section)) OVER (ORDER BY chunk_rank
-         |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_chars
-         |    FROM (
-         |      SELECT chunk_rank,
-         |        chr(10) || '--- Chunk ' || CAST(chunk_rank AS VARCHAR) || ' ---' || chr(10) ||
-         |        (CASE WHEN length(text) <= 500 THEN text ELSE substring(text, 1, 500) || '...' END) AS section
-         |      FROM (
-         |        SELECT doc_id, text,
-         |               row_number() OVER (ORDER BY n_chars DESC, doc_id) AS chunk_rank
-         |        FROM documents) WHERE chunk_rank <= 20))
-         |  WHERE cum_chars <= 4000)
+      s"""WITH budget AS ($budgetDuck)
          |SELECT prompt, n_chunks, CAST(length(prompt) AS BIGINT) AS prompt_chars FROM (
          |  SELECT ${duckLit(PromptPre + PromptQuery + PromptMid)} ||
          |         coalesce(string_agg(section, chr(10) ORDER BY chunk_rank), '') ||
@@ -302,8 +277,7 @@ object RetrievalOps {
       .withColumnRenamed("rn", "chunk_rank")
     val sections = ranked.select(col("chunk_rank").cast("bigint").as("chunk_rank"), col("doc_id"),
       concat(lit("\n--- Chunk "), col("chunk_rank").cast("string"), lit(" ---\n"),
-        when(length(col("text")) <= 500, col("text"))
-          .otherwise(concat(substring(col("text"), 1, 500), lit("...")))).as("section"))
+        Idioms.truncateSpark(col("text"))).as("section"))
     sections
       .withColumn("cum_chars",
         sum(length(col("section"))).over(
@@ -311,6 +285,22 @@ object RetrievalOps {
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .where(col("cum_chars") <= 4000)
   }
+
+  /** [[budgetedSections]]' oracle: the same four columns, unordered. */
+  private def budgetDuck: String =
+    s"""SELECT chunk_rank, doc_id, section, cum_chars FROM (
+       |  SELECT chunk_rank, doc_id, section,
+       |         CAST(sum(length(section)) OVER (ORDER BY chunk_rank
+       |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_chars
+       |  FROM (
+       |    SELECT chunk_rank, doc_id,
+       |      chr(10) || '--- Chunk ' || CAST(chunk_rank AS VARCHAR) || ' ---' || chr(10) ||
+       |      (${Idioms.truncateDuck("text")}) AS section
+       |    FROM (
+       |      SELECT doc_id, text,
+       |             row_number() OVER (ORDER BY n_chars DESC, doc_id) AS chunk_rank
+       |      FROM documents) WHERE chunk_rank <= 20))
+       |WHERE cum_chars <= 4000""".stripMargin
 
   /** The reference's Gemini prompt template (app.py:254-265), verbatim —
     * including its source-indentation quirk (12 leading spaces on the

@@ -4,13 +4,18 @@ import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** Each curation rule has one Spark and one DuckDB spelling in main code:
-  * the cross-engine twins in `Idioms`, the Spark-only and oracle-only
-  * pieces of the near-dup and decontamination chain in one `DedupOps`
-  * helper each. Every operator that applies a rule (the curation verdict
-  * table, its oracle CTEs, `q_quality_score`, `q_repetition`,
-  * `q_split_stratified`, `q_decontaminate`, streaming curation) calls that
-  * definition. A second spelling of a rule needs an edit of this table.
+/** Each rule has one Spark and one DuckDB spelling in main code: the
+  * cross-engine twins in `Idioms`, the Spark-only and oracle-only pieces of
+  * the near-dup and decontamination chain in one `DedupOps` helper each, the
+  * R8 context budget in `RetrievalOps`. Every operator that applies a rule
+  * (the curation verdict table, its oracle CTEs, `q_quality_score`,
+  * `q_repetition`, `q_split_stratified`, `q_decontaminate`, streaming
+  * curation, `q_truncate`, `q_context_budget`, `q_prompt_build`) calls that
+  * definition. The rules extraction runs (C1, T1–T5, T7) have their one JVM
+  * spelling in `graft.kernel`, which the registry ops call; the DuckDB
+  * oracle in `ExtractOps` is their only other spelling, so a Catalyst
+  * restatement changes a count below. A second spelling of a rule needs an
+  * edit of this table.
   */
 class RuleInventorySpec extends AnyFunSuite {
 
@@ -34,7 +39,25 @@ class RuleInventorySpec extends AnyFunSuite {
     ("exact-Jaccard verify, Spark", "jac >= 0.5", Map("DedupOps.scala" -> 1)),
     ("exact-Jaccard verify, DuckDB", "AS DOUBLE) >= 0.5", Map("DedupOps.scala" -> 1)),
     ("decontamination match, Spark", ".join(broadcast(bench), \"shingle\")", Map("DedupOps.scala" -> 1)),
-    ("decontamination match, DuckDB", "JOIN bench b ON b.shingle = t.shingle", Map("DedupOps.scala" -> 1)))
+    ("decontamination match, DuckDB", "JOIN bench b ON b.shingle = t.shingle", Map("DedupOps.scala" -> 1)),
+    ("T12 truncate, Spark", "concat(substring(text, 1, 500), lit(\"...\"))", Map("Idioms.scala" -> 1)),
+    ("T12 truncate, DuckDB", "substring($text, 1, 500) || '...'", Map("Idioms.scala" -> 1)),
+    ("T12 truncate, any spelling", "1, 500)", Map("Idioms.scala" -> 2)),
+    ("R8 context budget, Spark", "col(\"cum_chars\") <= 4000", Map("RetrievalOps.scala" -> 1)),
+    ("R8 context budget, DuckDB", "WHERE cum_chars <= 4000", Map("RetrievalOps.scala" -> 1)),
+    ("C1 chunk windows, kernel", "PyText.slice(text, start, math.min(start + chunkSize, n))",
+      Map("Chunker.scala" -> 1)),
+    ("C1 chunk window start, DuckDB", "*420", Map("ExtractOps.scala" -> 1)),
+    ("T2 hyphen break, kernel", "(?U)(\\\\w)-\\\\n(\\\\w)", Map("TextClean.scala" -> 1)),
+    ("T2 hyphen break, kernel and DuckDB", "w)-", Map("TextClean.scala" -> 1, "ExtractOps.scala" -> 1)),
+    ("T3 3+ newline collapse, kernel and DuckDB", "n{3,}",
+      Map("TextClean.scala" -> 1, "ExtractOps.scala" -> 1, "Paragraphs.scala" -> 1)),
+    ("T4 lone newline, kernel", "(?<!", Map("TextClean.scala" -> 1)),
+    ("T5 space runs, kernel and the clean and paragraphize oracles", "[ \\\\t]+",
+      Map("TextClean.scala" -> 1, "ExtractOps.scala" -> 2)),
+    ("T7 date shape, kernel", "^(\\\\d{4})-(\\\\d{1,2})-(\\\\d{1,2})$", Map("MetaNorm.scala" -> 1)),
+    ("T7 date shape, DuckDB", "{4}-", Map("ExtractOps.scala" -> 1)),
+    ("T7 date parse, never Catalyst", "to_timestamp", Map.empty[String, Int]))
 
   test("src/main spells each curation rule once per engine, in the file that defines it") {
     val root = Paths.get("src/main")
