@@ -59,10 +59,11 @@ object MetaNorm {
   /** T7 `normalize_date` (normalizer.py:17-23): strptime('%Y-%m-%d') →
     * isoformat, original string on parse failure. Python's %m/%d accept
     * non-zero-padded components; %Y here is constrained to 4 digits (the
-    * fixture/golden contract uses 4-digit years).
+    * fixture/golden contract uses 4-digit years). Python's datetime has no
+    * year 0 (MINYEAR = 1), so `0000-…` is a parse failure there too.
     */
   def normalizeDate(dateStr: String): String = dateStr match {
-    case IsoDate(y, m, d) =>
+    case IsoDate(y, m, d) if y != "0000" =>
       try {
         java.time.LocalDate.of(y.toInt, m.toInt, d.toInt) // rejects month 13, Feb 30, ...
         // concatenation, not an f-interpolator: `q_date_normalize` runs this

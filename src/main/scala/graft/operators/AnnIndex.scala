@@ -52,8 +52,11 @@ object AnnIndex {
     */
   final case class Pq(numSub: Int = 8, codebookK: Int = 16) extends Payload
 
-  // Native codegen'd dot (bit-identical to the portable HOF form).
-  private def dot(a: String, b: String) = expr(s"vec_dot($a, $b)")
+  /** Driver-side dot product, summed in index order as `vec_dot` sums it. */
+  private def dotd(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < a.length) { s += a(i) * b(i); i += 1 }; s
+  }
 
   /** kmeans++-style deterministic seeding: farthest-first traversal over a
     * bounded pseudo-random sample.
@@ -88,10 +91,6 @@ object AnnIndex {
       .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray))
       .sortBy(_._1)
     require(sample.nonEmpty, "seedCentroids: empty embeddings table")
-    def dotd(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }; s
-    }
     val k = math.min(nCells, sample.length)
     val chosen = scala.collection.mutable.ArrayBuffer(sample.head)
     val picked = new Array[Boolean](sample.length) // O(1) membership, not an O(k) buffer scan
@@ -144,9 +143,9 @@ object AnnIndex {
   def assignTo(embeddings: DataFrame, cent: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.ensure(embeddings.sparkSession)
     val centArr = cent.agg(sort_array(collect_list(struct(col("cell"), col("cvec")))).as("cents"))
+    val d = Idioms.dotSpark("embedding", "c.cvec")
     embeddings.crossJoin(broadcast(centArr))
-      .withColumn("best", expr(
-        "array_max(transform(cents, c -> named_struct('d', vec_dot(embedding, c.cvec), 'ncell', -c.cell)))"))
+      .withColumn("best", expr(s"array_max(transform(cents, c -> named_struct('d', $d, 'ncell', -c.cell)))"))
       .select(col("vec_id"), (-col("best.ncell")).as("cell"), col("embedding"))
   }
 
@@ -309,20 +308,16 @@ object AnnIndex {
   }
 
   /** The top-`nprobe` cells of generation `gen` for a query vector: nCells
-    * driver-side dot products against its centroid table, summed in double
-    * in index order exactly as `vec_dot` sums them, ranked by dot
+    * driver-side dot products against its centroid table, ranked by dot
     * descending, then cell ascending.
     */
   private[operators] def probe(spark: SparkSession, gen: String, query: Array[Float],
-      nprobe: Int): Seq[Long] =
+      nprobe: Int): Seq[Long] = {
+    val q = query.map(_.toDouble)
     centroids(spark, gen).collect()
-      .map { r =>
-        val cv = r.getSeq[Float](1)
-        var s = 0.0; var i = 0
-        while (i < cv.length) { s += cv(i).toDouble * query(i).toDouble; i += 1 }
-        (r.getLong(0), s)
-      }
+      .map(r => (r.getLong(0), dotd(r.getSeq[Float](1).map(_.toDouble).toArray, q)))
       .sortBy { case (c, s) => (-s, c) }.take(nprobe).map(_._1).toSeq
+  }
 
   /** Probe the committed tip: only `nprobe` cell partitions are scanned —
     * in the base cells AND in every committed appended batch (uncommitted
@@ -335,33 +330,38 @@ object AnnIndex {
     */
   def search(spark: SparkSession, indexDir: String, embeddings: DataFrame,
       queryVecId: Long, nprobe: Int = 4, k: Int = 10, candidates: Int = 100): DataFrame = {
-    graft.functions.GraftFunctions.ensure(spark)
     val (gen, codebooks) = open(spark, indexDir, "AnnIndex.search")
-    val q = embeddings.where(col("vec_id") === queryVecId).select(col("embedding"))
-      .limit(1).collect().headOption.map(_.getSeq[Float](0).toArray)
-      .getOrElse(throw new IllegalArgumentException(
+    val q = Idioms.queryVecSpark(embeddings, queryVecId).limit(1).collect()
+      .headOption.map(_.getSeq[Float](0).toArray).getOrElse(throw new IllegalArgumentException(
         s"AnnIndex.search: query vec_id $queryVecId is not in the embeddings table"))
     val cells = probe(spark, gen, q, nprobe)
     val probed = rows(spark, gen, Seq("vec_id", "cell", codebooks.fold("embedding")(_ => "codes")),
       DeltaBatches.committed(spark, gen))
       .where(col("cell").isin(cells: _*)) // partition-pruned scan
     val top = codebooks match {
-      case None => probed
-        .withColumn("qv", typedLit(q.toSeq))
-        .withColumn("score", dot("embedding", "qv"))
-        .orderBy(desc("score"), asc("vec_id")).limit(k)
+      case None     => exactTop(probed, q, k)
       case Some(cb) => PqIndex.searchRerank(probed, embeddings, cb, q, k, candidates)
     }
     top.select(col("vec_id"), col("cell").cast("long").as("cell"), round(col("score"), 4).as("score"))
   }
 
-  /** Exact brute-force top-k (recall baseline). */
+  /** The top `k` of `rows` by exact dot product with `query`, ties by
+    * vec_id: `embedding` becomes the unrounded `score`, other columns ride.
+    */
+  private[operators] def exactTop(rows: DataFrame, query: Array[Float], k: Int): DataFrame = {
+    graft.functions.GraftFunctions.ensure(rows.sparkSession)
+    rows.withColumn("qv", typedLit(query.toSeq))
+      .withColumn("score", expr(Idioms.dotSpark("embedding", "qv"))).drop("embedding", "qv")
+      .orderBy(desc("score"), asc("vec_id")).limit(k)
+  }
+
+  /** Exact brute-force top-k `(vec_id, score)` (recall baseline): the
+    * registry's `q_dense_topk` is this plan for row 0 and k = 10, so the
+    * DuckDB oracle checks it.
+    */
   def bruteForce(embeddings: DataFrame, queryVecId: Long, k: Int = 10): DataFrame = {
     graft.functions.GraftFunctions.ensure(embeddings.sparkSession)
-    val q = embeddings.where(col("vec_id") === queryVecId).select(col("embedding").as("qvec"))
-    embeddings.crossJoin(broadcast(q))
-      .withColumn("score_exact", dot("embedding", "qvec"))
-      .orderBy(desc("score_exact"), asc("vec_id")).limit(k)
+    Idioms.denseTopSpark(embeddings, queryVecId, k)
       .select(col("vec_id"), round(col("score_exact"), 4).as("score"))
   }
 }

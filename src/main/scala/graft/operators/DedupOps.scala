@@ -613,8 +613,8 @@ object DedupOps {
     * unconverged labeling. `localCheckpoint` truncates each round's lineage
     * so the plan doesn't grow with iteration count.
     *
-    * Early exit: before the first round, an exact SETTLED test (two joins
-    * + `isEmpty`: no edge (u, v) has label(u) ≠ label(v)) is the proof
+    * Early exit: before the first round, an exact SETTLED test (a join, an
+    * aggregate, a count: no edge (u, v) has label(u) ≠ label(v)) is the proof
     * round. Labels that agree across every edge are constant per
     * component, and by the invariant that constant is the component's min
     * (no sum, so nothing can wrap). Components whose min neighbours every
@@ -652,12 +652,16 @@ object DedupOps {
       .agg(least(col("u"), min(col("v"))).as("cluster"))
       .select(col("u").as("doc_id"), col("cluster"))
       .localCheckpoint(true)
-    // early exit (see the scaladoc): a seed no edge disagrees with is final
+    // early exit (see the scaladoc): a seed no edge disagrees with is final.
+    // v's seed label is least(v, min u) (edges are symmetric), so one labels
+    // join suffices; a second one let AQE's runtime build-side choice decide
+    // whether the first join's broadcast was reused (± one job per run)
     val settled = edges
       .join(labels.select(col("doc_id").as("u"), col("cluster").as("cu")), "u")
-      .join(labels.select(col("doc_id").as("v"), col("cluster").as("cv")), "v")
-      .where(col("cu") =!= col("cv"))
-      .isEmpty
+      .groupBy(col("v"))
+      .agg(least(col("v"), min("u")).as("cv"), min("cu").as("lo"), max("cu").as("hi"))
+      .where(col("lo") =!= col("cv") || col("hi") =!= col("cv"))
+      .count() == 0L
     var converged = settled
     var it = if (settled) 1 else 0
     while (!converged && it < maxIters) {
@@ -1162,22 +1166,16 @@ object DedupOps {
 
     // Embedding-cosine near-duplicate scoring between neighboring vectors.
     Op("q_embed_neardup",
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings)
-        |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-        |  round(
-        |    list_aggregate(list_transform(list_zip(a.embedding, b.embedding),
-        |                   z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), 'sum') /
-        |    (sqrt(list_aggregate(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) *
-        |     sqrt(list_aggregate(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))), 4) AS cosine
-        |FROM e a JOIN e b ON b.vec_id = a.vec_id + 1
-        |ORDER BY vec_a""".stripMargin) { (s, dir) =>
+      s"""WITH e AS (SELECT vec_id, embedding FROM embeddings)
+         |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+         |  round(${Idioms.cosineDuck("a.embedding", "b.embedding")}, 4) AS cosine
+         |FROM e a JOIN e b ON b.vec_id = a.vec_id + 1
+         |ORDER BY vec_a""".stripMargin) { (s, dir) =>
       val e = Tables.embeddings(s, dir)
       val a = e.as("a"); val b = e.as("b")
-      val dot = "vec_dot(a.embedding, b.embedding)"
-      def nrm(side: String) = s"sqrt(vec_dot($side.embedding, $side.embedding))"
       a.join(b, col("b.vec_id") === col("a.vec_id") + 1)
         .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-          round(expr(s"$dot / (${nrm("a")} * ${nrm("b")})"), 4).as("cosine"))
+          round(expr(Idioms.cosineSpark("a.embedding", "b.embedding")), 4).as("cosine"))
         .orderBy("vec_a")
     },
 

@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 
 /** Feedback-evaluation aggregations (SURVEY.md §2.5, A1–A5) re-expressed over
   * the events table (events.event_type stands in for the reference's
-  * (dense_model, rerank_model) group key; `value > 100` is the 0/1 feedback).
+  * (dense_model, rerank_model) group key; `Idioms.feedbackSpark` /
+  * `feedbackDuck` is the 0/1 feedback).
   *
   * precision@k = avg(feedback) (`eval_feedback_mlflow.py:13-19`),
   * hit_rate@k  = any(feedback) = max(feedback)    (`:18`),
@@ -18,29 +19,29 @@ object EvalOps {
 
     // A1–A3 grouped precision@k / hit-rate@k.
     Op("q_precision_hitrate",
-      """SELECT event_type AS model,
-        |       CAST(count(*) AS BIGINT) AS n,
-        |       avg(CASE WHEN value > 100 THEN 1.0 ELSE 0.0 END) AS precision_at_k,
-        |       CAST(max(CASE WHEN value > 100 THEN 1 ELSE 0 END) AS DOUBLE) AS hit_rate
-        |FROM events GROUP BY event_type ORDER BY model""".stripMargin) { (s, dir) =>
+      s"""SELECT event_type AS model,
+         |       CAST(count(*) AS BIGINT) AS n,
+         |       avg(CASE WHEN ${Idioms.feedbackDuck} THEN 1.0 ELSE 0.0 END) AS precision_at_k,
+         |       CAST(max(CASE WHEN ${Idioms.feedbackDuck} THEN 1 ELSE 0 END) AS DOUBLE) AS hit_rate
+         |FROM events GROUP BY event_type ORDER BY model""".stripMargin) { (s, dir) =>
       Tables.events(s, dir)
         .groupBy(col("event_type").as("model"))
         .agg(
           count(lit(1)).as("n"),
-          avg(when(col("value") > 100, 1.0).otherwise(0.0)).as("precision_at_k"),
-          max(when(col("value") > 100, 1).otherwise(0)).cast("double").as("hit_rate"))
+          avg(when(Idioms.feedbackSpark, 1.0).otherwise(0.0)).as("precision_at_k"),
+          max(when(Idioms.feedbackSpark, 1).otherwise(0)).cast("double").as("hit_rate"))
         .orderBy("model")
     },
 
     // A4 best-model argmax (ORDER BY precision DESC LIMIT 1).
     Op("q_best_model",
-      """SELECT event_type AS model,
-        |       avg(CASE WHEN value > 100 THEN 1.0 ELSE 0.0 END) AS precision_at_k
-        |FROM events GROUP BY event_type
-        |ORDER BY precision_at_k DESC, model LIMIT 1""".stripMargin) { (s, dir) =>
+      s"""SELECT event_type AS model,
+         |       avg(CASE WHEN ${Idioms.feedbackDuck} THEN 1.0 ELSE 0.0 END) AS precision_at_k
+         |FROM events GROUP BY event_type
+         |ORDER BY precision_at_k DESC, model LIMIT 1""".stripMargin) { (s, dir) =>
       Tables.events(s, dir)
         .groupBy(col("event_type").as("model"))
-        .agg(avg(when(col("value") > 100, 1.0).otherwise(0.0)).as("precision_at_k"))
+        .agg(avg(when(Idioms.feedbackSpark, 1.0).otherwise(0.0)).as("precision_at_k"))
         .orderBy(desc("precision_at_k"), asc("model")).limit(1)
     },
 

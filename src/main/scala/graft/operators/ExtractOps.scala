@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.kernel.{Chunker, MetaNorm, Paragraphs, TextClean}
+import graft.kernel.{Chunker, MetaNorm, Paragraphs, PyText, TextClean}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import scala.reflect.runtime.universe.TypeTag
@@ -31,6 +31,12 @@ object ExtractOps {
       |  ' join ', ' ' || chr(13) || chr(10) || 'join '),
       |  ' the ', ' ' || repeat(chr(10), 4) || 'the ')""".stripMargin
 
+  /** Python's `str.strip()` set as a DuckDB `trim` list: the code points
+    * `PyText.isPySpace` accepts (none lies above U+FFFF).
+    */
+  private[operators] val pySpaceDuck: String =
+    (0 to 0xFFFF).filter(PyText.isPySpace).map(cp => s"chr($cp)").mkString(" || ")
+
   /** The oracle's T1–T5 `_clean_page_text` (`TextClean.cleanPageText`)
     * in RE2, which has no lookarounds, over an arbitrary input expression:
     * after the 3+-newline collapse, newline runs are exactly 1 or 2 long, so
@@ -48,16 +54,17 @@ object ExtractOps {
        |        '\\n{3,}', chr(10) || chr(10), 'g'),
        |      chr(10) || chr(10), chr(1)), chr(10), ' '), chr(1), chr(10) || chr(10)),
        |    '[ \\t]+', ' ', 'g'),
-       |  ' ' || chr(10))""".stripMargin
+       |  $pySpaceDuck)""".stripMargin
 
   /** The oracle's T7 `normalize_date` of a VARCHAR expression. The shape
-    * gate is `MetaNorm.normalizeDate`'s: DuckDB's `try_strptime` also parses
-    * a padded or signed string (`' 2024-01-01'`) that Python's `strptime`
-    * returns unchanged.
+    * and year gates are `MetaNorm.normalizeDate`'s: DuckDB's `try_strptime`
+    * also parses a padded or signed string (`' 2024-01-01'`) and year 0,
+    * which Python's `strptime` returns unchanged.
     */
   private def normDateDuck(x: String) =
     s"""coalesce(strftime(CASE WHEN regexp_full_match($x, '[0-9]{4}-[0-9]{1,2}-[0-9]{1,2}')
-       |  THEN try_strptime($x, '%Y-%m-%d') END, '%Y-%m-%dT%H:%M:%S'), $x)""".stripMargin
+       |  AND NOT starts_with($x, '0000') THEN try_strptime($x, '%Y-%m-%d') END,
+       |  '%Y-%m-%dT%H:%M:%S'), $x)""".stripMargin
 
   /** A `graft.kernel` rule, the golden-tested implementation that
     * extraction runs, as a column function. A NULL text stays NULL: a
@@ -233,16 +240,13 @@ object ExtractOps {
   */
 private[operators] object ParagraphOracles {
 
-  import ExtractOps.{cleanOf, structureDuck}
-
-  /** Python str.strip() character set. */
-  private val ws = "' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)"
+  import ExtractOps.{cleanOf, pySpaceDuck, structureDuck}
 
   /** paragraphize candidate: lines normalized+joined == \n→space, collapse
     * space runs, Python-strip.
     */
   private def normPara(p: String) =
-    s"trim(regexp_replace(replace($p, chr(10), ' '), '[ \\t]+', ' ', 'g'), $ws)"
+    s"trim(regexp_replace(replace($p, chr(10), ' '), '[ \\t]+', ' ', 'g'), $pySpaceDuck)"
 
   val paragraphizeSql: String =
     s"""WITH s AS (SELECT doc_id, $structureDuck AS raw FROM documents),
@@ -267,12 +271,12 @@ private[operators] object ParagraphOracles {
   val extractParagraphsSql: String = {
     // blank-line branch over the CLEANED text (branch test is on RAW)
     val blank =
-      s"list_filter(list_transform(str_split(cleaned, chr(10) || chr(10)), p -> trim(p, $ws)), x -> x <> '')"
+      s"list_filter(list_transform(str_split(cleaned, chr(10) || chr(10)), p -> trim(p, $pySpaceDuck)), x -> x <> '')"
     // sentence split: consuming sentinel stand-in for the lookaround split
     val sents =
       s"""list_filter(list_transform(
          |  str_split(regexp_replace(cleaned, '([.!?])(\\s+)([A-Z])', '\\1' || chr(2) || '\\3', 'g'), chr(2)),
-         |  t -> trim(t, $ws)), x -> x <> '')""".stripMargin
+         |  t -> trim(t, $pySpaceDuck)), x -> x <> '')""".stripMargin
     // greedy 600/80 grouping fold (extract_paragraphs.py:27-48)
     val newbuf = "(CASE WHEN split_part(acc, chr(4), 2) = '' THEN s ELSE split_part(acc, chr(4), 2) || ' ' || s END)"
     val emitted = "split_part(acc, chr(4), 1)"
@@ -290,7 +294,7 @@ private[operators] object ParagraphOracles {
     s"""WITH s AS (SELECT doc_id, $structureDuck AS raw FROM documents),
        |c AS (SELECT doc_id, raw, ${cleanOf("raw")} AS cleaned FROM s),
        |branched AS (SELECT doc_id,
-       |  CASE WHEN trim(raw, $ws) = '' THEN []::VARCHAR[]
+       |  CASE WHEN trim(raw, $pySpaceDuck) = '' THEN []::VARCHAR[]
        |       WHEN contains(raw, chr(10) || chr(10)) THEN $blank
        |       ELSE (
        |         SELECT list_filter(str_split($finalFlush, chr(3)), x -> x <> '')

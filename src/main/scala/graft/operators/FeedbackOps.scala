@@ -25,7 +25,7 @@ object FeedbackOps {
   private val denseModelSql  = "'dense-' || CAST(user_id % 3 AS VARCHAR)"
   private val rerankModelSql =
     "CASE WHEN user_id % 5 < 2 THEN NULL ELSE 'ce-' || CAST(user_id % 5 AS VARCHAR) END"
-  private val feedbackSql = "CASE WHEN value > 100 THEN 1 ELSE 0 END"
+  private val feedbackSql = s"CASE WHEN ${Idioms.feedbackDuck} THEN 1 ELSE 0 END"
 
   private def feedbackRows(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir).select(
@@ -33,7 +33,7 @@ object FeedbackOps {
       concat(lit("dense-"), (col("user_id") % 3).cast("string")).as("dense_model"),
       when(col("user_id") % 5 < 2, lit(null: String))
         .otherwise(concat(lit("ce-"), (col("user_id") % 5).cast("string"))).as("rerank_model"),
-      when(col("value") > 100, 1).otherwise(0).as("feedback"))
+      when(Idioms.feedbackSpark, 1).otherwise(0).as("feedback"))
 
   /** Per-(dense, rerank) precision@k with the per-row DECIMAL trick so the
     * 0/1 sums are order-independent (they are exact anyway, but avg() division

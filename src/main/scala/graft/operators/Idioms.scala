@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{concat, expr, least, length, lit, substring, when}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{asc, broadcast, col, concat, desc, expr, least, length, lit,
+  substring, when}
 
 /** The cross-engine SQL idioms every operator family shares. ONE copy —
   * each Spark form must stay in lockstep with its DuckDB twin, so drift
@@ -107,4 +108,46 @@ private[graft] object Idioms {
     val bucket = s"${h60Duck("CAST(doc_id AS VARCHAR)")} % 10"
     s"CASE WHEN $bucket < 8 THEN 'train' WHEN $bucket = 8 THEN 'val' ELSE 'test' END"
   }
+
+  /** Dot product of two float arrays: elements cast to double before the
+    * multiply, summed in index order, so both engines agree bit for bit.
+    * The Spark side is the native `vec_dot` (registered by `GraftFunctions`),
+    * the portable aggregate(zip_with(...)) fold inside whole-stage codegen.
+    */
+  def dotSpark(a: String, b: String) = s"vec_dot($a, $b)"
+  def dotDuck(a: String, b: String) =
+    s"list_aggregate(list_transform(list_zip($a, $b), z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), 'sum')"
+
+  /** Euclidean norm and cosine similarity of float arrays. */
+  def normSpark(v: String) = s"sqrt(${dotSpark(v, v)})"
+  def normDuck(v: String) =
+    s"sqrt(list_aggregate(list_transform($v, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))"
+  def cosineSpark(a: String, b: String) = s"${dotSpark(a, b)} / (${normSpark(a)} * ${normSpark(b)})"
+  def cosineDuck(a: String, b: String) = s"${dotDuck(a, b)} / (${normDuck(a)} * ${normDuck(b)})"
+
+  /** The query vector `qvec`: embedding row `id`; the registry asks for row
+    * 0, which the DuckDB twin fixes.
+    */
+  def queryVecSpark(e: DataFrame, id: Long): DataFrame =
+    e.where(col("vec_id") === id).select(col("embedding").as("qvec"))
+  val queryVecDuck = "(SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0)"
+
+  /** Exact dense top-`k` `(vec_id, score_exact)` for query row `id`: dot
+    * product descending, then vec_id, over the broadcast one-row query
+    * vector (TakeOrderedAndProject; the big side is never shuffled). The
+    * DuckDB twin is the subquery `(vec_id, sc, rn)` for row 0.
+    */
+  def denseTopSpark(e: DataFrame, id: Long, k: Int): DataFrame =
+    e.crossJoin(broadcast(queryVecSpark(e, id)))
+      .select(col("vec_id"), expr(dotSpark("embedding", "qvec")).as("score_exact"))
+      .orderBy(desc("score_exact"), asc("vec_id")).limit(k)
+  def denseTopDuck(k: Int): String =
+    s"""(SELECT * FROM (
+       |  SELECT vec_id, sc, row_number() OVER (ORDER BY sc DESC, vec_id) AS rn
+       |  FROM (SELECT e.vec_id, ${dotDuck("e.embedding", "q.qvec")} AS sc
+       |        FROM embeddings e, $queryVecDuck q)) WHERE rn <= $k)""".stripMargin
+
+  /** An events row's 0/1 relevance feedback (the reference's thumbs up). */
+  def feedbackSpark: Column = col("value") > 100
+  val feedbackDuck = "value > 100"
 }

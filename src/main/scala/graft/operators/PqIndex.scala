@@ -177,11 +177,8 @@ object PqIndex {
       query: Array[Float],
       topK: Int,
       candidates: Int = 100): DataFrame = {
-    graft.functions.GraftFunctions.ensure(emb.sparkSession)
     val cand = search(encoded, cb, query, candidates).drop("score_adc")
-    emb.select(col("vec_id"), col("embedding")).join(broadcast(cand), "vec_id")
-      .withColumn("qv", typedLit(query.toSeq))
-      .withColumn("score", expr("vec_dot(embedding, qv)")).drop("embedding", "qv")
-      .orderBy(desc("score"), asc("vec_id")).limit(topK)
+    AnnIndex.exactTop(emb.select(col("vec_id"), col("embedding")).join(broadcast(cand), "vec_id"),
+      query, topK)
   }
 }

@@ -6,11 +6,10 @@ import org.apache.spark.sql.functions._
 
 /** Retrieval / ranking / top-k operators (SURVEY.md §2.4, R1–R8).
   *
-  * Scoring is pure Catalyst (zip_with/aggregate over the embedding arrays —
-  * codegen-friendly, no UDF); top-k compiles to TakeOrderedAndProject, and
-  * the one-row query vector is broadcast. Float elements are cast to double
-  * *before* multiplication so the fold is bit-identical to the DuckDB oracle
-  * (same IEEE ops in the same array order).
+  * Dense scoring and the dense top-k are the `Idioms` twins (`dotSpark` /
+  * `dotDuck`, `denseTopSpark` / `denseTopDuck`): top-k compiles to
+  * TakeOrderedAndProject, the one-row query vector is broadcast, and the
+  * dot product is bit-identical to the DuckDB oracle's.
   *
   * Ranking discipline (round-1 judge finding): NEVER rank via
   * row_number().over(Window.orderBy(...)) on the full table — Spark executes
@@ -28,29 +27,6 @@ object RetrievalOps {
   private val qTokens = Seq("spark", "merge", "join", "fast")
   private val qTokensSqlList = qTokens.map(t => s"'$t'").mkString(", ")
 
-  /** dot(embedding, qvec) — native codegen'd VecDot: same index order and
-    * casts as the portable aggregate(zip_with(...)) form, so results are
-    * bit-identical to the DuckDB oracle, but the loop runs inside
-    * whole-stage codegen instead of interpreted HOF evaluation.
-    */
-  private val dotExpr = "vec_dot(embedding, qvec)"
-
-  private val duckDot =
-    "list_aggregate(list_transform(list_zip(e.embedding, q.embedding)," +
-      " z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), 'sum')"
-  private def duckNorm(c: String) =
-    s"sqrt(list_aggregate(list_transform($c, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))"
-
-  private def withQvec(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir)
-    val q = e.where(col("vec_id") === 0).select(col("embedding").as("qvec"))
-    e.crossJoin(broadcast(q))
-  }
-
-  /** Shared dense scoring plan: (vec_id, score_exact). */
-  private def denseScores(s: SparkSession, dir: String): DataFrame =
-    withQvec(s, dir).select(col("vec_id"), expr(dotExpr).as("score_exact"))
-
   /** Constant-valued but non-foldable partition key: every row lands in one
     * partition (same as no partitionBy), but WindowExec's "no partition
     * defined" warning — which reads like the full-table anti-pattern — stays
@@ -61,11 +37,13 @@ object RetrievalOps {
   /** Scale-safe ranked top-k: TakeOrderedAndProject over the full input, then
     * a rank window over only the surviving k rows.
     */
-  private def rankedTopK(df: DataFrame, k: Int, order: Column*): DataFrame = {
-    val limited = df.orderBy(order: _*).limit(k)
+  private def rankedTopK(df: DataFrame, k: Int, order: Column*): DataFrame =
+    ranked(df.orderBy(order: _*).limit(k), order: _*)
+
+  /** `limited`, already cut to its top k in `order`, with its rank `rn`. */
+  private def ranked(limited: DataFrame, order: Column*): DataFrame =
     limited.withColumn("rn", row_number().over(
       Window.partitionBy(onePart(col(limited.columns.head))).orderBy(order: _*)))
-  }
 
   private def sparseScores(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
@@ -74,26 +52,35 @@ object RetrievalOps {
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("score"))
 
+  /** [[sparseScores]]' oracle: `(doc_id, score)`, unordered. */
+  private val sparseDuck =
+    s"""SELECT doc_id, count(*) AS score
+       |FROM (SELECT doc_id, unnest(str_split(text, ' ')) AS tok FROM documents)
+       |WHERE tok IN ($qTokensSqlList)
+       |GROUP BY doc_id""".stripMargin
+
+  /** R5's stand-in rerank score of a `documents` row (`d` in the oracle):
+    * the query tokens in its first 256 characters (max_length=256).
+    */
+  private def rerankSpark: Column =
+    qTokens.map(t => when(col("text").substr(1, 256).contains(t), 1).otherwise(0))
+      .reduce[Column](_ + _).cast("int")
+  private val rerankDuck = qTokens
+    .map(t => s"(CASE WHEN contains(substring(d.text, 1, 256), '$t') THEN 1 ELSE 0 END)").mkString(" + ")
+
   val ops: Seq[Op] = Seq(
 
     // R1 dense top-k: dot-product scoring + ORDER BY/LIMIT (vector_store.py:101-140's
     // dataflow with the managed ANN re-expressed as a scoring stage).
+    // The plan is AnnIndex.bruteForce's, the recall baseline of the ANN index.
     Op("q_dense_topk",
-      s"""SELECT e.vec_id, round($duckDot, 4) AS score
-         |FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-         |ORDER BY $duckDot DESC, e.vec_id LIMIT 10""".stripMargin) { (s, dir) =>
-      denseScores(s, dir)
-        .orderBy(desc("score_exact"), asc("vec_id")).limit(10)
-        .select(col("vec_id"), round(col("score_exact"), 4).as("score"))
+      s"SELECT vec_id, round(sc, 4) AS score FROM ${Idioms.denseTopDuck(10)} ORDER BY rn") { (s, dir) =>
+      AnnIndex.bruteForce(Tables.embeddings(s, dir), 0, 10)
     },
 
     // R2 sparse top-k: token-overlap TF scoring (sparse_store.py:91-103's
     // dataflow) — explode + groupBy/count + top-k.
-    Op("q_sparse_topk",
-      s"""SELECT doc_id, count(*) AS score
-         |FROM (SELECT doc_id, unnest(str_split(text, ' ')) AS tok FROM documents)
-         |WHERE tok IN ($qTokensSqlList)
-         |GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 10""".stripMargin) { (s, dir) =>
+    Op("q_sparse_topk", s"$sparseDuck ORDER BY score DESC, doc_id LIMIT 10") { (s, dir) =>
       sparseScores(s, dir).orderBy(desc("score"), asc("doc_id")).limit(10)
     },
 
@@ -105,8 +92,8 @@ object RetrievalOps {
     // expression trees cross-engine) → order-independent DECIMAL sum.
     Op("q_bm25_topk",
       s"""WITH d AS (
-         |  SELECT doc_id, len(list_filter(str_split(text, ' '), t -> t <> '')) AS dl,
-         |         list_filter(str_split(text, ' '), t -> t <> '') AS toks
+         |  SELECT doc_id, len(${Idioms.toksDuck}) AS dl,
+         |         ${Idioms.toksDuck} AS toks
          |  FROM documents),
          |stats AS (SELECT CAST(count(*) AS BIGINT) AS n,
          |                 CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM d),
@@ -125,7 +112,7 @@ object RetrievalOps {
          |FROM scored GROUP BY doc_id
          |ORDER BY bm25 DESC, doc_id LIMIT 10""".stripMargin) { (s, dir) =>
       val d = Tables.documents(s, dir)
-        .select(col("doc_id"), expr("filter(split(text, ' '), t -> t <> '')").as("toks"))
+        .select(col("doc_id"), expr(Idioms.toksSpark).as("toks"))
         .select(col("doc_id"), size(col("toks")).cast("bigint").as("dl"), col("toks"))
       val stats = d.agg(count(lit(1)).as("n"),
         (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
@@ -149,18 +136,15 @@ object RetrievalOps {
     // explicit rank column (app.py:55,127 — plain UNION doesn't preserve
     // cross-branch order, so rank is materialized).
     Op("q_hybrid_search",
-      s"""SELECT 'dense' AS origin, rn AS rank, vec_id AS id, round(sc, 4) AS score FROM (
-         |  SELECT e.vec_id, $duckDot AS sc,
-         |         row_number() OVER (ORDER BY $duckDot DESC, e.vec_id) AS rn
-         |  FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 0) q) WHERE rn <= 20
+      s"""SELECT 'dense' AS origin, rn AS rank, vec_id AS id, round(sc, 4) AS score
+         |FROM ${Idioms.denseTopDuck(20)}
          |UNION ALL
          |SELECT 'sparse', 20 + rn, doc_id, CAST(score AS DOUBLE) FROM (
-         |  SELECT doc_id, score, row_number() OVER (ORDER BY score DESC, doc_id) AS rn FROM (
-         |    SELECT doc_id, count(*) AS score
-         |    FROM (SELECT doc_id, unnest(str_split(text, ' ')) AS tok FROM documents)
-         |    WHERE tok IN ($qTokensSqlList) GROUP BY doc_id)) WHERE rn <= 5
+         |  SELECT doc_id, score, row_number() OVER (ORDER BY score DESC, doc_id) AS rn
+         |  FROM ($sparseDuck)) WHERE rn <= 5
          |ORDER BY rank""".stripMargin) { (s, dir) =>
-      val dense = rankedTopK(denseScores(s, dir), 20, desc("score_exact"), asc("vec_id"))
+      val dense = ranked(Idioms.denseTopSpark(Tables.embeddings(s, dir), 0, 20),
+          desc("score_exact"), asc("vec_id"))
         .select(lit("dense").as("origin"), col("rn").cast("bigint").as("rank"),
           col("vec_id").as("id"), round(col("score_exact"), 4).as("score"))
       val sparse = rankedTopK(sparseScores(s, dir), 5, desc("score"), asc("doc_id"))
@@ -173,23 +157,15 @@ object RetrievalOps {
     // scorer = #query tokens present in the 256-char-truncated text
     // (max_length=256 mirror), then score-sort-desc + take top_n=5.
     Op("q_rerank",
-      s"""SELECT c.id, c.dense_score,
-         |  ${qTokens.map(t => s"(CASE WHEN contains(substring(d.text, 1, 256), '$t') THEN 1 ELSE 0 END)").mkString(" + ")} AS rerank_score
-         |FROM (
-         |  SELECT e.vec_id AS id, round($duckDot, 4) AS dense_score,
-         |         row_number() OVER (ORDER BY $duckDot DESC, e.vec_id) AS rn
-         |  FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 0) q) c
-         |JOIN documents d ON d.doc_id = c.id
-         |WHERE c.rn <= 20
-         |ORDER BY rerank_score DESC, c.id LIMIT 5""".stripMargin) { (s, dir) =>
-      val cands = denseScores(s, dir)
-        .orderBy(desc("score_exact"), asc("vec_id")).limit(20)
+      s"""SELECT c.vec_id AS id, round(c.sc, 4) AS dense_score, $rerankDuck AS rerank_score
+         |FROM ${Idioms.denseTopDuck(20)} c
+         |JOIN documents d ON d.doc_id = c.vec_id
+         |ORDER BY rerank_score DESC, c.vec_id LIMIT 5""".stripMargin) { (s, dir) =>
+      val cands = Idioms.denseTopSpark(Tables.embeddings(s, dir), 0, 20)
         .select(col("vec_id").as("id"), round(col("score_exact"), 4).as("dense_score"))
       // 20-row candidate side broadcast against the big documents table.
       val scored = Tables.documents(s, dir).join(broadcast(cands), col("doc_id") === cands("id"))
-        .withColumn("rerank_score",
-          qTokens.map(t => when(col("text").substr(1, 256).contains(t), 1).otherwise(0))
-            .reduce[Column](_ + _).cast("int"))
+        .withColumn("rerank_score", rerankSpark)
       scored.orderBy(desc("rerank_score"), asc("id"))
         .select(col("id"), col("dense_score"), col("rerank_score")).limit(5)
     },
@@ -202,19 +178,14 @@ object RetrievalOps {
     // (idx, rerank_score), and the remap is an equi-join on idx.
     Op("q_rerank_remap",
       s"""WITH cands AS (
-         |  SELECT id, dense_score, rn - 1 AS idx FROM (
-         |    SELECT e.vec_id AS id, round($duckDot, 4) AS dense_score,
-         |           row_number() OVER (ORDER BY $duckDot DESC, e.vec_id) AS rn
-         |    FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 0) q)
-         |  WHERE rn <= 20),
+         |  SELECT vec_id AS id, round(sc, 4) AS dense_score, rn - 1 AS idx FROM ${Idioms.denseTopDuck(20)}),
          |rr AS (
-         |  SELECT c.idx,
-         |    ${qTokens.map(t => s"(CASE WHEN contains(substring(d.text, 1, 256), '$t') THEN 1 ELSE 0 END)").mkString(" + ")} AS rerank_score
+         |  SELECT c.idx, $rerankDuck AS rerank_score
          |  FROM cands c JOIN documents d ON d.doc_id = c.id)
          |SELECT c.idx, c.id, c.dense_score, r.rerank_score
          |FROM cands c JOIN rr r ON r.idx = c.idx
          |ORDER BY r.rerank_score DESC, c.idx LIMIT 5""".stripMargin) { (s, dir) =>
-      val top = denseScores(s, dir).orderBy(desc("score_exact"), asc("vec_id")).limit(20)
+      val top = Idioms.denseTopSpark(Tables.embeddings(s, dir), 0, 20)
       // ordered candidate array (sort key = exact score desc via negation)
       val candArr = top.agg(expr(
         "array_sort(collect_list(named_struct('ns', -score_exact, 'id', vec_id," +
@@ -225,9 +196,7 @@ object RetrievalOps {
       // the reranker sees positions + text only, and returns (idx, score)
       val rr = Tables.documents(s, dir)
         .join(broadcast(pos.select(col("idx"), col("id"))), col("doc_id") === col("id"))
-        .select(col("idx"),
-          qTokens.map(t => when(col("text").substr(1, 256).contains(t), 1).otherwise(0))
-            .reduce[Column](_ + _).cast("int").as("rerank_score"))
+        .select(col("idx"), rerankSpark.as("rerank_score"))
       pos.join(rr, "idx") // positional remap — id plays no part in the join
         .orderBy(desc("rerank_score"), asc("idx")).limit(5)
         .select(col("idx"), col("id"), col("dense_score"), col("rerank_score"))

@@ -1,5 +1,8 @@
 package graft.operators
 
+import graft.operators.Idioms.{cosineDuck, cosineSpark, dotDuck, dotSpark, normSpark, queryVecDuck,
+  queryVecSpark}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor search over the embedding column.
@@ -18,85 +21,89 @@ import org.apache.spark.sql.functions._
   */
 object SimilarityOps {
 
-  // Native codegen'd VecDot — bit-identical to the portable
-  // aggregate(zip_with(...)) the DuckDB oracles evaluate (same index order
-  // and casts), but runs inside whole-stage codegen.
-  private val dotQ = "vec_dot(embedding, qvec)"
-  private def dotAB(a: String, b: String) = s"vec_dot($a, $b)"
-  private def nrm(c: String) = s"sqrt(vec_dot($c, $c))"
-
-  private def duckDotAB(a: String, b: String) =
-    s"list_aggregate(list_transform(list_zip($a, $b), z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)), 'sum')"
-  private def duckNrm(c: String) =
-    s"sqrt(list_aggregate(list_transform($c, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))"
-
   // nCells derived from corpus size (ceil(sqrt(n))) with the SAME formula on
   // both engines, so the cell layout — and therefore every probe-bounded
   // result — stays oracle-identical at every SF. The count() is a parquet
   // metadata read, not a scan.
   private val nCellsDuck = "CAST(ceil(sqrt((SELECT count(*) FROM embeddings))) AS BIGINT)"
-  private def nCellsOf(e: org.apache.spark.sql.DataFrame): Int =
+  private def nCellsOf(e: DataFrame): Int =
     math.ceil(math.sqrt(e.count().toDouble)).toInt
+
+  /** The IVF cells: the first nCells vectors are the centroids `(cell,
+    * cvec)`. The oracle's CTEs `cent` (keyed `cid`) and `assign` put each
+    * vector `(vec_id, cid, embedding)` in the cell of its largest dot
+    * product, ties to the smaller cell, as `AnnIndex.assignTo` does.
+    */
+  private def firstCells(e: DataFrame): DataFrame =
+    e.where(col("vec_id") < nCellsOf(e)).select(col("vec_id").as("cell"), col("embedding").as("cvec"))
+  private val cellsDuckCtes =
+    s"""cent AS (SELECT vec_id AS cid, embedding AS cvec FROM embeddings WHERE vec_id < $nCellsDuck),
+       |assign AS (
+       |  SELECT vec_id, cid, embedding FROM (
+       |    SELECT e.vec_id, c.cid, e.embedding,
+       |           row_number() OVER (PARTITION BY e.vec_id
+       |             ORDER BY ${dotDuck("e.embedding", "c.cvec")} DESC, c.cid) AS rn
+       |    FROM embeddings e, cent c) WHERE rn = 1)""".stripMargin
+
+  /** Each vector in its cell with its norm `(vec_id, cid, embedding,
+    * vnorm)`: the rows of the cell-bounded pair search, whose cosine
+    * ([[pairCosine]]) reads the norms once per row, not once per pair.
+    */
+  private def normedCells(e: DataFrame): DataFrame =
+    AnnIndex.assignTo(e, firstCells(e))
+      .select(col("vec_id"), col("cell").as("cid"), col("embedding"),
+        expr(normSpark("embedding")).as("vnorm"))
+  private def pairCosine: Column =
+    expr(dotSpark("a.embedding", "b.embedding")) / (col("a.vnorm") * col("b.vnorm"))
 
   val ops: Seq[Op] = Seq(
 
     Op("q_ann_cosine_topk",
-      s"""SELECT e.vec_id,
-         |       round(${duckDotAB("e.embedding", "q.embedding")} /
-         |             (${duckNrm("e.embedding")} * ${duckNrm("q.embedding")}), 4) AS cosine
-         |FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-         |ORDER BY ${duckDotAB("e.embedding", "q.embedding")} /
-         |         (${duckNrm("e.embedding")} * ${duckNrm("q.embedding")}) DESC, e.vec_id
+      s"""SELECT e.vec_id, round(${cosineDuck("e.embedding", "q.qvec")}, 4) AS cosine
+         |FROM embeddings e, $queryVecDuck q
+         |ORDER BY ${cosineDuck("e.embedding", "q.qvec")} DESC, e.vec_id
          |LIMIT 10""".stripMargin) { (s, dir) =>
       val e = Tables.embeddings(s, dir)
-      val q = e.where(col("vec_id") === 0).select(col("embedding").as("qvec"))
-      e.crossJoin(broadcast(q))
-        .select(col("vec_id"), expr(s"$dotQ / (${nrm("embedding")} * ${nrm("qvec")})").as("cos_exact"))
+      e.crossJoin(broadcast(queryVecSpark(e, 0)))
+        .select(col("vec_id"), expr(cosineSpark("embedding", "qvec")).as("cos_exact"))
         .orderBy(desc("cos_exact"), asc("vec_id")).limit(10)
         .select(col("vec_id"), round(col("cos_exact"), 4).as("cosine"))
     },
 
     Op("q_ann_ivf",
-      s"""WITH cent AS (SELECT vec_id AS cid, embedding AS cvec FROM embeddings WHERE vec_id < $nCellsDuck),
-         |q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-         |assign AS (
-         |  SELECT vec_id, cid FROM (
-         |    SELECT e.vec_id, c.cid,
-         |           row_number() OVER (PARTITION BY e.vec_id
-         |             ORDER BY ${duckDotAB("e.embedding", "c.cvec")} DESC, c.cid) AS rn
-         |    FROM embeddings e, cent c) WHERE rn = 1),
+      s"""WITH $cellsDuckCtes,
+         |q AS $queryVecDuck,
          |probes AS (
          |  SELECT cid FROM (
          |    SELECT c.cid, row_number() OVER (
-         |      ORDER BY ${duckDotAB("c.cvec", "q.qvec")} DESC, c.cid) AS rn
+         |      ORDER BY ${dotDuck("c.cvec", "q.qvec")} DESC, c.cid) AS rn
          |    FROM cent c, q) WHERE rn <= 2)
          |SELECT e.vec_id, a.cid,
-         |       round(${duckDotAB("e.embedding", "q.qvec")}, 4) AS score
+         |       round(${dotDuck("e.embedding", "q.qvec")}, 4) AS score
          |FROM embeddings e
          |JOIN assign a ON a.vec_id = e.vec_id
          |JOIN probes p ON p.cid = a.cid, q
-         |ORDER BY ${duckDotAB("e.embedding", "q.qvec")} DESC, e.vec_id LIMIT 5""".stripMargin) { (s, dir) =>
+         |ORDER BY ${dotDuck("e.embedding", "q.qvec")} DESC, e.vec_id LIMIT 5""".stripMargin) { (s, dir) =>
       val e = Tables.embeddings(s, dir)
-      val cent = e.where(col("vec_id") < nCellsOf(e)).select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val q = e.where(col("vec_id") === 0).select(col("embedding").as("qvec"))
+      val cent = firstCells(e)
+      val q = queryVecSpark(e, 0)
 
       // Map-side argmax (shared fold in AnnIndex.assignTo): no explode, no
       // shuffle, no self-join (round-1 fix: the previous crossJoin ×
       // row_number-over-Window plan shuffled 8× the table and then joined
       // the assignment back to the full table).
-      val withCell = AnnIndex
-        .assignTo(e, cent.select(col("cid").as("cell"), col("cvec")))
+      val withCell = AnnIndex.assignTo(e, cent)
         .select(col("vec_id"), col("embedding"), col("cell").as("cid"))
 
-      val probes = cent.crossJoin(broadcast(q))
-        .withColumn("qdot", expr(dotAB("cvec", "qvec")))
+      val probes = cent.select(col("cell").as("cid"), col("cvec")).crossJoin(broadcast(q))
+        .withColumn("qdot", expr(dotSpark("cvec", "qvec")))
         .orderBy(desc("qdot"), asc("cid")).limit(2)
         .select(col("cid"))
 
       withCell
         .join(broadcast(probes), "cid")
         .crossJoin(broadcast(q))
-        .withColumn("score_exact", expr(dotAB("embedding", "qvec")))
+        .withColumn("score_exact", expr(dotSpark("embedding", "qvec")))
         .orderBy(desc("score_exact"), asc("vec_id")).limit(5)
         .select(col("vec_id"), col("cid"), round(col("score_exact"), 4).as("score"))
     },
@@ -107,34 +114,19 @@ object SimilarityOps {
     // cell partitioning the ANN index uses serves dedup for free. Exact
     // cosine verifies candidates; top-20 reported.
     Op("q_embed_neardup_cells",
-      s"""WITH cent AS (SELECT vec_id AS cid, embedding AS cvec FROM embeddings WHERE vec_id < $nCellsDuck),
-         |assign AS (
-         |  SELECT vec_id, cid, embedding FROM (
-         |    SELECT e.vec_id, c.cid, e.embedding,
-         |           row_number() OVER (PARTITION BY e.vec_id
-         |             ORDER BY ${duckDotAB("e.embedding", "c.cvec")} DESC, c.cid) AS rn
-         |    FROM embeddings e, cent c) WHERE rn = 1)
+      s"""WITH $cellsDuckCtes
          |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.cid,
-         |       round(${duckDotAB("a.embedding", "b.embedding")} /
-         |             (${duckNrm("a.embedding")} * ${duckNrm("b.embedding")}), 4) AS cosine
+         |       round(${cosineDuck("a.embedding", "b.embedding")}, 4) AS cosine
          |FROM assign a JOIN assign b ON a.cid = b.cid AND a.vec_id < b.vec_id
-         |WHERE ${duckDotAB("a.embedding", "b.embedding")} /
-         |      (${duckNrm("a.embedding")} * ${duckNrm("b.embedding")}) >= 0.3
-         |ORDER BY ${duckDotAB("a.embedding", "b.embedding")} /
-         |         (${duckNrm("a.embedding")} * ${duckNrm("b.embedding")}) DESC, vec_a, vec_b
+         |WHERE ${cosineDuck("a.embedding", "b.embedding")} >= 0.3
+         |ORDER BY ${cosineDuck("a.embedding", "b.embedding")} DESC, vec_a, vec_b
          |LIMIT 20""".stripMargin) { (s, dir) =>
-      val e = Tables.embeddings(s, dir)
-      val cent = e.where(col("vec_id") < nCellsOf(e)).select(col("vec_id").as("cell"), col("embedding").as("cvec"))
-      val assign = AnnIndex.assignTo(e, cent)
-        .select(col("vec_id"), col("cell").as("cid"), col("embedding"),
-          expr(nrm("embedding")).as("vnorm")) // per-row norm rides the join
+      val assign = normedCells(Tables.embeddings(s, dir))
       val a = assign.as("a"); val b = assign.as("b")
-      val cos = expr(s"${dotAB("a.embedding", "b.embedding")}") /
-        (col("a.vnorm") * col("b.vnorm"))
       a.join(b, col("a.cid") === col("b.cid") && col("a.vec_id") < col("b.vec_id"))
-        .where(cos >= 0.3)
+        .where(pairCosine >= 0.3)
         .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"), col("a.cid").as("cid"),
-          round(cos, 4).as("cosine"), cos.as("cos_exact"))
+          round(pairCosine, 4).as("cosine"), pairCosine.as("cos_exact"))
         .orderBy(desc("cos_exact"), asc("vec_a"), asc("vec_b")).limit(20)
         .select(col("vec_a"), col("vec_b"), col("cid"), col("cosine"))
     },
@@ -148,34 +140,21 @@ object SimilarityOps {
     // decision in aggregate. Same n²/nCells candidate bound as the pair
     // query; the drop set is a narrow distinct + one left join.
     Op("q_semdedup",
-      s"""WITH cent AS (SELECT vec_id AS cid, embedding AS cvec FROM embeddings WHERE vec_id < $nCellsDuck),
-         |assign AS (
-         |  SELECT vec_id, cid, embedding FROM (
-         |    SELECT e.vec_id, c.cid, e.embedding,
-         |           row_number() OVER (PARTITION BY e.vec_id
-         |             ORDER BY ${duckDotAB("e.embedding", "c.cvec")} DESC, c.cid) AS rn
-         |    FROM embeddings e, cent c) WHERE rn = 1),
+      s"""WITH $cellsDuckCtes,
          |drops AS (
          |  SELECT DISTINCT b.vec_id FROM assign a
          |  JOIN assign b ON a.cid = b.cid AND a.vec_id < b.vec_id
-         |  WHERE ${duckDotAB("a.embedding", "b.embedding")} /
-         |        (${duckNrm("a.embedding")} * ${duckNrm("b.embedding")}) >= 0.3)
+         |  WHERE ${cosineDuck("a.embedding", "b.embedding")} >= 0.3)
          |SELECT a.cid, CAST(count(*) AS BIGINT) AS total,
          |       CAST(count(*) FILTER (WHERE d.vec_id IS NULL) AS BIGINT) AS kept,
          |       CAST(count(d.vec_id) AS BIGINT) AS dropped
          |FROM assign a LEFT JOIN drops d ON d.vec_id = a.vec_id
          |GROUP BY a.cid ORDER BY a.cid""".stripMargin) { (s, dir) =>
-      val e = Tables.embeddings(s, dir)
-      val cent = e.where(col("vec_id") < nCellsOf(e)).select(col("vec_id").as("cell"), col("embedding").as("cvec"))
-      val assign = AnnIndex.assignTo(e, cent)
-        .select(col("vec_id"), col("cell").as("cid"), col("embedding"),
-          expr(nrm("embedding")).as("vnorm"))
+      val assign = normedCells(Tables.embeddings(s, dir))
         .localCheckpoint(true) // barrier: pair join + report reuse ONE assignment pass
       val a = assign.as("a"); val b = assign.as("b")
-      val cos = expr(s"${dotAB("a.embedding", "b.embedding")}") /
-        (col("a.vnorm") * col("b.vnorm"))
       val drops = a.join(b, col("a.cid") === col("b.cid") && col("a.vec_id") < col("b.vec_id"))
-        .where(cos >= 0.3)
+        .where(pairCosine >= 0.3)
         .select(col("b.vec_id").as("vec_id")).distinct()
       assign.join(drops.withColumn("is_drop", lit(1)), Seq("vec_id"), "left")
         .groupBy(col("cid"))
@@ -200,8 +179,7 @@ object SimilarityOps {
          |           WHERE vec_id IN (0, 1, 2)),
          |scored AS (
          |  SELECT a.anchor_id, e.vec_id,
-         |    ${duckDotAB("e.embedding", "a.qv")} /
-         |    (${duckNrm("e.embedding")} * ${duckNrm("a.qv")}) AS cos
+         |    ${cosineDuck("e.embedding", "a.qv")} AS cos
          |  FROM embeddings e, a WHERE e.vec_id <> a.anchor_id),
          |neg AS (
          |  SELECT anchor_id, vec_id, cos,
@@ -216,8 +194,7 @@ object SimilarityOps {
       val scored = e.crossJoin(broadcast(anchors))
         .where(col("vec_id") =!= col("anchor_id"))
         .select(col("anchor_id"), col("vec_id"),
-          expr(s"${dotAB("embedding", "qvec")} / (${nrm("embedding")} * ${nrm("qvec")})")
-            .as("cos"))
+          expr(cosineSpark("embedding", "qvec")).as("cos"))
         .where(col("cos") < 0.9)
       val local = scored
         .groupBy(col("anchor_id"), pmod(xxhash64(col("vec_id")), lit(16L)).as("salt"))

@@ -98,7 +98,7 @@ object StreamingExtract {
     val short = docs
       // coalesce: size(...) is NULL for null text, and a NULL predicate
       // would drop the row from BOTH branches — null/empty docs belong here
-      .where(expr("coalesce(size(filter(split(text, ' '), t -> t <> '')), 0) < 3"))
+      .where(expr(s"coalesce(size(${graft.operators.Idioms.toksSpark}), 0) < 3"))
       .withColumn("band", lit(-1))
       .withColumn("bh", md5(concat(lit("short|"), coalesce(col("text"), lit("")))))
       .select(banded.columns.map(col).toIndexedSeq: _*)

@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** Dumps `explain("formatted")` for the flagship queries, by default into
   * the git-ignored target/plans/PLANS.md (dev tool, run on demand:
   * `runMain graft.tools.DumpPlans [sfDir] [outFile]`). The enforced plan
-  * contract is `PlanQualitySpec`.
+  * contract is `PlanQualitySpec`. Ids, call-site lines and the app id are
+  * masked, so a `diff` of two checkouts' dumps shows only plan changes.
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
@@ -33,7 +34,10 @@ object DumpPlans {
       "q_hard_negatives", "q_mixture_epochs", "q_tfidf_topk",
       "q_length_histogram", "q_dedup_keep_best", "q_dup_rate_by_domain",
       "q_domain_quality_gate", "q_oov_rate", "q_ngram_novelty",
-      "q_substring_strip", "q_minhash_calibration")
+      "q_substring_strip", "q_minhash_calibration", "q_sparse_topk", "q_bm25_topk",
+      "q_rerank", "q_rerank_remap", "q_ann_cosine_topk", "q_embed_neardup",
+      "q_embed_neardup_cells", "q_precision_hitrate", "q_best_model", "q_feedback_jsonl",
+      "q_best_model_split")
     val sb = new StringBuilder
     sb ++= "# PLANS — physical plans of flagship queries (generated by graft.tools.DumpPlans)\n\n"
     sb ++= "What to look for (PlanQualitySpec asserts these shapes): pruned `ReadSchema`,\n"
@@ -43,7 +47,10 @@ object DumpPlans {
     for (name <- flagship) {
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       sb ++= s"\n## $name\n\n```\n"
-      sb ++= df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode).take(8000)
+      sb ++= df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+        .replace(spark.sparkContext.applicationId, "<app>")
+        .replaceAll("#\\d+", "#n").replaceAll("plan_id=\\d+", "plan_id=n")
+        .replaceAll("RDD\\[\\d+\\]", "RDD[n]").replaceAll("\\.scala:\\d+", ".scala:n").take(8000)
       sb ++= "\n```\n"
     }
     new java.io.File(out).getParentFile.mkdirs()

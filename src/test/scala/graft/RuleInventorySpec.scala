@@ -11,7 +11,19 @@ import scala.jdk.CollectionConverters._
   * (the curation verdict table, its oracle CTEs, `q_quality_score`,
   * `q_repetition`, `q_split_stratified`, `q_decontaminate`, streaming
   * curation, `q_truncate`, `q_context_budget`, `q_prompt_build`) calls that
-  * definition. The rules extraction runs (C1, T1–T5, T7) have their one JVM
+  * definition.
+  *
+  * The query side follows the same discipline. The dot product, norm,
+  * cosine, query vector, dense top-k and 0/1 feedback are `Idioms` twins,
+  * called by `RetrievalOps`, `SimilarityOps`, `EvalOps`, `FeedbackOps`,
+  * `q_embed_neardup`, `AnnIndex` and `PqIndex`; `AnnIndex.bruteForce` is
+  * `q_dense_topk`'s plan. The rerank stand-in and sparse TF score are one
+  * `RetrievalOps` helper each, the IVF cells (first-n centroids, nearest-
+  * cell assignment, cosine over cached norms) one `SimilarityOps` helper
+  * each. The oracles' Python whitespace set is `ExtractOps.pySpaceDuck`,
+  * derived from `PyText.isPySpace`.
+  *
+  * The rules extraction runs (C1, T1–T5, T7) have their one JVM
   * spelling in `graft.kernel`, which the registry ops call; the DuckDB
   * oracle in `ExtractOps` is their only other spelling, so a Catalyst
   * restatement changes a count below. A second spelling of a rule needs an
@@ -57,9 +69,34 @@ class RuleInventorySpec extends AnyFunSuite {
       Map("TextClean.scala" -> 1, "ExtractOps.scala" -> 2)),
     ("T7 date shape, kernel", "^(\\\\d{4})-(\\\\d{1,2})-(\\\\d{1,2})$", Map("MetaNorm.scala" -> 1)),
     ("T7 date shape, DuckDB", "{4}-", Map("ExtractOps.scala" -> 1)),
-    ("T7 date parse, never Catalyst", "to_timestamp", Map.empty[String, Int]))
+    ("T7 date parse, never Catalyst", "to_timestamp", Map.empty[String, Int]),
+    ("dot product, Spark (the native function and its registration)", "vec_dot(",
+      Map("Idioms.scala" -> 1, "GraftFunctions.scala" -> 2)),
+    ("dot product, DuckDB", "CAST(z[1] AS DOUBLE)", Map("Idioms.scala" -> 1)),
+    ("norm, Spark", "sqrt(${dotSpark(", Map("Idioms.scala" -> 1)),
+    ("norm, DuckDB", "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)", Map("Idioms.scala" -> 1)),
+    ("cosine, both engines", ")} / (${norm", Map("Idioms.scala" -> 2)),
+    ("cosine over cached norms, Spark", "/ (col(\"a.vnorm\") * col(\"b.vnorm\"))",
+      Map("SimilarityOps.scala" -> 1)),
+    ("query vector, Spark", "col(\"vec_id\") === ", Map("Idioms.scala" -> 1)),
+    ("query vector, DuckDB", "WHERE vec_id = 0", Map("Idioms.scala" -> 1)),
+    ("dense top-k, Spark, and q_ann_ivf's probed top-5", "orderBy(desc(\"score_exact\"), asc(\"vec_id\"))",
+      Map("Idioms.scala" -> 1, "SimilarityOps.scala" -> 1)),
+    ("dense top-k, DuckDB", "ORDER BY sc DESC, vec_id", Map("Idioms.scala" -> 1)),
+    ("rerank stand-in score, Spark", "substr(1, 256)", Map("RetrievalOps.scala" -> 1)),
+    ("rerank stand-in score, DuckDB", "substring(d.text, 1, 256)", Map("RetrievalOps.scala" -> 1)),
+    ("sparse TF score, Spark", "explode(split(col(\"text\"), \" \"))", Map("RetrievalOps.scala" -> 1)),
+    ("sparse TF score, DuckDB", "unnest(str_split(text, ' '))", Map("RetrievalOps.scala" -> 1)),
+    ("whitespace tokens, both engines", "t -> t <> ''", Map("Idioms.scala" -> 2)),
+    ("IVF first-n centroids, Spark", "col(\"vec_id\") < nCellsOf(e)", Map("SimilarityOps.scala" -> 1)),
+    ("IVF first-n centroids, DuckDB", "WHERE vec_id < $nCellsDuck", Map("SimilarityOps.scala" -> 1)),
+    ("IVF nearest cell, Spark", "'ncell', -c.cell", Map("AnnIndex.scala" -> 1)),
+    ("IVF nearest cell, DuckDB", "PARTITION BY e.vec_id", Map("SimilarityOps.scala" -> 1)),
+    ("0/1 feedback, Spark", "col(\"value\") > 100", Map("Idioms.scala" -> 1)),
+    ("0/1 feedback, DuckDB", "value > 100", Map("Idioms.scala" -> 1)),
+    ("Python whitespace set, DuckDB", "filter(PyText.isPySpace)", Map("ExtractOps.scala" -> 1)))
 
-  test("src/main spells each curation rule once per engine, in the file that defines it") {
+  test("src/main spells each rule once per engine, in the file that defines it") {
     val root = Paths.get("src/main")
     assert(Files.isDirectory(root), s"expected the sources at ${root.toAbsolutePath}")
     val walk = Files.walk(root)

@@ -119,6 +119,22 @@ class DedupClusterSpec extends SparkTestBase {
       assert(byCluster.values.map(_.length).sum == rows.length)
     }
   }
+
+  test("curationRunStaged: the same input starts the same number of jobs on every run") {
+    // the settled check evaluates the disagreeing edges once; a limit(1)
+    // probe would start one job per partition batch it scans, a count that
+    // follows AQE's runtime partitioning rather than the plan
+    def run(): Int = {
+      val stage = java.nio.file.Files.createTempDirectory("graft-cc-jobs").toString
+      jobsDuring {
+        val (curated, funnel) = DedupOps.curationRunStaged(spark, sfDir, stage)
+        curated.write.parquet(s"$stage/curated")
+        funnel.collect()
+      }._2
+    }
+    val jobs = Seq.fill(5)(run())
+    assert(jobs.distinct.size == 1, s"jobs per run: $jobs")
+  }
 }
 
 private object SparkEntryAccess {

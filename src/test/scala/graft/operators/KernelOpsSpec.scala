@@ -26,10 +26,10 @@ class KernelOpsSpec extends SparkTestBase {
 
   test("q_date_normalize: normalize_date.json's outputs, and signed or padded strings unchanged") {
     val golden = Golden.load("normalize_date.json").map(c => c.get("in").asText() -> c.get("out").asText())
-    // the reference (Python strptime '%Y-%m-%d') returns each of these unchanged;
-    // a year beyond ±290307 must not throw either
+    // the reference (Python strptime '%Y-%m-%d') returns each of these unchanged
+    // (Python has no year 0); a year beyond ±290307 must not throw either
     val unchanged = Seq("-2024-01-01", "+12024-01-01", "+1000000-01-01", "-1000000-01-01",
-      " 2024-01-01", "2024-01-01 ", "1-URGENT")
+      " 2024-01-01", "2024-01-01 ", "1-URGENT", "0000-01-01")
     val cases = golden ++ unchanged.map(s => s -> s) :+ ("2024-1-01" -> "2024-01-01T00:00:00")
     val got = run("q_date_normalize", "orders", orders(cases.map(c => Some(c._1))))
       .as[(Long, String, String)].collect().sortBy(_._1).toSeq
